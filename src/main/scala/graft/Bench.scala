@@ -24,7 +24,6 @@ import org.apache.spark.sql.functions._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // External-load defense (the round-7 artifact was captured at
     // loadavg 2 and manufactured two phantom >=2x per-query
     // regressions on untouched code): sample the 1-min loadavg BEFORE
@@ -62,14 +61,13 @@ object Bench {
     }
     if (waited > 0)
       System.err.println(s"bench quiet-wait: ${waited}s (start loadavg=${startLoad.mkString(",")}, now=${loadavg().mkString(",")})")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
+    // The library's session profile (GraftSession.tune) plus ONE
+    // bench-only override:
+    val spark = GraftSession.localBuilder(appName = "graft-bench")
       // Size-based AQE coalescing (round 19, guide §2.2): with the
       // default parallelismFirst=true AQE refuses to coalesce below
       // the core count, so every tiny post-shuffle stage runs
-      // `cpus` near-empty tasks — pure scheduling overhead that
+      // one near-empty task per core — pure scheduling overhead that
       // dominates the many small exchanges in the composed queries
       // (measured: a 32-task stage over a groups-sized frame costs
       // ~60-100 ms regardless of data). false is the setting the
@@ -79,21 +77,6 @@ object Bench {
       // post-shuffle partitions) — the knob is scale-adaptive by
       // construction, not a local-core-count tune.
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // Codegen CLASS cache sized to the suite (round 19): the
-      // compiled-fragment cache is a 100-entry LRU (static conf), and
-      // a 194-query capture holds ~10× that many distinct
-      // WholeStageCodegen sources — so every fresh-DataFrame timed
-      // run re-ran Janino over every fragment it had already compiled
-      // (tens of ms per fragment, several fragments per query: the
-      // bulk of the gap between solo-JVM warm medians and full-
-      // capture medians on the stage-heavy queries). Plan-count-
-      // dependent, not core-count-dependent — a production engine
-      // serving this operator registry wants the same setting at any
-      // cluster size; classes live in the code cache we already
-      // reserve 1g for (build.sbt).
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     // ERROR, not WARN: benchmark-shaped single-partition windows
     // (intentional at this SF) would otherwise flood the driver's

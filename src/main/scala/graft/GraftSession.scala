@@ -13,14 +13,22 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors(),
-            appName: String = "graft"): SparkSession =
+  /** Local executor threads: `SPARK_GRAFT_CPUS` when set, else every
+    * core. The one place the library reads that variable. */
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  def local(cores: Int = cpus, appName: String = "graft"): SparkSession =
+    localBuilder(cores, appName).getOrCreate()
+
+  /** [[local]]'s builder before `getOrCreate`, for a caller that layers
+    * its own documented setting on top of the profile. */
+  def localBuilder(cores: Int = cpus, appName: String = "graft"): SparkSession.Builder =
     tune(SparkSession.builder()
         .master(s"local[$cores]")
         .appName(appName)
         .withExtensions(new org.apache.spark.sql.graftvec.GraftExtensions),
       shufflePartitions = cores)
-      .getOrCreate()
 
   /** Apply the library's standard configs to any builder (cluster or
     * local). UTC session time keeps timestamp semantics engine-portable

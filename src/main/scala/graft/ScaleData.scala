@@ -56,12 +56,11 @@ object ScaleData {
     val src = args(0)
     val dst = args(1)
     val factor = args.lift(2).flatMap(_.toIntOption).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.tune(SparkSession.builder()
+        .master(s"local[${GraftSession.cpus}]")
+        .appName("graft-scaledata")
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"),
+      shufflePartitions = 32)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Portable, TextHash, Vec}
-import graft.operators.{AsOf, Components, Percentiles, Salted, Sketches}
+import graft.operators.{AsOf, Components, MediaDecode, Salted}
+import graft.operators.MediaDecode.{Media, MediaStats}
 import graft.queries.{AnnGeometry, Similarity}
 
 /** The Column-API facade: the library's kernels and whole-operator
@@ -107,20 +107,6 @@ package object dsl {
           df.select(col(idCol).as("doc_id"), col(textCol).as("text")),
           materialize = true), bands, rowsPerBand)
 
-    /** The LINEAR candidate form for connectivity consumers: per LSH
-      * band bucket, star edges to the bucket's min doc — components
-      * over these are provably identical to components over
-      * `nearDupPairs`' cliques, at n−1 rows per bucket instead of
-      * C(n,2). Use this (not nearDupPairs) to feed `dupComponents`
-      * at corpus scale: a million-way boilerplate clique costs 10⁶
-      * edges, not 5·10¹¹. */
-    def nearDupEdges(idCol: String = "doc_id", textCol: String = "text",
-                     bands: Int = 4, rowsPerBand: Int = 4): DataFrame =
-      queries.Dedup.lshStarEdges(
-        queries.Dedup.kmSignatures(
-          df.select(col(idCol).as("doc_id"), col(textCol).as("text")),
-          materialize = true), bands, rowsPerBand)
-
     /** d9's fixpoint connected components over an edge list
       * (`node`, `nbr`) — O(diameter) rounds, shuffles (id,label)
       * pairs only. Adds `comp_id` (min node id of the component). */
@@ -139,24 +125,6 @@ package object dsl {
       * on the plain equi-join. ≡ `df.join(dim, key)` on any input. */
     def autoJoinSkewed(dim: DataFrame, key: String, minSkew: Double = 4.0): DataFrame =
       Salted.autoJoin(df, dim, key, minSkew)
-
-    /** q21's exact two-phase grouped percentiles — never buffers a
-      * group's values in one task (the built-in percentile_cont
-      * does). */
-    def percentilesExact(keyCol: String, valCol: String,
-                         ps: Seq[Double] = Seq(0.5, 0.9, 0.99)): DataFrame =
-      Percentiles.exact(df, keyCol, valCol,
-        ps.map(p => (s"p${(p * 100).round}", p)))
-
-    /** q30-style mergeable distinct counts: per-group HLL sketches
-      * (store these per day/source; union for any rollup). */
-    def hllSketchBy(groupCol: String, valueCol: String, lgK: Int = 12): DataFrame =
-      Sketches.sketchBy(df, groupCol, valueCol, lgK)
-
-    /** p1's shared quality features over `text`: adds n_words,
-      * stop_ratio, punct_ratio, quality — the same score the batch
-      * pipeline (p1/p4) and streaming DataPrep.curate filter on. */
-    def withQualityScore: DataFrame = queries.Pipeline.withQuality(df)
 
     /** d20's duplicated-substring span dedup over this frame: per doc
       * with ≥1 cross-doc duplicated 10-word window, the maximal spans
@@ -206,22 +174,11 @@ package object dsl {
       * hygiene. Self-pairs (same id on both sides) are excluded; the
       * eval side reduces to a broadcast (eval_id, window-digest) set. */
     def contamProvenance(evalDocs: DataFrame, idCol: String = "doc_id",
-                         textCol: String = "text"): DataFrame = {
-      val w = queries.Dedup.SpanW
-      val evalWins = evalDocs
-        .select(col(idCol).as("eval_id"), Portable.words(col(textCol)).as("ew"))
-        .filter(size(col("ew")) >= w)
-        .select(col("eval_id"),
-          explode(graft.functions.TextHash.spanHashes(col("ew"), w)).as("h"))
-        .distinct()
-      val wins = queries.Dedup.spanWindows(
-        df.select(col(idCol).as("doc_id"), Portable.words(col(textCol)).as("w")))
-      wins.join(broadcast(evalWins), "h")
-        .filter(col("doc_id") =!= col("eval_id"))
-        .groupBy(col("doc_id"), col("eval_id"))
-        .agg(count(lit(1)).as("n_shared_windows"),
-          min(col("i")).as("first_i"), max(col("i")).as("last_i"))
-    }
+                         textCol: String = "text"): DataFrame =
+      queries.TextOps.contamProvenance(
+        df.select(col(idCol).as("doc_id"), Portable.words(col(textCol)).as("w")),
+        evalDocs.select(col(idCol).as("eval_id"),
+          Portable.words(col(textCol)).as("ew")))
 
     /** p10's snapshot diff: this frame (the current release) against
       * `next` (the candidate), by id + normalized content digest —
@@ -230,21 +187,8 @@ package object dsl {
       * never text. */
     def snapshotDiff(next: DataFrame, idCol: String = "doc_id",
                      textCol: String = "text"): DataFrame = {
-      def digests(f: DataFrame, hName: String, cName: String) =
-        f.select(col(idCol).as("doc_id"),
-          Portable.md5bin(Portable.normText(col(textCol))).as(hName),
-          length(col(textCol)).cast("long").as(cName))
-      digests(df, "h_old", "chars_old")
-        .join(digests(next, "h_new", "chars_new"), Seq("doc_id"), "full_outer")
-        .withColumn("status",
-          when(col("h_old").isNull, "added")
-            .when(col("h_new").isNull, "removed")
-            .when(col("h_old") === col("h_new"), "unchanged")
-            .otherwise("changed"))
-        .groupBy(col("status"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(coalesce(col("chars_new"), lit(0L)) -
-            coalesce(col("chars_old"), lit(0L))).as("delta_chars"))
+      def docs(f: DataFrame) = f.select(col(idCol).as("doc_id"), col(textCol).as("text"))
+      queries.Pipeline.snapshotDiff(docs(df), docs(next))
     }
 
     /** t25's code-vs-prose signals + verdict on every row of this
@@ -291,17 +235,6 @@ package object dsl {
                    m: Int = 8, subDim: Int = 8): Similarity.IvfPqIndex =
       Similarity.ivfPqIndexOf(normVecs(df, idCol, embCol), geo, m, subDim)
 
-    /** a17's residual layout as a publishable index (round 18): codes
-      * quantize (vector − assigned centroid) against a residual-space
-      * codebook — the standard IVF-PQ layout for clustered corpora.
-      * Same serve/absorb/compact surface as [[ivfPqIndex]]; the ONE
-      * behavioral difference is maintenance: a rebuild re-codes the
-      * retrained cells' members (see Similarity.rebuildCells). */
-    def ivfPqResidualIndex(idCol: String = "vec_id", embCol: String = "embedding",
-                           geo: AnnGeometry = AnnGeometry(),
-                           m: Int = 8, subDim: Int = 8): Similarity.IvfPqIndex =
-      Similarity.ivfPqResidualIndexOf(normVecs(df, idCol, embCol), geo, m, subDim)
-
     /** a30's serve-cost drift over a vector frame: per probe, the
       * scan bill against the base-only index vs the delta-grown one,
       * joined with a22's compaction policy for its routed cells — the
@@ -320,7 +253,8 @@ package object dsl {
       * under their declared container, non-images as "unknown". */
     def imageStats(idCol: String = "doc_id",
                    payloadCol: String = "payload"): DataFrame =
-      imageStatsOf(df, idCol, payloadCol)
+      decodeMedia(df, idCol, payloadCol, MediaDecode.parseImageBatch)
+        .select(col("docId").as(idCol) +: ImageCols: _*)
 
     /** mm14's compressed-audio decode over a binary payload column:
       * genuine G.711 µ-law/a-law WAV members (fmt codes 7/6) through
@@ -331,7 +265,8 @@ package object dsl {
       * "unknown". */
     def audioStats(idCol: String = "doc_id",
                    payloadCol: String = "payload"): DataFrame =
-      audioStatsOf(df, idCol, payloadCol)
+      decodeMedia(df, idCol, payloadCol, MediaDecode.parseAudioBatch)
+        .select(col("docId").as(idCol) +: AudioCols: _*)
 
     /** mm15's video decode over a binary payload column: genuine AVI
       * members (MJPEG '00dc' frames through the JDK JPEG codec, raw
@@ -343,7 +278,8 @@ package object dsl {
       * ok=false under its declared container / "unknown". */
     def videoStats(idCol: String = "doc_id",
                    payloadCol: String = "payload"): DataFrame =
-      videoStatsOf(df, idCol, payloadCol)
+      decodeMedia(df, idCol, payloadCol, MediaDecode.parseVideoBatch)
+        .select(col("docId").as(idCol) +: FrameCols: _*)
 
     /** mm16's animated-GIF decode over a binary payload column:
       * genuine multi-frame GIF members through the JDK LZW/palette
@@ -353,7 +289,8 @@ package object dsl {
       * ok=false under "gif", non-GIF as "unknown". */
     def gifStats(idCol: String = "doc_id",
                  payloadCol: String = "payload"): DataFrame =
-      gifStatsOf(df, idCol, payloadCol)
+      decodeMedia(df, idCol, payloadCol, MediaDecode.parseGifBatch)
+        .select(col("docId").as(idCol) +: FrameCols: _*)
 
     /** mm17's FLAC decode over a binary payload column: genuine FLAC
       * streams through the pure-JVM graft codec (all subframe types,
@@ -364,7 +301,8 @@ package object dsl {
       * non-FLAC as "unknown". */
     def flacStats(idCol: String = "doc_id",
                   payloadCol: String = "payload"): DataFrame =
-      flacStatsOf(df, idCol, payloadCol)
+      decodeMedia(df, idCol, payloadCol, MediaDecode.parseFlacBatch)
+        .select(col("docId").as(idCol) +: AudioCols: _*)
 
     /** p11's media curate cascade over a mixed-modality binary
       * column: magic-byte routing (the sniff IS the router — no
@@ -379,8 +317,9 @@ package object dsl {
                     silentRms: Double = 8000.0,
                     clippedPeak: Double = 31000.0,
                     staticMotion: Double = 18.0): DataFrame =
-      mediaCurateOf(df, idCol, payloadCol, darkBrightness, silentRms,
-        clippedPeak, staticMotion)
+      queries.Pipeline.mediaDisposition(
+        decodeMedia(df, idCol, payloadCol, MediaDecode.parseAnyBatch), idCol,
+        darkBrightness, silentRms, clippedPeak, staticMotion)
 
     /** t29's per-source boilerplate template mining over (id, text,
       * source): segments hash map-side on t21's shared window
@@ -392,15 +331,9 @@ package object dsl {
     def boilerplateTemplates(minShare: Double = 0.3,
                              idCol: String = "doc_id",
                              textCol: String = "text",
-                             sourceCol: String = "source"): DataFrame = {
-      val base = df.select(col(idCol).as("doc_id"),
-        col(textCol).as("text"), col(sourceCol).as("source"))
-      graft.queries.TextOps.templateInventory(base, minShare)
-        .withColumn("share",
-          round(col("df").cast("double") / col("n_src_docs"), 6))
-        .select(col("source"), lower(hex(col("h"))).as("seg_hash"),
-          col("df"), col("n_src_docs"), col("share"))
-    }
+                             sourceCol: String = "source"): DataFrame =
+      queries.TextOps.templateShares(df.select(col(idCol).as("doc_id"),
+        col(textCol).as("text"), col(sourceCol).as("source")), minShare)
 
     /** Template REMOVAL over this corpus frame (t32's kernel): mine
       * the [[boilerplateTemplates]] inventory at `minShare`, broadcast
@@ -435,27 +368,8 @@ package object dsl {
         .select(col("vec_id").as("cell"), col("emb").as("c_emb"),
           col("nrm").as("c_nrm"))
       val newV = normVecs(reEmbedded, idCol, embCol)
-      val changedOld = v.join(newV.select(col("vec_id")), Seq("vec_id"), "left_semi")
-      val moves = graft.queries.Similarity.assignCells(changedOld, cents)
-        .select(col("vec_id"), col("cell").as("old_cell"))
-        .join(graft.queries.Similarity.assignCells(newV, cents)
-          .select(col("vec_id"), col("cell").as("new_cell")), "vec_id")
-      val outFlow = moves.filter(col("old_cell") =!= col("new_cell"))
-        .groupBy(col("old_cell").as("cell")).agg(count(lit(1)).as("n_out"))
-      val inFlow = moves.filter(col("old_cell") =!= col("new_cell"))
-        .groupBy(col("new_cell").as("cell")).agg(count(lit(1)).as("n_in"))
-      val stay = moves.filter(col("old_cell") === col("new_cell"))
-        .groupBy(col("old_cell").as("cell")).agg(count(lit(1)).as("n_stay"))
-      cents.select(col("cell"))
-        .join(outFlow, Seq("cell"), "left")
-        .join(inFlow, Seq("cell"), "left")
-        .join(stay, Seq("cell"), "left")
-        .na.fill(0L, Seq("n_out", "n_in", "n_stay"))
-        .withColumn("net_moved", col("n_in") - col("n_out"))
-        .withColumn("touched",
-          (col("n_out") + col("n_in") + col("n_stay")) > 0L)
-        .select(col("cell"), col("n_stay"), col("n_out"), col("n_in"),
-          col("net_moved"), col("touched"))
+      queries.Pipeline.reindexBill(cents,
+        v.join(newV.select(col("vec_id")), Seq("vec_id"), "left_semi"), newV)
     }
 
     /** q43's gaps-and-islands sessionization: events more than
@@ -463,16 +377,8 @@ package object dsl {
       * by `tieCol`) start a new session. Adds `session_idx`
       * (1-based per key). One key-partitioned window, no self-join. */
     def sessionize(keyCol: String, tsCol: String, tieCol: String,
-                   gapUs: Long = 30L * 60L * 1000000L): DataFrame = {
-      val w = Window.partitionBy(col(keyCol)).orderBy(col(tsCol), col(tieCol))
-      df.withColumn("_prev_ts", lag(col(tsCol), 1).over(w))
-        .withColumn("_new_sess",
-          when(col("_prev_ts").isNull ||
-            (expr(s"unix_micros($tsCol)") - expr("unix_micros(_prev_ts)")) > gapUs, 1L)
-            .otherwise(0L))
-        .withColumn("session_idx", sum(col("_new_sess")).over(w))
-        .drop("_prev_ts", "_new_sess")
-    }
+                   gapUs: Long = queries.Analytics.SessionGapUs): DataFrame =
+      queries.Analytics.sessionize(df, keyCol, tsCol, tieCol, gapUs)
   }
 
   /** Serve/maintain a published [[Similarity.IvfPqIndex]]. */
@@ -543,121 +449,28 @@ package object dsl {
       Similarity.retrainIndex(ix, normVecs(vectors, idCol, embCol), iters)
   }
 
-  /** [[GraftDataFrameOps.imageStats]]'s body — lives OUTSIDE the
+  /** The decode facades' shared body: (idCol, payloadCol) →
+    * `parse`'s MediaStats rows keyed `docId`. Lives OUTSIDE the
     * AnyVal wrapper because Encoder derivation synthesizes a nested
     * class, which value classes disallow. */
-  private def imageStatsOf(df: DataFrame, idCol: String,
-                           payloadCol: String): DataFrame = {
+  private def decodeMedia(df: DataFrame, idCol: String, payloadCol: String,
+                          parse: Dataset[Media] => Dataset[MediaStats]): DataFrame = {
     import df.sparkSession.implicits._
-    graft.operators.MediaDecode.parseImageBatch(
-        df.select(col(idCol).cast("long").as("docId"),
-          col(payloadCol).as("payload"))
-          .as[graft.operators.MediaDecode.Media])
+    parse(df.select(col(idCol).cast("long").as("docId"),
+        col(payloadCol).as("payload")).as[Media])
       .toDF()
-      .select(col("docId").as(idCol), col("container"),
-        col("nUnits").as("n_units"), col("meanSignal").as("mean_signal"),
-        col("meanR").as("mean_r"), col("meanG").as("mean_g"),
-        col("meanB").as("mean_b"), col("ok"))
   }
 
-  /** [[GraftDataFrameOps.audioStats]]'s body — outside the AnyVal
-    * wrapper for the same Encoder-derivation reason as
-    * [[imageStatsOf]]. */
-  private def audioStatsOf(df: DataFrame, idCol: String,
-                           payloadCol: String): DataFrame = {
-    import df.sparkSession.implicits._
-    graft.operators.MediaDecode.parseAudioBatch(
-        df.select(col(idCol).cast("long").as("docId"),
-          col(payloadCol).as("payload"))
-          .as[graft.operators.MediaDecode.Media])
-      .toDF()
-      .select(col("docId").as(idCol), col("container"),
-        col("nUnits").as("n_units"), col("meanSignal").as("mean_signal"),
-        col("rms"), col("peak"), col("ok"))
-  }
-
-  /** [[GraftDataFrameOps.flacStats]]'s body — outside the AnyVal
-    * wrapper for the same Encoder-derivation reason as
-    * [[imageStatsOf]]. */
-  private def flacStatsOf(df: DataFrame, idCol: String,
-                          payloadCol: String): DataFrame = {
-    import df.sparkSession.implicits._
-    graft.operators.MediaDecode.parseFlacBatch(
-        df.select(col(idCol).cast("long").as("docId"),
-          col(payloadCol).as("payload"))
-          .as[graft.operators.MediaDecode.Media])
-      .toDF()
-      .select(col("docId").as(idCol), col("container"),
-        col("nUnits").as("n_units"), col("meanSignal").as("mean_signal"),
-        col("rms"), col("peak"), col("ok"))
-  }
-
-  /** [[GraftDataFrameOps.videoStats]]'s body — outside the AnyVal
-    * wrapper for the same Encoder-derivation reason as
-    * [[imageStatsOf]]. */
-  private def videoStatsOf(df: DataFrame, idCol: String,
-                           payloadCol: String): DataFrame = {
-    import df.sparkSession.implicits._
-    graft.operators.MediaDecode.parseVideoBatch(
-        df.select(col(idCol).cast("long").as("docId"),
-          col(payloadCol).as("payload"))
-          .as[graft.operators.MediaDecode.Media])
-      .toDF()
-      .select(col("docId").as(idCol), col("container"),
-        col("nUnits").as("n_frames"), col("meanR").as("mean_r"),
-        col("meanG").as("mean_g"), col("meanB").as("mean_b"),
-        col("peak").as("peak_motion"), col("ok"))
-  }
-
-  /** [[GraftDataFrameOps.gifStats]]'s body — outside the AnyVal
-    * wrapper for the same Encoder-derivation reason as
-    * [[imageStatsOf]]. */
-  private def gifStatsOf(df: DataFrame, idCol: String,
-                         payloadCol: String): DataFrame = {
-    import df.sparkSession.implicits._
-    graft.operators.MediaDecode.parseGifBatch(
-        df.select(col(idCol).cast("long").as("docId"),
-          col(payloadCol).as("payload"))
-          .as[graft.operators.MediaDecode.Media])
-      .toDF()
-      .select(col("docId").as(idCol), col("container"),
-        col("nUnits").as("n_frames"), col("meanR").as("mean_r"),
-        col("meanG").as("mean_g"), col("meanB").as("mean_b"),
-        col("peak").as("peak_motion"), col("ok"))
-  }
-
-  /** [[GraftDataFrameOps.mediaCurate]]'s body — outside the AnyVal
-    * wrapper for the same Encoder-derivation reason as
-    * [[imageStatsOf]]. Mirrors the p11 pack query with the gate
-    * thresholds parameterized. */
-  private def mediaCurateOf(df: DataFrame, idCol: String, payloadCol: String,
-                            darkBrightness: Double, silentRms: Double,
-                            clippedPeak: Double, staticMotion: Double): DataFrame = {
-    import df.sparkSession.implicits._
-    graft.operators.MediaDecode.parseAnyBatch(
-        df.select(col(idCol).cast("long").as("docId"),
-          col(payloadCol).as("payload"))
-          .as[graft.operators.MediaDecode.Media])
-      .toDF()
-      .select(col("docId").as(idCol), col("container"), col("ok"),
-        col("meanR"), col("meanG"), col("meanB"), col("rms"), col("peak"))
-      .withColumn("modality",
-        when(col("container").isin("png", "jpeg", "bmp"), "image")
-          .when(col("container").isin("ulaw", "alaw", "wav", "flac",
-            "adpcm"), "audio")
-          .when(col("container").isin("mjpeg", "rawvideo", "avi", "gif",
-            "msrle"), "video")
-          .otherwise("unknown"))
-      .withColumn("disposition",
-        when(!col("ok"), "decode_fail")
-          .when(col("modality") === "image" &&
-            (col("meanR") + col("meanG") + col("meanB")) / 3.0 < darkBrightness, "dark")
-          .when(col("modality") === "audio" && col("rms") < silentRms, "silent")
-          .when(col("modality") === "audio" && col("peak") >= clippedPeak, "clipped")
-          .when(col("modality") === "video" && col("peak") < staticMotion, "static")
-          .otherwise("keep"))
-      .select(col(idCol), col("modality"), col("container"), col("disposition"))
-  }
+  /** Output columns (after the id) of the still-image, amplitude and
+    * frame-stats decode facades. */
+  private val ImageCols = Seq(col("container"), col("nUnits").as("n_units"),
+    col("meanSignal").as("mean_signal"), col("meanR").as("mean_r"),
+    col("meanG").as("mean_g"), col("meanB").as("mean_b"), col("ok"))
+  private val AudioCols = Seq(col("container"), col("nUnits").as("n_units"),
+    col("meanSignal").as("mean_signal"), col("rms"), col("peak"), col("ok"))
+  private val FrameCols = Seq(col("container"), col("nUnits").as("n_frames"),
+    col("meanR").as("mean_r"), col("meanG").as("mean_g"),
+    col("meanB").as("mean_b"), col("peak").as("peak_motion"), col("ok"))
 
   /** (id, embedding) in any numeric array type → the (vec_id, emb,
     * nrm) frame every similarity kernel reads: one map-side cast +

@@ -914,16 +914,9 @@ object Analytics extends QueryPack {
     // state only — no global window anywhere; a billion users spread
     // over every executor.
     "q43_sessionize" -> { (s, d) =>
-      val gapUs = 30L * 60L * 1000000L
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      Tables.events(s, d)
-        .select(col("user_id"), col("event_id"), col("ts"), col("value"))
-        .withColumn("prev_ts", lag(col("ts"), 1).over(w))
-        .withColumn("new_sess",
-          when(col("prev_ts").isNull ||
-            (expr("unix_micros(ts)") - expr("unix_micros(prev_ts)")) > gapUs, 1L)
-            .otherwise(0L))
-        .withColumn("session_idx", sum(col("new_sess")).over(w))
+      sessionize(Tables.events(s, d)
+          .select(col("user_id"), col("event_id"), col("ts"), col("value")),
+          "user_id", "ts", "event_id", SessionGapUs)
         .groupBy(col("user_id"), col("session_idx"))
         .agg(count(lit(1)).as("n_events"),
           (max(expr("unix_micros(ts)")) - min(expr("unix_micros(ts)"))).as("duration_us"),
@@ -1028,6 +1021,26 @@ object Analytics extends QueryPack {
        |  n_nonempty
        |FROM summed
        |ORDER BY l_returnflag""".stripMargin
+
+  /** q43: the silence (µs) that closes a session. */
+  private[graft] val SessionGapUs = 30L * 60L * 1000000L
+
+  /** q43's gaps-and-islands kernel: rows more than `gapUs` apart (per
+    * `keyCol`, ordered by `tsCol`, ties broken by `tieCol`) start a
+    * new session; adds `session_idx` (1-based per key). One lag and
+    * one running sum over the same key-partitioned window, no
+    * self-join. Shared by q43 and the `sessionize` DSL facade. */
+  private[graft] def sessionize(df: DataFrame, keyCol: String, tsCol: String,
+                                tieCol: String, gapUs: Long): DataFrame = {
+    val w = Window.partitionBy(col(keyCol)).orderBy(col(tsCol), col(tieCol))
+    df.withColumn("_prev_ts", lag(col(tsCol), 1).over(w))
+      .withColumn("_new_sess",
+        when(col("_prev_ts").isNull ||
+          (expr(s"unix_micros($tsCol)") - expr("unix_micros(_prev_ts)")) > gapUs, 1L)
+          .otherwise(0L))
+      .withColumn("session_idx", sum(col("_new_sess")).over(w))
+      .drop("_prev_ts", "_new_sess")
+  }
 
   /** q47: histogram bins per group. */
   private[graft] val SketchBins = 256

@@ -414,21 +414,7 @@ object Pipeline extends QueryPack {
         .unionAll(docs.filter(col("doc_id") % 29 === 0)
           .select((col("doc_id") + 900000L).as("doc_id"),
             concat(lit("fresh crawl "), col("text")).as("text")))
-      def digests(df: DataFrame, hName: String, cName: String) =
-        df.select(col("doc_id"),
-          Portable.md5bin(Portable.normText(col("text"))).as(hName),
-          length(col("text")).cast("long").as(cName))
-      digests(docs, "h_old", "chars_old")
-        .join(digests(next, "h_new", "chars_new"), Seq("doc_id"), "full_outer")
-        .withColumn("status",
-          when(col("h_old").isNull, "added")
-            .when(col("h_new").isNull, "removed")
-            .when(col("h_old") === col("h_new"), "unchanged")
-            .otherwise("changed"))
-        .groupBy(col("status"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(coalesce(col("chars_new"), lit(0L)) -
-            coalesce(col("chars_old"), lit(0L))).as("delta_chars"))
+      snapshotDiff(docs, next)
         .orderBy(col("status"))
     },
 
@@ -459,29 +445,8 @@ object Pipeline extends QueryPack {
       val media = Tables.docIdsSpread(s, d).as[Long]
         .mapPartitions(_.map(id => graft.operators.MediaDecode.Media(
           id, graft.operators.MediaDecode.plantedCurateBytes(id))))
-      graft.operators.MediaDecode.parseAnyBatch(media).toDF()
-        .select(col("docId").as("doc_id"), col("container"), col("ok"),
-          col("meanR"), col("meanG"), col("meanB"), col("rms"), col("peak"))
-        .withColumn("modality",
-          when(col("container").isin("png", "jpeg", "bmp"), "image")
-            .when(col("container").isin("ulaw", "alaw", "wav", "flac",
-              "adpcm"), "audio")
-            // "gif" routes as video: parseAny hands animated GIFs the
-            // same frame-stats row the AVI codecs emit; "msrle" is
-            // the inter-frame AVI class
-            .when(col("container").isin("mjpeg", "rawvideo", "avi", "gif",
-              "msrle"), "video")
-            .otherwise("unknown"))
-        .withColumn("disposition",
-          when(!col("ok"), "decode_fail")
-            .when(col("modality") === "image" &&
-              (col("meanR") + col("meanG") + col("meanB")) / 3.0 < 120.0, "dark")
-            .when(col("modality") === "audio" && col("rms") < 8000.0, "silent")
-            .when(col("modality") === "audio" && col("peak") >= 31000.0, "clipped")
-            .when(col("modality") === "video" && col("peak") < 18.0, "static")
-            .otherwise("keep"))
-        .select(col("doc_id"), col("modality"), col("container"),
-          col("disposition"))
+      mediaDisposition(graft.operators.MediaDecode.parseAnyBatch(media).toDF(),
+          "doc_id", 120.0, 8000.0, 31000.0, 18.0)
         .orderBy(col("doc_id"))
     },
 
@@ -520,26 +485,7 @@ object Pipeline extends QueryPack {
           lit(0.25) * element_at(col("emb"), pmod(j + 1, nd).cast("int") + 1))
       val newSide = changed.select(col("vec_id"), reEmb.as("emb"))
         .withColumn("nrm", graft.functions.Vec.norm(col("emb")))
-      val moves = Similarity.assignCells(changed, cents)
-        .select(col("vec_id"), col("cell").as("old_cell"))
-        .join(Similarity.assignCells(newSide, cents)
-          .select(col("vec_id"), col("cell").as("new_cell")), "vec_id")
-      val outFlow = moves.filter(col("old_cell") =!= col("new_cell"))
-        .groupBy(col("old_cell").as("cell")).agg(count(lit(1)).as("n_out"))
-      val inFlow = moves.filter(col("old_cell") =!= col("new_cell"))
-        .groupBy(col("new_cell").as("cell")).agg(count(lit(1)).as("n_in"))
-      val stay = moves.filter(col("old_cell") === col("new_cell"))
-        .groupBy(col("old_cell").as("cell")).agg(count(lit(1)).as("n_stay"))
-      cents.select(col("cell"))
-        .join(outFlow, Seq("cell"), "left")
-        .join(inFlow, Seq("cell"), "left")
-        .join(stay, Seq("cell"), "left")
-        .na.fill(0L, Seq("n_out", "n_in", "n_stay"))
-        .withColumn("net_moved", col("n_in") - col("n_out"))
-        .withColumn("touched",
-          (col("n_out") + col("n_in") + col("n_stay")) > 0L)
-        .select(col("cell"), col("n_stay"), col("n_out"), col("n_in"),
-          col("net_moved"), col("touched"))
+      reindexBill(cents, changed, newSide)
         .orderBy(col("cell"))
     },
 
@@ -926,6 +872,92 @@ object Pipeline extends QueryPack {
         .orderBy(col("section"), col("key"), col("metric"))
   }
 
+
+  /** p10's snapshot diff of two (doc_id, text) snapshots, by id +
+    * normalized content digest: (status, n_docs, delta_chars) per
+    * added / removed / changed / unchanged class. Shared by p10 and
+    * the `snapshotDiff` DSL facade; shuffles 16-byte digests and
+    * lengths, never text. */
+  private[graft] def snapshotDiff(cur: DataFrame, next: DataFrame): DataFrame = {
+    def digests(df: DataFrame, hName: String, cName: String) =
+      df.select(col("doc_id"),
+        Portable.md5bin(Portable.normText(col("text"))).as(hName),
+        length(col("text")).cast("long").as(cName))
+    digests(cur, "h_old", "chars_old")
+      .join(digests(next, "h_new", "chars_new"), Seq("doc_id"), "full_outer")
+      .withColumn("status",
+        when(col("h_old").isNull, "added")
+          .when(col("h_new").isNull, "removed")
+          .when(col("h_old") === col("h_new"), "unchanged")
+          .otherwise("changed"))
+      .groupBy(col("status"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(coalesce(col("chars_new"), lit(0L)) -
+          coalesce(col("chars_old"), lit(0L))).as("delta_chars"))
+  }
+
+  /** p11's modality routing and QA gates over a parsed media frame
+    * (MediaDecode's `docId, container, ok, meanR/G/B, rms, peak`
+    * rows): (idCol, modality, container, disposition), where the
+    * disposition is the FIRST catching gate. Shared by p11 (gates at
+    * 120 / 8000 / 31000 / 18), the `mediaCurate` DSL facade and its
+    * live form `streaming.DataPrep.mediaCurateStream`. */
+  private[graft] def mediaDisposition(parsed: DataFrame, idCol: String,
+                                      darkBrightness: Double, silentRms: Double,
+                                      clippedPeak: Double,
+                                      staticMotion: Double): DataFrame =
+    parsed
+      .select(col("docId").as(idCol), col("container"), col("ok"),
+        col("meanR"), col("meanG"), col("meanB"), col("rms"), col("peak"))
+      .withColumn("modality",
+        when(col("container").isin("png", "jpeg", "bmp"), "image")
+          .when(col("container").isin("ulaw", "alaw", "wav", "flac",
+            "adpcm"), "audio")
+          // "gif" routes as video: parseAny hands animated GIFs the
+          // same frame-stats row the AVI codecs emit; "msrle" is the
+          // inter-frame AVI class
+          .when(col("container").isin("mjpeg", "rawvideo", "avi", "gif",
+            "msrle"), "video")
+          .otherwise("unknown"))
+      .withColumn("disposition",
+        when(!col("ok"), "decode_fail")
+          .when(col("modality") === "image" &&
+            (col("meanR") + col("meanG") + col("meanB")) / 3.0 < darkBrightness, "dark")
+          .when(col("modality") === "audio" && col("rms") < silentRms, "silent")
+          .when(col("modality") === "audio" && col("peak") >= clippedPeak, "clipped")
+          .when(col("modality") === "video" && col("peak") < staticMotion, "static")
+          .otherwise("keep"))
+      .select(col(idCol), col("modality"), col("container"), col("disposition"))
+
+  /** p12's per-cell re-index bill: the changed vectors' `oldSide`
+    * and `newSide` (vec_id, emb, nrm) frames both route through
+    * [[Similarity.assignCells]] against `cents` (cell, c_emb, c_nrm);
+    * a cell move is a tombstone plus an insert. Returns (cell,
+    * n_stay, n_out, n_in, net_moved, touched) for every centroid.
+    * Shared by p12 and the `reindexMoves` DSL facade. */
+  private[graft] def reindexBill(cents: DataFrame, oldSide: DataFrame,
+                                 newSide: DataFrame): DataFrame = {
+    val moves = Similarity.assignCells(oldSide, cents)
+      .select(col("vec_id"), col("cell").as("old_cell"))
+      .join(Similarity.assignCells(newSide, cents)
+        .select(col("vec_id"), col("cell").as("new_cell")), "vec_id")
+    val outFlow = moves.filter(col("old_cell") =!= col("new_cell"))
+      .groupBy(col("old_cell").as("cell")).agg(count(lit(1)).as("n_out"))
+    val inFlow = moves.filter(col("old_cell") =!= col("new_cell"))
+      .groupBy(col("new_cell").as("cell")).agg(count(lit(1)).as("n_in"))
+    val stay = moves.filter(col("old_cell") === col("new_cell"))
+      .groupBy(col("old_cell").as("cell")).agg(count(lit(1)).as("n_stay"))
+    cents.select(col("cell"))
+      .join(outFlow, Seq("cell"), "left")
+      .join(inFlow, Seq("cell"), "left")
+      .join(stay, Seq("cell"), "left")
+      .na.fill(0L, Seq("n_out", "n_in", "n_stay"))
+      .withColumn("net_moved", col("n_in") - col("n_out"))
+      .withColumn("touched",
+        (col("n_out") + col("n_in") + col("n_stay")) > 0L)
+      .select(col("cell"), col("n_stay"), col("n_out"), col("n_in"),
+        col("net_moved"), col("touched"))
+  }
 
   /** p6's per-(source, ingest_day) quality cells — (count, Σq, Σq²)
     * SUMS so they merge associatively across micro-batches (the a22

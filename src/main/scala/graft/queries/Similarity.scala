@@ -78,6 +78,34 @@ object Similarity extends QueryPack {
   private def cosPre(pEmb: Column, pNrm: Column, emb: Column, nrm: Column): Column =
     graft.functions.Vec.dot(pEmb, emb) / (pNrm * nrm)
 
+  /** recall@k hit counts: every exact (keys…, probe_id, vec_id) row
+    * LEFT-joined to the approximate (a_<key>…, a_probe, a_vec) rows,
+    * so a probe the index fully misses still reports (n_hit = 0).
+    * Returns (keys…, probe_id, n_exact, n_hit). */
+  private def hitCounts(exact: DataFrame, approx: DataFrame, keys: String*): DataFrame =
+    exact.join(approx,
+        (keys.map(k => col(k) === col(s"a_$k")) :+
+          (col("probe_id") === col("a_probe")) :+
+          (col("vec_id") === col("a_vec"))).reduce(_ && _), "left")
+      .groupBy((keys :+ "probe_id").map(col): _*)
+      .agg(count(lit(1)).as("n_exact"),
+        sum(when(col("a_vec").isNotNull, 1L).otherwise(0L)).as("n_hit"))
+
+  /** `a.unionByName(b)` over the `names` columns, both children
+    * re-selected in that order under fresh aliases. Two shapes
+    * Catalyst forces: (1) a using-join hoists its key column first,
+    * and downstream consumers (save/load, positional set ops) rely on
+    * the canonical column order; (2) when both children trace to the
+    * SAME source attributes (in-memory lineage: the audits, or a DSL
+    * user composing build→absorb→rebuild in one plan), a Union whose
+    * children share attribute ids dies in constraint rewriting
+    * (UnionBase.rewriteConstraints: key not found) — the explicit
+    * aliases mint new ids on BOTH children. */
+  private def freshUnion(a: DataFrame, b: DataFrame, names: String*): DataFrame = {
+    def fresh(df: DataFrame) = df.select(names.map(n => col(n).as(n)): _*)
+    fresh(a).unionByName(fresh(b))
+  }
+
   /** Deterministic pseudo-random hyperplane weights for (plane, dim):
     * md5-derived uniform in [-1, 1). The planes are CONSTANT, so they
     * are materialized driver-side once (same md5-prefix arithmetic as
@@ -425,12 +453,7 @@ object Similarity extends QueryPack {
     val exact = bruteKnn(s, d, k)
       .select(col("probe_id"), col("vec_id"))
       .withColumn("np", explode(sequence(lit(1), lit(maxProbe))))
-    val per = exact.join(approx,
-        col("np") === col("a_np") && col("probe_id") === col("a_probe") &&
-          col("vec_id") === col("a_vec"), "left")
-      .groupBy(col("np"), col("probe_id"))
-      .agg(count(lit(1)).as("n_exact"),
-        sum(when(col("a_vec").isNotNull, 1L).otherwise(0L)).as("n_hit"))
+    val per = hitCounts(exact, approx, "np")
     per.join(scanned, Seq("np", "probe_id"), "left")
       .groupBy(col("np"))
       .agg(count(lit(1)).as("n_probes"),
@@ -574,12 +597,7 @@ object Similarity extends QueryPack {
     val exact = bruteKnn(s, d, k)
       .select(col("probe_id"), col("vec_id"))
       .withColumn("policy", explode(array(polNames.map(lit): _*)))
-    val per = exact.join(approx,
-        col("policy") === col("a_policy") && col("probe_id") === col("a_probe") &&
-          col("vec_id") === col("a_vec"), "left")
-      .groupBy(col("policy"), col("probe_id"))
-      .agg(count(lit(1)).as("n_exact"),
-        sum(when(col("a_vec").isNotNull, 1L).otherwise(0L)).as("n_hit"))
+    val per = hitCounts(exact, approx, "policy")
     per.join(scanned, Seq("policy", "probe_id"), "left")
       .join(policies, Seq("policy", "probe_id"))
       .groupBy(col("policy"))
@@ -824,11 +842,7 @@ object Similarity extends QueryPack {
     val exact = bruteKnn(s, d, k).select(col("probe_id"), col("vec_id"))
     val approx = lshKnn(s, d, geo, k)
       .select(col("probe_id").as("a_probe"), col("vec_id").as("a_vec"))
-    exact.join(approx,
-        col("probe_id") === col("a_probe") && col("vec_id") === col("a_vec"), "left")
-      .groupBy(col("probe_id"))
-      .agg(count(lit(1)).as("n_exact"),
-        sum(when(col("a_vec").isNotNull, 1L).otherwise(0L)).as("n_hit"))
+    hitCounts(exact, approx)
       .withColumn("recall", col("n_hit").cast("double") / col("n_exact"))
       .orderBy(col("probe_id"))
   }
@@ -902,11 +916,7 @@ object Similarity extends QueryPack {
       .filter(col("rank") <= k)
       .select(col("probe_id").as("a_probe"), col("vec_id").as("a_vec"))
     val exact = bruteKnn(s, d, k).select(col("probe_id"), col("vec_id"))
-    exact.join(approx,
-        col("probe_id") === col("a_probe") && col("vec_id") === col("a_vec"), "left")
-      .groupBy(col("probe_id"))
-      .agg(count(lit(1)).as("n_exact"),
-        sum(when(col("a_vec").isNotNull, 1L).otherwise(0L)).as("n_hit"))
+    hitCounts(exact, approx)
       .withColumn("recall", col("n_hit").cast("double") / col("n_exact"))
       .orderBy(col("probe_id"))
   }
@@ -2125,27 +2135,12 @@ object Similarity extends QueryPack {
         .localCheckpoint()
       asg = assignCells(members, cur)
     }
-    // Two shapes Catalyst forces here: (1) the using-join hoists the
-    // key column first, so `fresh` also re-selects the assigned
-    // frame's canonical (vec_id, cell, seg) order, which downstream
-    // consumers (save/load, positional set ops) rely on; (2) when the
-    // caller's frames are in-memory lineage (the audit; a DSL user
-    // composing build→absorb→rebuild in one plan) both union children
-    // trace to the SAME source attributes, and a Union whose children
-    // share attribute ids dies in constraint rewriting
-    // (UnionBase.rewriteConstraints: key not found) — `fresh` mints
-    // new ids on BOTH children via explicit aliases.
-    def fresh(df: DataFrame, names: String*): DataFrame =
-      df.select(names.map(n => col(n).as(n)): _*)
-    val newAssigned = fresh(
-        assigned.join(broadcast(flaggedCells), Seq("cell"), "left_anti"),
-        "vec_id", "cell", "seg")
-      .unionByName(fresh(asg.withColumn("seg", lit(0)),
-        "vec_id", "cell", "seg"))
-    val newCents = fresh(
-        cents.join(broadcast(flaggedCells), Seq("cell"), "left_anti"),
-        "cell", "c_emb", "c_nrm")
-      .unionByName(fresh(cur, "cell", "c_emb", "c_nrm"))
+    val newAssigned = freshUnion(
+      assigned.join(broadcast(flaggedCells), Seq("cell"), "left_anti"),
+      asg.withColumn("seg", lit(0)), "vec_id", "cell", "seg")
+    val newCents = freshUnion(
+      cents.join(broadcast(flaggedCells), Seq("cell"), "left_anti"),
+      cur, "cell", "c_emb", "c_nrm")
     (newAssigned, newCents)
   }
 
@@ -2225,13 +2220,11 @@ object Similarity extends QueryPack {
             s"m=$m from the artifact's codebook) — the codebook frame is " +
             "malformed (missing sub rows); aborting before publishing " +
             "codes that decode against the wrong geometry")
-        // fresh aliases on both children (the rebuildAssignment
-        // union hazard), checkpointed for the same servability
-        // reason as the assignment
-        def fresh(df: DataFrame): DataFrame =
-          df.select(Seq("vec_id", "sub", "code_id").map(n => col(n).as(n)): _*)
-        fresh(ix.codes.join(fm.select(col("vec_id")), Seq("vec_id"), "left_anti"))
-          .unionByName(fresh(recoded))
+        // checkpointed for the same servability reason as the
+        // assignment
+        freshUnion(
+            ix.codes.join(fm.select(col("vec_id")), Seq("vec_id"), "left_anti"),
+            recoded, "vec_id", "sub", "code_id")
           .localCheckpoint()
       }
     IvfPqIndex(asgC, codes, centsC, ix.codebook, ix.nextSegHint, ix.layout)
@@ -2575,9 +2568,7 @@ object Similarity extends QueryPack {
       .join(asg.select(col("vec_id"), col("cell")), Seq("vec_id"))
       .groupBy(col("cell")).agg(avg(col("dist")).as("ma"))
       .select(col("cell"), col("ma"), lit(0L).as("n_recoded"))
-    def fresh(df: DataFrame): DataFrame =
-      df.select(Seq("cell", "ma", "n_recoded").map(n => col(n).as(n)): _*)
-    val after = fresh(flaggedRoll).unionByName(fresh(untouchedRoll))
+    val after = freshUnion(flaggedRoll, untouchedRoll, "cell", "ma", "n_recoded")
     val counts = asgAfter.groupBy(col("cell")).agg(count(lit(1)).as("n_after"))
     before.join(mseB, Seq("cell"), "left")
       .join(counts, Seq("cell"), "left")
@@ -3155,11 +3146,7 @@ object Similarity extends QueryPack {
     val exact = mipsTopK(s, d, k).select(col("probe_id"), col("vec_id"))
     val served = mipsLshTopK(s, d, geo, k)
       .select(col("probe_id").as("a_probe"), col("vec_id").as("a_vec"))
-    exact.join(served,
-        col("probe_id") === col("a_probe") && col("vec_id") === col("a_vec"), "left")
-      .groupBy(col("probe_id"))
-      .agg(count(lit(1)).as("n_exact"),
-        sum(when(col("a_vec").isNotNull, 1L).otherwise(0L)).as("n_hit"))
+    hitCounts(exact, served)
       .withColumn("recall", col("n_hit").cast("double") / col("n_exact"))
       .orderBy(col("probe_id"))
   }

@@ -830,7 +830,6 @@ object TextOps extends QueryPack {
     // benchmark-sized and broadcast; the corpus side is one map pass;
     // the only shuffle is the (doc_id, eval_id) rollup of hits.
     "t27_contam_provenance" -> { (s, d) =>
-      val w = ContamW
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       // natural cross-doc leakage is nearly absent at test SF (the
       // eval excerpts are unique passages), so leaks are PLANTED the
@@ -844,27 +843,12 @@ object TextOps extends QueryPack {
           concat_ws(" ", lit("zlkpad0 zlkpad1 zlkpad2 zlkpad3"),
             concat_ws(" ", slice(Portable.words(col("text")), 5, 21)),
             lit("zlktail0 zlktail1 zlktail2")).as("text"))
-      val corpus = docs.unionAll(planted)
-      val evalWins = docs.filter(col("doc_id") % 13 === 0)
-        .select(col("doc_id").as("eval_id"),
-          slice(Portable.words(col("text")), 5, 21).as("ew"))
-        .filter(size(col("ew")) >= w)
-        .select(col("eval_id"),
-          explode(graft.functions.TextHash.spanHashes(col("ew"), w)).as("h"))
-        .distinct()
-      val wins = corpus
-        .select(col("doc_id"), Portable.words(col("text")).as("w"))
-        .withColumn("n_words", size(col("w")).cast("long"))
-        .filter(col("n_words") >= w)
-        .select(col("doc_id"),
-          posexplode(graft.functions.TextHash.spanHashes(col("w"), w))
-            .as(Seq("pos", "h")))
-        .select(col("doc_id"), (col("pos") + 1).cast("long").as("i"), col("h"))
-      wins.join(broadcast(evalWins), "h")
-        .filter(col("doc_id") =!= col("eval_id"))
-        .groupBy(col("doc_id"), col("eval_id"))
-        .agg(count(lit(1)).as("n_shared_windows"),
-          min(col("i")).as("first_i"), max(col("i")).as("last_i"))
+      contamProvenance(
+        docs.unionAll(planted)
+          .select(col("doc_id"), Portable.words(col("text")).as("w")),
+        docs.filter(col("doc_id") % 13 === 0)
+          .select(col("doc_id").as("eval_id"),
+            slice(Portable.words(col("text")), 5, 21).as("ew")))
         .orderBy(col("doc_id"), col("eval_id"))
     },
 
@@ -911,12 +895,8 @@ object TextOps extends QueryPack {
     // the share threshold — template inventories are small by
     // definition at any corpus size.
     "t29_boilerplate" -> { (s, d) =>
-      templateInventory(bannerPlanted(Tables.documents(s, d)
+      templateShares(bannerPlanted(Tables.documents(s, d)
           .select(col("doc_id"), col("text"), col("source"))))
-        .withColumn("share",
-          round(col("df").cast("double") / col("n_src_docs"), 6))
-        .select(col("source"), lower(hex(col("h"))).as("seg_hash"),
-          col("df"), col("n_src_docs"), col("share"))
         .orderBy(col("source"), col("seg_hash"))
     },
 
@@ -1100,17 +1080,8 @@ object TextOps extends QueryPack {
     * per-batch results equals the batch table exactly — spec-proved. */
   private[graft] def contamSpans(docSlice: DataFrame, evalWins: DataFrame): DataFrame = {
     val w = ContamW
-    val docs = docSlice
-      .select(col("doc_id"), Portable.words(col("text")).as("w"))
-      .withColumn("n_words", size(col("w")).cast("long"))
-    val wins = docs.filter(col("n_words") >= w)
-      .select(col("doc_id"), col("n_words"),
-        // native window-digest kernel (round 19, the d20 fix): the
-        // transform-lambda form ran interpreted per window
-        posexplode(graft.functions.TextHash.spanHashes(col("w"), w))
-          .as(Seq("pos", "h")))
-      .select(col("doc_id"), col("n_words"),
-        (col("pos") + 1).cast("long").as("i"), col("h"))
+    val wins = Dedup.spanWindows(
+      docSlice.select(col("doc_id"), Portable.words(col("text")).as("w")))
     val wOrd = Window.partitionBy(col("doc_id")).orderBy(col("i"))
     val spans = wins.join(broadcast(evalWins), "h")
       .withColumn("newspan",
@@ -1129,6 +1100,25 @@ object TextOps extends QueryPack {
         when(col("contam_frac") > 0.3, "drop_doc").otherwise("redact_spans"))
       .select(col("doc_id"), col("n_words"), col("n_contam_windows"),
         col("n_spans"), col("covered_words"), col("contam_frac"), col("action"))
+  }
+
+  /** t27's provenance kernel: corpus `docs` (doc_id, w: words) against
+    * `evals` (eval_id, ew: words) → one row per (doc, eval doc) pair
+    * sharing a [[ContamW]]-word window, with the shared-window count
+    * and the hit extent in the doc's word space. The eval side reduces
+    * to a broadcast (eval_id, digest) set; self-pairs are excluded.
+    * Shared by t27 and the `contamProvenance` DSL facade. */
+  private[graft] def contamProvenance(docs: DataFrame, evals: DataFrame): DataFrame = {
+    val evalWins = evals
+      .filter(size(col("ew")) >= ContamW)
+      .select(col("eval_id"),
+        explode(graft.functions.TextHash.spanHashes(col("ew"), ContamW)).as("h"))
+      .distinct()
+    Dedup.spanWindows(docs).join(broadcast(evalWins), "h")
+      .filter(col("doc_id") =!= col("eval_id"))
+      .groupBy(col("doc_id"), col("eval_id"))
+      .agg(count(lit(1)).as("n_shared_windows"),
+        min(col("i")).as("first_i"), max(col("i")).as("last_i"))
   }
 
   /** t25's four map-side code-surface signals + score over any
@@ -1260,6 +1250,18 @@ object TextOps extends QueryPack {
       .join(broadcast(srcDocs), "source")
       .filter(col("df").cast("double") / col("n_src_docs") >= minShare)
   }
+
+  /** t29's published inventory: [[templateInventory]] as (source,
+    * seg_hash, df, n_src_docs, share) with the share rounded to 6
+    * places (the filter above compares the unrounded ratio). Shared
+    * by t29 and the `boilerplateTemplates` DSL facade. */
+  private[graft] def templateShares(base: DataFrame,
+                                    minShare: Double = TplShare): DataFrame =
+    templateInventory(base, minShare)
+      .withColumn("share",
+        round(col("df").cast("double") / col("n_src_docs"), 6))
+      .select(col("source"), lower(hex(col("h"))).as("seg_hash"),
+        col("df"), col("n_src_docs"), col("share"))
 
   /** t32's strip kernel over any (doc_id, text, source) frame: the
     * share-bounded inventory folds to one hash-array row per source,

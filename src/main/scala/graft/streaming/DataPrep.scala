@@ -264,7 +264,8 @@ object DataPrep {
     * bytes alone, decoded by the matching real codec, and gated by
     * the same production media-QA rules as the batch query — the
     * identical [[graft.dsl.GraftDataFrameOps.mediaCurate]] code
-    * path, so streamed ≡ batch by construction. Two idempotent
+    * path (p11's [[graft.queries.Pipeline.mediaDisposition]] kernel),
+    * so streamed ≡ batch by construction. Two idempotent
     * writes per micro-batch (the drainWithDlq pattern — overwrite
     * under `micro_batch_id=N`, crash-replay safe): the per-doc
     * disposition table to `outDir`, and the mergeable per

@@ -6,13 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One shared local session per suite. */
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.local(appName = "graft-test")
     // The suites intentionally run tiny (<=256-row) global-window final
     // merges; WindowExec's single-partition WARN is correct advice at
     // scale but pure noise here, and thousands of repeats bury real

@@ -26,7 +26,10 @@ for d in dict.fromkeys(['/root/testdata/sf0.01',
         print(f'  {os.path.basename(p)}: {cols}')
 EOF
 
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
+# one executor thread per core unless the caller pins SPARK_GRAFT_CPUS
+# (nproc honours OMP_NUM_THREADS, so unset it for the count)
+SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
+  SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)} \
   sbt "test" "runMain graft.Verify /root/testdata/sf0.01 /tmp/gate_v01" \
       "runMain graft.Explain /root/testdata/sf0.001 /tmp/gate_plans.md" \
       "runMain graft.Bench" \
@@ -38,6 +41,13 @@ python3 tools/compare.py /root/testdata/sf0.01 /tmp/gate_v01
 # raw text/payload/url column, no undeclared cartesian/BNLJ. This is
 # the check that caught p4 shuffling text as a window rider in r14.
 python3 tools/plan_discipline.py /tmp/gate_plans.md
+
+# Plan drift: the `## <query>` sections whose operator tree (ids
+# stripped) differs from the committed PLANS.md. A change that means
+# to leave execution alone must list none; one that moves a plan on
+# purpose regenerates PLANS.md and says why in CHANGES.md.
+python3 tools/plan_tree_diff.py PLANS.md /tmp/gate_plans.md \
+  || echo "plan trees differ from PLANS.md (listed above)"
 
 # Regression watch: diff this run's bench line against the most recent
 # LIVE reading per query across ALL driver-recorded rounds (>=2x
