@@ -75,18 +75,39 @@ private[queries] trait IvfPq { this: Similarity.type =>
 
   def ivfPqIndexOf(v: DataFrame, geo: AnnGeometry = Geo,
                                   m: Int = PqM, subDim: Int = PqSubDim): IvfPqIndex = {
-    val cents = hashTopK(v, "cent", geo.nCentroids)
-      .select(col("vec_id").as("cell"), col("emb").as("c_emb"), col("nrm").as("c_nrm"))
+    val cents = centroidsOf(v, geo.nCentroids)
     val assigned = assignCells(v, cents)
       .select(col("vec_id"), col("cell"), lit(0).as("seg"))
-    val seeds = hashTopK(v, "cent", geo.nCentroids)
-    val codes = pqAssignments(v.select(col("vec_id"), col("emb")), seeds, m, subDim)
-      .select(col("vec_id"), col("sub"), col("cent_id").as("code_id"))
-    val codebook = subVecsOf(seeds, "vec_id", m, subDim)
-      .select(col("vec_id").as("code_id"), col("sub"), col("sv").as("cv"))
+    val (codes, codebook) = rawPq(v, geo.nCentroids, m, subDim)
     // a fresh build is all segment 0, so the first absorb is gen 1 —
     // known without any probe
-    IvfPqIndex(assigned, codes, cents, codebook, nextSegHint = Some(1))
+    IvfPqIndex(assigned, codes.select(col("vec_id"), col("sub"), col("code_id")),
+      cents, codebook, nextSegHint = Some(1))
+  }
+
+  /** Raw-layout PQ (a12) over (vec_id, emb, …): the codebook seeded
+    * by the `nCodes` "cent"-salted rows, and every vector's codes
+    * against it (vec_id, sub, code_id, dist). Shared by the build and
+    * [[retrainIndex]]'s re-seed. */
+  private def rawPq(v: DataFrame, nCodes: Int, m: Int, subDim: Int): (DataFrame, DataFrame) = {
+    val seeds = hashTopK(v, "cent", nCodes)
+    (pqAssignments(v.select(col("vec_id"), col("emb")), seeds, m, subDim),
+      codebookOf(seeds, m, subDim))
+  }
+
+  /** Residual-layout PQ (a17) over residual relations (vec_id, emb, …):
+    * the codebook seeded by the `nCodes` "rcent"-salted rows of
+    * `seedResid` (checkpointed: cells-sized, read by the coding pass
+    * and the artifact), and every row of `resid` coded against it
+    * (vec_id, sub, code_id, dist). The distinct salt keeps the coarse
+    * centroid rows — whose residuals are zero — out of the seeds.
+    * Shared by the residual build, [[retrainIndex]]'s re-seed, and
+    * a33/a34's build-time book. */
+  private def residualPq(resid: DataFrame, seedResid: DataFrame, nCodes: Int,
+                         m: Int, subDim: Int): (DataFrame, DataFrame) = {
+    val codebook = codebookOf(hashTopK(seedResid, "rcent", nCodes), m, subDim)
+      .localCheckpoint()
+    (pqAssignSubs(subVecsOf(resid, "vec_id", m, subDim), codebook), codebook)
   }
 
   /** Build a RESIDUAL-layout index ([[LayoutResidual]]; r17 verdict
@@ -101,29 +122,25 @@ private[queries] trait IvfPq { this: Similarity.type =>
     * broadcast-centroid residual pass. */
   def ivfPqResidualIndexOf(v: DataFrame, geo: AnnGeometry = Geo,
                            m: Int = PqM, subDim: Int = PqSubDim): IvfPqIndex = {
-    val cents = hashTopK(v, "cent", geo.nCentroids)
-      .select(col("vec_id").as("cell"), col("emb").as("c_emb"), col("nrm").as("c_nrm"))
+    val cents = centroidsOf(v, geo.nCentroids)
     val asg = assignCells(v, cents)
     val assigned = asg.select(col("vec_id"), col("cell"), lit(0).as("seg"))
     // one residual frame feeds BOTH the codebook seeds and the coding
     // pass — checkpointed so neither re-runs the assignment
     val resid = residualsOf(asg.select(col("vec_id"), col("emb"), col("cell")), cents)
       .localCheckpoint()
-    val seeds = hashTopK(resid, "rcent", geo.nCentroids)
-    val codebook = subVecsOf(seeds, "vec_id", m, subDim)
-      .select(col("vec_id").as("code_id"), col("sub"), col("sv").as("cv"))
-    val codes = pqAssignSubs(subVecsOf(resid, "vec_id", m, subDim),
-        codebook.select(col("code_id").as("cent_id"), col("sub"), col("cv")))
-      .select(col("vec_id"), col("sub"), col("cent_id").as("code_id"))
-    IvfPqIndex(assigned, codes, cents, codebook, Some(1), LayoutResidual)
+    val (codes, codebook) = residualPq(resid, resid, geo.nCentroids, m, subDim)
+    IvfPqIndex(assigned, codes.select(col("vec_id"), col("sub"), col("code_id")),
+      cents, codebook, Some(1), LayoutResidual)
   }
 
-  /** (vec_id, emb=residual) of members against their cells' centroids.
-    * `members` carries (vec_id, emb, cell); cents broadcast. */
+  /** Members' residuals against their cells' centroids: `members`
+    * (vec_id, emb, cell, …) with emb replaced by emb − c_emb and cell
+    * dropped; any other column passes through. Cents broadcast. */
   private def residualsOf(members: DataFrame, cents: DataFrame): DataFrame =
     members.join(broadcast(cents.select(col("cell"), col("c_emb"))), "cell")
-      .select(col("vec_id"),
-        zip_with(col("emb"), col("c_emb"), (a, b) => a - b).as("emb"))
+      .withColumn("emb", zip_with(col("emb"), col("c_emb"), (a, b) => a - b))
+      .drop("cell", "c_emb")
 
   /** Residual-code (vec_id, sub, code_id, dist) of `members`
     * (vec_id, emb, cell) against `cents`' centroids and the FROZEN
@@ -134,9 +151,7 @@ private[queries] trait IvfPq { this: Similarity.type =>
   private[graft] def residualCodes(members: DataFrame, cents: DataFrame,
                                    codebook: DataFrame,
                                    m: Int = PqM, subDim: Int = PqSubDim): DataFrame =
-    pqAssignSubs(subVecsOf(residualsOf(members, cents), "vec_id", m, subDim),
-      codebook.select(col("code_id").as("cent_id"), col("sub"), col("cv")))
-      .select(col("vec_id"), col("sub"), col("cent_id").as("code_id"), col("dist"))
+    pqAssignSubs(subVecsOf(residualsOf(members, cents), "vec_id", m, subDim), codebook)
 
   /** The PQ geometry (m, subDim) an EXISTING codebook was built with —
     * m = number of distinct subspaces, subDim = the code vectors'
@@ -319,8 +334,8 @@ private[queries] trait IvfPq { this: Similarity.type =>
           .select(col("vec_id"), col("sub"), col("code_id"))
       else pqAssignSubs(
           subVecsOf(newVecs.select(col("vec_id"), col("emb")), "vec_id", m, subDim),
-          ix.codebook.select(col("code_id").as("cent_id"), col("sub"), col("cv")))
-        .select(col("vec_id"), col("sub"), col("cent_id").as("code_id"))
+          ix.codebook)
+        .select(col("vec_id"), col("sub"), col("code_id"))
     // The successor hint is only safe when THIS absorb itself chose
     // the next free generation (AutoSeg): after an explicit-seg
     // absorb below existing generations, segId + 1 could collide
@@ -374,89 +389,98 @@ private[queries] trait IvfPq { this: Similarity.type =>
     IvfPqIndex(compactAssigned(ix.assigned, policy), ix.codes, ix.cents,
       ix.codebook, ix.nextSegHint, ix.layout)
 
-  /** The a15 Lloyd retrain SCOPED to an ordered cell set — the kernel
-    * shared by [[rebuildCells]] (the artifact-level executor) and
-    * a32's audit. `flagged` is the cells-sized (cell) relation a
-    * maintenance order names; `vectors` is the raw corpus relation
-    * (vec_id, emb, nrm) — PQ codes are lossy, so a retrain reads the
-    * base corpus store, exactly as a production rebuild job would.
-    * Each iteration is one a15 step over the flagged cells' members
-    * only: new centroid = element-wise member mean (from the CURRENT
-    * membership — the index's own assignment seeds the loop), then
-    * members reassign among the flagged cells' NEW centroids (argmax
-    * cosine, ties by cell — [[assignCells]]'s rule). Members can move
-    * between flagged cells but never leave the flagged set: the
-    * untouched cells' posting lists are the invariant the spec pins
-    * byte-identical. A flagged cell that empties mid-loop keeps its
-    * previous centroid (cellMeans drops it; the coalesce restores it)
-    * so the cell id survives for later arrivals. Retrained members
-    * land in segment 0 — a rebuild IS a retrain, so its posting list
-    * is fresh base, folding any delta generations it absorbed.
-    *
-    * Scale shape: members = one vec_id-keyed join against the corpus
-    * (linear, prunes to flagged cells' rows); each iteration is a
-    * broadcast-centroid assignment over the members plus a
-    * cells×dims mean — the a15 cost confined to the flagged
-    * keyspace; the untouched frames pass through behind broadcast
-    * anti-joins. Raw vectors shuffle once (the member join), never
-    * per iteration (localCheckpointed, the a15 practice). */
-  private[graft] def rebuildAssignment(assigned: DataFrame, cents: DataFrame,
-                                       flagged: DataFrame, vectors: DataFrame,
-                                       iters: Int = 1): (DataFrame, DataFrame) = {
-    val flaggedCells = flagged.select(col("cell"))
-    val memberIds = assigned.join(broadcast(flaggedCells), Seq("cell"))
-      .select(col("vec_id"), col("cell"))
-    // ONE vec_id-keyed join attaches vectors AND the current cell;
-    // the checkpoint carries both so neither the seed assignment nor
-    // the loop pays a second member-sized shuffle
-    val seeded = vectors.select(col("vec_id"), col("emb"), col("nrm"))
-      .join(memberIds, Seq("vec_id"))
-      .localCheckpoint()
-    // Conservation guard: the caller's `vectors` relation must cover
-    // every indexed member exactly once — a corpus store missing
-    // absorbed deltas (or carrying duplicate vec_ids) would otherwise
-    // silently shrink (or inflate) the retrained posting lists, and
-    // the republished manifest would record the corrupted counts as
-    // truth, so no tamper guard could ever catch it. TWO independent
-    // checks (r17 ADVICE #1): the raw row count catches net loss/
-    // gain, and the DISTINCT vec_id count catches the cancelling case
-    // the count alone passes — one duplicated vec_id AND one missing
-    // member leave the row count intact while the posting list is
-    // corrupted on both ends. All three reads are on checkpointed/
-    // cells-pruned frames — no corpus recompute; the distinct is one
-    // long-column aggregate over the flagged members only.
-    val nMembers = seeded.count()
-    val nIndexed = memberIds.count()
-    val nDistinct = seeded.select(col("vec_id")).distinct().count()
-    require(nMembers == nIndexed && nDistinct == nIndexed,
-      s"[graft] rebuildCells: vectors relation yields $nMembers rows " +
-        s"($nDistinct distinct vec_ids) for $nIndexed indexed members of " +
-        "the flagged cells — the corpus store is missing members or has " +
-        "duplicate vec_ids; aborting before the retrain writes a silently " +
-        "corrupted posting list")
-    val members = seeded.select(col("vec_id"), col("emb"), col("nrm"))
-    var cur = cents.join(broadcast(flaggedCells), Seq("cell"))
-      .select(col("cell"), col("c_emb"), col("c_nrm"))
-    // current membership (carried by the seeded join) seeds the
-    // first mean step
-    var asg = seeded.select(col("vec_id"), col("emb"), col("nrm"), col("cell"))
-    for (_ <- 1 to iters) {
-      val means = cellMeans(asg)
-      cur = cur.as("o").join(means.as("n"), Seq("cell"), "left")
+  /** `iters` Lloyd steps from a given membership — the a15 step shared
+    * by the scoped rebuild and the full retrain. Each step re-centres
+    * every cell of `cents` (cell, c_emb, c_nrm) on the element-wise
+    * mean of its members in `asg` (vec_id, emb, cell, …) — a cell left
+    * with no members keeps its previous centroid (cellMeans drops it;
+    * the coalesce restores it), so the cell id survives for later
+    * arrivals — then re-dispatches `members` (vec_id, emb, nrm) among
+    * the new centroids with [[assignCells]]. Each step's centroids are
+    * checkpointed (cells × dims) so the lineage does not grow per step.
+    * Returns (centroids, assignment); with `iters` = 0, the inputs. */
+  private def lloyd(members: DataFrame, asg: DataFrame, cents: DataFrame,
+                    iters: Int): (DataFrame, DataFrame) =
+    (1 to iters).foldLeft((cents, asg)) { case ((cur, a), _) =>
+      val next = cur.as("o").join(cellMeans(a).as("n"), Seq("cell"), "left")
         .select(col("cell"),
           coalesce(col("n.c_emb"), col("o.c_emb")).as("c_emb"),
           coalesce(col("n.c_nrm"), col("o.c_nrm")).as("c_nrm"))
         .localCheckpoint()
-      asg = assignCells(members, cur)
+      (next, assignCells(members, next))
     }
+
+  /** The flagged cells' members joined ONCE to their vectors —
+    * (vec_id, emb, nrm, cell), checkpointed, so the conservation guard,
+    * the seed mean step and the re-dispatch never pay a second
+    * member-sized shuffle. `vectors` is the raw corpus relation
+    * (vec_id, emb, nrm): PQ codes are lossy, so a retrain reads the
+    * base corpus store, exactly as a production rebuild job would. */
+  private def flaggedMembers(assigned: DataFrame, flagged: DataFrame,
+                             vectors: DataFrame): DataFrame =
+    vectors.select(col("vec_id"), col("emb"), col("nrm"))
+      .join(assigned.join(broadcast(flagged.select(col("cell"))), Seq("cell"))
+        .select(col("vec_id"), col("cell")), Seq("vec_id"))
+      .localCheckpoint()
+
+  /** The a15 Lloyd retrain SCOPED to an ordered cell set: `flagged` is
+    * the cells-sized (cell) relation a maintenance order names,
+    * `seeded` its members from [[flaggedMembers]]. `iters` steps of
+    * [[lloyd]] over the flagged members only, seeded by the index's
+    * own assignment; members can move between flagged cells but never
+    * leave the flagged set — the untouched cells' posting lists are
+    * the invariant the spec pins byte-identical. Retrained members
+    * land in segment 0 — a rebuild IS a retrain, so its posting list
+    * is fresh base, folding any delta generations it absorbed.
+    *
+    * The rewrite is materialized: the returned frames must be
+    * immediately SERVABLE, and serving joins assigned⋈cents — two
+    * unions sharing lineage. When both children of a union trace to
+    * the same source attributes, a later join over it dies in
+    * constraint rewriting; the checkpoint (corpus ints + cells-sized
+    * arrays) is the state a maintenance job republishes anyway, and
+    * it lets an audit recount the state rather than the plan.
+    *
+    * Scale shape: each iteration is a broadcast-centroid assignment
+    * over the members plus a cells×dims mean — the a15 cost confined
+    * to the flagged keyspace; the untouched frames pass through behind
+    * broadcast anti-joins. */
+  private def retrainFlagged(assigned: DataFrame, cents: DataFrame, flagged: DataFrame,
+                             seeded: DataFrame, iters: Int): (DataFrame, DataFrame) = {
+    val flaggedCells = flagged.select(col("cell"))
+    val (cur, asg) = lloyd(seeded.select(col("vec_id"), col("emb"), col("nrm")), seeded,
+      cents.join(broadcast(flaggedCells), Seq("cell"))
+        .select(col("cell"), col("c_emb"), col("c_nrm")), iters)
     val newAssigned = freshUnion(
       assigned.join(broadcast(flaggedCells), Seq("cell"), "left_anti"),
       asg.withColumn("seg", lit(0)), "vec_id", "cell", "seg")
     val newCents = freshUnion(
       cents.join(broadcast(flaggedCells), Seq("cell"), "left_anti"),
       cur, "cell", "c_emb", "c_nrm")
-    (newAssigned, newCents)
+    (newAssigned.localCheckpoint(), newCents.localCheckpoint())
   }
+
+  /** The rebuild arm's geometry kernel — [[retrainFlagged]] over
+    * [[flaggedMembers]], without [[rebuildCells]]' conservation guard.
+    * a32, a33 and a35 execute their rebuilds through it. Returns the
+    * rewritten (assigned (vec_id, cell, seg), cents), both
+    * checkpointed. */
+  private[graft] def rebuildAssignment(assigned: DataFrame, cents: DataFrame,
+                                       flagged: DataFrame, vectors: DataFrame,
+                                       iters: Int = 1): (DataFrame, DataFrame) =
+    retrainFlagged(assigned, cents, flagged,
+      flaggedMembers(assigned, flagged, vectors), iters)
+
+  /** The rebuild arm's re-code kernel (residual layout): the flagged
+    * members `fm` (vec_id, cell) after a rebuild, their residuals taken
+    * against the rebuilt `cents` and coded against the FROZEN residual
+    * `codebook` — (vec_id, sub, code_id, dist), checkpointed. Shared by
+    * [[rebuildCells]] and a33. */
+  private def recodeFlagged(vectors: DataFrame, fm: DataFrame, cents: DataFrame,
+                            codebook: DataFrame, m: Int, subDim: Int): DataFrame =
+    residualCodes(vectors.select(col("vec_id"), col("emb")).join(fm, Seq("vec_id")),
+        cents, codebook, m, subDim)
+      .localCheckpoint()
 
   /** Execute the REBUILD arm a22 decides — the last decide→act seam
     * in the index lifecycle closed (round 17; r16 verdict #1).
@@ -483,42 +507,53 @@ private[queries] trait IvfPq { this: Similarity.type =>
     * same lineage bump as compaction. Spec-pinned: untouched cells'
     * assigned/cents/codes rows byte-identical, rebuilt cells' mean
     * assignment cosine not worse (the k-means objective), recall on
-    * a drifted cluster ≥ the stale index's, tamper guards live. */
+    * a drifted cluster ≥ the stale index's, tamper guards live.
+    * The retrain and the re-code are the kernels a32/a33 audit
+    * ([[retrainFlagged]], [[recodeFlagged]]); this function adds the
+    * conservation guards and the code passthrough. */
   def rebuildCells(ix: IvfPqIndex, policy: DataFrame, vectors: DataFrame,
                    iters: Int = 1): IvfPqIndex = {
     val flagged = policy.filter(col("action") === "rebuild").select(col("cell"))
-    val (asg, cents) =
-      rebuildAssignment(ix.assigned, ix.cents, flagged, vectors, iters)
-    // Materialize the rewrite: the returned index must be immediately
-    // SERVABLE, and serving joins assigned⋈cents — two unions sharing
-    // lineage, the constraint-rewrite hazard rebuildAssignment
-    // documents. A maintenance job materializes the rewritten state
-    // exactly once anyway (republish via saveIvfPqIndex); the
-    // checkpoint IS that materialization (corpus ints + cells-sized
-    // arrays), pinning the state the window produced.
-    val asgC = asg.localCheckpoint()
-    val centsC = cents.localCheckpoint()
+    val seeded = flaggedMembers(ix.assigned, flagged, vectors)
+    // Conservation guard: the caller's `vectors` relation must cover
+    // every indexed member exactly once — a corpus store missing
+    // absorbed deltas (or carrying duplicate vec_ids) would otherwise
+    // silently shrink (or inflate) the retrained posting lists, and
+    // the republished manifest would record the corrupted counts as
+    // truth, so no tamper guard could ever catch it. TWO independent
+    // checks (r17 ADVICE #1): the raw row count catches net loss/
+    // gain, and the DISTINCT vec_id count catches the cancelling case
+    // the count alone passes — one duplicated vec_id AND one missing
+    // member leave the row count intact while the posting list is
+    // corrupted on both ends. All three reads are on checkpointed/
+    // cells-pruned frames — no corpus recompute; the distinct is one
+    // long-column aggregate over the flagged members only.
+    val nMembers = seeded.count()
+    val nIndexed = ix.assigned.join(broadcast(flagged), Seq("cell")).count()
+    val nDistinct = seeded.select(col("vec_id")).distinct().count()
+    require(nMembers == nIndexed && nDistinct == nIndexed,
+      s"[graft] rebuildCells: vectors relation yields $nMembers rows " +
+        s"($nDistinct distinct vec_ids) for $nIndexed indexed members of " +
+        "the flagged cells — the corpus store is missing members or has " +
+        "duplicate vec_ids; aborting before the retrain writes a silently " +
+        "corrupted posting list")
+    val (asg, cents) = retrainFlagged(ix.assigned, ix.cents, flagged, seeded, iters)
     val codes =
       if (ix.layout != LayoutResidual) ix.codes
       else {
-        // members never leave the flagged set (rebuildAssignment's
-        // contract), so the flagged members' AFTER rows are exactly
-        // the rewritten assignment's rows in flagged cells — the ids
-        // whose codes must change; everyone else's rows pass through
-        // behind a key anti-join, byte-identical
-        val fm = asgC.join(broadcast(flagged), Seq("cell"))
+        // members never leave the flagged set, so the flagged members'
+        // AFTER rows are exactly the rewritten assignment's rows in
+        // flagged cells — the ids whose codes must change; everyone
+        // else's rows pass through behind a key anti-join, byte-identical
+        val fm = asg.join(broadcast(flagged), Seq("cell"))
           .select(col("vec_id"), col("cell"))
-        val members = vectors.select(col("vec_id"), col("emb"))
-          .join(fm, Seq("vec_id"))
         // geometry from the frozen codebook, never caller parameters
         // (r18 ADVICE #1): pqAssignSubs inner-joins on `sub`, so a
         // mismatched m would silently drop code rows for every
         // flagged member — exactly the corruption class the
         // assignment-side conservation guard above exists to catch
         val (m, subDim) = pqGeometryOf(ix.codebook)
-        val recoded = residualCodes(members, centsC, ix.codebook, m, subDim)
-          .select(col("vec_id"), col("sub"), col("code_id"))
-          .localCheckpoint()
+        val recoded = recodeFlagged(vectors, fm, cents, ix.codebook, m, subDim)
         // Code-side conservation (the re-code twin of the assignment
         // guard): every flagged member must come back with exactly m
         // code words. Build/absorb maintain m-rows-per-member as an
@@ -541,7 +576,32 @@ private[queries] trait IvfPq { this: Similarity.type =>
             recoded, "vec_id", "sub", "code_id")
           .localCheckpoint()
       }
-    IvfPqIndex(asgC, codes, centsC, ix.codebook, ix.nextSegHint, ix.layout)
+    IvfPqIndex(asg, codes, cents, ix.codebook, ix.nextSegHint, ix.layout)
+  }
+
+  /** [[retrainIndex]]'s kernel, without its guards, over `v` (vec_id,
+    * emb, nrm): `iters` [[lloyd]] steps over the whole corpus seeded
+    * from the index's current membership, then the codebook re-seeded
+    * and every member re-coded for the index's layout ([[rawPq]] /
+    * [[residualPq]] against the RETRAINED centroids). The returned
+    * index keeps what an audit reads: `assigned` is the final
+    * assignment (vec_id, emb, nrm, cell, c_cos) — not yet segment-
+    * tagged — and `codes` carry `dist`. a34 audits exactly this. */
+  private def retrainKernel(ix: IvfPqIndex, v: DataFrame, iters: Int,
+                            nCodes: Int, m: Int, subDim: Int): IvfPqIndex = {
+    // membership-seeded Lloyd: ONE vec_id join attaches the current
+    // cell; each step is a cells×dims mean + a broadcast re-dispatch
+    val (cents, asg) = lloyd(v, v.join(ix.assigned.select(col("vec_id"), col("cell")), Seq("vec_id")),
+      ix.cents.select(col("cell"), col("c_emb"), col("c_nrm")), iters)
+    val (codes, codebook) =
+      if (ix.layout == LayoutResidual) {
+        // one residual frame (vs the RETRAINED centroids) feeds both
+        // the re-seed and the coding pass — the build-path practice
+        val resid = residualsOf(asg.select(col("vec_id"), col("emb"), col("cell")), cents)
+          .localCheckpoint()
+        residualPq(resid, resid, nCodes, m, subDim)
+      } else rawPq(v, nCodes, m, subDim)
+    IvfPqIndex(asg, codes, cents, codebook, nextSegHint = Some(1), ix.layout)
   }
 
   /** FULL retrain with codebook RE-SEED — the index-WIDE maintenance
@@ -573,7 +633,8 @@ private[queries] trait IvfPq { this: Similarity.type =>
     * centroid corpus map pass + a cells×dims partial-combining mean;
     * the re-seed is a salted top-k (TakeOrdered, corpus-size-
     * independent state) and the coding pass is map-side against the
-    * broadcast book — no other corpus shuffle. */
+    * broadcast book — no other corpus shuffle. The arithmetic is
+    * [[retrainKernel]], the kernel a34 audits. */
   def retrainIndex(ix: IvfPqIndex, vectors: DataFrame, iters: Int = 1,
                    geo: AnnGeometry = Geo): IvfPqIndex = {
     val v = vectors.select(col("vec_id"), col("emb"), col("nrm"))
@@ -585,46 +646,10 @@ private[queries] trait IvfPq { this: Similarity.type =>
         s"($nDistinct distinct vec_ids) for $nIndexed indexed members — " +
         "the corpus store is missing members or has duplicate vec_ids; " +
         "aborting before the retrain publishes a corrupted index")
-    // membership-seeded Lloyd: ONE vec_id join attaches the current
-    // cell; each step is a cells×dims mean + a broadcast re-dispatch
-    var asg = v.join(ix.assigned.select(col("vec_id"), col("cell")), Seq("vec_id"))
-    var cur = ix.cents.select(col("cell"), col("c_emb"), col("c_nrm"))
-    for (_ <- 1 to iters) {
-      val means = cellMeans(asg)
-      cur = cur.as("o").join(means.as("n"), Seq("cell"), "left")
-        .select(col("cell"),
-          coalesce(col("n.c_emb"), col("o.c_emb")).as("c_emb"),
-          coalesce(col("n.c_nrm"), col("o.c_nrm")).as("c_nrm"))
-        .localCheckpoint()
-      asg = assignCells(v, cur)
-    }
-    val assigned = asg.select(col("vec_id"), col("cell"), lit(0).as("seg"))
     val (m, subDim) = pqGeometryOf(ix.codebook)
-    val (codes, codebook) =
-      if (ix.layout == LayoutResidual) {
-        // one residual frame (vs the RETRAINED centroids) feeds both
-        // the re-seed and the coding pass — the build-path practice
-        val resid = residualsOf(
-            asg.select(col("vec_id"), col("emb"), col("cell")), cur)
-          .localCheckpoint()
-        val seeds = hashTopK(resid, "rcent", geo.nCentroids)
-        val cb = subVecsOf(seeds, "vec_id", m, subDim)
-          .select(col("vec_id").as("code_id"), col("sub"), col("sv").as("cv"))
-          .localCheckpoint()
-        val cd = pqAssignSubs(subVecsOf(resid, "vec_id", m, subDim),
-            cb.select(col("code_id").as("cent_id"), col("sub"), col("cv")))
-          .select(col("vec_id"), col("sub"), col("cent_id").as("code_id"))
-        (cd, cb)
-      } else {
-        val seeds = hashTopK(v, "cent", geo.nCentroids)
-        val cb = subVecsOf(seeds, "vec_id", m, subDim)
-          .select(col("vec_id").as("code_id"), col("sub"), col("sv").as("cv"))
-          .localCheckpoint()
-        val cd = pqAssignments(v.select(col("vec_id"), col("emb")), seeds, m, subDim)
-          .select(col("vec_id"), col("sub"), col("cent_id").as("code_id"))
-        (cd, cb)
-      }
-    IvfPqIndex(assigned, codes, cur, codebook, nextSegHint = Some(1), ix.layout)
+    val rt = retrainKernel(ix, v, iters, geo.nCentroids, m, subDim)
+    rt.copy(assigned = rt.assigned.select(col("vec_id"), col("cell"), lit(0).as("seg")),
+      codes = rt.codes.select(col("vec_id"), col("sub"), col("code_id")))
   }
 
   /** The deterministic START direction for a32's planted drift —
@@ -697,6 +722,55 @@ private[queries] trait IvfPq { this: Similarity.type =>
       .localCheckpoint()
   }
 
+  /** The drifted lifecycle fixture a32, a34 and a35 act on: the corpus
+    * `v` (vec_id, emb, nrm) plus [[plantedDriftVecs]]' cluster, and the
+    * delta flag — a31's 1-in-4 honest split or any planted row. The
+    * planted-id offset is derived from the corpus itself (r18 ADVICE
+    * #3) — one footer-backed max probe over the pruned id column; the
+    * oracle derives the identical value with a scalar subquery, so
+    * planted ids can never collide with honest ids at ANY scale. */
+  private[graft] def driftedFixture(v: DataFrame, geo: AnnGeometry): (DataFrame, Column) = {
+    val off = v.agg(max(col("vec_id"))).head().getLong(0) + 1L
+    (v.select(col("vec_id"), col("emb"), col("nrm"))
+        .unionByName(plantedDriftVecs(v, geo, off)),
+      pmod(col("vec_id"), lit(4L)) === 1L || col("vec_id") >= off)
+  }
+
+  /** The delta-grown lifecycle state every executor audit (a31–a35)
+    * acts on: base trains the coarse geometry, EVERY vector assigns
+    * once (the same physical state decides and is acted on), and the
+    * checkpoint carries (vec_id, cell, c_cos, is_delta, seg) only —
+    * seg 0 for base rows, 1 for the absorbed generation; raw vectors
+    * stay in the corpus relation. One definition so the audits can
+    * never quietly diverge on the state they audit. */
+  private def deltaGrownState(v: DataFrame, isDelta: Column,
+                              geo: AnnGeometry): (DataFrame, DataFrame) = {
+    val cents = centroidsOf(v.filter(!isDelta), geo.nCentroids)
+    val asg = assignCells(v, cents).withColumn("is_delta", isDelta)
+      .select(col("vec_id"), col("cell"), col("c_cos"), col("is_delta"),
+        when(col("is_delta"), lit(1)).otherwise(lit(0)).as("seg"))
+      .localCheckpoint()
+    (cents, asg)
+  }
+
+  /** a33/a34's BEFORE state: the residual index as it was built from
+    * the base rows and then grew — every member's residual against its
+    * assigned centroid, the book seeded from the BASE residuals only
+    * ([[ivfPqResidualIndexOf]]'s construction over the base: the book
+    * predates the arrivals), and the arrivals coded against that
+    * frozen book as [[ivfPqIndexDelta]] codes them. One checkpointed
+    * residual frame feeds seeds and coding. Returns (codes with
+    * `dist`, checkpointed; codebook). */
+  private def buildTimeResidualPq(v: DataFrame, cents: DataFrame, asg: DataFrame,
+                                  geo: AnnGeometry): (DataFrame, DataFrame) = {
+    val resid = residualsOf(v.select(col("vec_id"), col("emb"))
+        .join(asg.select(col("vec_id"), col("cell"), col("is_delta")), Seq("vec_id")), cents)
+      .localCheckpoint()
+    val (codes, codebook) = residualPq(resid, resid.filter(!col("is_delta")),
+      geo.nCentroids, PqM, PqSubDim)
+    (codes.localCheckpoint(), codebook)
+  }
+
   /** a32: the rebuild EXECUTION audit — a31's pattern applied to the
     * other verdict arm. Build the delta-grown state (a31's 1-in-4
     * honest split PLUS [[plantedDriftVecs]]' drifted cluster — round
@@ -706,33 +780,25 @@ private[queries] trait IvfPq { this: Similarity.type =>
     * ([[policyFromStats]]: delta share AND assignment-cosine gap —
     * the planted cluster trips the gap arm, honest delta-heavy cells
     * read compact, light cells keep), EXECUTE the rebuild arm with
-    * [[rebuildAssignment]] (one Lloyd step over exactly the
-    * gap-flagged cells), and report per cell what the window
-    * physically did: populations, the policy's action, member count
-    * and segment count after (RECOUNTED from the rewritten frames,
-    * not derived from the policy — agreement with the oracle's
-    * independent re-derivation of the drift construction, the policy
-    * arms AND the retrain arithmetic proves the executor moved
-    * exactly the gap-triggered cells and nothing else), and the mean
-    * assignment cosine before/after (the k-means objective; keep AND
-    * compact cells recount to their before value — the rebuild
-    * executor must not touch a compact cell, that is a31's job).
-    * Scale shape: ONE corpus assignment pass (localCheckpointed,
-    * shared by the policy, the rewrite seed and the recount), the
-    * retrain confined to the flagged members, cells-sized rollups
-    * and broadcast joins — raw vectors shuffle once (the member
-    * join); the drift construction is 11 one-row broadcast joins. */
+    * [[rebuildAssignment]] ([[rebuildCells]]' retrain: one Lloyd step
+    * over exactly the gap-flagged cells), and report per cell what
+    * the window physically did: populations, the policy's action,
+    * member count and segment count after (RECOUNTED from the
+    * rewritten frames, not derived from the policy — agreement with
+    * the oracle's independent re-derivation of the drift
+    * construction, the policy arms AND the retrain arithmetic proves
+    * the executor moved exactly the gap-triggered cells and nothing
+    * else), and the mean assignment cosine before/after (the k-means
+    * objective; keep AND compact cells recount to their before value
+    * — the rebuild executor must not touch a compact cell, that is
+    * a31's job). Scale shape: ONE corpus assignment pass
+    * (localCheckpointed, shared by the policy, the rewrite seed and
+    * the recount), the retrain confined to the flagged members,
+    * cells-sized rollups and broadcast joins; the drift construction
+    * is one aggregate fold over the cells-sized seed frame. */
   def rebuildExec(s: SparkSession, d: String, geo: AnnGeometry = Geo): DataFrame = {
-    val v = vecs(s, d)
-    // planted-id offset derived from the corpus itself (r18 ADVICE
-    // #3) — one footer-backed max probe over the pruned id column;
-    // the oracle derives the identical value with a scalar subquery,
-    // so planted ids can never collide with honest ids at ANY scale
-    val off = v.agg(max(col("vec_id"))).head().getLong(0) + 1L
-    val all = v.select(col("vec_id"), col("emb"), col("nrm"))
-      .unionByName(plantedDriftVecs(v, geo, off))
-    rebuildExecOf(all,
-      pmod(col("vec_id"), lit(4L)) === 1L || col("vec_id") >= off, geo)
+    val (all, isDelta) = driftedFixture(vecs(s, d), geo)
+    rebuildExecOf(all, isDelta, geo)
   }
 
   private[graft] def rebuildExecOf(v: DataFrame, isDelta: Column,
@@ -746,19 +812,9 @@ private[queries] trait IvfPq { this: Similarity.type =>
     val before = policyFromStats(deltaStatsOf(asg))
       .select(col("cell"), col("n_base"), col("n_delta"), col("action"))
       .join(mcb, Seq("cell"))
-    val assigned = asg.select(col("vec_id"), col("cell"),
-      when(col("is_delta"), lit(1)).otherwise(lit(0)).as("seg"))
     val flagged = before.filter(col("action") === "rebuild").select(col("cell"))
-    val (asgAfter0, centsAfter0) = rebuildAssignment(assigned, cents, flagged,
-      v.select(col("vec_id"), col("emb"), col("nrm")))
-    // checkpoint the rewritten state before the recount: the recount
-    // re-joins the corpus relation the retrain's union children also
-    // derive from, and a Union embedded under a same-lineage join is
-    // the constraint-rewrite hazard rebuildAssignment documents; the
-    // checkpoint (ints + cells-sized arrays) also makes "recount"
-    // literal — the audit reads the state, not the plan that made it
-    val asgAfter = asgAfter0.localCheckpoint()
-    val centsAfter = centsAfter0.localCheckpoint()
+    val (asgAfter, centsAfter) = rebuildAssignment(
+      asg.select(col("vec_id"), col("cell"), col("seg")), cents, flagged, v)
     val after = v.select(col("vec_id"), col("emb"), col("nrm"))
       .join(asgAfter, Seq("vec_id"))
       .join(broadcast(centsAfter), Seq("cell"))
@@ -788,9 +844,10 @@ private[queries] trait IvfPq { this: Similarity.type =>
     * (a17): when the maintenance order moves centroids, the flagged
     * cells' members must be re-coded because their residuals are
     * taken against the very centroids that moved. Same lifecycle
-    * state as a32 (1-in-4 delta split, rank-by-delta-share order,
-    * one Lloyd step via [[rebuildAssignment]]), then the EXACT
-    * re-code kernel [[rebuildCells]] runs ([[residualCodes]] against
+    * state as a32 (1-in-4 delta split, rank-by-delta-share order),
+    * the build-time residual index ([[buildTimeResidualPq]]), then
+    * both kernels [[rebuildCells]] runs: one Lloyd step via
+    * [[rebuildAssignment]] and the re-code ([[recodeFlagged]] against
     * the moved centroids and the FROZEN residual codebook). Reported
     * per cell: populations, the order, member count after, how many
     * members' code words physically changed (0 on keep cells — the
@@ -811,27 +868,7 @@ private[queries] trait IvfPq { this: Similarity.type =>
                                            geo: AnnGeometry = Geo,
                                            rebuildK: Int = 3): DataFrame = {
     val (cents, asg) = deltaGrownState(v, isDelta, geo)
-    val vv = v.select(col("vec_id"), col("emb"), col("nrm"))
-    // BEFORE state: every member's residual vs its assigned centroid,
-    // coded against the residual codebook seeded (at build time, i.e.
-    // from the BASE population) with a17's distinct "rcent" salt. One
-    // checkpointed residual frame feeds seeds and coding.
-    val residB = vv.join(asg.select(col("vec_id"), col("cell"), col("is_delta")), Seq("vec_id"))
-      .join(broadcast(cents.select(col("cell"), col("c_emb"))), Seq("cell"))
-      .select(col("vec_id"), col("cell"), col("is_delta"),
-        zip_with(col("emb"), col("c_emb"), (a, b) => a - b).as("emb"))
-      .localCheckpoint()
-    val seeds = hashTopK(
-      residB.filter(!col("is_delta")).select(col("vec_id"), col("emb")),
-      "rcent", geo.nCentroids)
-    val codebook = subVecsOf(seeds, "vec_id", PqM, PqSubDim)
-      .select(col("vec_id").as("code_id"), col("sub"), col("sv").as("cv"))
-      .localCheckpoint()
-    val codesB = pqAssignSubs(
-        subVecsOf(residB.select(col("vec_id"), col("emb")), "vec_id", PqM, PqSubDim),
-        codebook.select(col("code_id").as("cent_id"), col("sub"), col("cv")))
-      .select(col("vec_id"), col("sub"), col("cent_id").as("code_id"), col("dist"))
-      .localCheckpoint()
+    val (codesB, codebook) = buildTimeResidualPq(v, cents, asg, geo)
     val before = asg.groupBy(col("cell"))
       .agg(sum(when(!col("is_delta"), 1L).otherwise(0L)).as("n_base"),
         sum(when(col("is_delta"), 1L).otherwise(0L)).as("n_delta"))
@@ -850,18 +887,12 @@ private[queries] trait IvfPq { this: Similarity.type =>
       .groupBy(col("cell")).agg(avg(col("dist")).as("mb"))
     // EXECUTE both arms with the artifact kernels: geometry rewrite,
     // then the re-code of exactly the flagged members
-    val assigned = asg.select(col("vec_id"), col("cell"),
-      when(col("is_delta"), lit(1)).otherwise(lit(0)).as("seg"))
     val flagged = before.filter(col("action") === "rebuild").select(col("cell"))
-    val (asgAfter0, centsAfter0) = rebuildAssignment(assigned, cents, flagged, vv)
-    val asgAfter = asgAfter0.localCheckpoint()
-    val centsAfter = centsAfter0.localCheckpoint()
+    val (asgAfter, centsAfter) = rebuildAssignment(
+      asg.select(col("vec_id"), col("cell"), col("seg")), cents, flagged, v)
     val fm = asgAfter.join(broadcast(flagged), Seq("cell"))
       .select(col("vec_id"), col("cell"))
-    val codesA = residualCodes(
-        vv.select(col("vec_id"), col("emb")).join(fm, Seq("vec_id")),
-        centsAfter, codebook, PqM, PqSubDim)
-      .localCheckpoint()
+    val codesA = recodeFlagged(v, fm, centsAfter, codebook, PqM, PqSubDim)
     // per flagged member: did ANY subspace's code word move?
     val changed = codesA.as("a")
       .join(codesB.as("b"),
@@ -915,84 +946,37 @@ private[queries] trait IvfPq { this: Similarity.type =>
     * the corpus that exists, not the one that existed at build time).
     * The oracle re-derives the drift construction, the build-time
     * book, the full Lloyd step, the re-seed ranking and both coding
-    * passes from scratch. [[retrainIndex]] — the composed kernel a
-    * fleet actually calls (conservation guard, segment fold, lineage
-    * bump via republish) — is spec-pinned against this arithmetic
-    * (PipelineSpec: codes/centroids agree frame-for-frame, drifted
-    * recall not worse, manifest round-trip). Scale shape: one corpus
-    * assignment pass per side (broadcast centroids), one vec_id
-    * member join, cells×dims means, salted top-k seeds
-    * (TakeOrdered), map-side coding against broadcast books,
-    * cells-sized rollups; the drift construction is 11 one-row
-    * broadcast joins behind a checkpoint. */
+    * passes from scratch. The retrain runs [[retrainKernel]] — the
+    * arithmetic [[retrainIndex]] publishes, minus its conservation
+    * guard — so the oracle checks the function a fleet calls. Scale
+    * shape: one corpus assignment pass per side (broadcast
+    * centroids), one vec_id member join, cells×dims means, salted
+    * top-k seeds (TakeOrdered), map-side coding against broadcast
+    * books, cells-sized rollups. */
   def fullRetrainExec(s: SparkSession, d: String, geo: AnnGeometry = Geo): DataFrame = {
-    val v = vecs(s, d)
-    // derived planted-id offset — the a32 practice (r18 ADVICE #3)
-    val off = v.agg(max(col("vec_id"))).head().getLong(0) + 1L
-    val all = v.select(col("vec_id"), col("emb"), col("nrm"))
-      .unionByName(plantedDriftVecs(v, geo, off))
-    fullRetrainExecOf(all,
-      pmod(col("vec_id"), lit(4L)) === 1L || col("vec_id") >= off, geo)
+    val (all, isDelta) = driftedFixture(vecs(s, d), geo)
+    fullRetrainExecOf(all, isDelta, geo)
   }
 
   private[graft] def fullRetrainExecOf(v: DataFrame, isDelta: Column,
                                        geo: AnnGeometry = Geo): DataFrame = {
     val (cents, asg) = deltaGrownState(v, isDelta, geo)
-    val vv = v.select(col("vec_id"), col("emb"), col("nrm"))
-    // BEFORE: the build-time residual book — a33's construction
-    // verbatim (seeded from BASE residuals: the book predates the
-    // arrivals, which is exactly why the re-seed has something to fix)
-    val residB = vv.join(asg.select(col("vec_id"), col("cell"), col("is_delta")),
-        Seq("vec_id"))
-      .join(broadcast(cents.select(col("cell"), col("c_emb"))), Seq("cell"))
-      .select(col("vec_id"), col("cell"), col("is_delta"),
-        zip_with(col("emb"), col("c_emb"), (a, b) => a - b).as("emb"))
-      .localCheckpoint()
-    val seedsB = hashTopK(
-      residB.filter(!col("is_delta")).select(col("vec_id"), col("emb")),
-      "rcent", geo.nCentroids)
-    val codebookB = subVecsOf(seedsB, "vec_id", PqM, PqSubDim)
-      .select(col("vec_id").as("code_id"), col("sub"), col("sv").as("cv"))
-      .localCheckpoint()
-    val codesB = pqAssignSubs(
-        subVecsOf(residB.select(col("vec_id"), col("emb")), "vec_id", PqM, PqSubDim),
-        codebookB.select(col("code_id").as("cent_id"), col("sub"), col("cv")))
-      .select(col("vec_id"), col("sub"), col("cent_id").as("code_id"), col("dist"))
-      .localCheckpoint()
+    val (codesB, codebookB) = buildTimeResidualPq(v, cents, asg, geo)
     val before = asg.groupBy(col("cell"))
       .agg(sum(when(!col("is_delta"), 1L).otherwise(0L)).as("n_base"),
         sum(when(col("is_delta"), 1L).otherwise(0L)).as("n_delta"),
         avg(col("c_cos")).as("mcb"))
     val mseB = codesB.join(asg.select(col("vec_id"), col("cell")), Seq("vec_id"))
       .groupBy(col("cell")).agg(avg(col("dist")).as("mb"))
-    // EXECUTE: retrainIndex's arithmetic with the coding distance
-    // kept (the composed kernel drops `dist` from the artifact frame;
-    // PipelineSpec pins retrainIndex's output against this audit
-    // frame-for-frame). Full Lloyd step: means from CURRENT
-    // membership, corpus-wide re-dispatch.
-    val members = vv.join(asg.select(col("vec_id"), col("cell")), Seq("vec_id"))
+    // EXECUTE: one full Lloyd step, re-seed and re-code on the grown
+    // residual index
+    val rt = retrainKernel(
+      IvfPqIndex(asg.select(col("vec_id"), col("cell"), col("seg")), codesB, cents,
+        codebookB, None, LayoutResidual),
+      v.select(col("vec_id"), col("emb"), col("nrm")), 1, geo.nCentroids, PqM, PqSubDim)
+    val afterAsg = rt.assigned.select(col("vec_id"), col("cell"), col("c_cos"))
       .localCheckpoint()
-    val means = cellMeans(members)
-    val centsA = cents.as("o").join(means.as("n"), Seq("cell"), "left")
-      .select(col("cell"),
-        coalesce(col("n.c_emb"), col("o.c_emb")).as("c_emb"),
-        coalesce(col("n.c_nrm"), col("o.c_nrm")).as("c_nrm"))
-      .localCheckpoint()
-    val asgA = assignCells(vv, centsA)
-    val residA = residualsOf(
-        asgA.select(col("vec_id"), col("emb"), col("cell")), centsA)
-      .localCheckpoint()
-    val afterAsg = asgA.select(col("vec_id"), col("cell"), col("c_cos"))
-      .localCheckpoint()
-    val seedsA = hashTopK(residA, "rcent", geo.nCentroids)
-    val codebookA = subVecsOf(seedsA, "vec_id", PqM, PqSubDim)
-      .select(col("vec_id").as("code_id"), col("sub"), col("sv").as("cv"))
-      .localCheckpoint()
-    val codesA = pqAssignSubs(
-        subVecsOf(residA, "vec_id", PqM, PqSubDim),
-        codebookA.select(col("code_id").as("cent_id"), col("sub"), col("cv")))
-      .select(col("vec_id"), col("sub"), col("cent_id").as("code_id"), col("dist"))
-      .localCheckpoint()
+    val codesA = rt.codes.localCheckpoint()
     // per member: did ANY subspace's code word move under the re-seed?
     val chg = codesA.as("a")
       .join(codesB.as("b"),
@@ -1021,27 +1005,6 @@ private[queries] trait IvfPq { this: Similarity.type =>
       .orderBy(col("cell"))
   }
 
-  /** a31: the compaction EXECUTION audit — build the delta-grown
-    * index state (base segment + one absorbed delta generation; a
-    * 1-in-4 uniform split, NOT a20/a22's 1-in-7: on this corpus the
-    * 1/7 share never crosses the 0.2 compact threshold in any cell,
-    * which would leave the executor's main arm oracle-unexercised —
-    * at 1/4 every SF yields both compact and keep cells, measured
-    * sf0.001 6/4, sf0.01 6/4, sf0.1 9/1), decide with the a22
-    * policy, EXECUTE the
-    * rewrite with [[compactAssigned]], and report per cell what the
-    * maintenance window physically did: members by population, the
-    * action, segment count before/after (physically recounted from
-    * the rewritten frame, NOT derived from the policy — agreement
-    * with the oracle's arithmetic prediction is exactly the proof
-    * that the rewrite did what the verdict ordered and nothing else),
-    * surviving delta rows, and the rows merged into base. Scale
-    * shape: ONE corpus assignment pass (localCheckpointed, reused by
-    * the policy stats and both recounts), then three cells-sized
-    * rollups over (vec_id, cell, seg) ints and broadcast-joined
-    * cells-sized frames — raw vectors never shuffle, and the rewrite
-    * itself is the broadcast-action map pass a 100 TB artifact store
-    * would run per maintenance window. */
   /** a35: the LIVE MAINTENANCE LOOP promoted to the oracle gate
     * (round 19; r18 verdict #4). The StreamingSpec proves the loop
     * end-to-end (streamed policy ≡ batch a22, executed on the
@@ -1061,9 +1024,10 @@ private[queries] trait IvfPq { this: Similarity.type =>
     *     the live monitor's verdict table, global escalation columns
     *     included.
     *  3. ACT, both arms in the window's order: [[compactAssigned]]
-    *     folds the compact cells' delta fragments, then
-    *     [[rebuildAssignment]] retrains exactly the rebuild cells
-    *     (one Lloyd step over their members).
+    *     ([[compactIndex]]'s rewrite) folds the compact cells' delta
+    *     fragments, then [[rebuildAssignment]] ([[rebuildCells]]'
+    *     retrain) retrains exactly the rebuild cells (one Lloyd step
+    *     over their members).
     *  4. SERVE through the maintained state: probes route on the
     *     AFTER centroids, exact-cosine top-K within routed cells
     *     (a3's serve form — the routing + posting lists are what
@@ -1081,12 +1045,8 @@ private[queries] trait IvfPq { this: Similarity.type =>
     * centroids broadcast everywhere, the serve's only shuffle the
     * members-sized rank; raw vectors shuffle once (the member join). */
   def maintainLoop(s: SparkSession, d: String, geo: AnnGeometry = Geo): DataFrame = {
-    val v = vecs(s, d)
-    val off = v.agg(max(col("vec_id"))).head().getLong(0) + 1L
-    val all = v.select(col("vec_id"), col("emb"), col("nrm"))
-      .unionByName(plantedDriftVecs(v, geo, off))
-    maintainLoopOf(all,
-      pmod(col("vec_id"), lit(4L)) === 1L || col("vec_id") >= off, geo)
+    val (all, isDelta) = driftedFixture(vecs(s, d), geo)
+    maintainLoopOf(all, isDelta, geo)
   }
 
   private[graft] def maintainLoopOf(v: DataFrame, isDelta: Column,
@@ -1120,17 +1080,13 @@ private[queries] trait IvfPq { this: Similarity.type =>
     val policy = policyOfStores(baseStats, store).localCheckpoint()
     // 3. both arms, window order: fold compact fragments, retrain
     // rebuild cells
-    val assigned = asg.select(col("vec_id"), col("cell"),
-      when(col("is_delta"), lit(1)).otherwise(lit(0)).as("seg"))
+    val assigned = asg.select(col("vec_id"), col("cell"), col("seg"))
     val segsBefore = assigned.groupBy(col("cell"))
       .agg(countDistinct(col("seg")).as("segs_before"))
     val mcb = asg.groupBy(col("cell")).agg(avg(col("c_cos")).as("mcb"))
-    val compacted = compactAssigned(assigned, policy)
     val flagged = policy.filter(col("action") === "rebuild").select(col("cell"))
-    val (asgAfter0, centsAfter0) = rebuildAssignment(compacted, cents, flagged,
-      v.select(col("vec_id"), col("emb"), col("nrm")))
-    val asgAfter = asgAfter0.localCheckpoint()
-    val centsAfter = centsAfter0.localCheckpoint()
+    val (asgAfter, centsAfter) = rebuildAssignment(compactAssigned(assigned, policy),
+      cents, flagged, v)
     // recount the maintained state (the member join also feeds the
     // serve leg — one vectors shuffle for both consumers)
     val memAfter = v.select(col("vec_id"), col("emb"), col("nrm"))
@@ -1149,12 +1105,7 @@ private[queries] trait IvfPq { this: Similarity.type =>
     val probes = hashTopK(v.filter(!isDelta), "probe", NProbes)
       .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"),
         col("nrm").as("p_nrm"))
-    val wr = Window.partitionBy(col("probe_id"))
-      .orderBy(col("pc_cos").desc, col("cell"))
-    val routes = probes.crossJoin(broadcast(centsAfter))
-      .withColumn("pc_cos", cosPre(col("p_emb"), col("p_nrm"), col("c_emb"), col("c_nrm")))
-      .withColumn("r", row_number().over(wr))
-      .filter(col("r") <= geo.nProbe)
+    val routes = routeProbes(probes, centsAfter, geo.nProbe)
       .select(col("probe_id"), col("p_emb"), col("p_nrm"), col("cell"))
     val wk = Window.partitionBy(col("probe_id"))
       .orderBy(col("cosine").desc, col("vec_id"))
@@ -1183,33 +1134,36 @@ private[queries] trait IvfPq { this: Similarity.type =>
       .orderBy(col("cell"))
   }
 
+  /** a31: the compaction EXECUTION audit — build the delta-grown
+    * index state (base segment + one absorbed delta generation; a
+    * 1-in-4 uniform split, NOT a20/a22's 1-in-7: on this corpus the
+    * 1/7 share never crosses the 0.2 compact threshold in any cell,
+    * which would leave the executor's main arm oracle-unexercised —
+    * at 1/4 every SF yields both compact and keep cells, measured
+    * sf0.001 6/4, sf0.01 6/4, sf0.1 9/1), decide with the a22
+    * policy, EXECUTE the
+    * rewrite with [[compactAssigned]], and report per cell what the
+    * maintenance window physically did: members by population, the
+    * action, segment count before/after (physically recounted from
+    * the rewritten frame, NOT derived from the policy — agreement
+    * with the oracle's arithmetic prediction is exactly the proof
+    * that the rewrite did what the verdict ordered and nothing else),
+    * surviving delta rows, and the rows merged into base. Scale
+    * shape: ONE corpus assignment pass (localCheckpointed, reused by
+    * the policy stats and both recounts), then three cells-sized
+    * rollups over (vec_id, cell, seg) ints and broadcast-joined
+    * cells-sized frames — raw vectors never shuffle, and the rewrite
+    * itself is the broadcast-action map pass a 100 TB artifact store
+    * would run per maintenance window. */
   def compactExec(s: SparkSession, d: String, geo: AnnGeometry = Geo): DataFrame =
     compactExecOf(vecs(s, d), pmod(col("vec_id"), lit(4L)) === 1L, geo)
-
-  /** The delta-grown lifecycle state the two executor audits (a31,
-    * a32) act on: base trains the coarse geometry, EVERY vector
-    * assigns once (the same physical state decides and is acted on),
-    * the checkpoint carries ids/cos/population flags only — raw
-    * vectors stay in the corpus relation. One definition so the two
-    * audits can never quietly diverge on the state they audit. */
-  private def deltaGrownState(v: DataFrame, isDelta: Column,
-                              geo: AnnGeometry): (DataFrame, DataFrame) = {
-    val base = v.filter(!isDelta)
-    val cents = hashTopK(base, "cent", geo.nCentroids)
-      .select(col("vec_id").as("cell"), col("emb").as("c_emb"), col("nrm").as("c_nrm"))
-    val asg = assignCells(v, cents).withColumn("is_delta", isDelta)
-      .select(col("vec_id"), col("cell"), col("c_cos"), col("is_delta"))
-      .localCheckpoint()
-    (cents, asg)
-  }
 
   private[graft] def compactExecOf(v: DataFrame, isDelta: Column,
                                    geo: AnnGeometry = Geo): DataFrame = {
     val (_, asg) = deltaGrownState(v, isDelta, geo)
     val policy = policyFromStats(deltaStatsOf(asg))
       .select(col("cell"), col("n_base"), col("n_delta"), col("action"))
-    val assigned = asg.select(col("vec_id"), col("cell"),
-      when(col("is_delta"), lit(1)).otherwise(lit(0)).as("seg"))
+    val assigned = asg.select(col("vec_id"), col("cell"), col("seg"))
     val before = assigned.groupBy(col("cell"))
       .agg(countDistinct(col("seg")).as("segs_before"))
     val after = compactAssigned(assigned, policy).groupBy(col("cell"))
@@ -1222,7 +1176,6 @@ private[queries] trait IvfPq { this: Similarity.type =>
         (col("n_delta") - col("delta_rows_after")).as("merged_rows"))
       .orderBy(col("cell"))
   }
-
 
   /** Serve any (probe_id, p_emb, p_nrm) batch through a frozen
     * [[IvfPqIndex]]: route, build the probe×code ADC table, glue to

@@ -326,9 +326,6 @@ object Similarity extends QueryPack with IvfPq {
       .orderBy(col("probe_id"), col("rank"))
   }
 
-  /** IVF: coarse centroids (`nCentroids` hash-sampled vectors), each
-    * vector assigned to its nearest cell; a probe searches only its
-    * nProbe nearest cells. Centroid set is broadcast everywhere. */
   /** a23: metadata-FILTERED IVF serve — top-k among vectors sharing
     * the probe's label, the constrained-search shape every production
     * vector store exposes. The filter composes with routing as a join
@@ -347,27 +344,14 @@ object Similarity extends QueryPack with IvfPq {
                   k: Int = K): DataFrame = {
     val v = vecs(s, d).join(
       Tables.embeddings(s, d).select(col("vec_id"), col("label")), "vec_id")
-    val cents = hashTopK(v, "cent", geo.nCentroids)
-      .select(col("vec_id").as("cent_id"), col("emb").as("c_emb"), col("nrm").as("c_nrm"))
-    val wAssign = Window.partitionBy(col("vec_id"))
-      .orderBy(col("c_cos").desc, col("cent_id"))
-    val assigned = v.join(broadcast(cents))
-      .withColumn("c_cos", cosPre(col("emb"), col("nrm"), col("c_emb"), col("c_nrm")))
-      .withColumn("crank", row_number().over(wAssign))
-      .filter(col("crank") === 1)
-      .select(col("vec_id"), col("emb"), col("nrm"), col("label"),
-        col("cent_id").as("cell"))
+    val cents = centroidsOf(v, geo.nCentroids)
+    val assigned = assignCells(v, cents)
+      .select(col("vec_id"), col("emb"), col("nrm"), col("label"), col("cell"))
     val probes = hashTopK(v, "probe", NProbes)
       .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"),
         col("nrm").as("p_nrm"), col("label").as("p_label"))
-    val wProbe = Window.partitionBy(col("probe_id"))
-      .orderBy(col("pc_cos").desc, col("cent_id"))
-    val probeCells = probes.join(broadcast(cents))
-      .withColumn("pc_cos", cosPre(col("p_emb"), col("p_nrm"), col("c_emb"), col("c_nrm")))
-      .withColumn("crank", row_number().over(wProbe))
-      .filter(col("crank") <= geo.nProbe)
-      .select(col("probe_id"), col("p_emb"), col("p_nrm"), col("p_label"),
-        col("cent_id").as("cell"))
+    val probeCells = routeProbes(probes, cents, geo.nProbe)
+      .select(col("probe_id"), col("p_emb"), col("p_nrm"), col("p_label"), col("cell"))
     val wRank = Window.partitionBy(col("probe_id"))
       .orderBy(col("cosine").desc, col("vec_id"))
     assigned.join(broadcast(probeCells),
@@ -399,39 +383,27 @@ object Similarity extends QueryPack with IvfPq {
     // centroids + assignment come from the PERSISTED corpus index
     // (built once per run, manifest-verified load) when the caller
     // uses the published geometry; the acceptance gate then audits
-    // the artifact a serve fleet actually reads. assignCells shares
-    // this window's exact tiebreak (c_cos desc, cell asc), so the
-    // loaded (vec_id, cell) mapping is value-identical to the inline
-    // recomputation the oracle mirrors. Exact cosines still need the
+    // the artifact a serve fleet actually reads. The index was built
+    // by assignCells, so the loaded (vec_id, cell) mapping is
+    // value-identical to the assignCells recomputation of the other
+    // branch, which the oracle mirrors. Exact cosines still need the
     // vectors, so the assignment joins back to the corpus on vec_id.
     val (cents, assigned) =
       if (geo == Geo) {
         val ix = servedIndex(s, d)
-        (ix.cents.select(col("cell").as("cent_id"), col("c_emb"), col("c_nrm")),
+        (ix.cents.select(col("cell"), col("c_emb"), col("c_nrm")),
           v.join(ix.assigned.select(col("vec_id"), col("cell")), "vec_id")
             .select(col("vec_id"), col("emb"), col("nrm"), col("cell")))
       } else {
-        val c = hashTopK(v, "cent", geo.nCentroids)
-          .select(col("vec_id").as("cent_id"), col("emb").as("c_emb"), col("nrm").as("c_nrm"))
-        val wAssign = Window.partitionBy(col("vec_id"))
-          .orderBy(col("c_cos").desc, col("cent_id"))
-        (c, v.join(broadcast(c))
-          .withColumn("c_cos", cosPre(col("emb"), col("nrm"), col("c_emb"), col("c_nrm")))
-          .withColumn("crank", row_number().over(wAssign))
-          .filter(col("crank") === 1)
-          .select(col("vec_id"), col("emb"), col("nrm"), col("cent_id").as("cell")))
+        val c = centroidsOf(v, geo.nCentroids)
+        (c, assignCells(v, c).select(col("vec_id"), col("emb"), col("nrm"), col("cell")))
       }
     val probes = hashTopK(v, "probe", NProbes)
       .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"), col("nrm").as("p_nrm"))
-    val wProbe = Window.partitionBy(col("probe_id"))
-      .orderBy(col("pc_cos").desc, col("cent_id"))
-    val lv = probes.join(broadcast(cents))
-      .withColumn("pc_cos", cosPre(col("p_emb"), col("p_nrm"), col("c_emb"), col("c_nrm")))
-      .withColumn("crank", row_number().over(wProbe))
-      .filter(col("crank") <= maxProbe)
+    val lv = routeProbes(probes, cents, maxProbe)
       .withColumn("np", explode(sequence(lit(1), lit(maxProbe))))
       .filter(col("crank") <= col("np"))
-      .select(col("np"), col("probe_id"), col("p_emb"), col("p_nrm"), col("cent_id").as("cell"))
+      .select(col("np"), col("probe_id"), col("p_emb"), col("p_nrm"), col("cell"))
     val cand = assigned.join(broadcast(lv),
         assigned("cell") === lv("cell") && col("vec_id") =!= col("probe_id"))
       .withColumn("cosine", cosPre(col("p_emb"), col("p_nrm"), col("emb"), col("nrm")))
@@ -524,38 +496,26 @@ object Similarity extends QueryPack with IvfPq {
     // centroids + assignment come from the PERSISTED corpus index
     // (built once per run, manifest-verified load) when the caller
     // uses the published geometry; the acceptance gate then audits
-    // the artifact a serve fleet actually reads. assignCells shares
-    // this window's exact tiebreak (c_cos desc, cell asc), so the
-    // loaded (vec_id, cell) mapping is value-identical to the inline
-    // recomputation the oracle mirrors. Exact cosines still need the
+    // the artifact a serve fleet actually reads. The index was built
+    // by assignCells, so the loaded (vec_id, cell) mapping is
+    // value-identical to the assignCells recomputation of the other
+    // branch, which the oracle mirrors. Exact cosines still need the
     // vectors, so the assignment joins back to the corpus on vec_id.
     val (cents, assigned) =
       if (geo == Geo) {
         val ix = servedIndex(s, d)
-        (ix.cents.select(col("cell").as("cent_id"), col("c_emb"), col("c_nrm")),
+        (ix.cents.select(col("cell"), col("c_emb"), col("c_nrm")),
           v.join(ix.assigned.select(col("vec_id"), col("cell")), "vec_id")
             .select(col("vec_id"), col("emb"), col("nrm"), col("cell")))
       } else {
-        val c = hashTopK(v, "cent", geo.nCentroids)
-          .select(col("vec_id").as("cent_id"), col("emb").as("c_emb"), col("nrm").as("c_nrm"))
-        val wAssign = Window.partitionBy(col("vec_id"))
-          .orderBy(col("c_cos").desc, col("cent_id"))
-        (c, v.join(broadcast(c))
-          .withColumn("c_cos", cosPre(col("emb"), col("nrm"), col("c_emb"), col("c_nrm")))
-          .withColumn("crank", row_number().over(wAssign))
-          .filter(col("crank") === 1)
-          .select(col("vec_id"), col("emb"), col("nrm"), col("cent_id").as("cell")))
+        val c = centroidsOf(v, geo.nCentroids)
+        (c, assignCells(v, c).select(col("vec_id"), col("emb"), col("nrm"), col("cell")))
       }
     val probes = hashTopK(v, "probe", NProbes)
       .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"), col("nrm").as("p_nrm"))
-    val wProbe = Window.partitionBy(col("probe_id"))
-      .orderBy(col("pc_cos").desc, col("cent_id"))
-    val pc = probes.join(broadcast(cents))
-      .withColumn("pc_cos", cosPre(col("p_emb"), col("p_nrm"), col("c_emb"), col("c_nrm")))
-      .withColumn("crank", row_number().over(wProbe))
-      .filter(col("crank") <= maxProbe)
+    val pc = routeProbes(probes, cents, maxProbe)
       .select(col("probe_id"), col("p_emb"), col("p_nrm"),
-        col("cent_id").as("cell"), col("crank"), col("pc_cos"))
+        col("cell"), col("crank"), col("pc_cos"))
       .localCheckpoint()
     val margins = pc.groupBy(col("probe_id"))
       .agg((max(when(col("crank") === 1, col("pc_cos"))) -
@@ -601,28 +561,20 @@ object Similarity extends QueryPack with IvfPq {
       .orderBy(col("policy"))
   }
 
+  /** IVF: coarse centroids (`nCentroids` hash-sampled vectors), each
+    * vector assigned to its nearest cell; a probe searches only its
+    * nProbe nearest cells. Centroid set is broadcast everywhere. */
   def ivfKnn(s: SparkSession, d: String, geo: AnnGeometry = Geo, k: Int = K): DataFrame = {
     val v = vecs(s, d)
-    val cents = hashTopK(v, "cent", geo.nCentroids)
-      .select(col("vec_id").as("cent_id"), col("emb").as("c_emb"), col("nrm").as("c_nrm"))
+    val cents = centroidsOf(v, geo.nCentroids)
     // nearest cell per vector
-    val wAssign = Window.partitionBy(col("vec_id"))
-      .orderBy(col("c_cos").desc, col("cent_id"))
-    val assigned = v.join(broadcast(cents))
-      .withColumn("c_cos", cosPre(col("emb"), col("nrm"), col("c_emb"), col("c_nrm")))
-      .withColumn("crank", row_number().over(wAssign))
-      .filter(col("crank") === 1)
-      .select(col("vec_id"), col("emb"), col("nrm"), col("cent_id").as("cell"))
+    val assigned = assignCells(v, cents)
+      .select(col("vec_id"), col("emb"), col("nrm"), col("cell"))
     // nProbe nearest cells per probe
     val probes = hashTopK(v, "probe", NProbes)
       .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"), col("nrm").as("p_nrm"))
-    val wProbe = Window.partitionBy(col("probe_id"))
-      .orderBy(col("pc_cos").desc, col("cent_id"))
-    val probeCells = probes.join(broadcast(cents))
-      .withColumn("pc_cos", cosPre(col("p_emb"), col("p_nrm"), col("c_emb"), col("c_nrm")))
-      .withColumn("crank", row_number().over(wProbe))
-      .filter(col("crank") <= geo.nProbe)
-      .select(col("probe_id"), col("p_emb"), col("p_nrm"), col("cent_id").as("cell"))
+    val probeCells = routeProbes(probes, cents, geo.nProbe)
+      .select(col("probe_id"), col("p_emb"), col("p_nrm"), col("cell"))
     // search only those cells
     val wRank = Window.partitionBy(col("probe_id"))
       .orderBy(col("cosine").desc, col("vec_id"))
@@ -645,47 +597,48 @@ object Similarity extends QueryPack with IvfPq {
     * broadcast. */
   def ivfRefine(s: SparkSession, d: String, geo: AnnGeometry = Geo): DataFrame = {
     val v = vecs(s, d)
-    val cents = hashTopK(v, "cent", geo.nCentroids)
-      .select(col("vec_id").as("cent_id"), col("emb").as("c_emb"), col("nrm").as("c_nrm"))
-    val wAssign = Window.partitionBy(col("vec_id"))
-      .orderBy(col("c_cos").desc, col("cent_id"))
-    val assigned = v.join(broadcast(cents))
-      .withColumn("c_cos", cosPre(col("emb"), col("nrm"), col("c_emb"), col("c_nrm")))
-      .withColumn("crank", row_number().over(wAssign))
-      .filter(col("crank") === 1)
-      .select(col("vec_id"), col("emb"), col("nrm"), col("cent_id").as("cell"))
-    // refined centroid = element-wise mean of members
-    val refined = assigned
-      .select(col("cell"), posexplode(col("emb")).as(Seq("pos", "x")))
-      .groupBy(col("cell"), col("pos"))
-      .agg(avg(col("x")).as("m"))
+    val assigned = assignCells(v, centroidsOf(v, geo.nCentroids))
+    // refined centroid = element-wise mean of members, then reassign
+    assignCells(v, cellMeans(assigned))
       .groupBy(col("cell"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-      .select(col("cell").as("r_cell"),
-        transform(col("pm"), e => e.getField("m")).as("r_emb"))
-      .withColumn("r_nrm", graft.functions.Vec.norm(col("r_emb")))
-    val wre = Window.partitionBy(col("vec_id"))
-      .orderBy(col("re_cos").desc, col("r_cell"))
-    v.join(broadcast(refined))
-      .withColumn("re_cos", cosPre(col("emb"), col("nrm"), col("r_emb"), col("r_nrm")))
-      .withColumn("rrank", row_number().over(wre))
-      .filter(col("rrank") === 1)
-      .groupBy(col("r_cell").as("cell"))
-      .agg(count(lit(1)).as("n_members"), avg(col("re_cos")).as("mean_cos"))
+      .agg(count(lit(1)).as("n_members"), avg(col("c_cos")).as("mean_cos"))
       .orderBy(col("cell"))
   }
 
+  /** The coarse centroid table (cell, c_emb, c_nrm): the `n` hash-
+    * sampled seed rows of `v`, each seed's vec_id naming its cell. */
+  private[queries] def centroidsOf(v: DataFrame, n: Int): DataFrame =
+    hashTopK(v, "cent", n)
+      .select(col("vec_id").as("cell"), col("emb").as("c_emb"), col("nrm").as("c_nrm"))
+
   /** One assignment pass: every vector → its nearest centroid from a
-    * broadcast (cell, c_emb, c_nrm) table, keeping the winning cosine.
-    * The corpus × constant-size-centroids broadcast product is the
-    * intended IVF shape (cells ≪ corpus); shared by a15's loop. */
+    * broadcast (cell, c_emb, c_nrm) table (argmax cosine, ties to the
+    * smaller cell), keeping the winning cosine. Every column of `v`
+    * passes through, then (cell, c_cos). The corpus × constant-size-
+    * centroids broadcast product is the intended IVF shape (cells ≪
+    * corpus). */
   private[graft] def assignCells(v: DataFrame, cents: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("vec_id")).orderBy(col("c_cos").desc, col("cell"))
     v.join(broadcast(cents))
       .withColumn("c_cos", cosPre(col("emb"), col("nrm"), col("c_emb"), col("c_nrm")))
       .withColumn("crank", row_number().over(w))
       .filter(col("crank") === 1)
-      .select(col("vec_id"), col("emb"), col("nrm"), col("cell"), col("c_cos"))
+      .select(v.columns.map(col) :+ col("cell") :+ col("c_cos"): _*)
+  }
+
+  /** Probe routing: each probe's `nProbe` nearest cells from a
+    * broadcast (cell, c_emb, c_nrm) table, ranked by cosine with
+    * [[assignCells]]' tie-break, so a probe's rank-1 route is the cell
+    * it would be assigned to. Every column of `probes` (probe_id,
+    * p_emb, p_nrm, …) passes through, then (cell, pc_cos, crank). */
+  private[queries] def routeProbes(probes: DataFrame, cents: DataFrame,
+                                   nProbe: Int): DataFrame = {
+    val w = Window.partitionBy(col("probe_id")).orderBy(col("pc_cos").desc, col("cell"))
+    probes.join(broadcast(cents))
+      .withColumn("pc_cos", cosPre(col("p_emb"), col("p_nrm"), col("c_emb"), col("c_nrm")))
+      .withColumn("crank", row_number().over(w))
+      .filter(col("crank") <= nProbe)
+      .select(probes.columns.map(col) :+ col("cell") :+ col("pc_cos") :+ col("crank"): _*)
   }
 
   /** Element-wise member means per cell → the refined centroid table.
@@ -713,8 +666,7 @@ object Similarity extends QueryPack with IvfPq {
   def ivfRefineIterated(s: SparkSession, d: String, geo: AnnGeometry = Geo,
                         iters: Int = 3): DataFrame = {
     val v = vecs(s, d)
-    val seeds = hashTopK(v, "cent", geo.nCentroids)
-      .select(col("vec_id").as("cell"), col("emb").as("c_emb"), col("nrm").as("c_nrm"))
+    val seeds = centroidsOf(v, geo.nCentroids)
     var assigned = assignCells(v, seeds).localCheckpoint()
     var stats: DataFrame = null
     for (i <- 1 to iters) {
@@ -739,8 +691,7 @@ object Similarity extends QueryPack with IvfPq {
   def ivfRefineConverged(s: SparkSession, d: String, geo: AnnGeometry = Geo,
                          maxIters: Int = 10, eps: Double = 1e-6): DataFrame = {
     val v = vecs(s, d)
-    var cents = hashTopK(v, "cent", geo.nCentroids)
-      .select(col("vec_id").as("cell"), col("emb").as("c_emb"), col("nrm").as("c_nrm"))
+    var cents = centroidsOf(v, geo.nCentroids)
       .localCheckpoint()
     var iter = 0
     var moved = true
@@ -931,10 +882,6 @@ object Similarity extends QueryPack with IvfPq {
     pqCodebookStats(base, hashTopK(base, "cent", Geo.nCentroids), m, subDim)
   }
 
-  /** Per-subspace codebook assignment + QA rollup over any
-    * (vec_id, emb) relation — shared by a12 (raw vectors) and a17
-    * (IVF residuals). Codebooks are the seed rows' subvectors,
-    * broadcast; assignment is one scan; the rollup is m rows. */
   /** Per-subspace slices of an (id, emb) relation: one (id, sub, sv)
     * row per subspace — shared by the codebook build and the probe
     * side of a18's ADC table. */
@@ -944,39 +891,50 @@ object Similarity extends QueryPack with IvfPq {
       posexplode(array((0 until m).map(i =>
         slice(col("emb"), i * subDim + 1, subDim)): _*)).as(Seq("sub", "sv")))
 
-  /** Nearest-codeword assignment over ANY (vec_id, sub, sv) split —
-    * the layout-independent core shared by the contiguous split
-    * (a12/a17/a18 via [[pqAssignments]]) and a19's variance-balanced
-    * permuted split. Codebooks broadcast; argmin per (vec, sub). */
-  private[graft] def pqAssignSubs(subs: DataFrame, cents: DataFrame): DataFrame = {
+  /** The PQ codebook (code_id, sub, cv) of a seed relation (vec_id,
+    * emb): each seed row's subvectors, the seed's vec_id naming its
+    * code word in every subspace. */
+  private[queries] def codebookOf(seeds: DataFrame, m: Int, subDim: Int): DataFrame =
+    subVecsOf(seeds, "vec_id", m, subDim)
+      .select(col("vec_id").as("code_id"), col("sub"), col("sv").as("cv"))
+
+  /** Nearest-codeword assignment over ANY (vec_id, sub, sv) split
+    * against a broadcast (code_id, sub, cv) codebook — the
+    * layout-independent core shared by the contiguous split
+    * (a12/a17/a18 via [[pqAssignments]]), a19/a21's permuted splits
+    * and every IVF-PQ coding pass. Argmin L2 per (vec, sub), ties to
+    * the smaller code_id. Returns (vec_id, sub, code_id, dist). */
+  private[graft] def pqAssignSubs(subs: DataFrame, codebook: DataFrame): DataFrame = {
     val dist = graft.functions.Vec.dot(col("sv"), col("sv")) -
       lit(2.0) * graft.functions.Vec.dot(col("sv"), col("cv")) +
       graft.functions.Vec.dot(col("cv"), col("cv"))
     val w = Window.partitionBy(col("vec_id"), col("sub"))
-      .orderBy(col("dist"), col("cent_id"))
-    subs.join(broadcast(cents), Seq("sub"))
+      .orderBy(col("dist"), col("code_id"))
+    subs.join(broadcast(codebook), Seq("sub"))
       .withColumn("dist", dist)
       .withColumn("r", row_number().over(w))
       .filter(col("r") === 1)
-      .select(col("vec_id"), col("sub"), col("cent_id"), col("dist"))
+      .select(col("vec_id"), col("sub"), col("code_id"), col("dist"))
   }
 
-  /** PQ code assignment: every (vec_id, sub) subvector → its nearest
-    * (L2) broadcast codebook entry. Returns (vec_id, sub, cent_id,
-    * dist) — the CODES an IVF-PQ index stores (a18 serves them);
-    * [[pqCodebookStats]] is its QA rollup (a12/a17). */
+  /** PQ code assignment: every (vec_id, sub) subvector of `base` → its
+    * nearest (L2) word of the codebook seeded by `seeds`. Returns
+    * (vec_id, sub, code_id, dist) — the CODES an IVF-PQ index stores
+    * (a18 serves them); [[pqCodebookStats]] is its QA rollup. */
   private[graft] def pqAssignments(base: DataFrame, seeds: DataFrame,
                                    m: Int, subDim: Int): DataFrame =
-    pqAssignSubs(subVecsOf(base, "vec_id", m, subDim),
-      subVecsOf(seeds, "vec_id", m, subDim)
-        .select(col("vec_id").as("cent_id"), col("sub"), col("sv").as("cv")))
+    pqAssignSubs(subVecsOf(base, "vec_id", m, subDim), codebookOf(seeds, m, subDim))
 
+  /** Per-subspace codebook assignment + QA rollup over any
+    * (vec_id, emb) relation — shared by a12 (raw vectors) and a17
+    * (IVF residuals). Codebooks are the seed rows' subvectors,
+    * broadcast; assignment is one scan; the rollup is m rows. */
   private[graft] def pqCodebookStats(base: DataFrame, seeds: DataFrame,
                                      m: Int, subDim: Int): DataFrame = {
     pqAssignments(base, seeds, m, subDim)
       .groupBy(col("sub"))
       .agg(count(lit(1)).as("n_vecs"),
-        countDistinct(col("cent_id")).as("n_codes_used"),
+        countDistinct(col("code_id")).as("n_codes_used"),
         round(avg(col("dist")), 6).as("mse"))
       .select(col("sub").cast("long").as("sub"), col("n_vecs"),
         col("n_codes_used"), col("mse"))
@@ -1012,8 +970,7 @@ object Similarity extends QueryPack with IvfPq {
                                      m: Int, subDim: Int,
                                      codes: Int = -1): DataFrame = {
     val nCodes = if (codes > 0) codes else geo.nCentroids
-    val cents = hashTopK(v, "cent", geo.nCentroids)
-      .select(col("vec_id").as("cell"), col("emb").as("c_emb"), col("nrm").as("c_nrm"))
+    val cents = centroidsOf(v, geo.nCentroids)
     val resid = assignCells(v, cents)
       .join(broadcast(cents.select(col("cell"), col("c_emb"))), "cell")
       .select(col("vec_id"),
@@ -1078,13 +1035,13 @@ object Similarity extends QueryPack with IvfPq {
         expr("transform(pairs, p -> p.x)").as("sv"))
     val seedIds = hashTopK(vecs(s, d), "cent", Geo.nCentroids).select(col("vec_id"))
     val cents = subs.join(broadcast(seedIds), "vec_id")
-      .select(col("vec_id").as("cent_id"), col("sub"), col("sv").as("cv"))
+      .select(col("vec_id").as("code_id"), col("sub"), col("sv").as("cv"))
     val perSubVar = alloc.groupBy(col("sub"))
       .agg(count(lit(1)).as("n_dims"), sum(col("dvar")).as("var_total"))
     pqAssignSubs(subs, cents)
       .groupBy(col("sub"))
       .agg(count(lit(1)).as("n_vecs"),
-        countDistinct(col("cent_id")).as("n_codes_used"),
+        countDistinct(col("code_id")).as("n_codes_used"),
         round(avg(col("dist")), 6).as("mse"))
       .join(broadcast(perSubVar), "sub")
       .select(col("sub").cast("long").as("sub"), col("n_dims"),
@@ -1093,31 +1050,6 @@ object Similarity extends QueryPack with IvfPq {
       .orderBy(col("sub"))
   }
 
-  /** a21: OPQ-style LEARNED rotation past a19's permutation baseline.
-    * a19 only reorders dims, so when most energy sits in a handful of
-    * dims no deal can even the subspaces — round-robin hands sub 0
-    * the heaviest dim of every round. A rotation MIXES energy across
-    * dims before the split. Full OPQ solves a Procrustes/SVD
-    * alternation; the closed-form member of that family is one
-    * BUTTERFLY ROUND of Givens(45°) rotations: rank dims by variance,
-    * pair rank r with rank d−1−r (heaviest with lightest), and send
-    * each pair (h, l) → ((h+l)/√2, (h−l)/√2). The pair's energy
-    * splits to (v_h+v_l)/2 ± cov — near-halved whenever the pair is
-    * weakly correlated — so after ONE parallel round the variance
-    * profile is dramatically flatter, and the a19 deal over the
-    * ROTATED profile allocates what imbalance remains. The d/2
-    * rotations touch disjoint dims, so the whole round is one
-    * broadcast-pair regroup of the exploded corpus — the (vec, pair)
-    * shuffle a19 already pays as (vec, sub) — not d sequential jobs;
-    * this disjoint-round structure is exactly why fast-rotation ANN
-    * stacks build their transforms from butterflies. The rotation is
-    * orthogonal (distances are preserved, so the PQ codes quantize
-    * the same geometry) and its matrix is DATA-DERIVED: the pairing
-    * comes from the measured variance ranking, i.e. the rotation is
-    * learned from the corpus, not sampled. Reported per subspace as
-    * a19: dims, post-rotation energy, codes used, MSE — the spec
-    * asserts the rotated allocation's energy spread undercuts both
-    * the contiguous split and a19's permutation-only deal. */
   /** a21's learned butterfly rotation, factored as reusable parts:
     * the rotated corpus (vec_id, rxv) and the a19-deal over the
     * rotated variance profile (dim → sub, rvar). a21 consumes both
@@ -1212,6 +1144,31 @@ object Similarity extends QueryPack with IvfPq {
     (rotated, alloc)
   }
 
+  /** a21: OPQ-style LEARNED rotation past a19's permutation baseline.
+    * a19 only reorders dims, so when most energy sits in a handful of
+    * dims no deal can even the subspaces — round-robin hands sub 0
+    * the heaviest dim of every round. A rotation MIXES energy across
+    * dims before the split. Full OPQ solves a Procrustes/SVD
+    * alternation; the closed-form member of that family is one
+    * BUTTERFLY ROUND of Givens(45°) rotations: rank dims by variance,
+    * pair rank r with rank d−1−r (heaviest with lightest), and send
+    * each pair (h, l) → ((h+l)/√2, (h−l)/√2). The pair's energy
+    * splits to (v_h+v_l)/2 ± cov — near-halved whenever the pair is
+    * weakly correlated — so after ONE parallel round the variance
+    * profile is dramatically flatter, and the a19 deal over the
+    * ROTATED profile allocates what imbalance remains. The d/2
+    * rotations touch disjoint dims, so the whole round is one
+    * broadcast-pair regroup of the exploded corpus — the (vec, pair)
+    * shuffle a19 already pays as (vec, sub) — not d sequential jobs;
+    * this disjoint-round structure is exactly why fast-rotation ANN
+    * stacks build their transforms from butterflies. The rotation is
+    * orthogonal (distances are preserved, so the PQ codes quantize
+    * the same geometry) and its matrix is DATA-DERIVED: the pairing
+    * comes from the measured variance ranking, i.e. the rotation is
+    * learned from the corpus, not sampled. Reported per subspace as
+    * a19: dims, post-rotation energy, codes used, MSE — the spec
+    * asserts the rotated allocation's energy spread undercuts both
+    * the contiguous split and a19's permutation-only deal. */
   def opqRotated(s: SparkSession, d: String, m: Int = PqM): DataFrame = {
     val (rotated, alloc) = butterflyParts(s, d, m)
     // sub-slicing is likewise pointwise given a dense dim→sub lookup:
@@ -1228,13 +1185,13 @@ object Similarity extends QueryPack with IvfPq {
       .select(col("vec_id"), col("e.sub").cast("int").as("sub"), col("e.sv").as("sv"))
     val seedIds = hashTopK(vecs(s, d), "cent", Geo.nCentroids).select(col("vec_id"))
     val cents = subs.join(broadcast(seedIds), "vec_id")
-      .select(col("vec_id").as("cent_id"), col("sub"), col("sv").as("cv"))
+      .select(col("vec_id").as("code_id"), col("sub"), col("sv").as("cv"))
     val perSubVar = alloc.groupBy(col("sub"))
       .agg(count(lit(1)).as("n_dims"), sum(col("rvar")).as("var_total"))
     pqAssignSubs(subs, cents)
       .groupBy(col("sub"))
       .agg(count(lit(1)).as("n_vecs"),
-        countDistinct(col("cent_id")).as("n_codes_used"),
+        countDistinct(col("code_id")).as("n_codes_used"),
         round(avg(col("dist")), 6).as("mse"))
       .join(broadcast(perSubVar), "sub")
       .select(col("sub").cast("long").as("sub"), col("n_dims"),
@@ -1289,12 +1246,8 @@ object Similarity extends QueryPack with IvfPq {
         .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"),
           col("nrm").as("p_nrm"))
       val served = ivfPqServeProbes(ix, probes, k = k)
-        .select(col("probe_id"), col("vec_id"))
-      val per = exact.join(served.withColumn("hit", lit(1L)),
-          Seq("probe_id", "vec_id"), "left")
-        .groupBy(col("probe_id"))
-        .agg(count(lit(1)).as("n_exact"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
+        .select(col("probe_id").as("a_probe"), col("vec_id").as("a_vec"))
+      val per = hitCounts(exact, served)
       val seeds = hashTopK(v, "cent", Geo.nCentroids)
       val mse = pqAssignments(v.select(col("vec_id"), col("emb")), seeds,
           PqM, PqSubDim)
@@ -1327,8 +1280,7 @@ object Similarity extends QueryPack with IvfPq {
   def indexDrift(s: SparkSession, d: String, geo: AnnGeometry = Geo): DataFrame = {
     val v = vecs(s, d)
     val base = v.filter(pmod(col("vec_id"), lit(7L)) =!= 3L)
-    val cents = hashTopK(base, "cent", geo.nCentroids)
-      .select(col("vec_id").as("cell"), col("emb").as("c_emb"), col("nrm").as("c_nrm"))
+    val cents = centroidsOf(base, geo.nCentroids)
     assignCells(v, cents)
       .withColumn("is_delta", pmod(col("vec_id"), lit(7L)) === 3L)
       .groupBy(col("cell"))
@@ -1384,8 +1336,7 @@ object Similarity extends QueryPack with IvfPq {
   private[graft] def compactPolicyOf(v: DataFrame, isDelta: Column,
                                      geo: AnnGeometry = Geo): DataFrame = {
     val base = v.filter(!isDelta)
-    val cents = hashTopK(base, "cent", geo.nCentroids)
-      .select(col("vec_id").as("cell"), col("emb").as("c_emb"), col("nrm").as("c_nrm"))
+    val cents = centroidsOf(base, geo.nCentroids)
     policyFromStats(deltaStatsOf(assignCells(v, cents).withColumn("is_delta", isDelta)))
   }
 
@@ -1503,12 +1454,9 @@ object Similarity extends QueryPack with IvfPq {
     val probes = hashTopK(vecs(s, d), "probe", NProbes)
       .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"), col("nrm").as("p_nrm"))
     val served = ivfPqServeProbes(ix, probes)
-      .select(col("probe_id"), col("vec_id"))
+      .select(col("probe_id").as("a_probe"), col("vec_id").as("a_vec"))
     val exact = bruteKnn(s, d, K).select(col("probe_id"), col("vec_id"))
-    val per = exact.join(served.withColumn("hit", lit(1L)),
-        Seq("probe_id", "vec_id"), "left")
-      .groupBy(col("probe_id"))
-      .agg(count(lit(1)).as("n_exact"), sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
+    val per = hitCounts(exact, served)
     per.agg(avg(col("n_hit").cast("double") / col("n_exact")).as("recall"))
       .crossJoin(broadcast(ix.cents.agg(count(lit(1)).as("n_cells"))))
   }
@@ -1531,12 +1479,7 @@ object Similarity extends QueryPack with IvfPq {
     val v = vecs(s, d)
     val probes = hashTopK(v, "probe", NProbes)
       .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"), col("nrm").as("p_nrm"))
-    val wProbe = Window.partitionBy(col("probe_id"))
-      .orderBy(col("pc_cos").desc, col("cell"))
-    val routes = probes.join(broadcast(ix.cents))
-      .withColumn("pc_cos", cosPre(col("p_emb"), col("p_nrm"), col("c_emb"), col("c_nrm")))
-      .withColumn("r", row_number().over(wProbe))
-      .filter(col("r") <= Geo.nProbe)
+    val routes = routeProbes(probes, ix.cents, Geo.nProbe)
       .select(col("probe_id"), col("cell"))
     val sizes = ix.assigned.groupBy(col("cell"))
       .agg(count(lit(1)).as("n_members"))
@@ -1581,8 +1524,7 @@ object Similarity extends QueryPack with IvfPq {
   private[graft] def serveDriftOf(v: DataFrame, isDelta: Column,
                                   geo: AnnGeometry = Geo): DataFrame = {
     val base = v.filter(!isDelta)
-    val cents = hashTopK(base, "cent", geo.nCentroids)
-      .select(col("vec_id").as("cell"), col("emb").as("c_emb"), col("nrm").as("c_nrm"))
+    val cents = centroidsOf(base, geo.nCentroids)
     // the a22 kernel: assignCells keeps only (vec_id … cell, c_cos),
     // so the population flag is re-derived AFTER assignment from
     // vec_id (compactPolicyOf's pattern)
@@ -1615,12 +1557,7 @@ object Similarity extends QueryPack with IvfPq {
     * the policy. `policy` must carry (cell, n_base, n_delta, action). */
   private def serveDriftFrom(policy: DataFrame, cents: DataFrame,
                              probes: DataFrame, geo: AnnGeometry): DataFrame = {
-    val wProbe = Window.partitionBy(col("probe_id"))
-      .orderBy(col("pc_cos").desc, col("cell"))
-    val routes = probes.join(broadcast(cents))
-      .withColumn("pc_cos", cosPre(col("p_emb"), col("p_nrm"), col("c_emb"), col("c_nrm")))
-      .withColumn("r", row_number().over(wProbe))
-      .filter(col("r") <= geo.nProbe)
+    val routes = routeProbes(probes, cents, geo.nProbe)
       .select(col("probe_id"), col("cell"))
     // corpus totals fall out of the cells-sized policy frame (every
     // vector is assigned exactly once) — no second corpus scan
@@ -1842,16 +1779,8 @@ object Similarity extends QueryPack with IvfPq {
     * corpus) so the audit costs one scan at any corpus size. */
   def cellStats(s: SparkSession, d: String, geo: AnnGeometry = Geo): DataFrame = {
     val v = vecs(s, d)
-    val cents = hashTopK(v, "cent", geo.nCentroids)
-      .select(col("vec_id").as("cent_id"), col("emb").as("c_emb"), col("nrm").as("c_nrm"))
-    val wAssign = Window.partitionBy(col("vec_id"))
-      .orderBy(col("c_cos").desc, col("cent_id"))
-    val assigned = v.join(broadcast(cents))
-      .withColumn("c_cos", cosPre(col("emb"), col("nrm"), col("c_emb"), col("c_nrm")))
-      .withColumn("crank", row_number().over(wAssign))
-      .filter(col("crank") === 1)
-      .select(col("vec_id"), col("cent_id").as("cell"))
-    val perCell = assigned.groupBy(col("cell")).agg(count(lit(1)).as("n"))
+    val perCell = assignCells(v, centroidsOf(v, geo.nCentroids))
+      .groupBy(col("cell")).agg(count(lit(1)).as("n"))
     val totals = perCell.agg(sum(col("n")).as("total"),
       count(lit(1)).as("n_cells"))
     perCell.crossJoin(broadcast(totals))

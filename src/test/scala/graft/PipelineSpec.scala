@@ -2017,6 +2017,61 @@ class PipelineSpec extends SparkSuite {
       .assigned.count() === all.count())
   }
 
+  test("retrainIndex on a raw-layout index: layout stays raw, one base segment, membership conserved, codes are the raw coding against the re-seeded book") {
+    import graft.queries.{Similarity, AnnGeometry}
+    val geo = AnnGeometry()
+    val v = Similarity.vecs(spark, sf)
+    // raw build on the even ids, the odd ids absorbed as one delta
+    // generation: the retrain must fold both into fresh base rows
+    val base = v.filter(pmod(col("vec_id"), lit(2L)) === 0L)
+    val arrivals = v.filter(pmod(col("vec_id"), lit(2L)) === 1L)
+    val grown = Similarity.ivfPqIndexDelta(Similarity.ivfPqIndexOf(base, geo), arrivals)
+    assert(grown.layout === Similarity.LayoutRaw)
+    assert(grown.assigned.filter(col("seg") =!= 0).count() > 0L)
+
+    val retrained = Similarity.retrainIndex(grown, v)
+    assert(retrained.layout === Similarity.LayoutRaw)
+    assert(retrained.assigned.filter(col("seg") =!= 0).count() === 0L,
+      "retrained members must fold to the base segment")
+    val n = v.count()
+    assert(retrained.assigned.count() === n)
+    assert(retrained.assigned.select(col("vec_id")).distinct().count() === n,
+      "membership not conserved")
+    assert(retrained.assigned.select(col("vec_id"))
+      .exceptAll(v.select(col("vec_id"))).count() === 0L)
+    // m = 8 code rows per member
+    assert(retrained.codes.count() === n * 8L)
+    assert(retrained.codes.groupBy(col("vec_id")).count()
+      .filter(col("count") =!= 8L).count() === 0L)
+    // the book is RE-SEEDED from the corpus the index serves today
+    // (the build seeded from the even ids only): the salted top-k of
+    // every member, sliced per subspace
+    val reseeded = Similarity.hashTopK(v, "cent", geo.nCentroids)
+      .select(col("vec_id").as("code_id"),
+        posexplode(array((0 until 8).map(i =>
+          slice(col("emb"), i * 8 + 1, 8)): _*)).as(Seq("sub", "cv")))
+    val book = retrained.codebook.select(col("code_id"), col("sub"), col("cv"))
+    assert(book.exceptAll(reseeded).count() === 0L)
+    assert(reseeded.exceptAll(book).count() === 0L)
+    // the codes ARE the raw coding of the members against that book:
+    // each subvector's nearest word by squared L2 (ties to the
+    // smaller code_id), recomputed here with a plain argmin
+    val subs = v.select(col("vec_id"),
+      posexplode(array((0 until 8).map(i =>
+        slice(col("emb"), i * 8 + 1, 8)): _*)).as(Seq("sub", "sv")))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("vec_id"), col("sub")).orderBy(col("d"), col("code_id"))
+    val expect = subs.join(broadcast(retrained.codebook), Seq("sub"))
+      .withColumn("d", graft.functions.Vec.dot(col("sv"), col("sv")) -
+        lit(2.0) * graft.functions.Vec.dot(col("sv"), col("cv")) +
+        graft.functions.Vec.dot(col("cv"), col("cv")))
+      .withColumn("r", row_number().over(w)).filter(col("r") === 1)
+      .select(col("vec_id"), col("sub"), col("code_id"))
+    val got = retrained.codes.select(col("vec_id"), col("sub"), col("code_id"))
+    assert(got.exceptAll(expect).count() === 0L)
+    assert(expect.exceptAll(got).count() === 0L)
+  }
+
   test("rebuildAssignment survives a flagged cell emptying mid-loop: centroid restored, membership conserved, no NaN") {
     import graft.queries.Similarity
     import spark.implicits._
@@ -2171,13 +2226,9 @@ class PipelineSpec extends SparkSuite {
     // fold — the associativity the streamed monitor relies on (the
     // oracle hash pins the two-batch Spark fold against DuckDB's
     // single grouped sum; this pins the one-batch form too)
-    val v = Similarity.vecs(spark, sf)
-    val off = v.agg(max(col("vec_id"))).head().getLong(0) + 1L
-    val isDelta = pmod(col("vec_id"), lit(4L)) === 1L || col("vec_id") >= off
-    val oneShot = Similarity.maintainLoopOf(
-      v.select(col("vec_id"), col("emb"), col("nrm"))
-        .unionByName(Similarity.plantedDriftVecs(v, graft.queries.AnnGeometry(), off)),
-      isDelta, batches = 1).collect()
+    val (all, isDelta) = Similarity.driftedFixture(Similarity.vecs(spark, sf),
+      graft.queries.AnnGeometry())
+    val oneShot = Similarity.maintainLoopOf(all, isDelta, batches = 1).collect()
     assert(oneShot.map(r => (r.getAs[Long]("cell"), r.getAs[String]("action"),
         r.getAs[Long]("n_delta"))).toSeq.sorted ===
       out.map(r => (r.getAs[Long]("cell"), r.getAs[String]("action"),
@@ -2228,7 +2279,7 @@ class PipelineSpec extends SparkSuite {
       posexplode(array((0 until m).map(i =>
         slice(col("emb"), i * subDim + 1, subDim)): _*)).as(Seq("sub", "cv")))
     val recon = Similarity.pqAssignments(v.select(col("vec_id"), col("emb")), seeds, m, subDim)
-      .select(col("vec_id"), col("sub"), col("cent_id").as("code_id"))
+      .select(col("vec_id"), col("sub"), col("code_id"))
       .join(cbSub, Seq("sub", "code_id"))
       .groupBy(col("vec_id"))
       .agg(flatten(transform(array_sort(collect_list(struct(col("sub"), col("cv")))),
