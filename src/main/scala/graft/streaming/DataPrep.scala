@@ -101,58 +101,24 @@ object DataPrep {
           graft.queries.Pipeline.qualityCells(
               b.select(col("doc_id"), col("text"), col("source")))
             .write.mode("overwrite").parquet(s"$cellsDir/micro_batch_id=$batchId")
-          // exclude THIS batch's own partition from the store read: on
-          // crash-replay the partial write from the failed attempt is
-          // already on disk, and anti-joining against it would empty
-          // `fresh` — the overwrite below would then erase the batch's
-          // docs and digests instead of replaying them
+          // the h column changed md5hex (StringType) -> md5bin
+          // (BinaryType) in round 12: a store written by the old
+          // version must be MIGRATED, not coerced. The migration
+          // rewrites the legacy partitions ON DISK once (unhex, 16-byte
+          // binary) so every later batch — which will mix this run's
+          // binary partitions into the same read — keeps a mergeable
+          // store. A migration a crash interrupted resumes first (the
+          // marker outlives the crash; migration is idempotent per
+          // partition); an unmarked legacy store surfaces as the
+          // shared reader's non-BINARY rejection and is migrated then.
+          if (migrationMarker(spark, hStoreDir).exists(_._2))
+            migrateLegacyHStore(spark, hStoreDir)
           val store =
-            // the existence check (not just the catch) keeps Spark's
-            // FileStreamSink metadata probe from logging a WARN stack
-            // trace on the stream's first micro-batch. Hadoop FS, not
-            // java.io.File: the store dir is HDFS/S3 on a cluster,
-            // where a local-file check would report absent forever
-            // and silently empty the dedup store every batch.
-            if (!DataPrep.pathExists(spark, hStoreDir))
-              spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-                org.apache.spark.sql.types.StructType(Seq(
-                  org.apache.spark.sql.types.StructField("h",
-                    org.apache.spark.sql.types.BinaryType))))
-            else try {
-              // resume a migration a crash interrupted BEFORE reading
-              // (the marker outlives the crash; migration is
-              // idempotent per partition)
-              if (migrationMarker(spark, hStoreDir).exists(_._2))
+            try digestStore(spark, hStoreDir, "h", batchId)
+            catch {
+              case _: IllegalStateException if legacyHStore(spark, hStoreDir) =>
                 migrateLegacyHStore(spark, hStoreDir)
-              val raw = spark.read.parquet(hStoreDir)
-                .filter(col("micro_batch_id") =!= batchId)
-              // the h column changed md5hex (StringType) -> md5bin
-              // (BinaryType) in round 12: a store written by the old
-              // version must be MIGRATED, not coerced — a silent
-              // string-vs-binary mismatch makes the left_anti join
-              // below never match and re-curates every previously-
-              // seen doc (silent dedup loss). The migration rewrites
-              // the legacy partitions ON DISK once (unhex, 16-byte
-              // binary) so every later batch — which will mix this
-              // run's binary partitions into the same read — keeps a
-              // mergeable store. A store with any OTHER h type is a
-              // corruption, named loudly.
-              raw.schema("h").dataType match {
-                case org.apache.spark.sql.types.BinaryType => raw.select(col("h"))
-                case org.apache.spark.sql.types.StringType =>
-                  migrateLegacyHStore(spark, hStoreDir)
-                  spark.read.parquet(hStoreDir)
-                    .filter(col("micro_batch_id") =!= batchId).select(col("h"))
-                case other => throw new IllegalStateException(
-                  s"[graft] curateMonitored digest store at $hStoreDir has h: $other; expected BINARY (md5bin) or legacy STRING (md5hex)")
-              }
-            } catch {
-              case _: org.apache.spark.sql.AnalysisException =>
-                // no store yet (first batch): an empty binary frame
-                spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-                  org.apache.spark.sql.types.StructType(Seq(
-                    org.apache.spark.sql.types.StructField("h",
-                      org.apache.spark.sql.types.BinaryType))))
+                digestStore(spark, hStoreDir, "h", batchId)
             }
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(col("h")).orderBy(col("ts"), col("doc_id"))
@@ -203,6 +169,48 @@ object DataPrep {
       }
       .trigger(Trigger.AvailableNow())
       .start()
+
+  /** The digests a durable store holds for micro-batch `batchId`: the
+    * `keyCol` column of every partition EXCEPT this batch's own — on
+    * crash-replay the failed attempt's partial write is already on
+    * disk, and anti-joining against it would empty the batch, which
+    * the partition overwrite would then erase instead of replaying —
+    * or an empty BINARY frame when no store exists yet. The existence
+    * check (not just the catch) keeps Spark's FileStreamSink metadata
+    * probe from logging a WARN stack trace on the first micro-batch;
+    * it is Hadoop FS, not java.io.File, because the store is HDFS/S3
+    * on a cluster, where a local-file check would report absent
+    * forever and silently empty the store every batch. The catch
+    * covers an exists-but-empty dir, which throws at schema
+    * inference. A key column of any type but BINARY is a corruption,
+    * named loudly: a string-vs-binary mismatch would make every dedup
+    * join against the store silently miss, re-curating every
+    * previously-seen doc. Shared by [[curateMonitored]] and
+    * [[crawlCurateStream]]. */
+  private def digestStore(spark: SparkSession, dir: String, keyCol: String,
+                          batchId: Long): DataFrame = {
+    def empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField(keyCol,
+          org.apache.spark.sql.types.BinaryType))))
+    if (!pathExists(spark, dir)) empty
+    else try {
+      val raw = spark.read.parquet(dir).filter(col("micro_batch_id") =!= batchId)
+      raw.schema(keyCol).dataType match {
+        case org.apache.spark.sql.types.BinaryType => raw.select(col(keyCol))
+        case other => throw new IllegalStateException(
+          s"[graft] digest store at $dir has $keyCol: $other; expected BINARY (md5bin)")
+      }
+    } catch {
+      case _: org.apache.spark.sql.AnalysisException => empty
+    }
+  }
+
+  /** Whether `curateMonitored`'s store reads as a legacy md5hex
+    * (pre-round-12, StringType `h`) store. */
+  private def legacyHStore(spark: SparkSession, hStoreDir: String): Boolean =
+    spark.read.parquet(hStoreDir).schema("h").dataType ==
+      org.apache.spark.sql.types.StringType
 
   /** (marker path, exists) for an in-progress legacy-store migration;
     * None when the store dir itself doesn't exist yet. */
@@ -358,25 +366,6 @@ object DataPrep {
               inventory))
           .cache()
         try {
-          // the existence check keeps Spark's FileStreamSink metadata
-          // probe from logging a WARN stack trace on every stream's
-          // first micro-batch (Hadoop FS — the store is HDFS/S3 on a
-          // cluster); the catch stays for the exists-but-empty dir (a
-          // caller that pre-created the store path), which throws at
-          // schema inference instead
-          def store(dir: String, keyCol: String) = {
-            def empty = spark.createDataFrame(
-              spark.sparkContext.emptyRDD[Row],
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField(keyCol,
-                  org.apache.spark.sql.types.BinaryType))))
-            if (!DataPrep.pathExists(spark, dir)) empty
-            else try spark.read.parquet(dir)
-              .filter(col("micro_batch_id") =!= batchId).select(col(keyCol))
-            catch {
-              case _: org.apache.spark.sql.AnalysisException => empty
-            }
-          }
           val hW = org.apache.spark.sql.expressions.Window
             .partitionBy(col("h")).orderBy(col("doc_id"))
           val uW = org.apache.spark.sql.expressions.Window
@@ -403,9 +392,9 @@ object DataPrep {
                 hW.rowsBetween(cum.unboundedPreceding, cum.currentRow)))
               .withColumn("urn", sum(survives).over(
                 uW.rowsBetween(cum.unboundedPreceding, cum.currentRow)))
-              .join(store(hStoreDir, "h").withColumn("seen", lit(true))
+              .join(digestStore(spark, hStoreDir, "h", batchId).withColumn("seen", lit(true))
                 .distinct(), Seq("h"), "left")
-              .join(store(uStoreDir, "uh").withColumn("useen", lit(true))
+              .join(digestStore(spark, uStoreDir, "uh", batchId).withColumn("useen", lit(true))
                 .distinct(), Seq("uh"), "left")
             graft.queries.Pipeline.crawlCascade(marked,
                 col("urn") > 1 || col("useen").isNotNull,

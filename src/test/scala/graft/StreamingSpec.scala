@@ -1850,6 +1850,43 @@ class StreamingSpec extends SparkSuite {
       .select(col("micro_batch_id")).distinct().count() > 1)
   }
 
+  test("the crawl stream rejects a digest store whose h column is not BINARY, by name") {
+    import spark.implicits._
+    import graft.streaming.{BinaryParquetTopic, DataPrep, Publisher, Subscriber}
+    import graft.operators.Warc
+    val topic = tempDir("topic_crawl_bad")
+    val hStore = tempDir("crawl_hstore_bad")
+    // a string-typed h partition (hex digests, say): joined against the
+    // stream's md5bin digests it would never match, silently keeping
+    // every re-crawled duplicate
+    Seq("0123456789abcdef0123456789abcdef").toDF("h")
+      .write.parquet(s"$hStore/micro_batch_id=999")
+    val arrivals = (1L to 6L).map(id => (id, Warc.plantedCrawlBytes(id)))
+    Publisher.publish(arrivals.toDF("doc_id", "payload").select(
+      col("doc_id").as("event_id"), col("doc_id").cast("string").as("uuid"),
+      lit("0").as("partition_key"), col("payload"),
+      lit("crawl").as("event_type"), lit(0.0).as("value"),
+      expr("timestamp '2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, doc_id)").as("ts"),
+      map(lit("eventType"), lit("crawl")).as("headers")), topic,
+      format = BinaryParquetTopic)
+    val decoded = graft.queries.Pipeline.crawlDecode(
+      arrivals.toDF("doc_id", "payload").as[(Long, Array[Byte])]).localCheckpoint()
+    val inventory = graft.queries.Pipeline.crawlInventory(decoded).localCheckpoint()
+    val evalDigests = graft.queries.Pipeline.crawlEvalDigests(
+      graft.queries.Pipeline.crawlStrip(decoded, inventory)).localCheckpoint()
+    val q = DataPrep.crawlCurateStream(
+      Subscriber.subscribe(spark, topic, BinaryParquetTopic),
+      tempDir("crawl_out_bad"), hStore, tempDir("crawl_ustore_bad") + "/u",
+      inventory, evalDigests, tempDir("ck_crawl_bad"))
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      q.awaitTermination())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(m => m.contains("[graft] digest store") &&
+        m.contains("expected BINARY")),
+      s"no named digest-store error in: ${msgs.mkString(" | ")}")
+  }
+
   test("the full live curate chain: dedup + quality + code routing + span decontam under one checkpoint") {
     import spark.implicits._
     import graft.streaming.DataPrep
