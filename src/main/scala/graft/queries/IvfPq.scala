@@ -591,7 +591,8 @@ private[queries] trait IvfPq { this: Similarity.type =>
                             nCodes: Int, m: Int, subDim: Int): IvfPqIndex = {
     // membership-seeded Lloyd: ONE vec_id join attaches the current
     // cell; each step is a cells×dims mean + a broadcast re-dispatch
-    val (cents, asg) = lloyd(v, v.join(ix.assigned.select(col("vec_id"), col("cell")), Seq("vec_id")),
+    val (cents, asg) = lloyd(v,
+      v.join(ix.assigned.select(col("vec_id"), col("cell")), Seq("vec_id")),
       ix.cents.select(col("cell"), col("c_emb"), col("c_nrm")), iters)
     val (codes, codebook) =
       if (ix.layout == LayoutResidual) {

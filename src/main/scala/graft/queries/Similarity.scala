@@ -623,7 +623,7 @@ object Similarity extends QueryPack with IvfPq {
       .withColumn("c_cos", cosPre(col("emb"), col("nrm"), col("c_emb"), col("c_nrm")))
       .withColumn("crank", row_number().over(w))
       .filter(col("crank") === 1)
-      .select(v.columns.map(col) :+ col("cell") :+ col("c_cos"): _*)
+      .select(v.columns.toSeq.map(col) :+ col("cell") :+ col("c_cos"): _*)
   }
 
   /** Probe routing: each probe's `nProbe` nearest cells from a
@@ -638,7 +638,7 @@ object Similarity extends QueryPack with IvfPq {
       .withColumn("pc_cos", cosPre(col("p_emb"), col("p_nrm"), col("c_emb"), col("c_nrm")))
       .withColumn("crank", row_number().over(w))
       .filter(col("crank") <= nProbe)
-      .select(probes.columns.map(col) :+ col("cell") :+ col("pc_cos") :+ col("crank"): _*)
+      .select(probes.columns.toSeq.map(col) :+ col("cell") :+ col("pc_cos") :+ col("crank"): _*)
   }
 
   /** Element-wise member means per cell → the refined centroid table.

@@ -116,7 +116,9 @@ object DataPrep {
           val store =
             try digestStore(spark, hStoreDir, "h", batchId)
             catch {
-              case _: IllegalStateException if legacyHStore(spark, hStoreDir) =>
+              case _: IllegalStateException
+                  if spark.read.parquet(hStoreDir).schema("h").dataType ==
+                    org.apache.spark.sql.types.StringType =>
                 migrateLegacyHStore(spark, hStoreDir)
                 digestStore(spark, hStoreDir, "h", batchId)
             }
@@ -205,12 +207,6 @@ object DataPrep {
       case _: org.apache.spark.sql.AnalysisException => empty
     }
   }
-
-  /** Whether `curateMonitored`'s store reads as a legacy md5hex
-    * (pre-round-12, StringType `h`) store. */
-  private def legacyHStore(spark: SparkSession, hStoreDir: String): Boolean =
-    spark.read.parquet(hStoreDir).schema("h").dataType ==
-      org.apache.spark.sql.types.StringType
 
   /** (marker path, exists) for an in-progress legacy-store migration;
     * None when the store dir itself doesn't exist yet. */
