@@ -697,7 +697,7 @@ private[queries] trait IvfPq { this: Similarity.type =>
     // ONE-row Gram-Schmidt fold (round 19): the old form chained 11
     // sequential 1-row broadcast cross-joins — one broadcast-exchange
     // job per orthogonalization step, paid by every consumer query
-    // (a32/a33/a34/a35). The rank-ordered seeds are collected into a
+    // (a32/a34/a35). The rank-ordered seeds are collected into a
     // single array column and the SAME per-step zip_with/dot
     // arithmetic runs as one aggregate fold over it (identical
     // operation sequence step for step, so the drift vector is
