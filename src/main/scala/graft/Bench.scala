@@ -1,66 +1,45 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.functions._
 
-/** Benchmark main (driver contract): one JSON line with per-query
-  * seconds at SPARK_GRAFT_SF_DIR.
+/** Benchmark main: one JSON line with per-query median seconds at
+  * SPARK_GRAFT_SF_DIR, read by `tools/bench_diff.py` and `tools/gate.sh`.
   *
-  * Each timed run is a FRESH DataFrame (full Catalyst analysis →
-  * optimization → planning → execution) materializing every output
-  * row via `queryExecution.toRdd.count()` — a plain `.count()` would
-  * let Catalyst prune all map-side work, and re-counting a cached
-  * DataFrame would reuse shuffle outputs and time only the final
-  * stage.
+  * One fixed protocol:
+  *  1. Warm-up, untimed: one scan per table, then one execution of
+  *     every selected query at the target SF. That compiles each
+  *     query's whole-stage-codegen classes and JITs the hot kernels,
+  *     so first-query-in-JVM compile costs don't land on whichever
+  *     query alphabetically trips them (probe: d1 2.4 s with cold
+  *     codegen vs 0.5 s steady-state on identical sf0.1 data).
+  *  1. Timing, per selected query in name order: `RUNS` runs, each a
+  *     FRESH DataFrame (full Catalyst analysis → optimization →
+  *     planning → execution) materializing every output row via
+  *     `queryExecution.toRdd.count()` — a plain `.count()` would let
+  *     Catalyst prune all map-side work, and re-counting a cached
+  *     DataFrame would reuse shuffle outputs and time only the final
+  *     stage. [[cleanHeap]] runs before each run's clock starts. The
+  *     query's figure is the median of its runs.
+  *  1. Stream legs `stream:text`, `stream:media` and `stream:crawl`,
+  *     selected by the same filter: `RUNS` runs each, median rate and
+  *     median per-trigger batch ms to stderr.
+  *  1. After `spark.stop()`, the line [[line]] on stdout.
   *
-  * Untimed warmup: one scan per table, then every query ONCE against
-  * the smallest available scale factor (sibling sf0.001 dir when
-  * present). That compiles each query's whole-stage-codegen classes
-  * and JITs the hot kernels while touching ~100× less data, so the
-  * timed pass measures steady-state execution the way a long-lived
-  * engine runs — first-query-in-JVM compile costs don't land on
-  * whichever query alphabetically trips them (probe: d1 2.4 s with
-  * cold codegen vs 0.5 s steady-state on identical sf0.1 data).
+  * Environment: `SPARK_GRAFT_SF_DIR` (the data dir, default sf0.1),
+  * `SPARK_GRAFT_ONLY` (comma-separated name substrings; a query or
+  * leg runs when its name contains one; unset runs everything) and
+  * `SPARK_GRAFT_RUNS` (timed runs per query and per leg, default 3).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // External-load defense (the round-7 artifact was captured at
-    // loadavg 2 and manufactured two phantom >=2x per-query
-    // regressions on untouched code): sample the 1-min loadavg BEFORE
-    // any Spark work — at this point it reflects OTHER processes, not
-    // this bench — and if the host is busy, wait (bounded) for it to
-    // drain. Proceed regardless after the budget: a labeled noisy run
-    // beats no run, and both loadavg samples land in the diagnostics
-    // so a reader can adjudicate the tail.
+    val onlySubs = sys.env.getOrElse("SPARK_GRAFT_ONLY", "").split(',').filter(_.nonEmpty)
+    def selected(name: String): Boolean =
+      onlySubs.isEmpty || onlySubs.exists(name.contains)
+    val Runs = sys.env.get("SPARK_GRAFT_RUNS").flatMap(_.toIntOption).getOrElse(3)
+    // sampled before any Spark work, so it reflects OTHER processes
     val startLoad = loadavg()
-    val gate = loadGate()
-    // the quiet bar is shared with tools/bench_diff.py via _gate in
-    // tools/bench_status.json — diff-side UNADJUDICATED classification
-    // must agree with the bar the re-measure itself ran under
-    val QuietLoad = gate.quiet
-    val QuietWaitSecs = 180
-    var waited = 0
-    // Gate on the 5-MIN average too (round 17): the r16 driver-vs-
-    // builder gap A/B showed two same-commit captures both labeled
-    // quiet by the 1-min bar reading 130.2 vs 146.1 s — the slow one
-    // started at load1 0.79 but load5 1.87 (a just-drained burst
-    // whose cache/scheduler wake still taxed the first minutes). The
-    // 1-min average forgives a burst too fast; a recently-busy host
-    // needs the 5-min average near the bar before a capture is
-    // comparable. (Same 180 s budget: proceed-regardless still
-    // applies, and the diagnostics record all three averages.) The
-    // 5-min multiplier is SHARED with tools/bench_diff.py via _gate
-    // (round 18, r17 ADVICE #4): the diff-side UNADJUDICATED
-    // classification applies the same two-bar rule this wait ran
-    // under, so the two definitions cannot drift apart.
-    def busy(l: Seq[Double]): Boolean =
-      l.headOption.exists(_ > QuietLoad) ||
-        l.lift(1).exists(_ > QuietLoad * gate.load5Mult)
-    while (busy(loadavg()) && waited < QuietWaitSecs) {
-      Thread.sleep(10000); waited += 10
-    }
-    if (waited > 0)
-      System.err.println(s"bench quiet-wait: ${waited}s (start loadavg=${startLoad.mkString(",")}, now=${loadavg().mkString(",")})")
     // The library's session profile (GraftSession.tune) plus ONE
     // bench-only override:
     val spark = GraftSession.localBuilder(appName = "graft-bench")
@@ -79,8 +58,8 @@ object Bench {
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       .getOrCreate()
     // ERROR, not WARN: benchmark-shaped single-partition windows
-    // (intentional at this SF) would otherwise flood the driver's
-    // 2000-char output capture with WindowExec warnings.
+    // (intentional at this SF) would otherwise bury the diagnostics
+    // in WindowExec warnings.
     spark.sparkContext.setLogLevel("ERROR")
     Tables.names.foreach { n =>
       try {
@@ -89,284 +68,85 @@ object Bench {
         df.foreach(_ => ())
       } catch { case _: Throwable => () }
     }
-    val warmDir = {
-      val sib = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
-      if (sib.isDirectory && sib.getPath != new java.io.File(sfDir).getPath) sib.getPath else sfDir
+    val queries = SparkEntry.queries.toSeq.sortBy(_._1).filter(q => selected(q._1))
+    queries.foreach { case (_, fn) =>
+      try fn(spark, sfDir).queryExecution.toRdd.count()
+      catch { case _: Throwable => () }
     }
-    // ONLY: comma-separated substring filter (single substring is the
-    // common adjudication form; the comma list lets one JVM carry a
-    // whole scaling-checkpoint set). Warmup honors it too — warming
-    // 188 queries to adjudicate one wastes minutes per JVM.
-    val only = sys.env.getOrElse("SPARK_GRAFT_ONLY", "")
-    val onlySubs = only.split(',').filter(_.nonEmpty)
-    def selected(name: String): Boolean =
-      onlySubs.isEmpty || onlySubs.exists(name.contains)
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (selected(name)) {
-        try fn(spark, warmDir).queryExecution.toRdd.count()
-        catch { case _: Throwable => () }
-        // ONLY mode: one extra untimed run at the TARGET SF. A full
-        // capture JITs shared kernels across 188 queries before most
-        // queries run; a solo JVM warmed only at sf0.001 under-warms
-        // big composed plans (measured: d21 solo-11-run 6.6 s vs 4.7
-        // in full captures on the same host — the tail of a ramp the
-        // median shouldn't include). The target-SF warmup restores
-        // protocol comparability at the cost of one untimed run.
-        if (onlySubs.nonEmpty)
-          try fn(spark, sfDir).queryExecution.toRdd.count()
-          catch { case _: Throwable => () }
-      }
-    }
-    // Per-query MEDIAN of `Runs` fresh executions: both prior driver
-    // benches were polluted by background-load bursts landing on a
-    // contiguous alphabetical span of single runs; a median absorbs
-    // one slow run per query, and the recorded loadavg lets a reader
-    // adjudicate any residual tail without a re-run.
-    // Local-iteration overrides (the driver sets neither): RUNS ups
-    // the median width for adjudicating a single noisy query; ONLY
-    // benches the named-substring subset.
-    val Runs = sys.env.get("SPARK_GRAFT_RUNS").flatMap(_.toIntOption).getOrElse(3)
-    // UNSTABLE readings re-measure themselves: five separate rounds
-    // produced phantom >=2x per-query flags (q32, m3, m4, q42, mm6 —
-    // every one re-adjudicated to normal with an 11-run median) and
-    // every one had the same signature — a sub-second query whose 3
-    // runs spread more than 2x because an external load burst ate one
-    // or two of them. When the default 3-run sample shows that
-    // signature, take 4 more runs and report the median of 7 — the
-    // widened median is exactly the manual adjudication protocol,
-    // applied automatically at bounded cost (only unstable queries
-    // pay; a quiet host re-measures almost nothing). The stderr
-    // diagnostics count the re-measured queries so an artifact reader
-    // can see how noisy the capture window was.
-    var widened = 0
     // A query that THROWS still records its (near-zero) wall time in the
-    // line — the contract shape has no status field — so its name is
-    // reported to stderr here, and tools/bench_status.json (the explicit
-    // known-broken list tools/bench_diff.py consults) can be updated
-    // mechanically instead of inferring stub-ness from a time threshold.
+    // line — the line has no status field — so its name is reported to
+    // stderr here, and tools/bench_status.json (the known-broken list
+    // tools/bench_diff.py consults) can be updated mechanically.
     val failed = scala.collection.mutable.LinkedHashSet[String]()
-    // CLEAN-HEAP protocol (round 15, default ON; SPARK_GRAFT_NOGC
-    // opts out for A/B): force a full GC — and give the async
-    // ContextCleaner a beat — before each query's timed runs. The
-    // r14 "shared-JVM context tax" is ROOT-CAUSED: prior queries'
-    // localCheckpoint blocks and broadcast state release only when a
-    // GC lets the ContextCleaner see their references collected,
-    // which a busy capture JVM may not run for many queries — so a
-    // heavy query late in a capture paid old-gen pressure + block
-    // eviction its solo median never saw. Measured on the 6-query
-    // watch set under identical quiet conditions: d21 5.24 s → 3.03
-    // (below even its 3.43 solo median — solo 11-run JVMs accumulate
-    // their OWN checkpoint debt), q46 3.15 → 2.48, every member
-    // faster, set total 12.73 → 9.54 s. The capture should price the
-    // QUERY, not the harness's deferred GC debt — at a cost of one
-    // forced GC per query (~1–2 min across 188).
-    val gcBetween = !sys.env.contains("SPARK_GRAFT_NOGC")
-    def cleanHeap(): Unit = if (gcBetween) { System.gc(); Thread.sleep(300) }
-    // Per-RUN clean-heap, opt-in for SCALE captures (round 16): the
-    // per-QUERY GC below frees prior queries' checkpoint blocks, but
-    // WITHIN a query's run set nothing does — each run's
-    // localCheckpoint blocks survive until the next query's GC. At
-    // the bench SFs that debt is MBs; at sf10 (the second scale
-    // decade) d21-class materializations spill tens of GB per run and
-    // four runs' accumulation filled the sandbox disk (ENOSPC,
-    // measured 2026-08-15). Timing is unaffected — the GC runs
-    // before t0 — so scale runs opt in; the 188-query capture keeps
-    // the r15 protocol so readings stay comparable to baselines.
-    val gcEveryRun = sys.env.contains("SPARK_GRAFT_GC_EVERY_RUN")
-    def measure(name: String, fn: (SparkSession, String) => DataFrame, n: Int): Seq[Double] =
-      (0 until n).map { _ =>
-        if (gcEveryRun) cleanHeap()
+    val results = queries.map { case (name, fn) =>
+      val times = (0 until Runs).map { _ =>
+        cleanHeap()
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).queryExecution.toRdd.count() }
+        try fn(spark, sfDir).queryExecution.toRdd.count()
         catch { case _: Throwable => failed += name }
         (System.nanoTime() - t0) / 1e9
       }
-    // SACRIFICIAL first run for multi-query ONLY captures (round 19;
-    // r18 verdict #5 — the d15 first-position artifact): in a shared
-    // scale-capture JVM the 2×N warmup executions defer
-    // ContextCleaner/JIT/old-gen state onto whichever query runs
-    // FIRST — twice now the alphabetical leader's shared reading
-    // inflated 1.5–2.4× over its solo level (r16: d15 82.46 shared vs
-    // 54.13 solo; r18: 291.5 vs 123.45) and was adjudicated by hand.
-    // One untimed re-execution of the first selected query absorbs
-    // that debt so no TIMED query pays it, followed by a deeper clean
-    // than the per-query beat (two GC passes, longer cleaner drain).
-    // Full captures keep the r15 protocol unchanged (their baselines
-    // all carry the same alphabetical-position profile); the
-    // diagnostics record sacrifice + order so a capture is
-    // self-describing.
-    val selectedNames = SparkEntry.queries.keys.toSeq.sorted.filter(selected)
-    val sacrificed =
-      if (onlySubs.nonEmpty && selectedNames.length > 1) {
-        val first = selectedNames.head
-        try SparkEntry.queries(first)(spark, sfDir).queryExecution.toRdd.count()
-        catch { case _: Throwable => () }
-        if (gcBetween) {
-          System.gc(); Thread.sleep(700); System.gc(); Thread.sleep(700)
-        }
-        Some(first)
-      } else None
-    val firstPass = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(t => selected(t._1)).map { case (name, fn) =>
-      cleanHeap()
-      val first = measure(name, fn, Runs).sorted
-      val times =
-        if (Runs == 3 && first.last > first.head * 2 && first(1) < 2.0) {
-          widened += 1
-          (first ++ measure(name, fn, 4)).sorted
-        } else first
-      (name, fn, times)
-    }
-    // SELF-ADJUDICATION (round 12): sixteen ≥2× per-query flags across
-    // eight rounds were adjudicated PHANTOM — every one a load burst
-    // eating a handful of runs during the official capture, every one
-    // costing a judge round-trip with an 11-run median that landed at
-    // the old level. The artifact now runs that protocol on itself:
-    // each query's last LIVE baseline is resolved from the prior
-    // BENCH_r*.json artifacts + tools/bench_status.json (the exact
-    // bench_diff.py rule — newest artifact where the query ran and is
-    // not status-listed broken), and any first-pass median that would
-    // trip the diff gate (≥2× over the floored baseline, ≥0.2 s, and
-    // ≥+0.1 s) is RE-MEASURED after the full pass with enough extra
-    // runs for an 11-run median. Re-measuring after the pass (not
-    // inline) lets the burst that caused the flag drain first; the
-    // re-measured names land in the stderr diagnostics (the JSON line
-    // itself stays exactly the driver's contract shape). A genuine
-    // regression survives 11 runs and still flags downstream — this
-    // suppresses only the noise class, at a cost bounded by
-    // 8 × (runtime of genuinely-regressed-or-noisy queries).
-    val baselines = loadBaselines()
-    val waivers = loadWaivers()
-    val remeasured = scala.collection.mutable.ArrayBuffer[String]()
-    def tripsGate(med: Double, base: Double): Boolean =
-      med - base >= gate.thresh && med >= gate.minNew &&
-        math.max(med, gate.floor) >= gate.ratio * math.max(base, gate.floor)
-    // A fam with a level-pinned expected_changed waiver skips the
-    // re-measure only while it stays near the adjudicated level
-    // (<= 1.5x) — a documented 0.94 s cost shouldn't pay 8 extra runs
-    // every capture, but 0.94 s -> 10 s is NOT covered by the waiver.
-    def waived(fam: String, med: Double): Boolean =
-      waivers.get(fam).exists(level => med <= 1.5 * level)
-    // self-adjudication only in driver mode (RUNS unset): an explicit
-    // RUNS is either the manual 11-run protocol (already a median) or
-    // a scaling-checkpoint run against a non-baseline SF, where every
-    // reading trips the sf0.1 gate by construction
-    // The trip test ALSO checks the 1-decimal ROUNDING of the median:
-    // the diff gate downstream reads the printed line, and on the
-    // deci tier a 1.15 s median prints as 1.2 — tripping a 0.6 s
-    // baseline's 2x gate even though the unrounded value doesn't
-    // (the r14 m10 case: first-pass median just under the gate, the
-    // printed value over it, no self-adjudication, one judge
-    // round-trip). A boundary median now re-measures too.
-    val needRemeasure = firstPass.filter { case (name, _, times) =>
-      val med = times(times.length / 2)
-      val deciMed = math.round(med * 10.0) / 10.0
-      val famK = name.takeWhile(_ != '_')
-      sys.env.get("SPARK_GRAFT_RUNS").isEmpty &&
-        times.length < 11 && !failed.contains(name) && !waived(famK, med) &&
-        baselines.get(famK).exists(b => tripsGate(med, b) || tripsGate(deciMed, b))
-    }
-    if (needRemeasure.nonEmpty) {
-      // TRUE quiet-wait before the adjudication pass (r12 lesson: the
-      // capture-end loadavg was 1.2-1.6 and the two held flags were
-      // exactly the phantom signature the re-measure exists to kill).
-      // Block until the 1-min loadavg actually drops below QuietLoad,
-      // with a budget big enough for a real burst to drain; proceed
-      // after it regardless — a labeled noisy adjudication beats none,
-      // and the per-query loadavg below makes the label readable.
-      var w2 = 0
-      while (loadavg().headOption.exists(_ > QuietLoad) && w2 < 600) {
-        Thread.sleep(10000); w2 += 10
-      }
-      if (w2 > 0) System.err.println(s"bench adjudication quiet-wait: ${w2}s (now=${loadavg().mkString(",")})")
-    }
-    val adjudicated = needRemeasure.map { case (name, fn, times) =>
-      // record the host state the re-measure actually ran under: a
-      // "held" flag at loadavg 1.5 is an unadjudicated flag, and the
-      // artifact should say so itself. BOTH bars since round 18
-      // (name@load1/load5) — the two-bar quiet rule the wait applies
-      // is the rule bench_diff.py classifies with, and it can only do
-      // that if the label carries the 5-min average too.
-      val la = loadavg()
-      remeasured += f"$name@${la.headOption.getOrElse(-1.0)}%.2f/${la.lift(1).getOrElse(-1.0)}%.2f"
-      cleanHeap() // re-measures run under the same clean-heap protocol
-      val all = (times ++ measure(name, fn, 11 - times.length)).sorted
-      name -> all(all.length / 2)
-    }.toMap
-    val results = firstPass.map { case (name, _, times) =>
-      name -> adjudicated.getOrElse(name, times(times.length / 2))
+      name -> median(times)
     }
     if (failed.nonEmpty)
       System.err.println(s"bench FAILED queries (times are stubs; add to tools/bench_status.json): ${failed.mkString(", ")}")
-    // STREAMING throughput legs (round 13; round 14 gives them the
-    // same protocol as queries): every figure above is batch; the
-    // live curate chains had correctness specs but no trustworthy
-    // recorded rate — a SINGLE-shot reading swung 1,608–8,554
-    // events/s with host windows, so round-over-round comparison was
-    // noise. Each leg now runs StreamRuns times, each run on a fresh
-    // topic/checkpoint under a recorded loadavg, and reports the
-    // MEDIAN rate plus the per-run (rate@loadavg) tail — the same
-    // median-plus-evidence shape the per-query protocol uses. Runs
-    // only on full captures (ONLY unset — single-query adjudication
-    // JVMs shouldn't pay it), after every timed run so it cannot
-    // contaminate a median; failures degrade to a labeled diagnostic,
-    // never a broken artifact.
-    val StreamRuns =
-      sys.env.get("SPARK_GRAFT_STREAM_RUNS").flatMap(_.toIntOption).getOrElse(3)
-    // SPARK_GRAFT_STREAM=1 forces the stream legs even under ONLY
-    // (set ONLY to a non-matching sentinel for a streams-only JVM —
-    // the scaling-measurement form, r14 verdict #5)
-    val streamLegs = only.isEmpty || sys.env.contains("SPARK_GRAFT_STREAM")
-    def streamLeg(label: String)(run: String => (Long, Long)): Unit =
-      if (streamLegs) System.err.println {
+    // STREAMING throughput legs: a single-shot rate swung 1,608–8,554
+    // events/s with host windows, so each leg runs `Runs` times, each
+    // on a fresh topic/checkpoint, and reports medians. They run after
+    // every timed query so they cannot contaminate a median; a failure
+    // degrades to a labeled diagnostic, never a lost line.
+    // A leg publishes its topic under `tmp` and returns the started
+    // curate query; the run is timed until the query drains the topic.
+    def streamLeg(leg: String)(start: String => StreamingQuery): Unit = {
+      val label = s"stream:$leg"
+      if (selected(label)) System.err.println {
         try {
-          val runs = (0 until StreamRuns).map { _ =>
-            val tmp = java.nio.file.Files
-              .createTempDirectory(s"graft_${label}_bench_").toString
-            val t0 = System.nanoTime()
-            val (nEvents, batchMsMed) = run(tmp)
-            val secs = (System.nanoTime() - t0) / 1e9
-            (nEvents / secs, loadavg().headOption.getOrElse(-1.0),
-              nEvents, batchMsMed)
+          val runs = (0 until Runs).map { _ =>
+            val tmp = java.nio.file.Files.createTempDirectory(s"graft_${leg}_bench_").toFile
+            try {
+              val t0 = System.nanoTime()
+              val q = start(tmp.toString)
+              q.awaitTermination()
+              val nEvents = spark.read.parquet(s"$tmp/topic").count()
+              val rate = nEvents / ((System.nanoTime() - t0) / 1e9)
+              // median per-trigger duration of the batches that read input
+              val durs = q.recentProgress.filter(_.numInputRows > 0)
+                .map(_.durationMs.get("triggerExecution").toLong).toSeq
+              (nEvents, rate, if (durs.nonEmpty) median(durs) else 0L)
+            } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)
           }
-          val sorted = runs.map(_._1).sorted
-          val med = sorted(sorted.length / 2)
-          val tail = runs.map(r => f"${r._1}%.0f@${r._2}%.2f").mkString(",")
-          f"$label bench: events=${runs.head._3}, rate_median=$med%.0f events/s over ${runs.length} runs, runs=[$tail], batch_ms_median=${runs.map(_._4).sorted.apply(runs.length / 2)}"
+          f"$label bench: events=${runs.head._1}, rate_median=${median(runs.map(_._2))}%.0f events/s over $Runs runs, batch_ms_median=${median(runs.map(_._3))}"
         } catch { case e: Throwable =>
           s"$label bench FAILED: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(160)}"
         }
       }
+    }
+    // the topic schema every leg publishes: doc_id as event id and
+    // uuid, a fixed day of timestamps, the event type in the headers
+    def envelope(df: DataFrame, eventType: String, key: Column): DataFrame =
+      df.select(col("doc_id").as("event_id"),
+        col("doc_id").cast("string").as("uuid"),
+        key.as("partition_key"), col("payload"),
+        lit(eventType).as("event_type"), lit(0.0).as("value"),
+        expr("timestamp '2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, event_id % 86400)").as("ts"),
+        map(lit("eventType"), lit(eventType)).as("headers"))
     // text leg: publish → file-source subscribe → curateMonitored
     // (quality gate + durable digest-store dedup + drift cells under
     // one checkpoint), re-uploads included so the dedup path works
-    streamLeg("stream") { tmp =>
+    streamLeg("text") { tmp =>
       val docs = Tables.documents(spark, sfDir)
-        .select(col("doc_id"), col("text"), col("source"))
-      val msgs = docs
-        .unionAll(docs.select((col("doc_id") + 1000000L).as("doc_id"),
-          col("text"), col("source")))
-        .select(col("doc_id").as("event_id"),
-          col("doc_id").cast("string").as("uuid"),
-          col("source").as("partition_key"),
-          col("text").cast("binary").as("payload"),
-          lit("doc").as("event_type"), lit(0.0).as("value"),
-          expr("timestamp '2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, event_id % 86400)").as("ts"),
-          map(lit("eventType"), lit("doc")).as("headers"))
+        .select(col("doc_id"), col("text").cast("binary").as("payload"), col("source"))
+      val msgs = envelope(docs.unionAll(docs.withColumn("doc_id", col("doc_id") + 1000000L)),
+        "doc", col("source"))
       graft.streaming.Publisher.publish(msgs, s"$tmp/topic")
-      val nEvents = spark.read.parquet(s"$tmp/topic").count()
-      val q = graft.streaming.DataPrep.curateMonitored(
+      graft.streaming.DataPrep.curateMonitored(
         graft.streaming.Subscriber.subscribe(spark, s"$tmp/topic", maxFilesPerTrigger = 4),
         s"$tmp/out", s"$tmp/cells", s"$tmp/hstore", s"$tmp/ck")
-      q.awaitTermination()
-      val durs = q.recentProgress.filter(_.numInputRows > 0)
-        .map(_.durationMs.get("triggerExecution").toLong).sorted
-      (nEvents, if (durs.nonEmpty) durs(durs.length / 2) else 0L)
     }
     // media leg: sniff-route-decode-gate per micro-batch over the TLV
     // binary envelope — real codec bytes on the wire, so this rate
     // prices the codec CPU a media ingest actually pays
-    streamLeg("media stream") { tmp =>
+    streamLeg("media") { tmp =>
       import spark.implicits._
       val ids = Tables.documents(spark, sfDir).select(col("doc_id"))
       val media = ids.unionAll(ids.select((col("doc_id") + 1000000L).as("doc_id")))
@@ -381,36 +161,22 @@ object Bench {
           (id, payload)
         })
         .toDF("doc_id", "payload")
-        .select(col("doc_id").as("event_id"),
-          col("doc_id").cast("string").as("uuid"),
-          pmod(col("doc_id"), lit(8L)).cast("string").as("partition_key"),
-          col("payload"),
-          lit("media").as("event_type"), lit(0.0).as("value"),
-          expr("timestamp '2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, event_id % 86400)").as("ts"),
-          map(lit("eventType"), lit("media")).as("headers"))
-      graft.streaming.Publisher.publish(media, s"$tmp/topic",
-        format = graft.streaming.BinaryParquetTopic)
-      val nEvents = spark.read.parquet(s"$tmp/topic").count()
-      val q = graft.streaming.DataPrep.mediaCurateStream(
+      graft.streaming.Publisher.publish(
+        envelope(media, "media", pmod(col("doc_id"), lit(8L)).cast("string")),
+        s"$tmp/topic", format = graft.streaming.BinaryParquetTopic)
+      graft.streaming.DataPrep.mediaCurateStream(
         graft.streaming.Subscriber.subscribe(spark, s"$tmp/topic",
           graft.streaming.BinaryParquetTopic, maxFilesPerTrigger = 4),
         s"$tmp/out", s"$tmp/cells", s"$tmp/ck")
-      q.awaitTermination()
-      val durs = q.recentProgress.filter(_.numInputRows > 0)
-        .map(_.durationMs.get("triggerExecution").toLong).sorted
-      (nEvents, if (durs.nonEmpty) durs(durs.length / 2) else 0L)
     }
-    // crawl leg (round 15): the full p13 live cascade — gunzip + WARC
-    // grammar + HTML extraction + template strip + gates + decontam +
-    // two durable-store dedups per micro-batch. The published
-    // artifacts (template inventory, eval digest set) are built ONCE
-    // outside the timed runs, the production built-once/served-many
-    // shape — the rate prices the per-event cascade, not artifact
-    // (re)mining. Do NOT read the leg's ev/s as end-to-end ingest
-    // cost: a pipeline that must also (re)mine the inventory or
-    // refresh the eval set pays that build once per corpus/eval
-    // release, amortized across every serving run — the batch p13
-    // timing is the number that includes it.
+    // crawl leg: the full p13 live cascade — gunzip + WARC grammar +
+    // HTML extraction + template strip + gates + decontam + two
+    // durable-store dedups per micro-batch. The published artifacts
+    // (template inventory, eval digest set) are built ONCE outside the
+    // timed runs, the production built-once/served-many shape — the
+    // rate prices the per-event cascade, not artifact (re)mining, so do
+    // NOT read it as end-to-end ingest cost: the batch p13 timing is
+    // the number that includes the build.
     lazy val crawlArtifacts = {
       import spark.implicits._
       val decoded = graft.queries.Pipeline.crawlDecode(
@@ -423,7 +189,7 @@ object Bench {
         graft.queries.Pipeline.crawlStrip(decoded, inv)).localCheckpoint()
       (inv, ev)
     }
-    streamLeg("crawl stream") { tmp =>
+    streamLeg("crawl") { tmp =>
       import spark.implicits._
       val (inv, ev) = crawlArtifacts
       val wires = Tables.documents(spark, sfDir).select(col("doc_id"))
@@ -431,296 +197,48 @@ object Bench {
         .mapPartitions(_.map(id =>
           (id, graft.operators.Warc.plantedCrawlBytes(id))))
         .toDF("doc_id", "payload")
-        .select(col("doc_id").as("event_id"),
-          col("doc_id").cast("string").as("uuid"),
-          pmod(col("doc_id"), lit(8L)).cast("string").as("partition_key"),
-          col("payload"),
-          lit("crawl").as("event_type"), lit(0.0).as("value"),
-          expr("timestamp '2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, event_id % 86400)").as("ts"),
-          map(lit("eventType"), lit("crawl")).as("headers"))
-      graft.streaming.Publisher.publish(wires, s"$tmp/topic",
-        format = graft.streaming.BinaryParquetTopic)
-      val nEvents = spark.read.parquet(s"$tmp/topic").count()
-      val q = graft.streaming.DataPrep.crawlCurateStream(
+      graft.streaming.Publisher.publish(
+        envelope(wires, "crawl", pmod(col("doc_id"), lit(8L)).cast("string")),
+        s"$tmp/topic", format = graft.streaming.BinaryParquetTopic)
+      graft.streaming.DataPrep.crawlCurateStream(
         graft.streaming.Subscriber.subscribe(spark, s"$tmp/topic",
           graft.streaming.BinaryParquetTopic, maxFilesPerTrigger = 4),
         s"$tmp/out", s"$tmp/hstore", s"$tmp/ustore", inv, ev, s"$tmp/ck")
-      q.awaitTermination()
-      val durs = q.recentProgress.filter(_.numInputRows > 0)
-        .map(_.durationMs.get("triggerExecution").toLong).sorted
-      (nEvents, if (durs.nonEmpty) durs(durs.length / 2) else 0L)
     }
-    // The driver captures only the LAST 2000 chars of this run's
-    // output and parses the JSON line out of that tail. Every prior
-    // round recorded parsed=null — including rounds whose complete
-    // line sat inside the tail — so the breakers are the properties
-    // every round shared, not any one schema reshape: (a) sbt's
-    // logger prefixed the line as "[info] {...}", so no LINE in the
-    // tail is bare JSON (fixed in build.sbt: forked run output now
-    // bypasses the sbt logger and prints raw); (b) "sf" was a string
-    // path where the contract sketch and the driver's own files use
-    // a number (now numeric). The line itself stays exactly the
-    // documented contract shape — metric/value/unit/queries/sf, no
-    // extra fields; run diagnostics (loadavg, line length) go to
-    // stderr where they can't contaminate the parse.
-    def trim0(s: String): String = {
-      var e = s.length
-      while (e > 1 && s.charAt(e - 1) == '0') e -= 1
-      if (e > 1 && s.charAt(e - 1) == '.') e -= 1
-      s.substring(0, e)
-    }
-    def fmt(v: Double, decimals: Int): String =
-      trim0(s"%.${decimals}f".formatLocal(java.util.Locale.ROOT, v))
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val sfName = new java.io.File(sfDir).getName
-    // "sf0.1" → 0.1 (numeric, matching the driver's own "sf" field).
-    // trim0 is for decimal strings only: applying it to an integer
-    // like "sf10" would emit 1. Non-numeric residue falls back to 0
-    // so the line stays valid JSON whatever the dir is named.
-    val sfNum = {
-      val digits = sfName.dropWhile(c => !c.isDigit && c != '.')
-      digits.toDoubleOption match {
-        case Some(_) => if (digits.contains('.')) trim0(digits) else digits
-        case None    => "0"
-      }
-    }
-    // Self-adjudication evidence INSIDE the line (round 18; r17
-    // verdict #1): the r17 driver artifact's tail was truncated
-    // mid-diagnostics (it begins at ".43], unquiet=8"), orphaning the
-    // remeasured labels its two flags needed for classification. The
-    // fields ride BEFORE "sf" so the driver's tail-fishing regex
-    // ({"metric"...."sf":N} — non-greedy, anchored on a } right after
-    // the sf value) and the contract parse still match; emitted only
-    // when a re-measure actually ran, so clean captures spend none of
-    // the ~1900-char budget on it. unquiet counts re-measures that
-    // ran above EITHER quiet bar (the shared two-bar rule).
-    def unquietOf(label: String): Boolean = {
-      val bars = label.split('@').last.split('/')
-      bars.headOption.exists(_.toDouble > QuietLoad) ||
-        bars.lift(1).exists(_.toDouble > QuietLoad * gate.load5Mult)
-    }
-    val unquiet = remeasured.count(unquietOf)
-    // HELD-ONLY labels in the line (round 19 — the 194-query fix):
-    // the full remeasured list overflowed the capture budget the
-    // first time a noisy capture met the grown registry (measured:
-    // 14 labels pushed the deci-tier line to 2359 chars and the
-    // driver would have recorded parsed=null — a lost artifact).
-    // bench_diff.py only ever LOOKS UP labels for queries whose final
-    // median still trips the diff gate (the "held" class) — labels of
-    // remeasured-and-cleared queries are never read downstream — so
-    // the line carries exactly the evidence that has a consumer and
-    // the cleared labels stay in the stderr diagnostics. unquiet
-    // still counts every above-bar re-measure (capture-noise context
-    // for the artifact reader).
-    val resultOf = results.toMap
-    def stillTrips(name: String): Boolean = {
-      val med = resultOf.getOrElse(name, 0.0)
-      val deciMed = math.round(med * 10.0) / 10.0
-      val famK = name.takeWhile(_ != '_')
-      baselines.get(famK).exists(b => tripsGate(med, b) || tripsGate(deciMed, b))
-    }
-    val held = remeasured.filter(lbl => stillTrips(lbl.takeWhile(_ != '@')))
-    val evidence =
-      if (remeasured.isEmpty) ""
-      else if (held.isEmpty) s""""unquiet":$unquiet,"""
-      else held.mkString("\"remeasured\":[\"", "\",\"", s"""\"],"unquiet":$unquiet,""")
-    def build(decimals: Double => Int, key: String => String = identity,
-              ev: String = evidence): String = {
-      val qs = results.map { case (k, v) => s"\"" + key(k) + "\":" + fmt(v, decimals(v)) }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec","queries":$qs,$ev"sf":$sfNum}"""
-    }
-    // Tiered fit: full names + centiseconds while the line fits;
-    // otherwise keys shrink to the operator's unique family prefix
-    // ("q21_percentiles" → "q21" — SURVEY.md §2 names carry the
-    // prefix, so a reader maps them back unambiguously), then values
-    // degrade along an ADAPTIVE precision cutoff: values below the
-    // cutoff keep centiseconds (where a 0.15→0.25 s deci rounding
-    // fabricates a 2× flag), values at/above it print deciseconds
-    // (≤10–29% grain there, against a 2× gate). The r13 DRIVER
-    // capture proved the static tier list cliffs: its values were
-    // just long enough that the 0.35-cutoff tier missed the fit and
-    // the line fell all the way to uniform 1-decimal — every
-    // sub-second reading in the official artifact lost the digit the
-    // phantom-flag class lives on. The ladder replaces the cliff:
-    // walk cutoffs downward and keep the HIGHEST one that fits, so
-    // whatever budget the host's value lengths leave is always spent
-    // on the smallest readings first. The uniform 1-decimal tier
-    // remains only as the final fallback; a degraded-but-parseable
-    // line beats overflowing the driver's 2000-char capture (which
-    // must also hold sbt's trailing "[success]" line, ~85 chars;
-    // real budget ≈ 1915).
-    // 2000-char capture − (sbt's trailing "[success] Total time: …"
-    // epilogue ≈ 76 chars + newlines, but its length JITTERS with run
-    // duration and date format) ⇒ budget ≤ 1900 (r14 advisor: the
-    // r14 value of 1912 left ~3 chars of margin; a long epilogue
-    // would push the line out of the driver's 2000-char tail and
-    // record parsed=null — a lost artifact costs far more than one
-    // precision rung). At 188 queries the uniform 1-decimal FLOOR is
-    // ~1880 chars — every per-entry byte counts, so the family
-    // prefix also compresses "mm" → "M" (the one two-char family;
-    // bench_diff.py and loadBaselines normalize the alias back).
-    // Round 19: build.sbt now suppresses sbt's "[success] ..."
-    // epilogue (showSuccess := false), so the driver's 2000-char tail
-    // belongs to this line alone — the budget rises from ~1915 to
-    // ~1980 (small margin kept for a stray shutdown line). At the
-    // 194-query registry the deci floor is ~1935 chars, which no
-    // longer fit under the old epilogue-sharing budget at all.
-    val Fit = 1980
-    val centi = (_: Double) => 2
-    val deci = (_: Double) => 1
-    def below(cutoff: Double) = (v: Double) => if (v < cutoff) 2 else 1
-    val prefix = (k: String) => {
-      val fam = k.takeWhile(_ != '_')
-      if (fam.startsWith("mm")) "M" + fam.drop(2) else fam
-    }
-    val prefixed =
-      if (results.map(r => prefix(r._1)).distinct.size == results.size) prefix
-      else identity[String] _ // collision ⇒ keep full names
-    // Double.MaxValue = uniform centi; 1.0 = the old "mixed";
-    // 0.35 = the old "tiny"; then finer steps down to uniform deci.
-    // The 0.1 rung matters at tiny SFs: below it a deci value prints
-    // as "0.1" or trims to "0", erasing the reading entirely.
-    val cutoffs = Seq(Double.MaxValue, 1.0, 0.75, 0.5, 0.35, 0.25, 0.15, 0.1)
-    val tiers = Seq(build(centi) -> "full-centi") ++
-      cutoffs.map(c => build(below(c), prefixed) -> s"centi<${c}") :+
-      (build(deci, prefixed) -> "deci") :+
-      // last resorts (round 19): a 194-entry deci line leaves <35
-      // chars of evidence slack, so a single held label can overflow
-      // the budget — a parseable line with the evidence degraded to
-      // the unquiet count (then to nothing) beats parsed=null; the
-      // dropped labels still print in the stderr diagnostics.
-      (build(deci, prefixed, s""""unquiet":$unquiet,""") -> "deci-no-labels") :+
-      (build(deci, prefixed, "") -> "deci-no-evidence")
-    val (line, fitTier) = tiers.find(_._1.length <= Fit).getOrElse(tiers.last)
-    // start_loadavg is the EXTERNAL load (sampled before any Spark
-    // work); end_loadavg is dominated by this bench's own threads.
-    // unquiet = re-measures that ran above a quiet bar after the
-    // wait budget expired: their "held/cleared" outcome is NOT
-    // adjudication evidence (tools/bench_diff.py reads the labels —
-    // from the line's own "remeasured" field since round 18 — and
-    // classifies such flags UNADJUDICATED).
+    // start_loadavg is the EXTERNAL load; end_loadavg is dominated by
+    // this bench's own threads. Context only: nothing reads them.
     System.err.println(
-      s"bench diagnostics: line=${line.length} chars, fit=$fitTier, start_loadavg=${startLoad.mkString(",")}, end_loadavg=${loadavg().mkString(",")}, quiet_wait=${waited}s, runs=$Runs, widened=$widened, baselines=${baselines.size}, remeasured=[${remeasured.mkString(",")}], unquiet=$unquiet, stat=median, gc=${if (gcBetween) "on" else "off"}, sacrifice=${sacrificed.getOrElse("none")}, order=[${if (onlySubs.nonEmpty) selectedNames.mkString(",") else "alpha-full"}]")
-    if (line.length > 1990)
-      System.err.println(s"ERROR bench line ${line.length} chars EXCEEDS the ~1990-char capture budget (2000 minus margin; build.sbt suppresses the sbt epilogue) — the driver will record parsed=null")
+      s"bench diagnostics: runs=$Runs, queries=${results.size}, stat=median, start_loadavg=${startLoad.mkString(",")}, end_loadavg=${loadavg().mkString(",")}")
     spark.stop()
     // Printed AFTER spark.stop() so no Spark shutdown log line can
-    // land between the JSON and the end of the captured tail.
-    println(line)
+    // land after the JSON line.
+    println(line(results, sfDir))
   }
 
-  /** Last LIVE per-query baselines, keyed by family prefix ("q21"),
-    * resolved exactly the way tools/bench_diff.py resolves them: scan
-    * the repo's BENCH_r*.json artifacts oldest→newest (each is the
-    * driver wrapper `{parsed: {...}}` or, for parsed=null rounds, a
-    * tail to fish the JSON line out of), drop entries status-listed
-    * broken in tools/bench_status.json, newest surviving reading
-    * wins. Any failure (no repo dir, malformed artifact) degrades to
-    * an empty map — the bench then simply skips self-adjudication,
-    * it never refuses to run. Jackson (on Spark's classpath) does the
-    * parsing. */
-  private def loadBaselines(): Map[String, Double] = {
-    try {
-      val repo = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_REPO",
-        System.getProperty("user.dir", ".")))
-      val arts = Option(repo.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.matches("BENCH_r\\d+\\.json"))
-        .sortBy(f => f.getName.replaceAll("\\D", "").toInt)
-      if (arts.isEmpty) return Map.empty
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      // "broken" = the query errored in that artifact (stub time);
-      // "phantom" = the reading was adjudicated a load-burst artifact
-      // by the 11-run quiet protocol (BENCH_DIFF record). Both are
-      // excluded from baseline resolution: a phantom-high baseline
-      // would silently de-sensitize the gate for that query.
-      val broken: Map[String, Set[String]] = {
-        val f = new java.io.File(repo, "tools/bench_status.json")
-        if (!f.isFile) Map.empty
-        else {
-          val root = mapper.readTree(f)
-          import scala.jdk.CollectionConverters._
-          root.properties().asScala.collect {
-            case e if e.getValue.has("broken") || e.getValue.has("phantom") =>
-              e.getKey -> Seq("broken", "phantom").flatMap { k =>
-                if (e.getValue.has(k))
-                  e.getValue.get(k).elements().asScala
-                    .map(_.asText().takeWhile(_ != '_')).toSeq
-                else Seq.empty
-              }.toSet
-          }.toMap
-        }
-      }
-      val base = scala.collection.mutable.Map[String, Double]()
-      arts.foreach { f =>
-        try {
-          val root = mapper.readTree(f)
-          val qs =
-            if (root.has("queries")) root.get("queries") // raw bench line
-            else if (root.has("parsed") && root.get("parsed").has("queries"))
-              root.get("parsed").get("queries")
-            else { // parsed=null era: fish the last JSON line from the tail
-              val tail = if (root.has("tail")) root.get("tail").asText() else ""
-              val ms = "\\{\"metric\".*?\"sf\":(?:\"[^\"]*\"|[0-9.]+)\\}".r
-                .findAllIn(tail).toSeq
-              ms.reverseIterator.map(m => try mapper.readTree(m).get("queries")
-                catch { case _: Throwable => null })
-                .find(_ != null).orNull
-            }
-          if (qs != null) {
-            val skip = broken.getOrElse(f.getName, Set.empty)
-            import scala.jdk.CollectionConverters._
-            qs.properties().asScala.foreach { e =>
-              val raw = e.getKey.takeWhile(_ != '_')
-              // "M13" is the fit-compressed spelling of family "mm13"
-              val fam = if (raw.length > 1 && raw.head == 'M' &&
-                raw.tail.forall(_.isDigit)) "mm" + raw.tail else raw
-              if (!skip.contains(fam)) base(fam) = e.getValue.asDouble()
-            }
-          }
-        } catch { case _: Throwable => () }
-      }
-      base.toMap
-    } catch { case _: Throwable => Map.empty }
+  /** The bench line: `{"metric":"total","value":V,"unit":"sec",
+    * "queries":{<name>:<seconds>,…},"sf":N}` with every figure at 2
+    * decimals, V the sum of the unrounded per-query figures, and N the
+    * number in the data dir's name ("sf0.1" → 0.1, "sf10" → 10; 0 when
+    * the name holds no number). */
+  private[graft] def line(results: Seq[(String, Double)], sfDir: String): String = {
+    def fmt(v: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, v)
+    val qs = results.map { case (k, v) => s"\"$k\":${fmt(v)}" }.mkString("{", ",", "}")
+    val digits = new java.io.File(sfDir).getName.dropWhile(c => !c.isDigit && c != '.')
+    val sf = scala.util.Try(BigDecimal(digits))
+      .fold(_ => "0", _.bigDecimal.stripTrailingZeros.toPlainString)
+    s"""{"metric":"total","value":${fmt(results.map(_._2).sum)},"unit":"sec","queries":$qs,"sf":$sf}"""
   }
 
-  /** Diff-gate constants, shared with tools/bench_diff.py via the
-    * optional `_gate` object in tools/bench_status.json so the two
-    * definitions cannot drift apart silently (they were previously
-    * duplicated literals). Defaults are the historical values. */
-  private case class Gate(thresh: Double, minNew: Double, ratio: Double,
-                          floor: Double, quiet: Double, load5Mult: Double)
-  private def statusRoot(): Option[com.fasterxml.jackson.databind.JsonNode] =
-    try {
-      val repo = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_REPO",
-        System.getProperty("user.dir", ".")))
-      val f = new java.io.File(repo, "tools/bench_status.json")
-      if (!f.isFile) None
-      else Some(new com.fasterxml.jackson.databind.ObjectMapper().readTree(f))
-    } catch { case _: Throwable => None }
-  private def loadGate(): Gate = {
-    val d = Gate(0.1, 0.2, 2.0, 0.05, 0.8, 1.5)
-    statusRoot().flatMap(r => Option(r.get("_gate"))).map { g =>
-      def f(k: String, dv: Double) = if (g.has(k)) g.get(k).asDouble(dv) else dv
-      Gate(f("thresh", d.thresh), f("min_new", d.minNew),
-        f("ratio", d.ratio), f("floor", d.floor), f("quiet_load", d.quiet),
-        f("load5_mult", d.load5Mult))
-    }.getOrElse(d)
-  }
+  /** Force a full GC and give the async ContextCleaner a beat, so a
+    * timed run does not pay for earlier runs' localCheckpoint blocks
+    * and broadcast state, which release only when a GC lets the
+    * cleaner see their references collected (measured on a 6-query
+    * set: d21 5.24 s → 3.03, set total 12.73 → 9.54 s). Per run, not
+    * per query: at sf10 four runs' accumulated checkpoint blocks
+    * filled the disk. */
+  private def cleanHeap(): Unit = { System.gc(); Thread.sleep(300) }
 
-  /** Level-pinned expected_changed waivers (fam -> adjudicated level
-    * in seconds). Entries without a numeric level are ignored — an
-    * unbounded waiver would let a documented 0.9 s cost silently
-    * cover a future 10 s regression on the same query. */
-  private def loadWaivers(): Map[String, Double] = {
-    import scala.jdk.CollectionConverters._
-    statusRoot().flatMap(r => Option(r.get("expected_changed"))).map { e =>
-      e.properties().asScala.collect {
-        case kv if !kv.getKey.startsWith("_") && kv.getValue.has("level") =>
-          kv.getKey.takeWhile(_ != '_') -> kv.getValue.get("level").asDouble()
-      }.toMap
-    }.getOrElse(Map.empty)
-  }
+  private def median[T: Ordering](xs: Seq[T]): T = xs.sorted.apply(xs.length / 2)
 
   /** 1/5/15-minute load averages (the noise context for this run). */
   private def loadavg(): Seq[Double] =

@@ -184,23 +184,13 @@ private[queries] trait IvfPq { this: Similarity.type =>
     * the session identity: suites create fresh sessions, and a frame
     * bound to a stopped session must not leak across. */
   private val servedIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, IvfPqIndex]()
+    new GraftCaches.Published[IvfPqIndex]("graft_ivfpq_", _.cents.sparkSession)
   private[graft] def servedIndexOf(s: SparkSession, cacheKey: String,
-                                   v: => DataFrame): IvfPqIndex = {
-    // session-UUID key + stopped-session eviction (see
-    // GraftCaches.sessionKey): identity hashes collide between a
-    // stopped and a live session, and un-evicted entries leak one
-    // temp-dir-backed index per suite session in a long-lived JVM
-    servedIdxCache.entrySet()
-      .removeIf(e => e.getValue.cents.sparkSession.sparkContext.isStopped)
-    servedIdxCache.computeIfAbsent(
-      s"${GraftCaches.sessionKey(s)}|$cacheKey",
-      _ => {
-        val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_").toString
-        saveIvfPqIndex(ivfPqIndexOf(v), dir)
-        loadIvfPqIndex(s, dir)
-      })
-  }
+                                   v: => DataFrame): IvfPqIndex =
+    servedIdxCache(s, cacheKey) { dir =>
+      saveIvfPqIndex(ivfPqIndexOf(v), dir)
+      loadIvfPqIndex(s, dir)
+    }
   private[graft] def servedIndex(s: SparkSession, d: String): IvfPqIndex =
     servedIndexOf(s, new java.io.File(d).getCanonicalPath, vecs(s, d))
 

@@ -708,23 +708,12 @@ object Pipeline extends QueryPack {
     * shape as the ANN index artifact. Values are identical by
     * construction (publishing is pure materialization), which the
     * oracle proves by recomputing from scratch. */
-  private val cardCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private[graft] def publishedCard(s: SparkSession, d: String): DataFrame = {
-    // evict frames bound to stopped sessions BEFORE the lookup: the
-    // key carries the session UUID (identity hashes collide between a
-    // stopped and a live session), and without eviction a long-lived
-    // JVM's suite-per-session pattern leaks one temp-dir-backed frame
-    // per session forever
-    cardCache.entrySet().removeIf(e => e.getValue.sparkSession.sparkContext.isStopped)
-    cardCache.computeIfAbsent(
-      s"${GraftCaches.sessionKey(s)}|${new java.io.File(d).getCanonicalPath}",
-      _ => {
-        val dir = java.nio.file.Files.createTempDirectory("graft_card_").toString
-        corpusCard(s, d).write.mode("overwrite").parquet(dir)
-        s.read.parquet(dir)
-      })
-  }
+  private val cardCache = new GraftCaches.Published[DataFrame]("graft_card_", _.sparkSession)
+  private[graft] def publishedCard(s: SparkSession, d: String): DataFrame =
+    cardCache(s, new java.io.File(d).getCanonicalPath) { dir =>
+      corpusCard(s, d).write.mode("overwrite").parquet(dir)
+      s.read.parquet(dir)
+    }
 
   /** p9's decision layer over a (published) card. Each metric lookup
     * is a 1-ROW aggregate (`min` over the filtered card), never a

@@ -2373,6 +2373,21 @@ class PipelineSpec extends SparkSuite {
       idx.getAs[Double]("recall")) < 1e-6)
   }
 
+  test("the served index and the published card live under the context's scratch root, not the JVM temp dir") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def published() = tmp.list().filter(n =>
+      n.startsWith("graft_ivfpq_") || n.startsWith("graft_card_")).toSet
+    val before = published()
+    val ix = graft.queries.Similarity.servedIndex(spark, sf)
+    val card = graft.queries.Pipeline.publishedCard(spark, sf)
+    assert((published() -- before).isEmpty)
+    // SparkEnv.stop() deletes this root, so the artifacts die with the context
+    val root = new java.io.File(org.apache.spark.SparkFiles.getRootDirectory()).getCanonicalPath
+    (ix.cents.inputFiles ++ card.inputFiles).foreach { f =>
+      assert(new java.io.File(new java.net.URI(f)).getCanonicalPath.startsWith(root + "/"), f)
+    }
+  }
+
   test("p13: crawl curate — every disposition earned through the real wire chain") {
     import org.apache.spark.sql.functions.col
     val rows = SparkEntry.queries("p13_crawl_curate")(spark, sf).collect()

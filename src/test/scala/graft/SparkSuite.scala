@@ -1,10 +1,11 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session per suite. */
-trait SparkSuite extends AnyFunSuite {
+trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = {
     val s = GraftSession.local(appName = "graft-test")
     // The suites intentionally run tiny (<=256-row) global-window final
@@ -19,6 +20,16 @@ trait SparkSuite extends AnyFunSuite {
 
   lazy val sf: String = "/root/testdata/sf0.001"
 
-  def tempDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  private val tempDirs = scala.collection.mutable.ArrayBuffer[java.io.File]()
+
+  /** A fresh directory under the JVM temp dir, deleted after the suite. */
+  def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs += d
+    d.toString
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+    finally super.afterAll()
 }

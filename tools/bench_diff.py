@@ -157,8 +157,7 @@ def load_status():
     pinned = {fam(k): v for k, v in doc.get("adjudicated_levels", {}).items()
               if not k.startswith("_") and isinstance(v, dict)
               and "level" in v}
-    # shared gate constants (also read by graft.Bench) — keep the two
-    # definitions from drifting apart
+    # gate constants: this script is the only reader of _gate
     g = doc.get("_gate", {})
     for k in GATE:
         if isinstance(g.get(k), (int, float)):
