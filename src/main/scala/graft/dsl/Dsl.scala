@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Portable, TextHash, Vec}
-import graft.operators.{AsOf, Components, MediaDecode, Salted}
+import graft.operators.{AsOf, MediaDecode, Salted}
 import graft.operators.MediaDecode.{Media, MediaStats}
 import graft.queries.{AnnGeometry, Similarity}
 
@@ -106,12 +106,6 @@ package object dsl {
         queries.Dedup.kmSignatures(
           df.select(col(idCol).as("doc_id"), col(textCol).as("text")),
           materialize = true), bands, rowsPerBand)
-
-    /** d9's fixpoint connected components over an edge list
-      * (`node`, `nbr`) — O(diameter) rounds, shuffles (id,label)
-      * pairs only. Adds `comp_id` (min node id of the component). */
-    def dupComponents(maxIter: Int = 20): DataFrame =
-      Components.connected(df, maxIter)
 
     /** q23's as-of join: for each left row, the latest right row at
       * or before its `ts`, matched on `key`. One user-keyed shuffle,

@@ -53,12 +53,6 @@ object Portable {
   def hllRegisters(h: Column, p: Int): Column =
     org.apache.spark.sql.graftvec.HllColumns.hllRegisters(h, p)
 
-  /** Seeded md5 digest — the k "hash functions" of minhash are
-    * md5 over a seed-prefixed value.
-    * DuckDB: `md5(seed || '|' || x)` */
-  def seededMd5(seed: Int, c: Column): Column =
-    md5(concat(lit(s"$seed|"), c).cast("binary"))
-
   /** Whitespace tokenization after trim; empty text → empty array.
     * DuckDB: `regexp_split_to_array(trim(x), '\s+')` (with the same
     * empty-string guard). */

@@ -55,7 +55,6 @@ object FlacCodec {
     /** FLAC unary: q zero bits then a one bit. */
     def writeUnary(q: Int): Unit = { var i = 0; while (i < q) { writeBits(0L, 1); i += 1 }; writeBits(1L, 1) }
     def alignByte(): Unit = if (bitLen % 8 != 0) writeBits(0L, 8 - bitLen % 8)
-    def lengthBytes: Int = { require(bitLen % 8 == 0); bitLen / 8 }
     def toBytes: Array[Byte] = { alignByte(); java.util.Arrays.copyOf(buf, bitLen / 8) }
   }
 

@@ -94,6 +94,43 @@ object Dedup extends QueryPack {
         .withColumn("doc_id", col("doc_id") + 100000L))
   }
 
+  /** d13's synthesized daily delivery over `docs` (doc_id, text):
+    * re-uploads of every 7th corpus doc, fresh revisions of every
+    * 13th, and an intra-batch double upload of every 31st. */
+  private[queries] def deliveryBatch(docs: DataFrame): DataFrame =
+    docs.filter(col("doc_id") % 7 === 0)
+      .select((col("doc_id") + 500000L).as("doc_id"), col("text"))
+    .unionAll(docs.filter(col("doc_id") % 13 === 0)
+      .select((col("doc_id") + 520000L).as("doc_id"),
+        concat(col("text"), lit(" fresh revision "),
+          col("doc_id").cast("string")).as("text")))
+    .unionAll(docs.filter(col("doc_id") % 31 === 0)
+      .select((col("doc_id") + 600000L).as("doc_id"),
+        concat(col("text"), lit(" batch special")).as("text")))
+    .unionAll(docs.filter(col("doc_id") % 31 === 0)
+      .select((col("doc_id") + 610000L).as("doc_id"),
+        concat(col("text"), lit(" batch special")).as("text")))
+
+  /** d13's disposition of a delivery that already carries its digest
+    * `h` against the corpus `docs` (doc_id, text): adds `status` =
+    * dup_of_corpus (digest in the corpus), dup_in_batch (a smaller
+    * doc_id in the batch has the digest) or ingested. The corpus
+    * contributes only distinct digests, broadcast; the within-batch
+    * first arrival is one window over the digest. */
+  private[queries] def ingestStatus(hashed: DataFrame, docs: DataFrame): DataFrame = {
+    val corpusDigests = docs
+      .select(Portable.md5bin(Portable.normText(col("text"))).as("h")).distinct()
+      .withColumn("in_corpus", lit(true))
+    val wFirst = Window.partitionBy(col("h")).orderBy(col("doc_id"))
+    hashed
+      .withColumn("rn", row_number().over(wFirst))
+      .join(broadcast(corpusDigests), Seq("h"), "left")
+      .withColumn("status",
+        when(col("in_corpus"), "dup_of_corpus")
+          .when(col("rn") > 1, "dup_in_batch")
+          .otherwise("ingested"))
+  }
+
   /** documents ∪ lightly-perturbed copies of every 20th doc — near
     * dupes with high (but not 1.0) shingle overlap. */
   private[graft] def withNearDupes(s: SparkSession, d: String): DataFrame = {
@@ -574,33 +611,10 @@ object Dedup extends QueryPack {
     // re-uploads of every 7th corpus doc, fresh revisions, and an
     // intra-batch double upload.
     "d13_incremental_dedup" -> { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val batch =
-        docs.filter(col("doc_id") % 7 === 0)
-          .select((col("doc_id") + 500000L).as("doc_id"), col("text"))
-        .unionAll(docs.filter(col("doc_id") % 13 === 0)
-          .select((col("doc_id") + 520000L).as("doc_id"),
-            concat(col("text"), lit(" fresh revision "),
-              col("doc_id").cast("string")).as("text")))
-        .unionAll(docs.filter(col("doc_id") % 31 === 0)
-          .select((col("doc_id") + 600000L).as("doc_id"),
-            concat(col("text"), lit(" batch special")).as("text")))
-        .unionAll(docs.filter(col("doc_id") % 31 === 0)
-          .select((col("doc_id") + 610000L).as("doc_id"),
-            concat(col("text"), lit(" batch special")).as("text")))
-      val corpusDigests = docs
-        .select(Portable.md5bin(Portable.normText(col("text"))).as("h")).distinct()
-        .withColumn("in_corpus", lit(true))
-      val wFirst = Window.partitionBy(col("h")).orderBy(col("doc_id"))
-      batch
+      val hashed = deliveryBatch(docs)
         .select(col("doc_id"), Portable.md5bin(Portable.normText(col("text"))).as("h"))
-        .withColumn("rn", row_number().over(wFirst))
-        .join(broadcast(corpusDigests), Seq("h"), "left")
-        .withColumn("status",
-          when(col("in_corpus"), "dup_of_corpus")
-            .when(col("rn") > 1, "dup_in_batch")
-            .otherwise("ingested"))
+      ingestStatus(hashed, docs)
         .select(col("doc_id"), col("status"))
         .orderBy(col("doc_id"))
     },

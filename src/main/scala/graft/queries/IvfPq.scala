@@ -1093,10 +1093,7 @@ private[queries] trait IvfPq { this: Similarity.type =>
         avg(col("cos_a")).as("mca"))
     // 4. serve through the maintained index: routes on the AFTER
     // centroids, exact cosine within routed cells, top-K per probe
-    val probes = hashTopK(v.filter(!isDelta), "probe", NProbes)
-      .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"),
-        col("nrm").as("p_nrm"))
-    val routes = routeProbes(probes, centsAfter, geo.nProbe)
+    val routes = routeProbes(probesOf(v.filter(!isDelta)), centsAfter, geo.nProbe)
       .select(col("probe_id"), col("p_emb"), col("p_nrm"), col("cell"))
     val wk = Window.partitionBy(col("probe_id"))
       .orderBy(col("cosine").desc, col("vec_id"))

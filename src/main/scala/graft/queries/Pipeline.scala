@@ -108,45 +108,21 @@ object Pipeline extends QueryPack {
     // visibly claim rows. One batch scan + a digest window + one
     // global aggregate.
     "p4_daily_ingest" -> { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val batch =
-        docs.filter(col("doc_id") % 7 === 0)
-          .select((col("doc_id") + 500000L).as("doc_id"), col("text"))
-        .unionAll(docs.filter(col("doc_id") % 13 === 0)
-          .select((col("doc_id") + 520000L).as("doc_id"),
-            concat(col("text"), lit(" fresh revision "),
-              col("doc_id").cast("string")).as("text")))
-        .unionAll(docs.filter(col("doc_id") % 31 === 0)
-          .select((col("doc_id") + 600000L).as("doc_id"),
-            concat(col("text"), lit(" batch special")).as("text")))
-        .unionAll(docs.filter(col("doc_id") % 31 === 0)
-          .select((col("doc_id") + 610000L).as("doc_id"),
-            concat(col("text"), lit(" batch special")).as("text")))
+      val batch = Dedup.deliveryBatch(docs)
         .unionAll(docs.filter(col("doc_id") % 41 === 0)
           .select((col("doc_id") + 620000L).as("doc_id"),
             concat(concat_ws(" ", array_repeat(lit("!?!?"), 30)),
               lit(" "), col("doc_id").cast("string")).as("text")))
-      val corpusDigests = docs
-        .select(Portable.md5bin(Portable.normText(col("text"))).as("h")).distinct()
-        .withColumn("in_corpus", lit(true))
-      val wFirst = Window.partitionBy(col("h")).orderBy(col("doc_id"))
       // quality features and the digest are computed MAP-SIDE and the
       // text dropped BEFORE the first-arrival window: the round-14
       // plan-discipline sweep caught this exchange carrying text# as
       // a rider column (the manual audits only ever grepped for text
       // as the shuffle KEY) — at corpus scale that shuffles every
       // byte of the batch on the digest key for no reason
-      val statused = withQuality(batch
+      Dedup.ingestStatus(withQuality(batch
           .withColumn("h", Portable.md5bin(Portable.normText(col("text")))))
-        .drop("text")
-        .withColumn("rn", row_number().over(wFirst))
-        .join(broadcast(corpusDigests), Seq("h"), "left")
-        .withColumn("status",
-          when(col("in_corpus"), "dup_of_corpus")
-            .when(col("rn") > 1, "dup_in_batch")
-            .otherwise("ingested"))
-      statused
+          .drop("text"), docs)
         .withColumn("curated", col("status") === "ingested" && col("quality") >= 0.5)
         .agg(
           count(lit(1)).as("n_received"),

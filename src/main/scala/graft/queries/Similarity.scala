@@ -68,8 +68,48 @@ object Similarity extends QueryPack with IvfPq {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       .withColumn("nrm", graft.functions.Vec.norm(col("emb")))
 
+  /** The acceptance-gate probe set of `v`: its [[hashTopK]] sample as
+    * (probe_id, p_emb, p_nrm, p_<extra>…). */
+  private[queries] def probesOf(v: DataFrame, extra: String*): DataFrame =
+    hashTopK(v, "probe", NProbes).select(
+      Seq(col("vec_id").as("probe_id"), col("emb").as("p_emb"), col("nrm").as("p_nrm")) ++
+        extra.map(c => col(c).as(s"p_$c")): _*)
+
+  /** Per-dimension values of the embeddings table: (vec_id, dim, x). */
+  private def dimsOf(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d)
+      .select(col("vec_id"),
+        posexplode(col("embedding").cast("array<double>")).as(Seq("dim", "x")))
+
   private[queries] def cosPre(pEmb: Column, pNrm: Column, emb: Column, nrm: Column): Column =
     graft.functions.Vec.dot(pEmb, emb) / (pNrm * nrm)
+
+  /** The exact cosine re-rank every kNN leg ends in: each candidate
+    * (probe, vector) pair's `cosine`, then the top `k` per
+    * (by…, probe_id) by cosine, ties to the smaller vec_id. Every
+    * column of `cand` passes through, then (cosine, rank). */
+  private def cosineTopK(cand: DataFrame, k: Int, by: String*): DataFrame = {
+    val w = Window.partitionBy((by :+ "probe_id").map(col): _*)
+      .orderBy(col("cosine").desc, col("vec_id"))
+    cand.withColumn("cosine", cosPre(col("p_emb"), col("p_nrm"), col("emb"), col("nrm")))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+  }
+
+  /** A kNN answer's rows: (probe_id, vec_id, rank, cosine) by probe
+    * and rank. */
+  private def knnRows(ranked: DataFrame): DataFrame =
+    ranked.select(col("probe_id"), col("vec_id"), col("rank"), col("cosine"))
+      .orderBy(col("probe_id"), col("rank"))
+
+  /** Routed-cell candidates: every assigned vector in a cell its probe
+    * routes to, the probe itself excluded, `also` ANDed into the same
+    * broadcast-hash join condition. */
+  private def cellCandidates(assigned: DataFrame, probeCells: DataFrame,
+                             also: Column*): DataFrame =
+    assigned.join(broadcast(probeCells),
+      (Seq(assigned("cell") === probeCells("cell"), col("vec_id") =!= col("probe_id")) ++
+        also).reduce(_ && _))
 
   /** recall@k hit counts: every exact (keys…, probe_id, vec_id) row
     * LEFT-joined to the approximate (a_<key>…, a_probe, a_vec) rows,
@@ -83,6 +123,17 @@ object Similarity extends QueryPack with IvfPq {
       .groupBy((keys :+ "probe_id").map(col): _*)
       .agg(count(lit(1)).as("n_exact"),
         sum(when(col("a_vec").isNotNull, 1L).otherwise(0L)).as("n_hit"))
+
+  /** a1's exact top-k as the (probe_id, vec_id) truth a recall gate
+    * scores against. */
+  private def exactPairs(s: SparkSession, d: String, k: Int): DataFrame =
+    bruteKnn(s, d, k).select(col("probe_id"), col("vec_id"))
+
+  /** Per-probe recall@k report: [[hitCounts]] plus `recall`. */
+  private def recallOf(exact: DataFrame, approx: DataFrame): DataFrame =
+    hitCounts(exact, approx)
+      .withColumn("recall", col("n_hit").cast("double") / col("n_exact"))
+      .orderBy(col("probe_id"))
 
   /** `a.unionByName(b)` over the `names` columns, both children
     * re-selected in that order under fresh aliases. Two shapes
@@ -128,6 +179,11 @@ object Similarity extends QueryPack with IvfPq {
     substring(bucket, 1, i),
     when(substring(bucket, i + 1, 1) === "1", "0").otherwise("1"),
     substring(bucket, i + 2, planes - i - 1))
+
+  /** Multi-probe LSH's search set: `bucket` and its Hamming-1
+    * neighbours, one plane bit flipped each. */
+  private def hamming1(bucket: Column, planes: Int): Seq[Column] =
+    bucket +: (0 until planes).map(i => flipBit(bucket, i, planes))
 
   private def planeDotSql(emb: String, p: Int, dims: Int = 64): String =
     s"""list_sum(list_transform(generate_series(1, $dims),
@@ -272,34 +328,15 @@ object Similarity extends QueryPack with IvfPq {
   /** Exact top-k: broadcast the probe set against one corpus scan. */
   def bruteKnn(s: SparkSession, d: String, k: Int = K): DataFrame = {
     val v = vecs(s, d)
-    val probes = hashTopK(v, "probe", NProbes)
-      .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"), col("nrm").as("p_nrm"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    v.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-      .withColumn("cosine", cosPre(col("p_emb"), col("p_nrm"), col("emb"), col("nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("vec_id"), col("rank"), col("cosine"))
-      .orderBy(col("probe_id"), col("rank"))
+    knnRows(cosineTopK(v.join(broadcast(probesOf(v)), col("vec_id") =!= col("probe_id")), k))
   }
 
   /** LSH: candidates restricted to the probe's sign bucket, then
     * exact rerank. Bucket assignment is one map-side expression. */
   def lshKnn(s: SparkSession, d: String, geo: AnnGeometry = Geo, k: Int = K): DataFrame = {
     val v = vecs(s, d).withColumn("bucket", lshBucket(col("emb"), geo.planes))
-    val probes = hashTopK(v, "probe", NProbes)
-      .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"),
-        col("nrm").as("p_nrm"), col("bucket").as("p_bucket"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    v.join(broadcast(probes),
-        col("bucket") === col("p_bucket") && col("vec_id") =!= col("probe_id"))
-      .withColumn("cosine", cosPre(col("p_emb"), col("p_nrm"), col("emb"), col("nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("vec_id"), col("rank"), col("cosine"))
-      .orderBy(col("probe_id"), col("rank"))
+    knnRows(cosineTopK(v.join(broadcast(probesOf(v, "bucket")),
+      col("bucket") === col("p_bucket") && col("vec_id") =!= col("probe_id")), k))
   }
 
   /** Multi-probe LSH: each probe searches its own sign bucket PLUS
@@ -309,21 +346,10 @@ object Similarity extends QueryPack with IvfPq {
     * unchanged (one bucket per vector, map-side). */
   def multiProbeKnn(s: SparkSession, d: String, geo: AnnGeometry = Geo, k: Int = K): DataFrame = {
     val v = vecs(s, d).withColumn("bucket", lshBucket(col("emb"), geo.planes))
-    val probes = hashTopK(v, "probe", NProbes)
-      .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"),
-        col("nrm").as("p_nrm"), col("bucket").as("p_bucket"))
-    val expanded = probes.withColumn("search_bucket",
-      explode(array(col("p_bucket") +:
-        (0 until geo.planes).map(i => flipBit(col("p_bucket"), i, geo.planes)): _*)))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    v.join(broadcast(expanded),
-        col("bucket") === col("search_bucket") && col("vec_id") =!= col("probe_id"))
-      .withColumn("cosine", cosPre(col("p_emb"), col("p_nrm"), col("emb"), col("nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("vec_id"), col("rank"), col("cosine"))
-      .orderBy(col("probe_id"), col("rank"))
+    val expanded = probesOf(v, "bucket").withColumn("search_bucket",
+      explode(array(hamming1(col("p_bucket"), geo.planes): _*)))
+    knnRows(cosineTopK(v.join(broadcast(expanded),
+      col("bucket") === col("search_bucket") && col("vec_id") =!= col("probe_id")), k))
   }
 
   /** a23: metadata-FILTERED IVF serve — top-k among vectors sharing
@@ -347,20 +373,9 @@ object Similarity extends QueryPack with IvfPq {
     val cents = centroidsOf(v, geo.nCentroids)
     val assigned = assignCells(v, cents)
       .select(col("vec_id"), col("emb"), col("nrm"), col("label"), col("cell"))
-    val probes = hashTopK(v, "probe", NProbes)
-      .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"),
-        col("nrm").as("p_nrm"), col("label").as("p_label"))
-    val probeCells = routeProbes(probes, cents, geo.nProbe)
+    val probeCells = routeProbes(probesOf(v, "label"), cents, geo.nProbe)
       .select(col("probe_id"), col("p_emb"), col("p_nrm"), col("p_label"), col("cell"))
-    val wRank = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    assigned.join(broadcast(probeCells),
-        assigned("cell") === probeCells("cell") &&
-          col("vec_id") =!= col("probe_id") &&
-          col("label") === col("p_label"))
-      .withColumn("cosine", cosPre(col("p_emb"), col("p_nrm"), col("emb"), col("nrm")))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
+    cosineTopK(cellCandidates(assigned, probeCells, col("label") === col("p_label")), k)
       .select(col("probe_id"), col("p_label").cast("int").as("label"),
         col("vec_id"), col("rank"), col("cosine"))
       .orderBy(col("probe_id"), col("rank"))
@@ -380,46 +395,12 @@ object Similarity extends QueryPack with IvfPq {
   def nprobeSweep(s: SparkSession, d: String, geo: AnnGeometry = Geo,
                   k: Int = K, maxProbe: Int = 4): DataFrame = {
     val v = vecs(s, d)
-    // centroids + assignment come from the PERSISTED corpus index
-    // (built once per run, manifest-verified load) when the caller
-    // uses the published geometry; the acceptance gate then audits
-    // the artifact a serve fleet actually reads. The index was built
-    // by assignCells, so the loaded (vec_id, cell) mapping is
-    // value-identical to the assignCells recomputation of the other
-    // branch, which the oracle mirrors. Exact cosines still need the
-    // vectors, so the assignment joins back to the corpus on vec_id.
-    val (cents, assigned) =
-      if (geo == Geo) {
-        val ix = servedIndex(s, d)
-        (ix.cents.select(col("cell"), col("c_emb"), col("c_nrm")),
-          v.join(ix.assigned.select(col("vec_id"), col("cell")), "vec_id")
-            .select(col("vec_id"), col("emb"), col("nrm"), col("cell")))
-      } else {
-        val c = centroidsOf(v, geo.nCentroids)
-        (c, assignCells(v, c).select(col("vec_id"), col("emb"), col("nrm"), col("cell")))
-      }
-    val probes = hashTopK(v, "probe", NProbes)
-      .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"), col("nrm").as("p_nrm"))
-    val lv = routeProbes(probes, cents, maxProbe)
+    val (cents, assigned) = cellsOf(s, d, v, geo)
+    val lv = routeProbes(probesOf(v), cents, maxProbe)
       .withColumn("np", explode(sequence(lit(1), lit(maxProbe))))
       .filter(col("crank") <= col("np"))
       .select(col("np"), col("probe_id"), col("p_emb"), col("p_nrm"), col("cell"))
-    val cand = assigned.join(broadcast(lv),
-        assigned("cell") === lv("cell") && col("vec_id") =!= col("probe_id"))
-      .withColumn("cosine", cosPre(col("p_emb"), col("p_nrm"), col("emb"), col("nrm")))
-    val wRank = Window.partitionBy(col("np"), col("probe_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    val approx = cand
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("np").as("a_np"), col("probe_id").as("a_probe"), col("vec_id").as("a_vec"))
-    val scanned = cand.groupBy(col("np"), col("probe_id"))
-      .agg(count(lit(1)).as("n_cand"))
-    val exact = bruteKnn(s, d, k)
-      .select(col("probe_id"), col("vec_id"))
-      .withColumn("np", explode(sequence(lit(1), lit(maxProbe))))
-    val per = hitCounts(exact, approx, "np")
-    per.join(scanned, Seq("np", "probe_id"), "left")
+    levelHits(s, d, cellCandidates(assigned, lv), k, "np", sequence(lit(1), lit(maxProbe)))
       .groupBy(col("np"))
       .agg(count(lit(1)).as("n_probes"),
         round(avg(coalesce(col("n_cand"), lit(0L)).cast("double")), 6).as("avg_scanned"),
@@ -427,6 +408,22 @@ object Similarity extends QueryPack with IvfPq {
       .select(col("np").cast("long").as("np"), col("n_probes"),
         col("avg_scanned"), col("avg_recall"))
       .orderBy(col("np"))
+  }
+
+  /** a24/a26's per-(level, probe) acceptance rows over candidates
+    * carrying a `level` column: the level's cosine top-k scored by
+    * [[hitCounts]] against a1's exact top-k, which is replicated to
+    * every level in the `levels` array, plus the level's candidate
+    * count `n_cand` (null where the level routed no candidate). */
+  private def levelHits(s: SparkSession, d: String, cand: DataFrame, k: Int,
+                        level: String, levels: Column): DataFrame = {
+    val approx = cosineTopK(cand, k, level)
+      .select(col(level).as(s"a_$level"), col("probe_id").as("a_probe"),
+        col("vec_id").as("a_vec"))
+    val scanned = cand.groupBy(col(level), col("probe_id"))
+      .agg(count(lit(1)).as("n_cand"))
+    val exact = exactPairs(s, d, k).withColumn(level, explode(levels))
+    hitCounts(exact, approx, level).join(scanned, Seq(level, "probe_id"), "left")
   }
 
   /** a25: the DECISION step a24's sweep exists to feed — the m20
@@ -493,27 +490,8 @@ object Similarity extends QueryPack with IvfPq {
   def adaptiveNprobe(s: SparkSession, d: String, geo: AnnGeometry = Geo,
                      k: Int = K, maxProbe: Int = 4): DataFrame = {
     val v = vecs(s, d)
-    // centroids + assignment come from the PERSISTED corpus index
-    // (built once per run, manifest-verified load) when the caller
-    // uses the published geometry; the acceptance gate then audits
-    // the artifact a serve fleet actually reads. The index was built
-    // by assignCells, so the loaded (vec_id, cell) mapping is
-    // value-identical to the assignCells recomputation of the other
-    // branch, which the oracle mirrors. Exact cosines still need the
-    // vectors, so the assignment joins back to the corpus on vec_id.
-    val (cents, assigned) =
-      if (geo == Geo) {
-        val ix = servedIndex(s, d)
-        (ix.cents.select(col("cell"), col("c_emb"), col("c_nrm")),
-          v.join(ix.assigned.select(col("vec_id"), col("cell")), "vec_id")
-            .select(col("vec_id"), col("emb"), col("nrm"), col("cell")))
-      } else {
-        val c = centroidsOf(v, geo.nCentroids)
-        (c, assignCells(v, c).select(col("vec_id"), col("emb"), col("nrm"), col("cell")))
-      }
-    val probes = hashTopK(v, "probe", NProbes)
-      .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"), col("nrm").as("p_nrm"))
-    val pc = routeProbes(probes, cents, maxProbe)
+    val (cents, assigned) = cellsOf(s, d, v, geo)
+    val pc = routeProbes(probesOf(v), cents, maxProbe)
       .select(col("probe_id"), col("p_emb"), col("p_nrm"),
         col("cell"), col("crank"), col("pc_cos"))
       .localCheckpoint()
@@ -534,24 +512,8 @@ object Similarity extends QueryPack with IvfPq {
     val lv = pc.join(policies, Seq("probe_id"))
       .filter(col("crank") <= col("np"))
       .select(col("policy"), col("probe_id"), col("p_emb"), col("p_nrm"), col("cell"))
-    val cand = assigned.join(broadcast(lv),
-        assigned("cell") === lv("cell") && col("vec_id") =!= col("probe_id"))
-      .withColumn("cosine", cosPre(col("p_emb"), col("p_nrm"), col("emb"), col("nrm")))
-    val wRank = Window.partitionBy(col("policy"), col("probe_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    val approx = cand
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("policy").as("a_policy"), col("probe_id").as("a_probe"),
-        col("vec_id").as("a_vec"))
-    val scanned = cand.groupBy(col("policy"), col("probe_id"))
-      .agg(count(lit(1)).as("n_cand"))
     val polNames = (1 to maxProbe).map(n => s"fixed_$n") :+ "adaptive"
-    val exact = bruteKnn(s, d, k)
-      .select(col("probe_id"), col("vec_id"))
-      .withColumn("policy", explode(array(polNames.map(lit): _*)))
-    val per = hitCounts(exact, approx, "policy")
-    per.join(scanned, Seq("policy", "probe_id"), "left")
+    levelHits(s, d, cellCandidates(assigned, lv), k, "policy", array(polNames.map(lit): _*))
       .join(policies, Seq("policy", "probe_id"))
       .groupBy(col("policy"))
       .agg(count(lit(1)).as("n_probes"),
@@ -570,21 +532,10 @@ object Similarity extends QueryPack with IvfPq {
     // nearest cell per vector
     val assigned = assignCells(v, cents)
       .select(col("vec_id"), col("emb"), col("nrm"), col("cell"))
-    // nProbe nearest cells per probe
-    val probes = hashTopK(v, "probe", NProbes)
-      .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"), col("nrm").as("p_nrm"))
-    val probeCells = routeProbes(probes, cents, geo.nProbe)
+    // nProbe nearest cells per probe; search only those cells
+    val probeCells = routeProbes(probesOf(v), cents, geo.nProbe)
       .select(col("probe_id"), col("p_emb"), col("p_nrm"), col("cell"))
-    // search only those cells
-    val wRank = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    assigned.join(broadcast(probeCells),
-        assigned("cell") === probeCells("cell") && col("vec_id") =!= col("probe_id"))
-      .withColumn("cosine", cosPre(col("p_emb"), col("p_nrm"), col("emb"), col("nrm")))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("vec_id"), col("rank"), col("cosine"))
-      .orderBy(col("probe_id"), col("rank"))
+    knnRows(cosineTopK(cellCandidates(assigned, probeCells), k))
   }
 
   /** One Lloyd iteration of IVF centroid refinement: assign every
@@ -604,6 +555,27 @@ object Similarity extends QueryPack with IvfPq {
       .agg(count(lit(1)).as("n_members"), avg(col("c_cos")).as("mean_cos"))
       .orderBy(col("cell"))
   }
+
+  /** The (cents, assigned) pair a24/a26 search, assigned as (vec_id,
+    * emb, nrm, cell). Centroids and assignment come from the PERSISTED
+    * corpus index (built once per run, manifest-verified load) when
+    * the caller uses the published geometry; the acceptance gate then
+    * audits the artifact a serve fleet actually reads. The index was
+    * built by assignCells, so the loaded (vec_id, cell) mapping is
+    * value-identical to the assignCells recomputation of the other
+    * branch, which the oracle mirrors. Exact cosines still need the
+    * vectors, so the assignment joins back to the corpus on vec_id. */
+  private def cellsOf(s: SparkSession, d: String, v: DataFrame,
+                      geo: AnnGeometry): (DataFrame, DataFrame) =
+    if (geo == Geo) {
+      val ix = servedIndex(s, d)
+      (ix.cents.select(col("cell"), col("c_emb"), col("c_nrm")),
+        v.join(ix.assigned.select(col("vec_id"), col("cell")), "vec_id")
+          .select(col("vec_id"), col("emb"), col("nrm"), col("cell")))
+    } else {
+      val c = centroidsOf(v, geo.nCentroids)
+      (c, assignCells(v, c).select(col("vec_id"), col("emb"), col("nrm"), col("cell")))
+    }
 
   /** The coarse centroid table (cell, c_emb, c_nrm): the `n` hash-
     * sampled seed rows of `v`, each seed's vec_id naming its cell. */
@@ -726,12 +698,9 @@ object Similarity extends QueryPack with IvfPq {
         col("embedding").cast("array<double>").as("emb"))
       .withColumn("nrm", graft.functions.Vec.norm(col("emb")))
       .withColumn("bucket", lshBucket(col("emb"), geo.planes))
-    val probes = hashTopK(v, "probe", NProbes)
-      .select(col("vec_id").as("probe_id"), col("label").as("p_label"),
-        col("emb").as("p_emb"), col("nrm").as("p_nrm"), col("bucket").as("p_bucket"))
-    val tier0 = struct(lit(0).as("tier"), col("p_bucket").as("sb")) +:
-      (0 until geo.planes).map(i =>
-        struct(lit(0).as("tier"), flipBit(col("p_bucket"), i, geo.planes).as("sb")))
+    val probes = probesOf(v, "label", "bucket")
+    val tier0 = hamming1(col("p_bucket"), geo.planes).map(b =>
+      struct(lit(0).as("tier"), b.as("sb")))
     val tier1 = for { i <- 0 until geo.planes; j <- i + 1 until geo.planes }
       yield struct(lit(1).as("tier"),
         flipBit(flipBit(col("p_bucket"), i, geo.planes), j, geo.planes).as("sb"))
@@ -761,12 +730,8 @@ object Similarity extends QueryPack with IvfPq {
   def rangeSearch(s: SparkSession, d: String, geo: AnnGeometry = Geo,
                   minCos: Double = 0.25): DataFrame = {
     val v = vecs(s, d).withColumn("bucket", lshBucket(col("emb"), geo.planes))
-    val probes = hashTopK(v, "probe", NProbes)
-      .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"),
-        col("nrm").as("p_nrm"), col("bucket").as("p_bucket"))
-    val expanded = probes.withColumn("search_bucket",
-      explode(array(col("p_bucket") +:
-        (0 until geo.planes).map(i => flipBit(col("p_bucket"), i, geo.planes)): _*)))
+    val expanded = probesOf(v, "bucket").withColumn("search_bucket",
+      explode(array(hamming1(col("p_bucket"), geo.planes): _*)))
     v.join(broadcast(expanded),
         col("bucket") === col("search_bucket") && col("vec_id") =!= col("probe_id"))
       .withColumn("cosine", cosPre(col("p_emb"), col("p_nrm"), col("emb"), col("nrm")))
@@ -783,12 +748,9 @@ object Similarity extends QueryPack with IvfPq {
     * it is the acceptance gate for a geometry change (raise planes →
     * re-run a8 → compare recall vs candidate volume). */
   def recallEval(s: SparkSession, d: String, geo: AnnGeometry = Geo, k: Int = K): DataFrame = {
-    val exact = bruteKnn(s, d, k).select(col("probe_id"), col("vec_id"))
     val approx = lshKnn(s, d, geo, k)
       .select(col("probe_id").as("a_probe"), col("vec_id").as("a_vec"))
-    hitCounts(exact, approx)
-      .withColumn("recall", col("n_hit").cast("double") / col("n_exact"))
-      .orderBy(col("probe_id"))
+    recallOf(exactPairs(s, d, k), approx)
   }
 
   /** Scalar int8 quantization of the embedding corpus — the storage/
@@ -802,9 +764,7 @@ object Similarity extends QueryPack with IvfPq {
     * map-side pass + one dims-keyed agg. At 100 TB the stats scan
     * runs on a sample; everything downstream is unchanged. */
   def quantizeInt8(s: SparkSession, d: String): DataFrame = {
-    val xs = Tables.embeddings(s, d)
-      .select(col("vec_id"),
-        posexplode(col("embedding").cast("array<double>")).as(Seq("dim", "x")))
+    val xs = dimsOf(s, d)
     val stats = xs.groupBy(col("dim"))
       .agg(min(col("x")).as("lo"), max(col("x")).as("hi"))
       .withColumn("scale", (col("hi") - col("lo")) / 255.0)
@@ -835,9 +795,7 @@ object Similarity extends QueryPack with IvfPq {
     * triples — at deploy the stats come from a sample and the
     * reconstruct is a map-side array expression. */
   def quantizedRecall(s: SparkSession, d: String, k: Int = K): DataFrame = {
-    val xs = Tables.embeddings(s, d)
-      .select(col("vec_id"),
-        posexplode(col("embedding").cast("array<double>")).as(Seq("dim", "x")))
+    val xs = dimsOf(s, d)
     val stats = xs.groupBy(col("dim"))
       .agg(min(col("x")).as("lo"),
         ((max(col("x")) - min(col("x"))) / 255.0).as("scale"))
@@ -850,19 +808,10 @@ object Similarity extends QueryPack with IvfPq {
       .agg(transform(sort_array(collect_list(struct(col("dim"), col("rx")))),
         x => x.getField("rx")).as("emb"))
       .withColumn("nrm", graft.functions.Vec.norm(col("emb")))
-    val probes = hashTopK(vecs(s, d), "probe", NProbes)
-      .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"), col("nrm").as("p_nrm"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    val approx = recon.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-      .withColumn("cosine", cosPre(col("p_emb"), col("p_nrm"), col("emb"), col("nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val approx = cosineTopK(
+        recon.join(broadcast(probesOf(vecs(s, d))), col("vec_id") =!= col("probe_id")), k)
       .select(col("probe_id").as("a_probe"), col("vec_id").as("a_vec"))
-    val exact = bruteKnn(s, d, k).select(col("probe_id"), col("vec_id"))
-    hitCounts(exact, approx)
-      .withColumn("recall", col("n_hit").cast("double") / col("n_exact"))
-      .orderBy(col("probe_id"))
+    recallOf(exactPairs(s, d, k), approx)
   }
 
   /** Product-quantization codebook QA — the compression step past
@@ -931,15 +880,19 @@ object Similarity extends QueryPack with IvfPq {
     * broadcast; assignment is one scan; the rollup is m rows. */
   private[graft] def pqCodebookStats(base: DataFrame, seeds: DataFrame,
                                      m: Int, subDim: Int): DataFrame = {
-    pqAssignments(base, seeds, m, subDim)
-      .groupBy(col("sub"))
-      .agg(count(lit(1)).as("n_vecs"),
-        countDistinct(col("code_id")).as("n_codes_used"),
-        round(avg(col("dist")), 6).as("mse"))
+    subStats(pqAssignments(base, seeds, m, subDim))
       .select(col("sub").cast("long").as("sub"), col("n_vecs"),
         col("n_codes_used"), col("mse"))
       .orderBy(col("sub"))
   }
+
+  /** Per-subspace rollup of a (vec_id, sub, code_id, dist) code
+    * assignment: (sub, n_vecs, n_codes_used, mse). */
+  private def subStats(codes: DataFrame): DataFrame =
+    codes.groupBy(col("sub"))
+      .agg(count(lit(1)).as("n_vecs"),
+        countDistinct(col("code_id")).as("n_codes_used"),
+        round(avg(col("dist")), 6).as("mse"))
 
   /** a17: IVF-PQ composition — product-quantize the RESIDUAL
     * (vector − its assigned coarse centroid) instead of the raw
@@ -1000,49 +953,59 @@ object Similarity extends QueryPack with IvfPq {
     * audited), codes used, MSE. */
   def pqBalanced(s: SparkSession, d: String,
                  m: Int = PqM): DataFrame = {
-    val xs = Tables.embeddings(s, d)
-      .select(col("vec_id"),
-        posexplode(col("embedding").cast("array<double>")).as(Seq("dim", "x")))
-    // dvar is ROUNDED to 9 dp before any comparison: the ordered-pair
-    // rank join evaluates the aggregate on both sides, and engines
-    // (or a re-inlined CTE) may recompute it with different partial-
-    // sum order — last-ulp noise then makes > / = inconsistent and
-    // ranks collide. 1e-9 granularity is far above fp noise and far
-    // below real variance gaps.
-    val stats = xs.groupBy(col("dim"))
-      .agg((avg(col("x") * col("x")) - avg(col("x")) * avg(col("x"))).as("dvar"))
-      .withColumn("dvr", round(col("dvar"), 9))
-      // dims-sized; checkpointed so the rank self-join, the subvector
-      // regroup, and the per-sub energy rollup don't each re-run the
-      // corpus-wide variance aggregate (18 scans in the uncut plan)
-      .localCheckpoint()
-    // rank = row_number over (rounded variance DESC, dim ASC) minus 1
-    // — identical to the former ordered-pair count join (same order,
-    // same deterministic tie-break) at a third of the stages: the
-    // 64-row checkpointed stats frame sorts in one bounded global
-    // window instead of a broadcast build + non-equi join + groupBy
-    // (round 19; the window is dims-sized at ANY corpus — declared in
-    // plan_discipline's GLOBAL_WINDOW_OK).
-    val alloc = stats
-      .withColumn("rk",
-        (row_number().over(Window.orderBy(col("dvr").desc, col("dim"))) - 1)
-          .cast("long"))
-      .select(col("dim"), pmod(col("rk"), lit(m)).cast("int").as("sub"), col("dvar"))
+    val xs = dimsOf(s, d)
+    val alloc = dealDims(dimVariance(xs, "d"), "d", m)
     val subs = xs.join(broadcast(alloc.select(col("dim"), col("sub"))), "dim")
       .groupBy(col("vec_id"), col("sub"))
       .agg(array_sort(collect_list(struct(col("dim"), col("x")))).as("pairs"))
       .select(col("vec_id"), col("sub"),
         expr("transform(pairs, p -> p.x)").as("sv"))
+    subspaceReport(s, d, subs, alloc, "d")
+  }
+
+  /** Per-dimension variance of a (vec_id, dim, x) relation as (dim,
+    * <p>var, <p>vr). `<p>vr` is ROUNDED to 9 dp before any comparison:
+    * engines (or a re-inlined CTE) may recompute the aggregate with a
+    * different partial-sum order, and last-ulp noise would then make
+    * rank ties inconsistent; 1e-9 is far above fp noise and far below
+    * real variance gaps. The dims-sized frame is localCheckpointed
+    * (the a15 / Components practice): its consumers reuse it along
+    * several branches, and an uncut lineage re-runs the corpus-wide
+    * aggregate at every reuse (18 scans in a19's uncut plan, 66 in
+    * a21's first draft). */
+  private def dimVariance(xs: DataFrame, p: String): DataFrame =
+    xs.groupBy(col("dim"))
+      .agg((avg(col("x") * col("x")) - avg(col("x")) * avg(col("x"))).as(s"${p}var"))
+      .withColumn(s"${p}vr", round(col(s"${p}var"), 9))
+      .localCheckpoint()
+
+  /** Variance rank `rk` = row_number over (<p>vr DESC, dim ASC) minus
+    * 1: one bounded global window over the dims-sized stats (declared
+    * in plan_discipline's GLOBAL_WINDOW_OK). */
+  private def varianceRank(stats: DataFrame, p: String): DataFrame =
+    stats.withColumn("rk",
+      (row_number().over(Window.orderBy(col(s"${p}vr").desc, col("dim"))) - 1)
+        .cast("long"))
+
+  /** a19's deal: dims dealt round-robin to `m` subspaces in variance
+    * rank order → (dim, sub, <p>var). */
+  private def dealDims(stats: DataFrame, p: String, m: Int): DataFrame =
+    varianceRank(stats, p)
+      .select(col("dim"), pmod(col("rk"), lit(m)).cast("int").as("sub"), col(s"${p}var"))
+
+  /** a19/a21's per-subspace report over a permuted split `subs`
+    * (vec_id, sub, sv) and its deal `alloc` (dim, sub, <p>var): the
+    * codebook is the `cent` seed rows' own subvectors, assignment is
+    * the shared pqAssignSubs core, and each sub reports dim count,
+    * total variance (the balance being audited), codes used and MSE. */
+  private def subspaceReport(s: SparkSession, d: String, subs: DataFrame,
+                             alloc: DataFrame, p: String): DataFrame = {
     val seedIds = hashTopK(vecs(s, d), "cent", Geo.nCentroids).select(col("vec_id"))
     val cents = subs.join(broadcast(seedIds), "vec_id")
       .select(col("vec_id").as("code_id"), col("sub"), col("sv").as("cv"))
     val perSubVar = alloc.groupBy(col("sub"))
-      .agg(count(lit(1)).as("n_dims"), sum(col("dvar")).as("var_total"))
-    pqAssignSubs(subs, cents)
-      .groupBy(col("sub"))
-      .agg(count(lit(1)).as("n_vecs"),
-        countDistinct(col("code_id")).as("n_codes_used"),
-        round(avg(col("dist")), 6).as("mse"))
+      .agg(count(lit(1)).as("n_dims"), sum(col(s"${p}var")).as("var_total"))
+    subStats(pqAssignSubs(subs, cents))
       .join(broadcast(perSubVar), "sub")
       .select(col("sub").cast("long").as("sub"), col("n_dims"),
         round(col("var_total"), 6).as("var_total"),
@@ -1059,30 +1022,10 @@ object Similarity extends QueryPack with IvfPq {
     * quantizes the OPQ layout). */
   private[graft] def butterflyParts(s: SparkSession, d: String,
                                     m: Int = PqM): (DataFrame, DataFrame) = {
-    val xs = Tables.embeddings(s, d)
-      .select(col("vec_id"),
-        posexplode(col("embedding").cast("array<double>")).as(Seq("dim", "x")))
-    // rank raw dims by ROUNDED variance (a19's cross-engine rank rule).
-    // Both dims-sized stats tables are localCheckpoint'ed (the a15 /
-    // Components practice): everything downstream — pairing, rotation,
-    // re-ranking, allocation — reuses them along several branches, and
-    // an uncut lineage re-evaluates the corpus-wide variance aggregate
-    // at every reuse (66 corpus scans in the first draft's plan; 64-row
-    // checkpoints cut it to one scan per corpus-touching stage).
-    val stats = xs.groupBy(col("dim"))
-      .agg((avg(col("x") * col("x")) - avg(col("x")) * avg(col("x"))).as("dvar"))
-      .withColumn("dvr", round(col("dvar"), 9))
-      .localCheckpoint()
-    // rank via one bounded global window over the 64-row checkpointed
-    // stats frame (round 19 — replaces the broadcast + non-equi join +
-    // groupBy ordered-pair count; same (dvr DESC, dim ASC) order and
-    // tie-break, declared in GLOBAL_WINDOW_OK: dims-sized at any
-    // corpus). The dim COUNT rides the same frame as a second bounded
-    // window instead of an aggregate + crossJoin broadcast round.
-    val ranked = stats
-      .withColumn("rk",
-        (row_number().over(Window.orderBy(col("dvr").desc, col("dim"))) - 1)
-          .cast("long"))
+    // rank raw dims by rounded variance. The dim COUNT rides the same
+    // frame as a second bounded window instead of an aggregate +
+    // crossJoin broadcast round.
+    val ranked = varianceRank(dimVariance(dimsOf(s, d), "d"), "d")
       .select(col("dim"), col("rk"))
     // butterfly pairing: rank r ↔ rank nd−1−r; odd-dim middle passes
     // through unrotated (none at d=64, but the shape is general)
@@ -1131,17 +1074,7 @@ object Similarity extends QueryPack with IvfPq {
     val rx = rotated.select(col("vec_id"),
       posexplode(col("rxv")).as(Seq("dim", "x")))
     // a19's deal, over the ROTATED variance profile
-    val rstats = rx.groupBy(col("dim"))
-      .agg((avg(col("x") * col("x")) - avg(col("x")) * avg(col("x"))).as("rvar"))
-      .withColumn("rvr", round(col("rvar"), 9))
-      .localCheckpoint()
-    // same bounded-window rank as above, over the ROTATED profile
-    val alloc = rstats
-      .withColumn("rk",
-        (row_number().over(Window.orderBy(col("rvr").desc, col("dim"))) - 1)
-          .cast("long"))
-      .select(col("dim"), pmod(col("rk"), lit(m)).cast("int").as("sub"), col("rvar"))
-    (rotated, alloc)
+    (rotated, dealDims(dimVariance(rx, "r"), "r", m))
   }
 
   /** a21: OPQ-style LEARNED rotation past a19's permutation baseline.
@@ -1183,21 +1116,7 @@ object Similarity extends QueryPack with IvfPq {
            |  transform(filter(sequence(0, size(rxv) - 1), i -> sarr[i] = k),
            |    i -> rxv[i]) AS sv))""".stripMargin)).as("e"))
       .select(col("vec_id"), col("e.sub").cast("int").as("sub"), col("e.sv").as("sv"))
-    val seedIds = hashTopK(vecs(s, d), "cent", Geo.nCentroids).select(col("vec_id"))
-    val cents = subs.join(broadcast(seedIds), "vec_id")
-      .select(col("vec_id").as("code_id"), col("sub"), col("sv").as("cv"))
-    val perSubVar = alloc.groupBy(col("sub"))
-      .agg(count(lit(1)).as("n_dims"), sum(col("rvar")).as("var_total"))
-    pqAssignSubs(subs, cents)
-      .groupBy(col("sub"))
-      .agg(count(lit(1)).as("n_vecs"),
-        countDistinct(col("code_id")).as("n_codes_used"),
-        round(avg(col("dist")), 6).as("mse"))
-      .join(broadcast(perSubVar), "sub")
-      .select(col("sub").cast("long").as("sub"), col("n_dims"),
-        round(col("var_total"), 6).as("var_total"),
-        col("n_vecs"), col("n_codes_used"), col("mse"))
-      .orderBy(col("sub"))
+    subspaceReport(s, d, subs, alloc, "r")
   }
 
   /** a27: does the learned rotation actually pay AT SERVE TIME? a21
@@ -1227,8 +1146,7 @@ object Similarity extends QueryPack with IvfPq {
       .select(col("vec_id"), expr("transform(perm, i -> rxv[i])").as("emb"))
       .withColumn("nrm", graft.functions.Vec.norm(col("emb")))
     val base = vecs(s, d)
-    val exact = bruteKnn(s, d, k)
-      .select(col("probe_id"), col("vec_id")).localCheckpoint()
+    val exact = exactPairs(s, d, k).localCheckpoint()
     def leg(v0: DataFrame, name: String): DataFrame = {
       val v = v0.localCheckpoint()
       // BOTH legs serve persisted artifacts (build-once per run): the
@@ -1242,10 +1160,7 @@ object Similarity extends QueryPack with IvfPq {
         if (name == "pq") servedIndex(s, d)
         else servedIndexOf(s,
           s"${new java.io.File(d).getCanonicalPath}|$name", v)
-      val probes = hashTopK(v, "probe", NProbes)
-        .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"),
-          col("nrm").as("p_nrm"))
-      val served = ivfPqServeProbes(ix, probes, k = k)
+      val served = ivfPqServeProbes(ix, probesOf(v), k = k)
         .select(col("probe_id").as("a_probe"), col("vec_id").as("a_vec"))
       val per = hitCounts(exact, served)
       val seeds = hashTopK(v, "cent", Geo.nCentroids)
@@ -1430,8 +1345,7 @@ object Similarity extends QueryPack with IvfPq {
     * not vectors, at 100 TB. */
   def ivfPqServe(s: SparkSession, d: String, geo: AnnGeometry = Geo,
                  m: Int = PqM, subDim: Int = PqSubDim, k: Int = K): DataFrame = {
-    val probes = hashTopK(vecs(s, d), "probe", NProbes)
-      .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"), col("nrm").as("p_nrm"))
+    val probes = probesOf(vecs(s, d))
     // default geometry == the published corpus artifact: serve THAT
     // (build-once + manifest-verified load); a caller with custom
     // geometry still gets a fresh build
@@ -1451,12 +1365,9 @@ object Similarity extends QueryPack with IvfPq {
     * here already pays. */
   private[graft] def servedIndexStats(s: SparkSession, d: String): DataFrame = {
     val ix = servedIndex(s, d)
-    val probes = hashTopK(vecs(s, d), "probe", NProbes)
-      .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"), col("nrm").as("p_nrm"))
-    val served = ivfPqServeProbes(ix, probes)
+    val served = ivfPqServeProbes(ix, probesOf(vecs(s, d)))
       .select(col("probe_id").as("a_probe"), col("vec_id").as("a_vec"))
-    val exact = bruteKnn(s, d, K).select(col("probe_id"), col("vec_id"))
-    val per = hitCounts(exact, served)
+    val per = hitCounts(exactPairs(s, d, K), served)
     per.agg(avg(col("n_hit").cast("double") / col("n_exact")).as("recall"))
       .crossJoin(broadcast(ix.cents.agg(count(lit(1)).as("n_cells"))))
   }
@@ -1477,9 +1388,7 @@ object Similarity extends QueryPack with IvfPq {
   def serveCost(s: SparkSession, d: String): DataFrame = {
     val ix = servedIndex(s, d)
     val v = vecs(s, d)
-    val probes = hashTopK(v, "probe", NProbes)
-      .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"), col("nrm").as("p_nrm"))
-    val routes = routeProbes(probes, ix.cents, Geo.nProbe)
+    val routes = routeProbes(probesOf(v), ix.cents, Geo.nProbe)
       .select(col("probe_id"), col("cell"))
     val sizes = ix.assigned.groupBy(col("cell"))
       .agg(count(lit(1)).as("n_members"))
@@ -1531,9 +1440,7 @@ object Similarity extends QueryPack with IvfPq {
     val policy = policyFromStats(
         deltaStatsOf(assignCells(v, cents).withColumn("is_delta", isDelta)))
       .select(col("cell"), col("n_base"), col("n_delta"), col("action"))
-    val probes = hashTopK(v, "probe", NProbes)
-      .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"), col("nrm").as("p_nrm"))
-    serveDriftFrom(policy, cents, probes, geo)
+    serveDriftFrom(policy, cents, probesOf(v), geo)
   }
 
   /** a30's LIVE form: the same drift table read off the stores the
@@ -1664,13 +1571,26 @@ object Similarity extends QueryPack with IvfPq {
       .select(col("vec_id").as("probe_id"),
         concat(col("emb"), array(lit(0.0))).as("p_aug"),
         col("nrm").as("p_nrm"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("aug_cos").desc, col("vec_id"))
-    v.crossJoin(broadcast(mx))
-      .withColumn("aug", concat(col("emb"),
+    mipsRerank(augmented(v.crossJoin(broadcast(mx)))
+      .join(broadcast(probes), col("vec_id") =!= col("probe_id")), k)
+  }
+
+  /** The MIPS augmentation of a corpus frame carrying (emb, nrm) and
+    * the max corpus norm `m`: `aug` = emb ++ sqrt(m² − nrm²), so every
+    * augmented vector has norm m, and its materialized norm `aug_nrm`. */
+  private def augmented(v: DataFrame): DataFrame =
+    v.withColumn("aug", concat(col("emb"),
         array(sqrt(greatest(col("m") * col("m") - col("nrm") * col("nrm"), lit(0.0))))))
       .withColumn("aug_nrm", graft.functions.Vec.norm(col("aug")))
-      .join(broadcast(probes), col("vec_id") =!= col("probe_id"))
+
+  /** The MIPS re-rank a13/a14 end in: each candidate pair's inner
+    * product `ip` and augmented cosine, then the top `k` per probe by
+    * augmented cosine, ties to the smaller vec_id → (probe_id, vec_id,
+    * rank, inner_product) by probe and rank. */
+  private def mipsRerank(cand: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("probe_id"))
+      .orderBy(col("aug_cos").desc, col("vec_id"))
+    cand
       .withColumn("ip", graft.functions.Vec.dot(col("p_aug"), col("aug")))
       .withColumn("aug_cos", col("ip") / (col("p_nrm") * col("aug_nrm")))
       .withColumn("rank", row_number().over(w))
@@ -1714,11 +1634,8 @@ object Similarity extends QueryPack with IvfPq {
     // product) — so the whole serve path stays BroadcastHashJoin.
     val mx = v.agg(max(col("nrm")).as("m"))
       .withColumn("jk", isnull(col("m")).cast("int"))
-    v.withColumn("jk", pmod(col("vec_id"), lit(1L)).cast("int"))
-      .join(broadcast(mx), "jk")
-      .withColumn("aug", concat(col("emb"),
-        array(sqrt(greatest(col("m") * col("m") - col("nrm") * col("nrm"), lit(0.0))))))
-      .withColumn("aug_nrm", graft.functions.Vec.norm(col("aug")))
+    augmented(v.withColumn("jk", pmod(col("vec_id"), lit(1L)).cast("int"))
+        .join(broadcast(mx), "jk"))
       .withColumn("bucket", lshBucket(col("aug"), geo.planes, MipsAugDims))
       .select(col("vec_id"), col("aug"), col("aug_nrm"), col("bucket"))
   }
@@ -1751,23 +1668,12 @@ object Similarity extends QueryPack with IvfPq {
         col("nrm").as("p_nrm"))
       .withColumn("p_bucket", lshBucket(col("p_aug"), geo.planes, MipsAugDims))
     val expanded = probes.withColumn("search_bucket",
-      explode(array(col("p_bucket") +:
-        (0 until geo.planes).map(i => flipBit(col("p_bucket"), i, geo.planes)): _*)))
+      explode(array(hamming1(col("p_bucket"), geo.planes): _*)))
     val cond = col("bucket") === col("search_bucket") &&
       col("vec_id") =!= col("probe_id")
-    val joined =
+    mipsRerank(
       if (broadcastIndex) expanded.join(broadcast(index), cond)
-      else index.join(broadcast(expanded), cond)
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("aug_cos").desc, col("vec_id"))
-    joined
-      .withColumn("ip", graft.functions.Vec.dot(col("p_aug"), col("aug")))
-      .withColumn("aug_cos", col("ip") / (col("p_nrm") * col("aug_nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("vec_id"), col("rank"),
-        round(col("ip"), 6).as("inner_product"))
-      .orderBy(col("probe_id"), col("rank"))
+      else index.join(broadcast(expanded), cond), k)
   }
 
   /** Index-health audit: IVF cell occupancy and balance. A skewed
@@ -1801,9 +1707,7 @@ object Similarity extends QueryPack with IvfPq {
     val exact = mipsTopK(s, d, k).select(col("probe_id"), col("vec_id"))
     val served = mipsLshTopK(s, d, geo, k)
       .select(col("probe_id").as("a_probe"), col("vec_id").as("a_vec"))
-    hitCounts(exact, served)
-      .withColumn("recall", col("n_hit").cast("double") / col("n_exact"))
-      .orderBy(col("probe_id"))
+    recallOf(exact, served)
   }
 
   def defs: Map[String, (SparkSession, String) => DataFrame] = Map(

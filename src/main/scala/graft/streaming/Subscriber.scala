@@ -158,8 +158,12 @@ object Subscriber {
     * of dropping them. */
   private def unmarshalled(records: DataFrame,
                            format: TopicFormat = ParquetTopic): DataFrame =
-    records
-      .withColumn("env", format.parseEnvelope(col("envelope")))
+    messagesOf(records.withColumn("env", format.parseEnvelope(col("envelope"))))
+
+  /** The message columns of the records whose parsed `env` is
+    * non-null (the parseable ones). */
+  private def messagesOf(parsed: DataFrame): DataFrame =
+    parsed
       .filter(col("env").isNotNull)
       .select(
         col("env.uuid").as("uuid"),
@@ -250,13 +254,7 @@ object Subscriber {
         val marked = batch
           .withColumn("env", format.parseEnvelope(col("envelope"))).cache()
         try {
-          marked.filter(col("env").isNotNull)
-            .select(
-              col("env.uuid").as("uuid"),
-              col("env.payload").as("payload"),
-              graft.operators.Envelope.header(col("env"), "eventType").as("event_type"),
-              col("env.headers").as("headers"),
-              col("partition_key"), col("shard_id"), col("seq"), col("ts"))
+          messagesOf(marked)
             .write.mode("overwrite").parquet(s"$outDir/micro_batch_id=$batchId")
           marked.filter(col("env").isNull).drop("env")
             .write.mode("overwrite").parquet(s"$dlqDir/micro_batch_id=$batchId")

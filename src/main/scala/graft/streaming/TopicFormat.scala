@@ -31,52 +31,40 @@ trait TopicFormat {
   def parseEnvelope(envelope: Column): Column =
     graft.operators.Envelope.parsed(envelope)
 
+  /** Spark data source the topic files are written in. */
+  protected def fileFormat: String
+
   /** Write one publish call's laid-out records under `topicDir`
     * (records arrive shard-partitioned and shard/seq-sorted). */
-  def write(records: DataFrame, topicDir: String, mode: String): Unit
+  def write(records: DataFrame, topicDir: String, mode: String): Unit =
+    records.write.mode(mode).partitionBy("shard_id").format(fileFormat).save(topicDir)
 
   /** Unbounded stream of raw topic records from `topicDir`. */
-  def readStream(spark: SparkSession, topicDir: String, maxFilesPerTrigger: Int): DataFrame
+  def readStream(spark: SparkSession, topicDir: String, maxFilesPerTrigger: Int): DataFrame =
+    spark.readStream
+      .schema(schema)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .format(fileFormat)
+      .load(topicDir)
 
   /** One-shot batch read of the records currently on the topic (used
     * by `Subscriber.subscribeFrom(Latest)` to fix the cutoff). */
-  def readBatch(spark: SparkSession, topicDir: String): DataFrame
+  def readBatch(spark: SparkSession, topicDir: String): DataFrame =
+    spark.read.schema(schema).format(fileFormat).load(topicDir)
 }
 
 /** Columnar topic: parquet files partitioned by shard — the default
   * lake layout (column pruning, predicate pushdown for consumers that
   * filter before unmarshalling). */
 object ParquetTopic extends TopicFormat {
-  override def write(records: DataFrame, topicDir: String, mode: String): Unit =
-    records.write.mode(mode).partitionBy("shard_id").parquet(topicDir)
-
-  override def readStream(spark: SparkSession, topicDir: String,
-                          maxFilesPerTrigger: Int): DataFrame =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(topicDir)
-
-  override def readBatch(spark: SparkSession, topicDir: String): DataFrame =
-    spark.read.schema(schema).parquet(topicDir)
+  protected val fileFormat = "parquet"
 }
 
 /** JSON-lines topic: one envelope per line, shard-partitioned
   * directories — the wire format itself, readable by non-Spark
   * consumers that understand the reference's `MessageData` JSON. */
 object JsonLinesTopic extends TopicFormat {
-  override def write(records: DataFrame, topicDir: String, mode: String): Unit =
-    records.write.mode(mode).partitionBy("shard_id").json(topicDir)
-
-  override def readStream(spark: SparkSession, topicDir: String,
-                          maxFilesPerTrigger: Int): DataFrame =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(topicDir)
-
-  override def readBatch(spark: SparkSession, topicDir: String): DataFrame =
-    spark.read.schema(schema).json(topicDir)
+  protected val fileFormat = "json"
 }
 
 /** Parquet topic carrying the length-prefixed TLV BINARY envelope
@@ -99,16 +87,5 @@ object BinaryParquetTopic extends TopicFormat {
   override def parseEnvelope(envelope: Column): Column =
     graft.operators.Envelope.parsedBin(envelope)
 
-  override def write(records: DataFrame, topicDir: String, mode: String): Unit =
-    records.write.mode(mode).partitionBy("shard_id").parquet(topicDir)
-
-  override def readStream(spark: SparkSession, topicDir: String,
-                          maxFilesPerTrigger: Int): DataFrame =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(topicDir)
-
-  override def readBatch(spark: SparkSession, topicDir: String): DataFrame =
-    spark.read.schema(schema).parquet(topicDir)
+  protected val fileFormat = "parquet"
 }

@@ -8,75 +8,12 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * ship the library's native expressions: set
   * `spark.sql.extensions=org.apache.spark.sql.graftvec.GraftExtensions`
   * (or `builder.withExtensions(new GraftExtensions)`) and every
-  * session, including pure-SQL ones, gets `vec_dot`.
+  * session, including pure-SQL ones, gets every function in
+  * [[GraftFunctions]]' table (`vec_dot`, `km_minhash`, …).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    import GraftFunctions.intArg
-    e.injectFunction((
-      new FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "vec_dot"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DotProduct(exprs(0), exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("km_minhash"),
-      new ExpressionInfo(classOf[KmMinHash].getName, "km_minhash"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        KmMinHash(exprs(0), intArg(exprs(1)), intArg(exprs(2)))))
-    e.injectFunction((
-      new FunctionIdentifier("distinct_shingles"),
-      new ExpressionInfo(classOf[DistinctShingles].getName, "distinct_shingles"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DistinctShingles(exprs(0), intArg(exprs(1)))))
-    e.injectFunction((
-      new FunctionIdentifier("all_shingles"),
-      new ExpressionInfo(classOf[AllShingles].getName, "all_shingles"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        AllShingles(exprs(0), intArg(exprs(1)))))
-    e.injectFunction((
-      new FunctionIdentifier("simhash16"),
-      new ExpressionInfo(classOf[SimHash16].getName, "simhash16"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SimHash16(exprs(0))))
-    e.injectFunction((
-      new FunctionIdentifier("simhash_w"),
-      new ExpressionInfo(classOf[SimHashW].getName, "simhash_w"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SimHashW(exprs(0), intArg(exprs(1)))))
-    e.injectFunction((
-      new FunctionIdentifier("cdc_chunks"),
-      new ExpressionInfo(classOf[CdcChunks].getName, "cdc_chunks"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        CdcChunks(exprs(0), intArg(exprs(1)))))
-    e.injectFunction((
-      new FunctionIdentifier("envelope_marshal"),
-      new ExpressionInfo(classOf[EnvelopeMarshal].getName, "envelope_marshal"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        EnvelopeMarshal(exprs(0), exprs(1), exprs(2))))
-    e.injectFunction((
-      new FunctionIdentifier("envelope_parse"),
-      new ExpressionInfo(classOf[EnvelopeParse].getName, "envelope_parse"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        EnvelopeParse(exprs(0))))
-    e.injectFunction((
-      new FunctionIdentifier("envelope_marshal_bin"),
-      new ExpressionInfo(classOf[EnvelopeMarshalBin].getName, "envelope_marshal_bin"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        EnvelopeMarshalBin(exprs(0), exprs(1), exprs(2))))
-    e.injectFunction((
-      new FunctionIdentifier("envelope_parse_bin"),
-      new ExpressionInfo(classOf[EnvelopeParseBin].getName, "envelope_parse_bin"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        EnvelopeParseBin(exprs(0))))
-    e.injectFunction((
-      new FunctionIdentifier("hll_registers"),
-      new ExpressionInfo(classOf[HllRegisters].getName, "hll_registers"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        HllRegisters(exprs(0), intArg(exprs(1)))))
-    e.injectFunction((
-      new FunctionIdentifier("media_stats"),
-      new ExpressionInfo(classOf[MediaStatsExpr].getName, "media_stats"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        MediaStatsExpr(exprs(0))))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftFunctions.table.foreach { case (name, cls, build) =>
+      e.injectFunction((new FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
 }

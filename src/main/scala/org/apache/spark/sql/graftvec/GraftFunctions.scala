@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graftvec
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 
 /** SQL registration for the native expressions, so `spark.sql` users
@@ -8,41 +9,36 @@ import org.apache.spark.sql.classic.ClassicConversions.castToImpl
   * because FunctionRegistry access is private[sql].
   */
 object GraftFunctions {
-  private[graftvec] def intArg(e: org.apache.spark.sql.catalyst.expressions.Expression): Int =
+  private[graftvec] def intArg(e: Expression): Int =
     e.eval(null) match {
       case i: Int  => i
       case l: Long => l.toInt
       case other   => throw new IllegalArgumentException(s"expected integer literal, got $other")
     }
 
+  /** Every native expression as (SQL name, expression class, builder):
+    * the one table both [[register]] and [[GraftExtensions]] read. */
+  private[graftvec] val table: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("vec_dot", classOf[DotProduct], e => DotProduct(e(0), e(1))),
+    ("km_minhash", classOf[KmMinHash], e => KmMinHash(e(0), intArg(e(1)), intArg(e(2)))),
+    ("distinct_shingles", classOf[DistinctShingles], e => DistinctShingles(e(0), intArg(e(1)))),
+    ("all_shingles", classOf[AllShingles], e => AllShingles(e(0), intArg(e(1)))),
+    ("simhash16", classOf[SimHash16], e => SimHash16(e(0))),
+    ("simhash_w", classOf[SimHashW], e => SimHashW(e(0), intArg(e(1)))),
+    ("cdc_chunks", classOf[CdcChunks], e => CdcChunks(e(0), intArg(e(1)))),
+    ("hll_registers", classOf[HllRegisters], e => HllRegisters(e(0), intArg(e(1)))),
+    ("envelope_marshal", classOf[EnvelopeMarshal], e => EnvelopeMarshal(e(0), e(1), e(2))),
+    ("envelope_parse", classOf[EnvelopeParse], e => EnvelopeParse(e(0))),
+    ("envelope_marshal_bin", classOf[EnvelopeMarshalBin],
+      e => EnvelopeMarshalBin(e(0), e(1), e(2))),
+    ("envelope_parse_bin", classOf[EnvelopeParseBin], e => EnvelopeParseBin(e(0))),
+    ("media_stats", classOf[MediaStatsExpr], e => MediaStatsExpr(e(0))))
+
+  /** Registers [[table]] on a session built without [[GraftExtensions]]. */
   def register(spark: SparkSession): Unit = {
     val reg = castToImpl(spark).sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "vec_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "km_minhash", exprs => KmMinHash(exprs(0), intArg(exprs(1)), intArg(exprs(2))), "built-in")
-    reg.createOrReplaceTempFunction(
-      "distinct_shingles", exprs => DistinctShingles(exprs(0), intArg(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction(
-      "all_shingles", exprs => AllShingles(exprs(0), intArg(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash16", exprs => SimHash16(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash_w", exprs => SimHashW(exprs(0), intArg(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction(
-      "cdc_chunks", exprs => CdcChunks(exprs(0), intArg(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction(
-      "hll_registers", exprs => HllRegisters(exprs(0), intArg(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction(
-      "envelope_marshal", exprs => EnvelopeMarshal(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "envelope_parse", exprs => EnvelopeParse(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "envelope_marshal_bin",
-      exprs => EnvelopeMarshalBin(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "envelope_parse_bin", exprs => EnvelopeParseBin(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "media_stats", exprs => MediaStatsExpr(exprs(0)), "built-in")
+    table.foreach { case (name, _, build) =>
+      reg.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 }
