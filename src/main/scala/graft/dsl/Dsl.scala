@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Portable, TextHash, Vec}
@@ -247,7 +247,7 @@ package object dsl {
       * under their declared container, non-images as "unknown". */
     def imageStats(idCol: String = "doc_id",
                    payloadCol: String = "payload"): DataFrame =
-      decodeMedia(df, idCol, payloadCol, MediaDecode.parseImageBatch)
+      decodeMedia(df, idCol, payloadCol, MediaDecode.parseImage)
         .select(col("docId").as(idCol) +: ImageCols: _*)
 
     /** mm14's compressed-audio decode over a binary payload column:
@@ -259,7 +259,7 @@ package object dsl {
       * "unknown". */
     def audioStats(idCol: String = "doc_id",
                    payloadCol: String = "payload"): DataFrame =
-      decodeMedia(df, idCol, payloadCol, MediaDecode.parseAudioBatch)
+      decodeMedia(df, idCol, payloadCol, MediaDecode.parseAudio)
         .select(col("docId").as(idCol) +: AudioCols: _*)
 
     /** mm15's video decode over a binary payload column: genuine AVI
@@ -272,7 +272,7 @@ package object dsl {
       * ok=false under its declared container / "unknown". */
     def videoStats(idCol: String = "doc_id",
                    payloadCol: String = "payload"): DataFrame =
-      decodeMedia(df, idCol, payloadCol, MediaDecode.parseVideoBatch)
+      decodeMedia(df, idCol, payloadCol, MediaDecode.parseVideo)
         .select(col("docId").as(idCol) +: FrameCols: _*)
 
     /** mm16's animated-GIF decode over a binary payload column:
@@ -283,7 +283,7 @@ package object dsl {
       * ok=false under "gif", non-GIF as "unknown". */
     def gifStats(idCol: String = "doc_id",
                  payloadCol: String = "payload"): DataFrame =
-      decodeMedia(df, idCol, payloadCol, MediaDecode.parseGifBatch)
+      decodeMedia(df, idCol, payloadCol, MediaDecode.parseGif)
         .select(col("docId").as(idCol) +: FrameCols: _*)
 
     /** mm17's FLAC decode over a binary payload column: genuine FLAC
@@ -295,7 +295,7 @@ package object dsl {
       * non-FLAC as "unknown". */
     def flacStats(idCol: String = "doc_id",
                   payloadCol: String = "payload"): DataFrame =
-      decodeMedia(df, idCol, payloadCol, MediaDecode.parseFlacBatch)
+      decodeMedia(df, idCol, payloadCol, MediaDecode.parseFlac)
         .select(col("docId").as(idCol) +: AudioCols: _*)
 
     /** p11's media curate cascade over a mixed-modality binary
@@ -312,7 +312,7 @@ package object dsl {
                     clippedPeak: Double = 31000.0,
                     staticMotion: Double = 18.0): DataFrame =
       queries.Pipeline.mediaDisposition(
-        decodeMedia(df, idCol, payloadCol, MediaDecode.parseAnyBatch), idCol,
+        decodeMedia(df, idCol, payloadCol, MediaDecode.parseAny), idCol,
         darkBrightness, silentRms, clippedPeak, staticMotion)
 
     /** t29's per-source boilerplate template mining over (id, text,
@@ -448,10 +448,10 @@ package object dsl {
     * AnyVal wrapper because Encoder derivation synthesizes a nested
     * class, which value classes disallow. */
   private def decodeMedia(df: DataFrame, idCol: String, payloadCol: String,
-                          parse: Dataset[Media] => Dataset[MediaStats]): DataFrame = {
+                          parse: Array[Byte] => MediaStats): DataFrame = {
     import df.sparkSession.implicits._
-    parse(df.select(col(idCol).cast("long").as("docId"),
-        col(payloadCol).as("payload")).as[Media])
+    MediaDecode.decodeAll(df.select(col(idCol).cast("long").as("docId"),
+        col(payloadCol).as("payload")).as[Media])(parse)
       .toDF()
   }
 

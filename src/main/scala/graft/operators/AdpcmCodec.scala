@@ -28,6 +28,8 @@ package graft.operators
   */
 object AdpcmCodec {
 
+  import MediaDecode.{le16, le32, riffChunk, riffList, tag, u16le, u32le}
+
   /** The IMA step-size table (89 entries, public spec). */
   val StepTable: Array[Int] = Array(
     7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31,
@@ -126,12 +128,6 @@ object AdpcmCodec {
     out
   }
 
-  private def le16(v: Int): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-  private def le32(v: Long): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-
   /** A complete, standards-conformant IMA-ADPCM WAV: fmt tag 0x11
     * with the cbSize=2 wSamplesPerBlock extension, a fact chunk
     * (required for compressed WAVs), and the block data. */
@@ -144,11 +140,8 @@ object AdpcmCodec {
       le32(avgBytes.toLong) ++ le16(blockAlign) ++ le16(4) ++
       le16(2) ++ le16(samplesPerBlock)
     val fact = le32(samplesPerBlock.toLong * blocks.length)
-    def chunk(id: String, d: Array[Byte]) =
-      id.getBytes("US-ASCII") ++ le32(d.length.toLong) ++ d
-    val body = "WAVE".getBytes("US-ASCII") ++
-      chunk("fmt ", fmt) ++ chunk("fact", fact) ++ chunk("data", data)
-    "RIFF".getBytes("US-ASCII") ++ le32(body.length.toLong) ++ body
+    riffList("RIFF", "WAVE",
+      riffChunk("fmt ", fmt) ++ riffChunk("fact", fact) ++ riffChunk("data", data))
   }
 
   /** One decoded ADPCM stream's stats row. */
@@ -157,23 +150,14 @@ object AdpcmCodec {
                               firstSample: Long, lastSample: Long,
                               endIndex: Long, ok: Boolean)
 
-  private def u16(p: Array[Byte], o: Int): Int =
-    (p(o) & 0xff) | ((p(o + 1) & 0xff) << 8)
-  private def u32(p: Array[Byte], o: Int): Long =
-    (p(o) & 0xffL) | ((p(o + 1) & 0xffL) << 8) |
-      ((p(o + 2) & 0xffL) << 16) | ((p(o + 3) & 0xffL) << 24)
-
   /** Decode an IMA-ADPCM WAV trusting only the bytes: RIFF/WAVE
     * grammar, fmt tag 0x11, block-align vs samples-per-block
     * consistency (the declared count must fit the block's nibbles),
     * whole blocks only. Anything off quarantines as ok=false. */
   def parse(payload: Array[Byte]): AdpcmStats = {
     val none = AdpcmStats(0L, "unknown", 0L, 0.0, 0.0, 0.0, 0L, 0L, 0L, false)
-    def tag(off: Int, t: String): Boolean =
-      payload.length >= off + t.length &&
-        t.zipWithIndex.forall { case (c, i) => (payload(off + i) & 0xff) == c.toInt }
     if (payload == null || payload.length < 12 ||
-        !(tag(0, "RIFF") && tag(8, "WAVE"))) return none
+        !(tag(payload, 0, "RIFF") && tag(payload, 8, "WAVE"))) return none
     // chunk walk
     var off = 12
     var fmtOff = -1; var fmtLen = 0; var dataOff = -1; var dataLen = 0
@@ -182,7 +166,7 @@ object AdpcmCodec {
       // bounds check in Long: a crafted u32 length near 2^31 would
       // overflow an Int sum to negative, pass the check, and crash the
       // task on a negative offset instead of quarantining
-      val lenL = u32(payload, off + 4)
+      val lenL = u32le(payload, off + 4)
       if (off + 8 + lenL > payload.length.toLong)
         return none.copy(container = "adpcm") // truncated chunk
       val len = lenL.toInt
@@ -191,10 +175,10 @@ object AdpcmCodec {
       off += 8 + len + (len & 1)
     }
     if (fmtOff < 0 || fmtLen < 20 || dataOff < 0) return none
-    if (u16(payload, fmtOff) != 0x11) return none // not IMA ADPCM
-    val channels = u16(payload, fmtOff + 2)
-    val blockAlign = u16(payload, fmtOff + 12)
-    val samplesPerBlock = u16(payload, fmtOff + 18)
+    if (u16le(payload, fmtOff) != 0x11) return none // not IMA ADPCM
+    val channels = u16le(payload, fmtOff + 2)
+    val blockAlign = u16le(payload, fmtOff + 12).toInt
+    val samplesPerBlock = u16le(payload, fmtOff + 18).toInt
     // the declared per-block sample count must fit the block: header
     // sample + 2 nibbles per data byte
     if (channels != 1 || blockAlign < 5 ||

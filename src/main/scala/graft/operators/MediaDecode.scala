@@ -1,31 +1,31 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.Dataset
 
-/** Batch media-decode seam (SURVEY.md §2.F).
+/** Media decode: opaque `binary` members → per-member curation
+  * stats, decoded inside the partition iterator (the JVM analog of a
+  * Pandas-UDF/mapInPandas batch: codecs set up per partition, payload
+  * bytes never shuffled).
   *
-  * In a production pipeline this is where an image/audio/video codec
-  * decodes the opaque `binary` payload per partition (the JVM analog
-  * of a Pandas-UDF/mapInPandas batch). Since round 10 the UNCOMPRESSED
-  * layers are fully real: [[parseHeader]] reads genuine BMP/WAV byte
-  * layouts (magic tags, little-endian dimension/rate fields; mm11 is
-  * its oracle-checked columnar twin) and [[parsePayload]] decodes the
-  * DATA — BMP pixel rows with their 4-byte padding, the RIFF chunk
-  * walk to the PCM samples — into the curation stats (mm12's columnar
-  * twin). Since round 13 COMPRESSED IMAGES are real too:
-  * [[parseImage]] decodes genuine PNG/JPEG members through the
-  * JDK-bundled javax.imageio (no external dependency), and so is
-  * COMPRESSED AUDIO in the telephony class: [[parseAudio]] decodes
-  * genuine G.711 µ-law/a-law WAV members (format codes 7/6) through
-  * javax.sound.sampled, and INTRA-FRAME VIDEO: [[parseVideo]] walks
-  * genuine AVI containers (MJPEG frames through the same JPEG codec,
-  * raw-DIB frames by direct byte walk). Only perceptual-codec audio
-  * (FLAC/Opus) and inter-frame video (H.264/VP9) — genuinely absent
-  * from the JDK — stay behind the clearly-marked deterministic STUB
-  * (`decode`). The batch shape
-  * (mapPartitions over (id, payload) → typed Dataset, codec
-  * instantiated once per partition, never per row) is the real
-  * contract a codec drops into.
+  * Every parser reads only the bytes and returns one [[MediaStats]]
+  * row — ok=false under its best-effort container on any wire
+  * failure, never an exception — and [[decodeAll]] is the one batch
+  * entry that runs any of them over a `Dataset[Media]`. The codecs:
+  *  - BMP pixel rows and PCM WAV samples by direct byte walk
+  *    ([[parsePayload]]; [[parseHeader]] reads the header fields);
+  *  - PNG/JPEG through javax.imageio ([[parseImage]]);
+  *  - G.711 µ-law/a-law WAV through javax.sound.sampled
+  *    ([[parseAudio]]);
+  *  - AVI video — MJPEG, raw DIB and the inter-frame MS-RLE8 —
+  *    by RIFF walk plus per-frame codec ([[parseVideo]]);
+  *  - animated GIF through javax.imageio ([[parseGif]]);
+  *  - FLAC and IMA ADPCM through the pure-JVM [[FlacCodec]] and
+  *    [[AdpcmCodec]].
+  * [[parseAny]] routes a mixed corpus by magic bytes. Each codec has
+  * a `planted*Bytes` builder for the closed-form wires the mm queries
+  * round-trip. Perceptual audio (Opus/AAC) and entropy-coded
+  * inter-frame video (H.264/VP9) are not decoded; [[decodeBatch]] is
+  * the byte-length stub that stands for them.
   */
 object MediaDecode {
 
@@ -48,24 +48,16 @@ object MediaDecode {
   // ServiceLoader seam keeps the genuine codec and takes the lock
   // out of the per-row path (guide §4.5: heavyweight lookup once,
   // not per row).
-  private lazy val audioReaders = {
+  private def soundProviders[T](c: Class[T]): Vector[T] = {
     import scala.jdk.CollectionConverters._
-    java.util.ServiceLoader
-      .load(classOf[javax.sound.sampled.spi.AudioFileReader])
-      .iterator().asScala.toVector
+    java.util.ServiceLoader.load(c).iterator().asScala.toVector
   }
-  private lazy val audioConverters = {
-    import scala.jdk.CollectionConverters._
-    java.util.ServiceLoader
-      .load(classOf[javax.sound.sampled.spi.FormatConversionProvider])
-      .iterator().asScala.toVector
-  }
-  private lazy val audioWriters = {
-    import scala.jdk.CollectionConverters._
-    java.util.ServiceLoader
-      .load(classOf[javax.sound.sampled.spi.AudioFileWriter])
-      .iterator().asScala.toVector
-  }
+  private lazy val audioReaders =
+    soundProviders(classOf[javax.sound.sampled.spi.AudioFileReader])
+  private lazy val audioConverters =
+    soundProviders(classOf[javax.sound.sampled.spi.FormatConversionProvider])
+  private lazy val audioWriters =
+    soundProviders(classOf[javax.sound.sampled.spi.AudioFileWriter])
   /** AudioSystem.getAudioInputStream(stream) minus the synchronized
     * registry: try each JDK reader, resetting the (mark-at-0)
     * byte-array stream between attempts — the same trial order and
@@ -117,6 +109,11 @@ object MediaDecode {
     }
 
   case class Media(docId: Long, payload: Array[Byte])
+
+  /** Dimensions and frame count of every planted image/video wire. */
+  private val PlantW = 8
+  private val PlantH = 2
+  private val PlantFrames = 4
   case class DecodedMeta(docId: Long, nBytes: Long, width: Int, height: Int, ok: Boolean)
   case class MediaHeader(docId: Long, container: String, width: Long, height: Long,
                          sampleRate: Long, nChannels: Long, ok: Boolean)
@@ -128,29 +125,47 @@ object MediaDecode {
     else ((payload.length * 31) % 1920, (payload.length * 17) % 1080, true)
   }
 
-  private def u16le(b: Array[Byte], off: Int): Long =
+  // Little-endian and RIFF byte helpers, shared with AdpcmCodec.
+  private[operators] def u16le(b: Array[Byte], off: Int): Long =
     (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8)
-  private def u32le(b: Array[Byte], off: Int): Long =
+  private[operators] def u32le(b: Array[Byte], off: Int): Long =
     u16le(b, off) | (u16le(b, off + 2) << 16)
+  private def s16le(b: Array[Byte], off: Int): Long = {
+    val u = u16le(b, off); if (u >= 32768L) u - 65536L else u
+  }
+  private[operators] def le16(v: Int): Array[Byte] =
+    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
+  private[operators] def le32(v: Long): Array[Byte] =
+    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
+      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
+  /** One RIFF chunk, padded to an even length as the grammar requires. */
+  private[operators] def riffChunk(id: String, data: Array[Byte]): Array[Byte] = {
+    val pad = if (data.length % 2 != 0) Array(0.toByte) else Array.empty[Byte]
+    id.getBytes("US-ASCII") ++ le32(data.length.toLong) ++ data ++ pad
+  }
+  /** A RIFF or LIST container: tag, size, form type, children. */
+  private[operators] def riffList(listTag: String, typ: String,
+                                  children: Array[Byte]): Array[Byte] =
+    listTag.getBytes("US-ASCII") ++ le32(children.length + 4L) ++
+      typ.getBytes("US-ASCII") ++ children
+  /** True when `b` holds the ASCII string `t` at `off`. */
+  private[operators] def tag(b: Array[Byte], off: Int, t: String): Boolean =
+    b != null && b.length >= off + t.length &&
+      t.indices.forall(i => (b(off + i) & 0xff) == t.charAt(i).toInt)
 
-  /** REAL container-header parse over genuine binary files (round 10
-    * — mm11's JVM-bytes twin): BMP ('BM', u32-LE DIB size 40 @14,
-    * width @18, height @22) and WAV ('RIFF' @0 + 'WAVE' @8 +
-    * 'fmt ' @12, u16-LE channels @22, u32-LE sample rate @24). This
-    * is no longer a stub — only pixel/PCM DATA decode (which needs a
-    * codec library this container lacks) remains behind [[decode]].
-    * Unknown or truncated payloads come back container="unknown",
-    * ok=false — the quarantine row, never an exception. */
+  /** Container-header parse over BMP/WAV bytes (mm11's JVM-bytes
+    * twin): BMP ('BM', u32-LE DIB size 40 @14, width @18, height @22)
+    * and WAV ('RIFF' @0 + 'WAVE' @8 + 'fmt ' @12, u16-LE channels
+    * @22, u32-LE sample rate @24). Unknown or truncated payloads come
+    * back container="unknown", ok=false — the quarantine row, never
+    * an exception. */
   def parseHeader(payload: Array[Byte]): (String, Long, Long, Long, Long, Boolean) = {
-    def tag(off: Int, t: String): Boolean =
-      payload.length >= off + t.length &&
-        t.zipWithIndex.forall { case (c, i) => (payload(off + i) & 0xff) == c.toInt }
     if (payload == null || payload.length < 26) ("unknown", 0L, 0L, 0L, 0L, false)
-    else if (tag(0, "BM"))
+    else if (tag(payload, 0, "BM"))
       ("bmp", u32le(payload, 18), u32le(payload, 22), 0L, 0L, u32le(payload, 14) == 40L)
-    else if (payload.length >= 28 && tag(0, "RIFF") && tag(8, "WAVE"))
+    else if (payload.length >= 28 && tag(payload, 0, "RIFF") && tag(payload, 8, "WAVE"))
       ("wav", 0L, 0L, u32le(payload, 24), u16le(payload, 22),
-        tag(12, "fmt ") && u16le(payload, 20) == 1L)
+        tag(payload, 12, "fmt ") && u16le(payload, 20) == 1L)
     else ("unknown", 0L, 0L, 0L, 0L, false)
   }
 
@@ -170,23 +185,43 @@ object MediaDecode {
                         meanSignal: Double, rms: Double, peak: Double,
                         meanR: Double, meanG: Double, meanB: Double, ok: Boolean)
 
-  private def s16le(b: Array[Byte], off: Int): Long = {
-    val u = u16le(b, off); if (u >= 32768L) u - 65536L else u
+  /** The quarantine row: ok=false under the container the sniff got to. */
+  private def failed(container: String): MediaStats =
+    MediaStats(0L, container, 0L, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, false)
+
+  /** The still-image stats row from channel sums over n pixels:
+    * per-channel means and their mean as brightness. */
+  private def pixelStats(container: String, sr: Double, sg: Double,
+                         sb: Double, n: Long): MediaStats = {
+    val nd = n.toDouble
+    MediaStats(0L, container, n, (sr + sg + sb) / (3.0 * nd), 0.0, 0.0,
+      sr / nd, sg / nd, sb / nd, true)
   }
 
-  /** REAL payload-DATA stats over genuine binary files (round 10 —
-    * mm12's JVM-bytes twin): for an uncompressed 24bpp BMP, walk the
-    * pixel rows from the header's data offset (honoring the 4-byte
-    * row padding) and fold per-channel means + mean brightness; for a
-    * PCM s16 WAV, walk the RIFF chunk list to the `data` chunk and
-    * fold mean/RMS/peak amplitude (channels pooled). These are the
-    * stats curation filters actually gate on (black-frame /
-    * solid-color, silence / clipping). After this, only COMPRESSED
-    * codecs remain behind the [[decode]] stub — uncompressed
-    * containers decode fully, headers AND data. Truncated or
-    * non-conforming payloads return ok=false, never throw. */
+  /** The amplitude stats row over n s16-LE samples at `off`:
+    * mean, RMS and peak (the silence / clipping gates). */
+  private def pcmStats(container: String, b: Array[Byte], off: Int, n: Int): MediaStats = {
+    var (sum, sq, pk) = (0.0, 0.0, 0.0)
+    var i = 0
+    while (i < n) {
+      val s = s16le(b, off + i * 2).toDouble
+      sum += s; sq += s * s; if (math.abs(s) > pk) pk = math.abs(s)
+      i += 1
+    }
+    MediaStats(0L, container, n.toLong, sum / n, math.sqrt(sq / n), pk,
+      0.0, 0.0, 0.0, true)
+  }
+
+  /** Payload-data stats over uncompressed BMP/WAV bytes (mm12's
+    * JVM-bytes twin): for a 24bpp BMP, walk the pixel rows from the
+    * header's data offset (honoring the 4-byte row padding) and fold
+    * per-channel means + mean brightness; for a PCM s16 WAV, walk the
+    * RIFF chunk list to the `data` chunk and fold mean/RMS/peak
+    * amplitude (channels pooled). These are the stats curation
+    * filters gate on (black-frame / solid-color, silence /
+    * clipping). Truncated or non-conforming payloads return
+    * ok=false, never throw. */
   def parsePayload(payload: Array[Byte]): MediaStats = {
-    val none = MediaStats(0L, "unknown", 0L, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, false)
     val (container, w, h, _, _, headerOk) = parseHeader(payload)
     // All size/offset fields stay Long until AFTER validation against
     // payload.length: a crafted u32 field >= 2^31 narrowed to Int turns
@@ -195,7 +230,7 @@ object MediaDecode {
     // advances). Every arithmetic combination below is Long; Int
     // narrowing happens only once the value is proven to index inside
     // the payload.
-    if (!headerOk) none.copy(container = container)
+    if (!headerOk) failed(container)
     else if (container == "bmp") {
       val bpp = u16le(payload, 28)
       val dataOffL = u32le(payload, 10) // Long, unsigned
@@ -216,7 +251,7 @@ object MediaDecode {
       val need = dataOffL + rowBytesL * h
       if (bpp != 24L || !dimsOk || dataOffL < 14L ||
           dataOffL > lenL || need > lenL)
-        none.copy(container = "bmp")
+        failed("bmp")
       else {
         val dataOff = dataOffL.toInt; val rowBytes = rowBytesL.toInt
         val wi = w.toInt; val hi = h.toInt
@@ -232,9 +267,7 @@ object MediaDecode {
           }
           y += 1
         }
-        val n = (w * h).toDouble
-        MediaStats(0L, "bmp", w * h, (sr + sg + sb) / (3.0 * n), 0.0, 0.0,
-          sr / n, sg / n, sb / n, true)
+        pixelStats("bmp", sr, sg, sb, w * h)
       }
     } else { // wav, headerOk ⇒ PCM fmt
       // walk RIFF chunks from offset 12 to the `data` chunk; p strictly
@@ -250,28 +283,18 @@ object MediaDecode {
         else p += 8 + sz + (sz & 1)
       }
       if (dataOffL < 0 || dataOffL + dataLenL > payload.length.toLong || dataLenL < 2)
-        none.copy(container = "wav")
-      else {
-        val dataOff = dataOffL.toInt
-        val n = (dataLenL / 2).toInt
-        var (sum, sq, pk) = (0.0, 0.0, 0.0)
-        var i = 0
-        while (i < n) {
-          val s = s16le(payload, dataOff + i * 2).toDouble
-          sum += s; sq += s * s; if (math.abs(s) > pk) pk = math.abs(s)
-          i += 1
-        }
-        MediaStats(0L, "wav", n.toLong, sum / n, math.sqrt(sq / n), pk,
-          0.0, 0.0, 0.0, true)
-      }
+        failed("wav")
+      else pcmStats("wav", payload, dataOffL.toInt, (dataLenL / 2).toInt)
     }
   }
 
-  /** Per-partition batch payload decode — the mapPartitions contract
-    * with the real parser inside. */
-  def parsePayloadBatch(media: Dataset[Media]): Dataset[MediaStats] = {
+  /** The one batch entry for every [[MediaStats]] parser: `parse`
+    * runs inside the partition iterator over each member's bytes and
+    * the row keeps the member's docId. A map pass — payload bytes
+    * never shuffle. */
+  def decodeAll(media: Dataset[Media])(parse: Array[Byte] => MediaStats): Dataset[MediaStats] = {
     import media.sparkSession.implicits._
-    media.mapPartitions(_.map(m => parsePayload(m.payload).copy(docId = m.docId)))
+    media.mapPartitions(_.map(m => parse(m.payload).copy(docId = m.docId)))
   }
 
   /** Per-partition batch decode: expensive per-partition setup happens
@@ -287,10 +310,7 @@ object MediaDecode {
     }
   }
 
-  // --- COMPRESSED image codecs via the JDK-bundled javax.imageio ----
-  // (round 13 — the class [[decode]]'s stub guarded as "needs external
-  // libraries" no longer does for images: every JDK ships PNG/JPEG/
-  // GIF/BMP readers and writers.)
+  // --- PNG/JPEG through the JDK-bundled javax.imageio ---------------
 
   /** Planted-pixel 8×2 image ENCODED through a genuine codec: PNG
     * (DEFLATE — lossless) or JPEG (DCT + quantization + 4:2:0 chroma
@@ -301,21 +321,34 @@ object MediaDecode {
     * what makes the measured JPEG mean-error bound (≤2.44 per channel
     * over 10k images; mm13 accepts ≤8) an honest acceptance band. */
   def plantedImageBytes(docId: Long, jpeg: Boolean): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      8, 2, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    var j = 0
-    while (j < 16) {
-      val r = java.lang.Math.floorMod(docId * 3 + j * 53, 256L).toInt
-      val g = java.lang.Math.floorMod(docId * 11 + j * 29, 256L).toInt
-      val b = java.lang.Math.floorMod(docId * 7 + j * 13, 256L).toInt
-      img.setRGB(j % 8, j / 8, (r << 16) | (g << 8) | b)
-      j += 1
-    }
+    val img = plantedFrame(docId, 0)
     if (!jpeg) {
       val bos = new java.io.ByteArrayOutputStream()
       javax.imageio.ImageIO.write(img, "png", bos)
       bos.toByteArray
     } else encodeJpeg(img)
+  }
+
+  /** Planted pixel j (= y·8+x) of frame f as packed 0xRRGGBB:
+    * r=(id·3+f·17+j·53)%256, g=(id·11+f·19+j·29)%256,
+    * b=(id·7+f·23+j·13)%256 — frame 0 is the still image. */
+  private def plantedRgb(docId: Long, f: Int, j: Int): Int = {
+    val r = java.lang.Math.floorMod(docId * 3 + f * 17 + j * 53, 256L).toInt
+    val g = java.lang.Math.floorMod(docId * 11 + f * 19 + j * 29, 256L).toInt
+    val b = java.lang.Math.floorMod(docId * 7 + f * 23 + j * 13, 256L).toInt
+    (r << 16) | (g << 8) | b
+  }
+
+  /** Frame f of the planted 8×2 image/video as an RGB image. */
+  private def plantedFrame(docId: Long, f: Int): java.awt.image.BufferedImage = {
+    val img = new java.awt.image.BufferedImage(
+      PlantW, PlantH, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    var j = 0
+    while (j < PlantW * PlantH) {
+      img.setRGB(j % PlantW, j / PlantW, plantedRgb(docId, f, j))
+      j += 1
+    }
+    img
   }
 
   /** One frame/image through the JDK JPEG writer at quality 0.95 —
@@ -340,53 +373,49 @@ object MediaDecode {
     * is sniffed from magic bytes FIRST (PNG \x89PNG, JPEG ff d8 ff)
     * so a truncated or corrupt member quarantines under its declared
     * type: ok=false, never an exception. */
+  /** "png" or "jpeg" from the magic bytes (\x89PNG, ff d8 ff), else
+    * "unknown"; needs 4 bytes. */
+  private def imageContainer(b: Array[Byte]): String =
+    if ((b(0) & 0xff) == 0x89 && tag(b, 1, "PNG")) "png"
+    else if ((b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xd8 &&
+             (b(2) & 0xff) == 0xff) "jpeg"
+    else "unknown"
+
+  /** Integer channel sums and pixel count over a decoded image — the
+    * one getRGB fold; each caller divides. */
+  private def rgbSums(img: java.awt.image.BufferedImage): (Long, Long, Long, Long) = {
+    val (w, h) = (img.getWidth, img.getHeight)
+    var (sr, sg, sb) = (0L, 0L, 0L)
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) {
+        val rgb = img.getRGB(x, y)
+        sr += (rgb >> 16) & 0xff; sg += (rgb >> 8) & 0xff; sb += rgb & 0xff
+        x += 1
+      }
+      y += 1
+    }
+    (sr, sg, sb, w.toLong * h)
+  }
+
   def parseImage(payload: Array[Byte]): MediaStats = {
-    val none = MediaStats(0L, "unknown", 0L, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, false)
-    if (payload == null || payload.length < 4) none
+    if (payload == null || payload.length < 4) failed("unknown")
     else {
-      val container =
-        if ((payload(0) & 0xff) == 0x89 && payload(1) == 'P'.toByte &&
-            payload(2) == 'N'.toByte && payload(3) == 'G'.toByte) "png"
-        else if ((payload(0) & 0xff) == 0xff && (payload(1) & 0xff) == 0xd8 &&
-            (payload(2) & 0xff) == 0xff) "jpeg"
-        else "unknown"
-      if (container == "unknown") none
+      val container = imageContainer(payload)
+      if (container == "unknown") failed(container)
       else try {
         val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-        if (img == null) none.copy(container = container)
+        if (img == null) failed(container)
         else {
-          val (w, h) = (img.getWidth, img.getHeight)
-          var (sr, sg, sb) = (0.0, 0.0, 0.0)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val rgb = img.getRGB(x, y)
-              sr += (rgb >> 16) & 0xff; sg += (rgb >> 8) & 0xff; sb += rgb & 0xff
-              x += 1
-            }
-            y += 1
-          }
-          val n = (w.toLong * h).toDouble
-          MediaStats(0L, container, w.toLong * h, (sr + sg + sb) / (3.0 * n),
-            0.0, 0.0, sr / n, sg / n, sb / n, true)
+          val (sr, sg, sb, n) = rgbSums(img)
+          pixelStats(container, sr.toDouble, sg.toDouble, sb.toDouble, n)
         }
-      } catch { case _: Exception => none.copy(container = container) }
+      } catch { case _: Exception => failed(container) }
     }
   }
 
-  /** Per-partition batch image decode — the same mapPartitions
-    * contract as [[parsePayloadBatch]], ImageIO inside. */
-  def parseImageBatch(media: Dataset[Media]): Dataset[MediaStats] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.map(m => parseImage(m.payload).copy(docId = m.docId)))
-  }
-
-  // --- COMPRESSED audio codecs via the JDK-bundled javax.sound ------
-  // (round 13, after mm13's imageio move: the telephony codec class
-  // — G.711 µ-law/a-law, WAV format codes 7/6 — also ships with every
-  // JDK, encoder AND decoder. FLAC/Opus and all video codecs
-  // genuinely remain external.)
+  // --- G.711 µ-law/a-law WAV through the JDK-bundled javax.sound ----
 
   /** G.711 µ-law decode, closed form — spec-pinned equal to the JDK
     * codec's output for all 256 codes (PipelineSpec); the mm14 oracle
@@ -445,19 +474,15 @@ object MediaDecode {
     * quarantines under its declared type: ok=false, never an
     * exception. */
   def parseAudio(payload: Array[Byte]): MediaStats = {
-    val none = MediaStats(0L, "unknown", 0L, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, false)
-    def tag(off: Int, t: String): Boolean =
-      payload.length >= off + t.length &&
-        t.zipWithIndex.forall { case (c, i) => (payload(off + i) & 0xff) == c.toInt }
-    if (payload == null || payload.length < 28) none
-    else if (!(tag(0, "RIFF") && tag(8, "WAVE") && tag(12, "fmt "))) none
+    if (payload == null || payload.length < 28 || !(tag(payload, 0, "RIFF") &&
+        tag(payload, 8, "WAVE") && tag(payload, 12, "fmt "))) failed("unknown")
     else {
       val container = u16le(payload, 20) match {
         case 7L => "ulaw"
         case 6L => "alaw"
         case _  => "unknown"
       }
-      if (container == "unknown") none
+      if (container == "unknown") failed(container)
       else try {
         import javax.sound.sampled._
         val in = audioRead(payload)
@@ -467,49 +492,56 @@ object MediaDecode {
           f.getSampleRate, false)
         val bytes = audioConvert(pcmF, in).readAllBytes()
         val n = bytes.length / 2
-        if (n == 0) none.copy(container = container)
-        else {
-          var (sum, sq, pk) = (0.0, 0.0, 0.0)
-          var i = 0
-          while (i < n) {
-            val s = s16le(bytes, i * 2).toDouble
-            sum += s; sq += s * s; if (math.abs(s) > pk) pk = math.abs(s)
-            i += 1
-          }
-          MediaStats(0L, container, n.toLong, sum / n, math.sqrt(sq / n), pk,
-            0.0, 0.0, 0.0, true)
-        }
-      } catch { case _: Exception => none.copy(container = container) }
+        if (n == 0) failed(container) else pcmStats(container, bytes, 0, n)
+      } catch { case _: Exception => failed(container) }
     }
   }
 
-  /** Per-partition batch audio decode — the same mapPartitions
-    * contract as [[parsePayloadBatch]], the JDK G.711 codec inside. */
-  def parseAudioBatch(media: Dataset[Media]): Dataset[MediaStats] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.map(m => parseAudio(m.payload).copy(docId = m.docId)))
-  }
+  // --- AVI video: MJPEG, raw-DIB and MS-RLE8 frames -------------------
+  // AVI is RIFF, the chunk grammar parsePayload walks for WAV; MJPEG
+  // frames are JPEGs through javax.imageio, raw DIB and MS-RLE8
+  // frames decode by direct byte walk.
 
-  // --- VIDEO containers: MJPEG / raw-DIB frames in genuine AVI ------
-  // (round 13, the last modality: AVI is RIFF — the chunk grammar
-  // mm12 already walks for WAV — and MJPEG is per-frame JPEG, the
-  // codec mm13 already decodes through javax.imageio. So one video
-  // class needs NO external library either: intra-frame codecs.
-  // Inter-frame codecs (H.264/VP9) genuinely stay behind the stub.)
+  /** BITMAPINFOHEADER of a planted 8×2 frame (one plane). */
+  private def bitmapInfo(bitCount: Int, compression: Long, sizeImage: Long,
+                         clrUsed: Long): Array[Byte] =
+    le32(40L) ++ le32(PlantW.toLong) ++ le32(PlantH.toLong) ++ le16(1) ++
+      le16(bitCount) ++ le32(compression) ++ le32(sizeImage) ++
+      le32(0L) ++ le32(0L) ++ le32(clrUsed) ++ le32(0L)
 
-  private def le16(v: Int): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-  private def le32(v: Long): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-  private def riffChunk(id: String, data: Array[Byte]): Array[Byte] = {
-    val pad = if (data.length % 2 != 0) Array(0.toByte) else Array.empty[Byte]
-    id.getBytes("US-ASCII") ++ le32(data.length.toLong) ++ data ++ pad
+  /** A complete 8×2, 25 fps AVI around `frames`: avih
+    * (dwTotalFrames @16), one 'vids' stream whose strh names
+    * `handler` and whose strf is `strf`, the frames as `ckId` chunks
+    * in movi (RIFF even-byte padding), and an idx1 index whose
+    * offsets count from the 'movi' fourcc. Every frame is a keyframe
+    * except in the inter-frame MS-RLE8 stream ('MRLE'), where only
+    * frame 0 is. */
+  private def aviBytes(handler: String, strf: Array[Byte], ckId: String,
+                       frames: Seq[Array[Byte]]): Array[Byte] = {
+    val nFrames = frames.length.toLong
+    val maxFrame = frames.map(_.length).max.toLong
+    val avih = le32(40000L) ++ le32(0L) ++ le32(0L) ++ le32(0x10L) ++
+      le32(nFrames) ++ le32(0L) ++ le32(1L) ++ le32(maxFrame) ++
+      le32(PlantW.toLong) ++ le32(PlantH.toLong) ++
+      le32(0L) ++ le32(0L) ++ le32(0L) ++ le32(0L)
+    val strh = "vids".getBytes("US-ASCII") ++ handler.getBytes("US-ASCII") ++
+      le32(0L) ++ le16(0) ++ le16(0) ++ le32(0L) ++ le32(1L) ++ le32(25L) ++
+      le32(0L) ++ le32(nFrames) ++ le32(maxFrame) ++
+      le32(0xffffffffL) ++ le32(0L) ++ le16(0) ++ le16(0) ++
+      le16(PlantW) ++ le16(PlantH)
+    val strl = riffList("LIST", "strl",
+      riffChunk("strh", strh) ++ riffChunk("strf", strf))
+    val hdrl = riffList("LIST", "hdrl", riffChunk("avih", avih) ++ strl)
+    val moviChunks = frames.map(riffChunk(ckId, _))
+    val movi = riffList("LIST", "movi", moviChunks.reduce(_ ++ _))
+    val offsets = moviChunks.scanLeft(4L)((acc, c) => acc + c.length)
+    val idx1 = riffChunk("idx1", frames.indices.map { i =>
+      val key = i == 0 || handler != "MRLE" // AVIIF_KEYFRAME
+      ckId.getBytes("US-ASCII") ++ le32(if (key) 0x10L else 0L) ++
+        le32(offsets(i)) ++ le32(frames(i).length.toLong)
+    }.reduce(_ ++ _))
+    riffList("RIFF", "AVI ", hdrl ++ movi ++ idx1)
   }
-  private def riffList(listTag: String, typ: String,
-                       children: Array[Byte]): Array[Byte] =
-    listTag.getBytes("US-ASCII") ++ le32(children.length + 4L) ++
-      typ.getBytes("US-ASCII") ++ children
 
   /** Planted-pixel 4-frame 8×2 video in a GENUINE AVI container:
     * even ids → MJPEG (each '00dc' chunk is a real JPEG through
@@ -525,21 +557,10 @@ object MediaDecode {
     * r=(id·3+f·17+j·53)%256, g=(id·11+f·19+j·29)%256,
     * b=(id·7+f·23+j·13)%256. */
   def plantedVideoBytes(docId: Long, mjpeg: Boolean): Array[Byte] = {
-    val (w, h, nFrames) = (8, 2, 4)
-    val frames = (0 until nFrames).map { f =>
-      if (mjpeg) {
-        val img = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        var j = 0
-        while (j < w * h) {
-          val r = java.lang.Math.floorMod(docId * 3 + f * 17 + j * 53, 256L).toInt
-          val g = java.lang.Math.floorMod(docId * 11 + f * 19 + j * 29, 256L).toInt
-          val b = java.lang.Math.floorMod(docId * 7 + f * 23 + j * 13, 256L).toInt
-          img.setRGB(j % w, j / w, (r << 16) | (g << 8) | b)
-          j += 1
-        }
-        encodeJpeg(img)
-      } else {
+    val (w, h) = (PlantW, PlantH)
+    val frames = (0 until PlantFrames).map { f =>
+      if (mjpeg) encodeJpeg(plantedFrame(docId, f))
+      else {
         // bottom-up BGR rows, the DIB layout parsePayload walks for
         // BMP (stride 8·3 = 24 is already 4-aligned, no row padding)
         val out = new Array[Byte](w * h * 3)
@@ -547,11 +568,10 @@ object MediaDecode {
         while (y < h) {
           var x = 0
           while (x < w) {
-            val j = (h - 1 - y) * w + x // pixel stored at bottom-up row y
+            // pixel stored at bottom-up row y
+            val c = plantedRgb(docId, f, (h - 1 - y) * w + x)
             val o = (y * w + x) * 3
-            out(o) = java.lang.Math.floorMod(docId * 7 + f * 23 + j * 13, 256L).toByte
-            out(o + 1) = java.lang.Math.floorMod(docId * 11 + f * 19 + j * 29, 256L).toByte
-            out(o + 2) = java.lang.Math.floorMod(docId * 3 + f * 17 + j * 53, 256L).toByte
+            out(o) = c.toByte; out(o + 1) = (c >> 8).toByte; out(o + 2) = (c >> 16).toByte
             x += 1
           }
           y += 1
@@ -559,35 +579,9 @@ object MediaDecode {
         out
       }
     }
-    val frameData = frames
-    val handler = if (mjpeg) "MJPG" else "DIB "
-    val biCompression = if (mjpeg) 0x47504a4dL /* 'MJPG' LE */ else 0L
-    val maxFrame = frameData.map(_.length).max
-    val avih = le32(40000L) ++ le32(0L) ++ le32(0L) ++ le32(0x10L) ++
-      le32(nFrames.toLong) ++ le32(0L) ++ le32(1L) ++ le32(maxFrame.toLong) ++
-      le32(w.toLong) ++ le32(h.toLong) ++ le32(0L) ++ le32(0L) ++ le32(0L) ++ le32(0L)
-    val strh = "vids".getBytes("US-ASCII") ++ handler.getBytes("US-ASCII") ++
-      le32(0L) ++ le16(0) ++ le16(0) ++ le32(0L) ++ le32(1L) ++ le32(25L) ++
-      le32(0L) ++ le32(nFrames.toLong) ++ le32(maxFrame.toLong) ++
-      le32(0xffffffffL) ++ le32(0L) ++ le16(0) ++ le16(0) ++ le16(w) ++ le16(h)
-    val strf = le32(40L) ++ le32(w.toLong) ++ le32(h.toLong) ++ le16(1) ++
-      le16(24) ++ le32(biCompression) ++ le32((w * h * 3).toLong) ++
-      le32(0L) ++ le32(0L) ++ le32(0L) ++ le32(0L)
-    val strl = riffList("LIST", "strl",
-      riffChunk("strh", strh) ++ riffChunk("strf", strf))
-    val hdrl = riffList("LIST", "hdrl", riffChunk("avih", avih) ++ strl)
-    val ckId = if (mjpeg) "00dc" else "00db"
-    val moviChunks = frameData.map(d => riffChunk(ckId, d))
-    val movi = riffList("LIST", "movi", moviChunks.reduce(_ ++ _))
-    // idx1 offsets are measured from the 'movi' fourcc (offset 4
-    // inside the LIST data), each entry AVIIF_KEYFRAME
-    val offsets = moviChunks.scanLeft(4L)((acc, c) => acc + c.length).init
-    val idx1 = riffChunk("idx1",
-      offsets.zip(frameData).map { case (off, d) =>
-        ckId.getBytes("US-ASCII") ++ le32(0x10L) ++ le32(off) ++ le32(d.length.toLong)
-      }.reduce(_ ++ _))
-    val body = "AVI ".getBytes("US-ASCII") ++ hdrl ++ movi ++ idx1
-    "RIFF".getBytes("US-ASCII") ++ le32(body.length.toLong) ++ body
+    val (handler, compression, ckId) =
+      if (mjpeg) ("MJPG", 0x47504a4dL /* 'MJPG' LE */, "00dc") else ("DIB ", 0L, "00db")
+    aviBytes(handler, bitmapInfo(24, compression, w * h * 3, 0L), ckId, frames)
   }
 
   /** Decode an AVI through a RIFF chunk walk + per-frame codec —
@@ -607,21 +601,13 @@ object MediaDecode {
     * container "avi" when the codec fourcc is unreachable, else
     * under its declared codec). */
   def parseVideo(payload: Array[Byte]): MediaStats = {
-    val none = MediaStats(0L, "unknown", 0L, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, false)
-    def tag(off: Int, t: String): Boolean =
-      payload.length >= off + t.length &&
-        t.zipWithIndex.forall { case (c, i) => (payload(off + i) & 0xff) == c.toInt }
     if (payload == null || payload.length < 12 ||
-        !(tag(0, "RIFF") && tag(8, "AVI "))) return none
+        !(tag(payload, 0, "RIFF") && tag(payload, 8, "AVI "))) return failed("unknown")
     var container = "avi"
     var declared = -1L
     var frames = 0L
     var allOk = true
-    var (sr, sg, sb) = (0.0, 0.0, 0.0)
-    var nPix = 0L
-    var havePrev = false
-    var (pr, pg, pb) = (0.0, 0.0, 0.0)
-    var peakMotion = 0.0
+    val fold = new FrameFold
     // MS-RLE8 stream state: palette from strf, frame buffer of
     // palette indices carried across '00dc' chunks (delta frames
     // paint only what changed)
@@ -636,9 +622,9 @@ object MediaDecode {
           val sz = u32le(payload, p + 4)
           if (sz > payload.length.toLong) return // corrupt size: stop the walk
           val end = math.min(to.toLong, p + 8 + sz).toInt
-          if (tag(p, "LIST") && p + 12 <= to) walk(p + 12, end)
-          else if (tag(p, "avih") && sz >= 20) declared = u32le(payload, p + 8 + 16)
-          else if (tag(p, "strf") && sz >= 20) {
+          if (tag(payload, p, "LIST") && p + 12 <= to) walk(p + 12, end)
+          else if (tag(payload, p, "avih") && sz >= 20) declared = u32le(payload, p + 8 + 16)
+          else if (tag(payload, p, "strf") && sz >= 20) {
             container = u32le(payload, p + 8 + 16) match {
               case 0x47504a4dL => "mjpeg"
               case 0L          => "rawvideo"
@@ -667,7 +653,8 @@ object MediaDecode {
                 }
               }
             }
-          } else if ((tag(p, "00dc") || tag(p, "00db")) && end <= payload.length) {
+          } else if ((tag(payload, p, "00dc") || tag(payload, p, "00db")) &&
+                     end <= payload.length) {
             frames += 1
             val data = java.util.Arrays.copyOfRange(payload, p + 8, end)
             val m =
@@ -684,16 +671,9 @@ object MediaDecode {
                   val n = rleBuf.length.toLong
                   (fr2.toDouble / n, fg2.toDouble / n, fb2.toDouble / n, n)
                 }
-              } else decodeFrame(data, tag(p, "00dc"))
+              } else decodeFrame(data, tag(payload, p, "00dc"))
             m match {
-              case Some((fr, fg, fb, n)) =>
-                sr += fr * n; sg += fg * n; sb += fb * n; nPix += n
-                if (havePrev) {
-                  val d = math.max(math.abs(fr - pr),
-                    math.max(math.abs(fg - pg), math.abs(fb - pb)))
-                  if (d > peakMotion) peakMotion = d
-                }
-                pr = fr; pg = fg; pb = fb; havePrev = true
+              case Some((fr, fg, fb, n)) => fold.add(fr, fg, fb, n)
               case None => allOk = false
             }
           }
@@ -701,11 +681,9 @@ object MediaDecode {
         }
       }
       walk(12, payload.length)
-      val ok = allOk && frames > 0 && frames == declared && nPix > 0
-      if (!ok) none.copy(container = container)
-      else MediaStats(0L, container, frames, 0.0, 0.0, peakMotion,
-        sr / nPix, sg / nPix, sb / nPix, true)
-    } catch { case _: Exception => none.copy(container = container) }
+      val ok = allOk && frames > 0 && frames == declared && fold.nPix > 0
+      if (!ok) failed(container) else fold.stats(container, frames)
+    } catch { case _: Exception => failed(container) }
   }
 
   /** One MS-RLE8 (BI_RLE8) frame decoded IN PLACE over `buf` (w·h
@@ -759,12 +737,12 @@ object MediaDecode {
     * palette r(i) = (i·53+7)%256, g(i) = (i·29+3)%256,
     * b(i) = (i·11+5)%256. */
   def plantedRleVideoBytes(docId: Long): Array[Byte] = {
-    val (w, h, nFrames) = (8, 2, 4)
+    val w = PlantW
     def idx0(x: Int, yUp: Int): Int =
       java.lang.Math.floorMod(docId * 5 + x * 19 + yUp * 77, 256L).toInt
     def idxDelta(f: Int, x: Int): Int =
       java.lang.Math.floorMod(docId * 13 + f * 37 + x * 23, 256L).toInt
-    val frames: Seq[Array[Byte]] = (0 until nFrames).map { f =>
+    val frames: Seq[Array[Byte]] = (0 until PlantFrames).map { f =>
       val bb = scala.collection.mutable.ArrayBuffer.empty[Byte]
       if (f == 0) {
         // bottom row: one absolute-mode run of 8 literals
@@ -783,53 +761,43 @@ object MediaDecode {
       }
       bb.toArray
     }
-    val maxFrame = frames.map(_.length).max
-    val avih = le32(40000L) ++ le32(0L) ++ le32(0L) ++ le32(0x10L) ++
-      le32(nFrames.toLong) ++ le32(0L) ++ le32(1L) ++ le32(maxFrame.toLong) ++
-      le32(w.toLong) ++ le32(h.toLong) ++ le32(0L) ++ le32(0L) ++ le32(0L) ++ le32(0L)
-    val strh = "vids".getBytes("US-ASCII") ++ "MRLE".getBytes("US-ASCII") ++
-      le32(0L) ++ le16(0) ++ le16(0) ++ le32(0L) ++ le32(1L) ++ le32(25L) ++
-      le32(0L) ++ le32(nFrames.toLong) ++ le32(maxFrame.toLong) ++
-      le32(0xffffffffL) ++ le32(0L) ++ le16(0) ++ le16(0) ++ le16(w) ++ le16(h)
     val pal = (0 until 256).flatMap { i =>
       Seq(((i * 11 + 5) % 256).toByte, ((i * 29 + 3) % 256).toByte,
         ((i * 53 + 7) % 256).toByte, 0.toByte) // RGBQUAD: b, g, r, 0
     }.toArray
-    val strf = le32(40L) ++ le32(w.toLong) ++ le32(h.toLong) ++ le16(1) ++
-      le16(8) ++ le32(1L /* BI_RLE8 */) ++ le32((w * h).toLong) ++
-      le32(0L) ++ le32(0L) ++ le32(256L) ++ le32(0L) ++ pal
-    val strl = riffList("LIST", "strl",
-      riffChunk("strh", strh) ++ riffChunk("strf", strf))
-    val hdrl = riffList("LIST", "hdrl", riffChunk("avih", avih) ++ strl)
-    val moviChunks = frames.map(d => riffChunk("00dc", d))
-    val movi = riffList("LIST", "movi", moviChunks.reduce(_ ++ _))
-    val offsets = moviChunks.scanLeft(4L)((acc, c) => acc + c.length).init
-    val idx1 = riffChunk("idx1",
-      offsets.zip(frames).zipWithIndex.map { case ((off, d), i) =>
-        "00dc".getBytes("US-ASCII") ++ le32(if (i == 0) 0x10L else 0L) ++
-          le32(off) ++ le32(d.length.toLong)
-      }.reduce(_ ++ _))
-    val body = "AVI ".getBytes("US-ASCII") ++ hdrl ++ movi ++ idx1
-    "RIFF".getBytes("US-ASCII") ++ le32(body.length.toLong) ++ body
+    aviBytes("MRLE", bitmapInfo(8, 1L /* BI_RLE8 */, PlantW * PlantH, 256L) ++ pal,
+      "00dc", frames)
   }
 
   /** Per-frame channel means over a decoded image — shared by the
     * MJPEG ('00dc') and GIF frame folds. */
   private def frameMeans(img: java.awt.image.BufferedImage): (Double, Double, Double, Long) = {
-    val (w, h) = (img.getWidth, img.getHeight)
-    var (sr, sg, sb) = (0L, 0L, 0L)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val rgb = img.getRGB(x, y)
-        sr += (rgb >> 16) & 0xff; sg += (rgb >> 8) & 0xff; sb += rgb & 0xff
-        x += 1
-      }
-      y += 1
-    }
-    val n = w.toLong * h
+    val (sr, sg, sb, n) = rgbSums(img)
     (sr.toDouble / n, sg.toDouble / n, sb.toDouble / n, n)
+  }
+
+  /** The across-frame fold of per-frame channel means that
+    * [[parseVideo]] and [[parseGif]] share: pixel-weighted channel
+    * means and the peak change of any channel mean between
+    * consecutive frames (the static-video / scene-cut stat). */
+  private final class FrameFold {
+    private var sr, sg, sb = 0.0
+    private var pr, pg, pb = 0.0
+    private var havePrev = false
+    private var peak = 0.0
+    var nPix = 0L
+    def add(fr: Double, fg: Double, fb: Double, n: Long): Unit = {
+      sr += fr * n; sg += fg * n; sb += fb * n; nPix += n
+      if (havePrev) {
+        val d = math.max(math.abs(fr - pr),
+          math.max(math.abs(fg - pg), math.abs(fb - pb)))
+        if (d > peak) peak = d
+      }
+      pr = fr; pg = fg; pb = fb; havePrev = true
+    }
+    def stats(container: String, frames: Long): MediaStats =
+      MediaStats(0L, container, frames, 0.0, 0.0, peak,
+        sr / nPix, sg / nPix, sb / nPix, true)
   }
 
   /** One frame → (meanR, meanG, meanB, nPixels): ImageIO for JPEG
@@ -864,21 +832,10 @@ object MediaDecode {
       }
     }
 
-  /** Per-partition batch video decode — the same mapPartitions
-    * contract as [[parsePayloadBatch]], the RIFF walk + per-frame
-    * codec inside. */
-  def parseVideoBatch(media: Dataset[Media]): Dataset[MediaStats] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.map(m => parseVideo(m.payload).copy(docId = m.docId)))
-  }
-
-  // --- Animated GIF: the LZW + palette codec class ------------------
-  // (round 13, after MJPEG/raw-DIB AVI: the JDK's third real image
-  // codec. GIF's palette quantization is lossy in general, but a
-  // frame with ≤256 distinct colors gets an EXACT palette — our 16-
-  // pixel frames always do — so the whole animated round trip is
-  // lossless and the oracle contract is exact equality on every row,
-  // the strongest contract any compressed container here carries.)
+  // --- Animated GIF: LZW + palette through javax.imageio ------------
+  // GIF's palette quantization is lossy in general, but a frame with
+  // ≤256 distinct colors gets an EXACT palette — the 16-pixel planted
+  // frames always do — so the animated round trip is lossless.
 
   /** Planted-pixel 4-frame 8×2 ANIMATED GIF through the JDK GIF
     * sequence writer: each frame is drawn into a TYPE_BYTE_INDEXED
@@ -889,7 +846,7 @@ object MediaDecode {
     * r=(id·5+f·29+j·37)%256, g=(id·13+f·31+j·41)%256,
     * b=(id·9+f·43+j·11)%256. */
   def plantedGifBytes(docId: Long): Array[Byte] = {
-    val (w, h, nFrames) = (8, 2, 4)
+    val (w, h) = (PlantW, PlantH)
     val bos = new java.io.ByteArrayOutputStream()
     val wr = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
     // interlace OFF: the JDK pair mis-round-trips INTERLACED frames
@@ -903,7 +860,7 @@ object MediaDecode {
     wr.setOutput(ios)
     wr.prepareWriteSequence(null)
     var f = 0
-    while (f < nFrames) {
+    while (f < PlantFrames) {
       val colors = (0 until w * h).map { j =>
         val r = java.lang.Math.floorMod(docId * 5 + f * 29 + j * 37, 256L).toInt
         val g = java.lang.Math.floorMod(docId * 13 + f * 31 + j * 41, 256L).toInt
@@ -932,10 +889,7 @@ object MediaDecode {
     * GIF8 magic FIRST; a truncated or LZW-corrupt member quarantines
     * ok=false under "gif", never an exception. */
   def parseGif(payload: Array[Byte]): MediaStats = {
-    val none = MediaStats(0L, "unknown", 0L, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, false)
-    if (payload == null || payload.length < 6 ||
-        payload(0) != 'G'.toByte || payload(1) != 'I'.toByte ||
-        payload(2) != 'F'.toByte || payload(3) != '8'.toByte) none
+    if (payload == null || payload.length < 6 || !tag(payload, 0, "GIF8")) failed("unknown")
     else try {
       val rd = javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
       val iis = javax.imageio.ImageIO.createImageInputStream(
@@ -943,38 +897,19 @@ object MediaDecode {
       try {
         rd.setInput(iis, false, true)
         val n = rd.getNumImages(true)
-        if (n <= 0) none.copy(container = "gif")
+        if (n <= 0) failed("gif")
         else {
-          var (sr, sg, sb) = (0.0, 0.0, 0.0)
-          var nPix = 0L
-          var havePrev = false
-          var (pr, pg, pb) = (0.0, 0.0, 0.0)
-          var peak = 0.0
+          val fold = new FrameFold
           var f = 0
           while (f < n) {
             val (fr, fg, fb, np) = frameMeans(rd.read(f))
-            sr += fr * np; sg += fg * np; sb += fb * np; nPix += np
-            if (havePrev) {
-              val d = math.max(math.abs(fr - pr),
-                math.max(math.abs(fg - pg), math.abs(fb - pb)))
-              if (d > peak) peak = d
-            }
-            pr = fr; pg = fg; pb = fb; havePrev = true
+            fold.add(fr, fg, fb, np)
             f += 1
           }
-          if (nPix == 0) none.copy(container = "gif")
-          else MediaStats(0L, "gif", n.toLong, 0.0, 0.0, peak,
-            sr / nPix, sg / nPix, sb / nPix, true)
+          if (fold.nPix == 0) failed("gif") else fold.stats("gif", n.toLong)
         }
       } finally { rd.dispose(); iis.close() }
-    } catch { case _: Exception => none.copy(container = "gif") }
-  }
-
-  /** Per-partition batch GIF decode — the mapPartitions contract
-    * with the JDK LZW/palette codec inside. */
-  def parseGifBatch(media: Dataset[Media]): Dataset[MediaStats] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.map(m => parseGif(m.payload).copy(docId = m.docId)))
+    } catch { case _: Exception => failed("gif") }
   }
 
   /** Format tag of the first "fmt " chunk in a RIFF/WAVE payload via
@@ -984,10 +919,7 @@ object MediaDecode {
   private def waveFmtTag(payload: Array[Byte]): Int = {
     var off = 12
     while (off + 8 <= payload.length) {
-      val isFmt = (payload(off) & 0xff) == 'f'.toInt &&
-        (payload(off + 1) & 0xff) == 'm'.toInt &&
-        (payload(off + 2) & 0xff) == 't'.toInt &&
-        (payload(off + 3) & 0xff) == ' '.toInt
+      val isFmt = tag(payload, off, "fmt ")
       val len = u32le(payload, off + 4)
       if (off + 8 + len > payload.length.toLong) return -1
       if (isFmt) return if (len >= 2) u16le(payload, off + 8).toInt else -1
@@ -1005,14 +937,10 @@ object MediaDecode {
     * readable — quarantines ok=false. One branch test per payload;
     * the codecs stay inside the partition iterator. */
   def parseAny(payload: Array[Byte]): MediaStats = {
-    val none = MediaStats(0L, "unknown", 0L, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, false)
-    def tag(off: Int, t: String): Boolean =
-      payload != null && payload.length >= off + t.length &&
-        t.zipWithIndex.forall { case (c, i) => (payload(off + i) & 0xff) == c.toInt }
-    if (payload == null || payload.length < 4) none
-    else if (tag(0, "fLaC")) parseFlac(payload)
-    else if (tag(0, "RIFF") && tag(8, "AVI ")) parseVideo(payload)
-    else if (tag(0, "RIFF") && tag(8, "WAVE")) {
+    if (payload == null || payload.length < 4) failed("unknown")
+    else if (tag(payload, 0, "fLaC")) parseFlac(payload)
+    else if (tag(payload, 0, "RIFF") && tag(payload, 8, "AVI ")) parseVideo(payload)
+    else if (tag(payload, 0, "RIFF") && tag(payload, 8, "WAVE")) {
       // route on the fmt tag: G.711 (7/6) → javax.sound, IMA ADPCM
       // (0x11) → the pure-JVM predictive codec, else PCM. The tag is
       // located by a minimal chunk walk, not a fixed byte-20 read — a
@@ -1026,19 +954,10 @@ object MediaDecode {
         if (a.container != "unknown") a else parsePayload(payload)
       }
     }
-    else if ((payload(0) & 0xff) == 0x89 && tag(1, "PNG")) parseImage(payload)
-    else if ((payload(0) & 0xff) == 0xff && (payload(1) & 0xff) == 0xd8 &&
-             (payload(2) & 0xff) == 0xff) parseImage(payload)
-    else if (tag(0, "GIF8")) parseGif(payload)
-    else if (tag(0, "BM")) parsePayload(payload)
-    else none
-  }
-
-  /** Per-partition batch sniff-and-route decode — the mapPartitions
-    * contract with [[parseAny]] inside. */
-  def parseAnyBatch(media: Dataset[Media]): Dataset[MediaStats] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.map(m => parseAny(m.payload).copy(docId = m.docId)))
+    else if (imageContainer(payload) != "unknown") parseImage(payload)
+    else if (tag(payload, 0, "GIF8")) parseGif(payload)
+    else if (tag(payload, 0, "BM")) parsePayload(payload)
+    else failed("unknown")
   }
 
   /** The mixed-modality curate-corpus plant (id mod 7) — ONE
@@ -1060,15 +979,11 @@ object MediaDecode {
       case _  => AdpcmCodec.plantedAdpcmBytes(id, gain = 8)
     })
 
-  // --- FLAC (round 13, mm17): the one audio codec class mm14 left
-  // behind the stub that does NOT actually need an external library —
-  // FLAC is an open bit-level spec (RFC 9639) and graft.operators
-  // .FlacCodec implements it directly: a real encoder (FIXED order-2
-  // prediction, per-partition optimal rice parameters, CRC-8/CRC-16,
-  // STREAMINFO MD5) and a general subset decoder (all subframe types
-  // incl. LPC, both rice methods, stereo decorrelation modes, every
-  // integrity layer verified). Only PERCEPTUAL codecs (Opus/AAC) and
-  // inter-frame video stay stubbed after this.
+  // --- FLAC through the pure-JVM FlacCodec (RFC 9639) ----------------
+  // A real encoder (FIXED order-2 prediction, per-partition optimal
+  // rice parameters, CRC-8/CRC-16, STREAMINFO MD5) and a general subset
+  // decoder (all subframe types incl. LPC, both rice methods, stereo
+  // decorrelation modes, every integrity layer verified).
 
   /** 64 planted s16 samples: a per-doc ramp (base + slope·j) plus
     * bounded noise — closed forms both engines recompute exactly
@@ -1096,12 +1011,9 @@ object MediaDecode {
     * (header CRC-8 per frame, whole-frame CRC-16, stream MD5) —
     * a truncated or bit-flipped member quarantines under "flac". */
   def parseFlac(payload: Array[Byte]): MediaStats = {
-    val none = MediaStats(0L, "unknown", 0L, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, false)
-    val isFlac = payload != null && payload.length >= 4 &&
-      payload(0) == 'f' && payload(1) == 'L' && payload(2) == 'a' && payload(3) == 'C'
-    if (!isFlac) none
+    if (!tag(payload, 0, "fLaC")) failed("unknown")
     else FlacCodec.decode(payload) match {
-      case None => none.copy(container = "flac")
+      case None => failed("flac")
       case Some(d) =>
         val n = d.channels.length * d.channels(0).length
         var (sum, sq, pk) = (0.0, 0.0, 0.0)
@@ -1115,16 +1027,9 @@ object MediaDecode {
           }
           c += 1
         }
-        if (n == 0) none.copy(container = "flac")
+        if (n == 0) failed("flac")
         else MediaStats(0L, "flac", n.toLong, sum / n, math.sqrt(sq / n), pk,
           0.0, 0.0, 0.0, true)
     }
-  }
-
-  /** Per-partition batch FLAC decode — the same mapPartitions
-    * contract as [[parseAudioBatch]], the pure-JVM codec inside. */
-  def parseFlacBatch(media: Dataset[Media]): Dataset[MediaStats] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.map(m => parseFlac(m.payload).copy(docId = m.docId)))
   }
 }

@@ -1,17 +1,20 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Portable
+import graft.operators.MediaDecode
+import graft.operators.MediaDecode.{Media, MediaStats}
 
-/** Multimodal plumbing (SURVEY.md §2.F): opaque binary payload
-  * columns with typed metadata. The decode step is a clearly-marked
-  * deterministic stub (no image/audio libs in this environment); the
-  * Spark-side plumbing — binary schema, metadata extraction, strided
-  * frame sampling, batch shape — is real and oracle-checked.
-  * See also graft.operators.MediaDecode for the mapPartitions batch
-  * path a real codec would plug into.
+/** Multimodal queries (SURVEY.md §2.F): opaque binary payload columns
+  * with typed metadata — blob accounting, sniffing, sharding and
+  * manifests (mm1–mm10), then real decodes whose wires carry planted
+  * closed forms the oracle recomputes without the wire: BMP/WAV
+  * headers and data in-plan (mm11/mm12), and PNG/JPEG, G.711, AVI
+  * (MJPEG, raw DIB, MS-RLE8), GIF, FLAC, WARC and IMA ADPCM through
+  * [[graft.operators.MediaDecode]]'s codecs (mm13–mm20). mm1's
+  * byte-length "dimensions" are the one stubbed decode.
   */
 object Multimodal extends QueryPack {
 
@@ -36,6 +39,88 @@ object Multimodal extends QueryPack {
   private def plantTable(period: Int)(f: Long => Double): Column =
     element_at(typedLit((0L until period.toLong).map(f)),
       (pmod(col("doc_id"), lit(period.toLong)) + 1L).cast("int"))
+
+  /** The planted round-trip leg of mm13–mm16, mm18 and p11: each
+    * spread doc id's wire from `wire`, decoded by `parse` through
+    * [[MediaDecode.decodeAll]] — one encode map pass and one decode
+    * map pass, payload bytes never shuffled. */
+  private[graft] def plantedDecode(s: SparkSession, d: String)(
+      wire: Long => Array[Byte], parse: Array[Byte] => MediaStats): Dataset[MediaStats] = {
+    import s.implicits._
+    MediaDecode.decodeAll(Tables.docIdsSpread(s, d).as[Long]
+      .mapPartitions(_.map(id => Media(id, wire(id)))))(parse)
+  }
+
+  /** [[plantedDecode]]'s rows as (doc_id, container, n_units, ok) plus
+    * every stat rounded to 6 places: d_mean, d_rms, d_peak (for
+    * frame codecs, the peak inter-frame motion) and d_mean_r/g/b. */
+  private def decodedStats(s: SparkSession, d: String)(
+      wire: Long => Array[Byte], parse: Array[Byte] => MediaStats): DataFrame =
+    plantedDecode(s, d)(wire, parse).toDF()
+      .select(col("docId").as("doc_id"), col("container"),
+        col("nUnits").as("n_units"), col("ok"),
+        round(col("meanSignal"), 6).as("d_mean"),
+        round(col("rms"), 6).as("d_rms"),
+        round(col("peak"), 6).as("d_peak"),
+        round(col("meanR"), 6).as("d_mean_r"),
+        round(col("meanG"), 6).as("d_mean_g"),
+        round(col("meanB"), 6).as("d_mean_b"))
+
+  /** Mean over 16 pixels j of frame f of the affine plant channel
+    * (i·a + f·fc + j·b) mod 256 — mm12/mm13's still images (f = 0)
+    * and mm15/mm16's frames. */
+  private def affineMean(a: Long, fc: Long, b: Long)(i: Long, f: Int): Double =
+    (0 until 16).map(j =>
+      java.lang.Math.floorMod(i * a + f * fc + j * b, 256L).toDouble).sum / 16.0
+
+  /** The four plant columns of a 4-frame video whose channel frame
+    * means are r/g/b(doc, frame): p_mean_r/g/b (across-frame means)
+    * and p_motion (the peak change of any channel's frame mean
+    * between consecutive frames), all period 256, rounded to 6. */
+  private def framePlants(r: (Long, Int) => Double, g: (Long, Int) => Double,
+                          b: (Long, Int) => Double): Seq[Column] = {
+    def frames(c: (Long, Int) => Double, i: Long) = (0 until 4).map(c(i, _))
+    def motion(i: Long): Double = {
+      val (fr, fg, fb) = (frames(r, i), frames(g, i), frames(b, i))
+      (1 until 4).map(f => math.max(math.abs(fr(f) - fr(f - 1)),
+        math.max(math.abs(fg(f) - fg(f - 1)), math.abs(fb(f) - fb(f - 1))))).max
+    }
+    Seq(round(plantTable(256)(frames(r, _).sum / 4.0), 6).as("p_mean_r"),
+      round(plantTable(256)(frames(g, _).sum / 4.0), 6).as("p_mean_g"),
+      round(plantTable(256)(frames(b, _).sum / 4.0), 6).as("p_mean_b"),
+      round(plantTable(256)(motion), 6).as("p_motion"))
+  }
+
+  /** mm16/mm18's lossless frame codecs: `stats` joined to its frame
+    * plants, matches_plant = ok, `container`, 4 frames and every frame
+    * stat EQUAL to its plant. */
+  private def exactFrameMatch(planted: DataFrame, stats: DataFrame,
+                              container: String): DataFrame =
+    planted.join(stats, Seq("doc_id"))
+      .withColumn("matches_plant",
+        col("ok") && col("container") === container && col("n_units") === 4L &&
+          col("d_mean_r") === col("p_mean_r") &&
+          col("d_mean_g") === col("p_mean_g") &&
+          col("d_mean_b") === col("p_mean_b") &&
+          col("d_peak") === col("p_motion"))
+      .select(col("doc_id"), col("container"), col("n_units").as("n_frames"),
+        col("d_mean_r").as("mean_r"), col("d_mean_g").as("mean_g"),
+        col("d_mean_b").as("mean_b"), col("d_peak").as("peak_motion"),
+        col("matches_plant"))
+
+  /** matches_plant for a lossless/lossy codec pair: ok, `nUnits`
+    * decoded, and every (decoded, planted, band) stat EQUAL on the
+    * lossless container or within its band on the lossy one; any
+    * other container fails. */
+  private def bandedMatch(lossless: String, lossy: String, nUnits: Long,
+                          stats: Seq[(String, String, Double)]): Column = {
+    val base = col("ok") && col("n_units") === nUnits
+    when(col("container") === lossless, stats.foldLeft(base) {
+      case (acc, (dc, pc, _)) => acc && col(dc) === col(pc) })
+      .when(col("container") === lossy, stats.foldLeft(base) {
+        case (acc, (dc, pc, band)) => acc && abs(col(dc) - col(pc)) <= band })
+      .otherwise(lit(false))
+  }
 
   def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Binary payload + typed metadata: byte length, 16-bit checksum,
@@ -300,9 +385,9 @@ object Multimodal extends QueryPack {
     // UDF, no stub. matches_plant === true proves every planted
     // header field is recovered exactly through the byte round-trip;
     // at 100 TB this is one map pass, no shuffle before the output
-    // sort. The pixel/PCM DATA decode stays behind the declared
-    // MediaDecode seam (operators.MediaDecode.parseHeader is this
-    // parser's JVM-bytes twin for real binary files).
+    // sort. mm12 decodes the pixel/PCM data
+    // (operators.MediaDecode.parseHeader is this parser's JVM-bytes
+    // twin for real binary files).
     "mm11_header_decode" -> { (s, d) =>
       val isBmp = pmod(col("doc_id"), lit(2L)) === 0L
       val width = lit(16L) + pmod(col("doc_id") * 31L, lit(1905L))
@@ -359,10 +444,10 @@ object Multimodal extends QueryPack {
         .orderBy(col("doc_id"))
     },
 
-    // REAL payload-DATA decode (round 10 — the step past mm11's
-    // header fields; after this the only undecodable content is a
-    // compressed codec, which genuinely needs external libraries):
-    // each wire carries a complete, valid container — a 54-byte BMP
+    // REAL payload-DATA decode, the step past mm11's header fields
+    // for the uncompressed containers (mm13–mm20 decode the
+    // compressed ones through MediaDecode): each wire carries a
+    // complete, valid container — a 54-byte BMP
     // (16×1, 24bpp, 48 pixel bytes) or a 44-byte WAV (mono s16 PCM,
     // 16 samples) — with PLANTED payloads derived from doc_id. The
     // decode side reads ONLY the wire: magic sniff, then the PCM
@@ -409,8 +494,8 @@ object Multimodal extends QueryPack {
             f"${chan(i, j, 7, 13)}%02x${chan(i, j, 11, 29)}%02x${chan(i, j, 3, 53)}%02x")
             .mkString)),
         (pmod(col("doc_id"), lit(256L)) + 1L).cast("int"))
-      def chanMean(mul: Long, add: Long) = round(plantTable(256) { i =>
-        (0 until 16).map(j => chan(i, j, mul, add).toDouble).sum / 16.0 }, 6)
+      def chanMean(mul: Long, add: Long) =
+        round(plantTable(256)(affineMean(mul, 0, add)(_, 0)), 6)
       val wired = Tables.documents(s, d)
         .select(col("doc_id"), when(isBmp, bmpWire).otherwise(wavWire).as("wire"),
           // closed-form plant stats (no wire involved)
@@ -494,40 +579,19 @@ object Multimodal extends QueryPack {
     // (the join key is doc_id + six doubles), decoder instantiated
     // per partition not per row.
     "mm13_image_decode" -> { (s, d) =>
-      import s.implicits._
       // planted means via plantTable (period 256: the formulas read
       // doc_id only mod 256) — integer sums, bit-identical entries
-      def plantMean(a: Long, b: Long) = round(plantTable(256) { i =>
-        (0 until 16).map(j =>
-          java.lang.Math.floorMod(i * a + j * b, 256L).toDouble).sum / 16.0
-      }, 6)
+      def plantMean(a: Long, b: Long) =
+        round(plantTable(256)(affineMean(a, 0, b)(_, 0)), 6)
       val planted = Tables.documents(s, d).select(col("doc_id"),
         plantMean(3, 53).as("p_mean_r"),
         plantMean(11, 29).as("p_mean_g"),
         plantMean(7, 13).as("p_mean_b"))
-      val media = Tables.docIdsSpread(s, d).as[Long]
-        .mapPartitions(_.map(id =>
-          graft.operators.MediaDecode.Media(id,
-            graft.operators.MediaDecode.plantedImageBytes(id, jpeg = id % 2 != 0))))
-      val stats = graft.operators.MediaDecode.parseImageBatch(media).toDF()
-        .select(col("docId").as("doc_id"), col("container"),
-          col("nUnits").as("n_units"), col("ok"),
-          round(col("meanR"), 6).as("d_mean_r"),
-          round(col("meanG"), 6).as("d_mean_g"),
-          round(col("meanB"), 6).as("d_mean_b"))
+      val stats = decodedStats(s, d)(
+        id => MediaDecode.plantedImageBytes(id, jpeg = id % 2 != 0), MediaDecode.parseImage)
       planted.join(stats, Seq("doc_id"))
-        .withColumn("matches_plant",
-          when(col("container") === "png",
-            col("ok") && col("n_units") === 16L &&
-              col("d_mean_r") === col("p_mean_r") &&
-              col("d_mean_g") === col("p_mean_g") &&
-              col("d_mean_b") === col("p_mean_b"))
-            .when(col("container") === "jpeg",
-              col("ok") && col("n_units") === 16L &&
-                abs(col("d_mean_r") - col("p_mean_r")) <= 8.0 &&
-                abs(col("d_mean_g") - col("p_mean_g")) <= 8.0 &&
-                abs(col("d_mean_b") - col("p_mean_b")) <= 8.0)
-            .otherwise(lit(false)))
+        .withColumn("matches_plant", bandedMatch("png", "jpeg", 16L,
+          Seq("r", "g", "b").map(c => (s"d_mean_$c", s"p_mean_$c", 8.0))))
         .select(col("doc_id"), col("container"), col("n_units"),
           when(col("container") === "png", col("d_mean_r")).as("mean_r"),
           when(col("container") === "png", col("d_mean_g")).as("mean_g"),
@@ -557,7 +621,6 @@ object Multimodal extends QueryPack {
     // bytes never shuffle (the join carries doc_id + three doubles),
     // codec instantiated inside the partition iterator.
     "mm14_audio_decode" -> { (s, d) =>
-      import s.implicits._
       // the G.711 closed form, driver-side (period 512: c reads
       // doc_id mod 256, the µ/a-law branch reads its parity) — the
       // same segment/mantissa arithmetic the per-row lambdas ran,
@@ -586,16 +649,8 @@ object Multimodal extends QueryPack {
             val v = g711Val(i, j); v * v }.sum / 16.0) }, 6).as("p_rms"),
         round(plantTable(512) { i =>
           (0 until 16).map(j => math.abs(g711Val(i, j))).max }, 6).as("p_peak"))
-      val media = Tables.docIdsSpread(s, d).as[Long]
-        .mapPartitions(_.map(id =>
-          graft.operators.MediaDecode.Media(id,
-            graft.operators.MediaDecode.plantedAudioBytes(id, alaw = id % 2 != 0))))
-      val stats = graft.operators.MediaDecode.parseAudioBatch(media).toDF()
-        .select(col("docId").as("doc_id"), col("container"),
-          col("nUnits").as("n_units"), col("ok"),
-          round(col("meanSignal"), 6).as("d_mean"),
-          round(col("rms"), 6).as("d_rms"),
-          round(col("peak"), 6).as("d_peak"))
+      val stats = decodedStats(s, d)(
+        id => MediaDecode.plantedAudioBytes(id, alaw = id % 2 != 0), MediaDecode.parseAudio)
       planted.join(stats, Seq("doc_id"))
         .withColumn("matches_plant",
           col("ok") && col("n_units") === 16L &&
@@ -629,64 +684,26 @@ object Multimodal extends QueryPack {
     // of any per-frame channel mean (the static-video / scene-cut
     // gate — mm15's new stat over mm13's). ok requires every frame
     // decoded AND the count matching avih's declared dwTotalFrames —
-    // a tampered header quarantines (spec-tested). After mm13/mm14/
-    // mm15 only inter-frame video (H.264/VP9) and perceptual audio
-    // (FLAC/Opus) — genuinely absent from the JDK — remain stubbed.
+    // a tampered header quarantines (spec-tested).
     // Scale shape: one encode map pass + one decode map pass, payload
     // bytes never shuffle (the join carries doc_id + four doubles),
     // decoders instantiated per partition.
     "mm15_video_decode" -> { (s, d) =>
-      import s.implicits._
-      // planted frame means via plantTable (period 256), same fold
-      // order as the old per-row lambdas — dyadic-rational partial
-      // sums, so entries are bit-identical
-      def frameMean(i: Long, f: Int, a: Long, fc: Long, b: Long): Double =
-        (0 until 16).map(j =>
-          java.lang.Math.floorMod(i * a + f * fc + j * b, 256L).toDouble)
-          .sum / 16.0
-      def chan(i: Long, a: Long, fc: Long, b: Long): IndexedSeq[Double] =
-        (0 until 4).map(f => frameMean(i, f, a, fc, b))
-      def motion(i: Long): Double = {
-        val (fr, fg, fb) = (chan(i, 3, 17, 53), chan(i, 11, 19, 29), chan(i, 7, 23, 13))
-        (1 until 4).map(f => math.max(math.abs(fr(f) - fr(f - 1)),
-          math.max(math.abs(fg(f) - fg(f - 1)), math.abs(fb(f) - fb(f - 1))))).max
-      }
-      val planted = Tables.documents(s, d).select(col("doc_id"),
-        round(plantTable(256)(chan(_, 3, 17, 53).sum / 4.0), 6).as("p_mean_r"),
-        round(plantTable(256)(chan(_, 11, 19, 29).sum / 4.0), 6).as("p_mean_g"),
-        round(plantTable(256)(chan(_, 7, 23, 13).sum / 4.0), 6).as("p_mean_b"),
-        round(plantTable(256)(motion), 6).as("p_motion"))
-      val media = Tables.docIdsSpread(s, d).as[Long]
-        .mapPartitions(_.map(id =>
-          graft.operators.MediaDecode.Media(id,
-            graft.operators.MediaDecode.plantedVideoBytes(id, mjpeg = id % 2 == 0))))
-      val stats = graft.operators.MediaDecode.parseVideoBatch(media).toDF()
-        .select(col("docId").as("doc_id"), col("container"),
-          col("nUnits").as("n_frames"), col("ok"),
-          round(col("meanR"), 6).as("d_mean_r"),
-          round(col("meanG"), 6).as("d_mean_g"),
-          round(col("meanB"), 6).as("d_mean_b"),
-          round(col("peak"), 6).as("d_motion"))
+      // planted frame means via plantTable (period 256) — dyadic-
+      // rational partial sums, so entries are bit-identical
+      val planted = Tables.documents(s, d).select(col("doc_id") +: framePlants(
+        affineMean(3, 17, 53), affineMean(11, 19, 29), affineMean(7, 23, 13)): _*)
+      val stats = decodedStats(s, d)(
+        id => MediaDecode.plantedVideoBytes(id, mjpeg = id % 2 == 0), MediaDecode.parseVideo)
       planted.join(stats, Seq("doc_id"))
-        .withColumn("matches_plant",
-          when(col("container") === "rawvideo",
-            col("ok") && col("n_frames") === 4L &&
-              col("d_mean_r") === col("p_mean_r") &&
-              col("d_mean_g") === col("p_mean_g") &&
-              col("d_mean_b") === col("p_mean_b") &&
-              col("d_motion") === col("p_motion"))
-            .when(col("container") === "mjpeg",
-              col("ok") && col("n_frames") === 4L &&
-                abs(col("d_mean_r") - col("p_mean_r")) <= 8.0 &&
-                abs(col("d_mean_g") - col("p_mean_g")) <= 8.0 &&
-                abs(col("d_mean_b") - col("p_mean_b")) <= 8.0 &&
-                abs(col("d_motion") - col("p_motion")) <= 16.0)
-            .otherwise(lit(false)))
-        .select(col("doc_id"), col("container"), col("n_frames"),
+        .withColumn("matches_plant", bandedMatch("rawvideo", "mjpeg", 4L,
+          Seq("r", "g", "b").map(c => (s"d_mean_$c", s"p_mean_$c", 8.0)) :+
+            (("d_peak", "p_motion", 16.0))))
+        .select(col("doc_id"), col("container"), col("n_units").as("n_frames"),
           when(col("container") === "rawvideo", col("d_mean_r")).as("mean_r"),
           when(col("container") === "rawvideo", col("d_mean_g")).as("mean_g"),
           when(col("container") === "rawvideo", col("d_mean_b")).as("mean_b"),
-          when(col("container") === "rawvideo", col("d_motion")).as("peak_motion"),
+          when(col("container") === "rawvideo", col("d_peak")).as("peak_motion"),
           col("matches_plant"))
         .orderBy(col("doc_id"))
     },
@@ -708,45 +725,11 @@ object Multimodal extends QueryPack {
     // shuffle (plan-asserted), reader instantiated per row decode
     // inside the partition iterator.
     "mm16_gif_decode" -> { (s, d) =>
-      import s.implicits._
-      // mm15's plantTable form with mm16's channel constants
-      def frameMean(i: Long, f: Int, a: Long, fc: Long, b: Long): Double =
-        (0 until 16).map(j =>
-          java.lang.Math.floorMod(i * a + f * fc + j * b, 256L).toDouble)
-          .sum / 16.0
-      def chan(i: Long, a: Long, fc: Long, b: Long): IndexedSeq[Double] =
-        (0 until 4).map(f => frameMean(i, f, a, fc, b))
-      def motion(i: Long): Double = {
-        val (fr, fg, fb) = (chan(i, 5, 29, 37), chan(i, 13, 31, 41), chan(i, 9, 43, 11))
-        (1 until 4).map(f => math.max(math.abs(fr(f) - fr(f - 1)),
-          math.max(math.abs(fg(f) - fg(f - 1)), math.abs(fb(f) - fb(f - 1))))).max
-      }
-      val planted = Tables.documents(s, d).select(col("doc_id"),
-        round(plantTable(256)(chan(_, 5, 29, 37).sum / 4.0), 6).as("p_mean_r"),
-        round(plantTable(256)(chan(_, 13, 31, 41).sum / 4.0), 6).as("p_mean_g"),
-        round(plantTable(256)(chan(_, 9, 43, 11).sum / 4.0), 6).as("p_mean_b"),
-        round(plantTable(256)(motion), 6).as("p_motion"))
-      val media = Tables.docIdsSpread(s, d).as[Long]
-        .mapPartitions(_.map(id =>
-          graft.operators.MediaDecode.Media(id,
-            graft.operators.MediaDecode.plantedGifBytes(id))))
-      val stats = graft.operators.MediaDecode.parseGifBatch(media).toDF()
-        .select(col("docId").as("doc_id"), col("container"),
-          col("nUnits").as("n_frames"), col("ok"),
-          round(col("meanR"), 6).as("mean_r"),
-          round(col("meanG"), 6).as("mean_g"),
-          round(col("meanB"), 6).as("mean_b"),
-          round(col("peak"), 6).as("peak_motion"))
-      planted.join(stats, Seq("doc_id"))
-        .withColumn("matches_plant",
-          col("ok") && col("container") === "gif" && col("n_frames") === 4L &&
-            col("mean_r") === col("p_mean_r") &&
-            col("mean_g") === col("p_mean_g") &&
-            col("mean_b") === col("p_mean_b") &&
-            col("peak_motion") === col("p_motion"))
-        .select(col("doc_id"), col("container"), col("n_frames"),
-          col("mean_r"), col("mean_g"), col("mean_b"), col("peak_motion"),
-          col("matches_plant"))
+      // mm15's plant form with mm16's channel constants
+      val planted = Tables.documents(s, d).select(col("doc_id") +: framePlants(
+        affineMean(5, 29, 37), affineMean(13, 31, 41), affineMean(9, 43, 11)): _*)
+      exactFrameMatch(planted, decodedStats(s, d)(
+        MediaDecode.plantedGifBytes, MediaDecode.parseGif), "gif")
         .orderBy(col("doc_id"))
     },
 
@@ -852,7 +835,6 @@ object Multimodal extends QueryPack {
     // build+decode map pass, payload bytes never shuffle, the
     // stateful decoder lives inside the partition iterator.
     "mm18_rle_video" -> { (s, d) =>
-      import s.implicits._
       // plantTable form (period 256: every index formula reads doc_id
       // mod 256), same palette arithmetic and fold order
       def pal(idx: Long, mul: Long, add: Long): Double =
@@ -867,39 +849,10 @@ object Multimodal extends QueryPack {
             pal(java.lang.Math.floorMod(i * 13 + f * 37L + x * 23, 256L), mul, add)).sum
         (bottom + top) / 16.0
       }
-      def chan(i: Long, mul: Long, add: Long): IndexedSeq[Double] =
-        (0 until 4).map(chanMean(i, _, mul, add))
-      def motion(i: Long): Double = {
-        val (fr, fg, fb) = (chan(i, 53, 7), chan(i, 29, 3), chan(i, 11, 5))
-        (1 until 4).map(f => math.max(math.abs(fr(f) - fr(f - 1)),
-          math.max(math.abs(fg(f) - fg(f - 1)), math.abs(fb(f) - fb(f - 1))))).max
-      }
-      val planted = Tables.documents(s, d).select(col("doc_id"),
-        round(plantTable(256)(chan(_, 53, 7).sum / 4.0), 6).as("p_mean_r"),
-        round(plantTable(256)(chan(_, 29, 3).sum / 4.0), 6).as("p_mean_g"),
-        round(plantTable(256)(chan(_, 11, 5).sum / 4.0), 6).as("p_mean_b"),
-        round(plantTable(256)(motion), 6).as("p_motion"))
-      val media = Tables.docIdsSpread(s, d).as[Long]
-        .mapPartitions(_.map(id =>
-          graft.operators.MediaDecode.Media(id,
-            graft.operators.MediaDecode.plantedRleVideoBytes(id))))
-      val stats = graft.operators.MediaDecode.parseVideoBatch(media).toDF()
-        .select(col("docId").as("doc_id"), col("container"),
-          col("nUnits").as("n_frames"), col("ok"),
-          round(col("meanR"), 6).as("mean_r"),
-          round(col("meanG"), 6).as("mean_g"),
-          round(col("meanB"), 6).as("mean_b"),
-          round(col("peak"), 6).as("peak_motion"))
-      planted.join(stats, Seq("doc_id"))
-        .withColumn("matches_plant",
-          col("ok") && col("container") === "msrle" && col("n_frames") === 4L &&
-            col("mean_r") === col("p_mean_r") &&
-            col("mean_g") === col("p_mean_g") &&
-            col("mean_b") === col("p_mean_b") &&
-            col("peak_motion") === col("p_motion"))
-        .select(col("doc_id"), col("container"), col("n_frames"),
-          col("mean_r"), col("mean_g"), col("mean_b"), col("peak_motion"),
-          col("matches_plant"))
+      val planted = Tables.documents(s, d).select(col("doc_id") +: framePlants(
+        chanMean(_, _, 53, 7), chanMean(_, _, 29, 3), chanMean(_, _, 11, 5)): _*)
+      exactFrameMatch(planted, decodedStats(s, d)(
+        MediaDecode.plantedRleVideoBytes, MediaDecode.parseVideo), "msrle")
         .orderBy(col("doc_id"))
     },
 

@@ -417,11 +417,9 @@ object Pipeline extends QueryPack {
     // the output sort carrying (doc_id, three strings); payload
     // bytes never shuffle.
     "p11_media_curate" -> { (s, d) =>
-      import s.implicits._
-      val media = Tables.docIdsSpread(s, d).as[Long]
-        .mapPartitions(_.map(id => graft.operators.MediaDecode.Media(
-          id, graft.operators.MediaDecode.plantedCurateBytes(id))))
-      mediaDisposition(graft.operators.MediaDecode.parseAnyBatch(media).toDF(),
+      mediaDisposition(Multimodal.plantedDecode(s, d)(
+          graft.operators.MediaDecode.plantedCurateBytes,
+          graft.operators.MediaDecode.parseAny).toDF(),
           "doc_id", 120.0, 8000.0, 31000.0, 18.0)
         .orderBy(col("doc_id"))
     },

@@ -145,10 +145,7 @@ case class EnvelopeParseBin(child: Expression)
   extends UnaryExpression with ExpectsInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("uuid", StringType),
-    StructField("payload", BinaryType),
-    StructField("headers", MapType(StringType, StringType))))
+  override def dataType: DataType = EnvelopeJsonImpl.DecodedType
   override def nullable: Boolean = true
   override def prettyName: String = "envelope_parse_bin"
 

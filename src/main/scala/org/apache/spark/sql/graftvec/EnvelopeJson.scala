@@ -30,6 +30,13 @@ object EnvelopeJsonImpl {
 
   private val Factory = new JsonFactory()
 
+  /** The decoded envelope row, struct<uuid, payload binary, headers
+    * map>, returned by both wires' parse expressions. */
+  val DecodedType: StructType = StructType(Seq(
+    StructField("uuid", StringType),
+    StructField("payload", BinaryType),
+    StructField("headers", MapType(StringType, StringType))))
+
   /** Jackson-compatible JSON string escape: quote, backslash, and
     * control chars (<0x20, short forms where Jackson uses them). */
   private def appendEscaped(sb: java.lang.StringBuilder, s: String): Unit = {
@@ -168,10 +175,7 @@ case class EnvelopeParse(child: Expression)
   extends UnaryExpression with ExpectsInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("uuid", StringType),
-    StructField("payload", BinaryType),
-    StructField("headers", MapType(StringType, StringType))))
+  override def dataType: DataType = EnvelopeJsonImpl.DecodedType
   override def nullable: Boolean = true
   override def prettyName: String = "envelope_parse"
 

@@ -57,6 +57,20 @@ object TextHashImpl {
     if (t.isEmpty) Array.empty[String] else Ws.split(t, -1)
   }
 
+  /** Word n-shingle j — toks(j … j+n-1) joined by single spaces —
+    * built in the caller's reused buffer. */
+  private def shingle(sb: java.lang.StringBuilder, toks: Array[String],
+                      j: Int, n: Int): String = {
+    sb.setLength(0)
+    var w = 0
+    while (w < n) {
+      if (w > 0) sb.append(' ')
+      sb.append(toks(j + w))
+      w += 1
+    }
+    sb.toString
+  }
+
   /** KM minhash signature (k unsigned-32 minima) over word n-shingles;
     * null when the text has fewer than n tokens (mirrors the
     * explode+groupBy pipeline, where such docs produce no rows). */
@@ -69,15 +83,8 @@ object TextHashImpl {
     val sb = new java.lang.StringBuilder
     var j = 0
     while (j < m) {
-      sb.setLength(0)
-      var w = 0
-      while (w < n) {
-        if (w > 0) sb.append(' ')
-        sb.append(toks(j + w))
-        w += 1
-      }
       md.reset()
-      val dig = md.digest(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val dig = md.digest(shingle(sb, toks, j, n).getBytes(java.nio.charset.StandardCharsets.UTF_8))
       val h1 = ((dig(0) & 0xffL) << 24) | ((dig(1) & 0xffL) << 16) | ((dig(2) & 0xffL) << 8) | (dig(3) & 0xffL)
       val h2 = ((dig(4) & 0xffL) << 24) | ((dig(5) & 0xffL) << 16) | ((dig(6) & 0xffL) << 8) | (dig(7) & 0xffL)
       var i = 0
@@ -102,14 +109,7 @@ object TextHashImpl {
     val sb = new java.lang.StringBuilder
     var j = 0
     while (j < m) {
-      sb.setLength(0)
-      var w = 0
-      while (w < n) {
-        if (w > 0) sb.append(' ')
-        sb.append(toks(j + w))
-        w += 1
-      }
-      seen.add(sb.toString)
+      seen.add(shingle(sb, toks, j, n))
       j += 1
     }
     val out = new Array[Any](seen.size)
@@ -130,14 +130,7 @@ object TextHashImpl {
     val sb = new java.lang.StringBuilder
     var j = 0
     while (j < m) {
-      sb.setLength(0)
-      var w = 0
-      while (w < n) {
-        if (w > 0) sb.append(' ')
-        sb.append(toks(j + w))
-        w += 1
-      }
-      out(j) = UTF8String.fromString(sb.toString)
+      out(j) = UTF8String.fromString(shingle(sb, toks, j, n))
       j += 1
     }
     new GenericArrayData(out)

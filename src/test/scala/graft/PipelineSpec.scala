@@ -414,9 +414,9 @@ class PipelineSpec extends SparkSuite {
     assert(!MediaDecode.parsePayload(lenDims).ok)
     // batch path round-trips
     import spark.implicits._
-    val out = MediaDecode.parsePayloadBatch(
-      Seq(MediaDecode.Media(1L, bmp), MediaDecode.Media(2L, wav)).toDS())
-      .collect().sortBy(_.docId)
+    val out = MediaDecode.decodeAll(
+      Seq(MediaDecode.Media(1L, bmp), MediaDecode.Media(2L, wav)).toDS())(
+      MediaDecode.parsePayload).collect().sortBy(_.docId)
     assert(out.map(_.container).toSeq === Seq("bmp", "wav"))
     assert(out(0).meanR === 75.0 && out(1).peak === 2000.0)
   }
@@ -483,7 +483,8 @@ class PipelineSpec extends SparkSuite {
     val media = Tables.documents(spark, sf).select(col("doc_id")).as[Long]
       .mapPartitions(_.map(id =>
         MediaDecode.Media(id, MediaDecode.plantedImageBytes(id, jpeg = id % 2 != 0))))
-    val plan = MediaDecode.parseImageBatch(media).queryExecution.executedPlan.toString
+    val plan = MediaDecode.decodeAll(media)(MediaDecode.parseImage)
+      .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"image decode plan shuffles:\n$plan")
   }
 
@@ -542,7 +543,8 @@ class PipelineSpec extends SparkSuite {
     val media = Tables.documents(spark, sf).select(col("doc_id")).as[Long]
       .mapPartitions(_.map(id =>
         MediaDecode.Media(id, MediaDecode.plantedAudioBytes(id, alaw = id % 2 != 0))))
-    val plan = MediaDecode.parseAudioBatch(media).queryExecution.executedPlan.toString
+    val plan = MediaDecode.decodeAll(media)(MediaDecode.parseAudio)
+      .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"audio decode plan shuffles:\n$plan")
   }
 
@@ -607,7 +609,8 @@ class PipelineSpec extends SparkSuite {
     val media = Tables.documents(spark, sf).select(col("doc_id")).as[Long]
       .mapPartitions(_.map(id =>
         MediaDecode.Media(id, MediaDecode.plantedVideoBytes(id, mjpeg = id % 2 == 0))))
-    val plan = MediaDecode.parseVideoBatch(media).queryExecution.executedPlan.toString
+    val plan = MediaDecode.decodeAll(media)(MediaDecode.parseVideo)
+      .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"video decode plan shuffles:\n$plan")
   }
 
@@ -656,7 +659,8 @@ class PipelineSpec extends SparkSuite {
     assert(out(1L) === (("gif", 4L, true)) && out(2L)._1 === "unknown")
     val media = Tables.documents(spark, sf).select(col("doc_id")).as[Long]
       .mapPartitions(_.map(id => MediaDecode.Media(id, MediaDecode.plantedGifBytes(id))))
-    val plan = MediaDecode.parseGifBatch(media).queryExecution.executedPlan.toString
+    val plan = MediaDecode.decodeAll(media)(MediaDecode.parseGif)
+      .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"gif decode plan shuffles:\n$plan")
   }
 
@@ -805,7 +809,8 @@ class PipelineSpec extends SparkSuite {
     assert(out(1L) === (("flac", 64L, true)) && out(2L)._1 === "unknown")
     val media = Tables.documents(spark, sf).select(col("doc_id")).as[Long]
       .mapPartitions(_.map(id => MediaDecode.Media(id, MediaDecode.plantedFlacBytes(id))))
-    val plan = MediaDecode.parseFlacBatch(media).queryExecution.executedPlan.toString
+    val plan = MediaDecode.decodeAll(media)(MediaDecode.parseFlac)
+      .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"flac decode plan shuffles:\n$plan")
   }
 
@@ -876,7 +881,8 @@ class PipelineSpec extends SparkSuite {
     // the decode path is a map pass: payload bytes never shuffle
     val media = Tables.documents(spark, sf).select(col("doc_id")).as[Long]
       .mapPartitions(_.map(id => MediaDecode.Media(id, MediaDecode.plantedRleVideoBytes(id))))
-    val plan = MediaDecode.parseVideoBatch(media).queryExecution.executedPlan.toString
+    val plan = MediaDecode.decodeAll(media)(MediaDecode.parseVideo)
+      .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"rle decode plan shuffles:\n$plan")
   }
 
@@ -1043,6 +1049,35 @@ class PipelineSpec extends SparkSuite {
       .count() === 0)
   }
 
+  test("planted media wires are byte-identical to their pinned digests") {
+    import graft.operators.{AdpcmCodec, Warc}
+    // md5 over the comma-joined per-member md5 hex of ids 0..15; the
+    // pins were captured from the generators before their AVI, RIFF
+    // and little-endian writers were shared, so any drift in a wire
+    // byte (padding included) fails here, not only in decoded stats
+    def digest(wire: Long => Array[Byte]): String = {
+      def md5(b: Array[Byte]) = java.security.MessageDigest.getInstance("MD5")
+        .digest(b).map("%02x".format(_)).mkString
+      md5((0L until 16L).map(id => md5(wire(id))).mkString(",").getBytes("UTF-8"))
+    }
+    val pinned = Seq[(String, Long => Array[Byte], String)](
+      ("png", MediaDecode.plantedImageBytes(_, jpeg = false), "75c675b0cb7c08c3c6806447325c98ce"),
+      ("jpeg", MediaDecode.plantedImageBytes(_, jpeg = true), "367f6d54aac99d6e01e5f27981fa5979"),
+      ("ulaw", MediaDecode.plantedAudioBytes(_, alaw = false), "7fb3f302bfc4879113b085fcff081b15"),
+      ("alaw", MediaDecode.plantedAudioBytes(_, alaw = true), "3c9fe834cc0b5af7247a26c3db28a942"),
+      ("mjpeg", MediaDecode.plantedVideoBytes(_, mjpeg = true), "9a4f9ebc29b336c2765324d9c8c7b792"),
+      ("raw", MediaDecode.plantedVideoBytes(_, mjpeg = false), "85965cb234ef1dc22c4a09a06934e504"),
+      ("msrle", MediaDecode.plantedRleVideoBytes, "effa7a2934578bf7e9d4556eeeef1061"),
+      ("gif", MediaDecode.plantedGifBytes, "29a6d10bc1ed18b8ba8a3e889d8c2b0c"),
+      ("flac", MediaDecode.plantedFlacBytes, "dcb80b0d1747d3ce03d3754e0c5b2d83"),
+      ("curate", MediaDecode.plantedCurateBytes, "c04ccb78a5456e6c0eabd244aee5b029"),
+      ("adpcm", AdpcmCodec.plantedAdpcmBytes(_), "d61ef3dce6b78dd63aa7d3655e4aae05"),
+      ("warc", Warc.plantedWarcBytes, "6c57f010a2fbfa3ba23e31ce31df5c5b"))
+    pinned.foreach { case (name, wire, want) =>
+      assert(digest(wire) === want, s"$name wire drifted")
+    }
+  }
+
   test("p11: sniff-routed media curate — every disposition earned through a real codec") {
     import spark.implicits._
     import graft.operators.MediaDecode
@@ -1105,7 +1140,8 @@ class PipelineSpec extends SparkSuite {
     val media = Tables.documents(spark, sf).select(col("doc_id")).as[Long]
       .mapPartitions(_.map(id =>
         MediaDecode.Media(id, MediaDecode.plantedImageBytes(id, jpeg = false))))
-    val plan = MediaDecode.parseAnyBatch(media).queryExecution.executedPlan.toString
+    val plan = MediaDecode.decodeAll(media)(MediaDecode.parseAny)
+      .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"media curate decode plan shuffles:\n$plan")
   }
 

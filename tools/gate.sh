@@ -49,6 +49,10 @@ python3 tools/plan_discipline.py /tmp/gate_plans.md
 python3 tools/plan_tree_diff.py PLANS.md /tmp/gate_plans.md \
   || echo "plan trees differ from PLANS.md (listed above)"
 
+# Size watch (advisory, fails nothing): src/main total and code
+# lines, the figure ROADMAP aim 2 tracks.
+python3 tools/loc.py src/main || echo "loc count failed (advisory)"
+
 # Regression watch: diff this run's bench line against the most recent
 # LIVE reading per query across ALL driver-recorded rounds (>=2x
 # per-query slowdowns exit nonzero). Passing every artifact closes the
