@@ -75,10 +75,9 @@ package object dsl {
     /** d1's exact dedup: keep the min-`idCol` row per normalized-text
       * digest. Shuffles 16-byte digests only, never text. */
     def dedupExact(idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-      val keep = df
-        .select(col(idCol), Portable.md5bin(Portable.normText(col(textCol))).as("_h"))
-        .groupBy(col("_h")).agg(min(col(idCol)).as(idCol))
-        .select(col(idCol))
+      val keep = queries.Dedup.exactKeepers(
+          df.select(col(idCol).as("doc_id"), col(textCol).as("text")))
+        .select(col("doc_id").as(idCol))
       df.join(keep, Seq(idCol), "left_semi")
     }
 

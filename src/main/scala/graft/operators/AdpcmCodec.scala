@@ -112,7 +112,12 @@ object AdpcmCodec {
 
   /** Decode one IMA block to `nSamples` PCM values (header sample +
     * one per nibble). */
-  def decodeBlock(block: Array[Byte], nSamples: Int): Array[Int] = {
+  def decodeBlock(block: Array[Byte], nSamples: Int): Array[Int] =
+    decodeBlockState(block, nSamples)._1
+
+  /** [[decodeBlock]] plus the decoder state after the last nibble —
+    * [[parse]] reports its step index. */
+  private def decodeBlockState(block: Array[Byte], nSamples: Int): (Array[Int], State) = {
     val pred0 = ((block(0) & 0xff) | (block(1) << 8)).toShort.toInt
     var st = State(pred0, clampIdx(block(2) & 0xff))
     val out = new Array[Int](nSamples)
@@ -125,7 +130,7 @@ object AdpcmCodec {
       out(j) = st.predictor
       j += 1
     }
-    out
+    (out, st)
   }
 
   /** A complete, standards-conformant IMA-ADPCM WAV: fmt tag 0x11
@@ -193,7 +198,7 @@ object AdpcmCodec {
       val block = payload.slice(dataOff + b * blockAlign,
         dataOff + (b + 1) * blockAlign)
       if ((block(2) & 0xff) > 88) return none.copy(container = "adpcm")
-      val pcm = decodeBlock(block, samplesPerBlock)
+      val (pcm, end) = decodeBlockState(block, samplesPerBlock)
       var j = 0
       while (j < pcm.length) {
         val s = pcm(j).toDouble
@@ -203,16 +208,7 @@ object AdpcmCodec {
       if (b == 0) first = pcm(0).toLong
       n += pcm.length
       last = pcm(pcm.length - 1).toLong
-      // replay to expose the end index (decodeBlock tracks it internally)
-      var st = State(((block(0) & 0xff) | (block(1) << 8)).toShort.toInt,
-        block(2) & 0xff)
-      var k = 1
-      while (k < samplesPerBlock) {
-        val byte = block(4 + (k - 1) / 2) & 0xff
-        st = decodeNibble(st, if ((k - 1) % 2 == 0) byte & 0x0f else byte >> 4)
-        k += 1
-      }
-      endIdx = st.index.toLong
+      endIdx = end.index.toLong
       b += 1
     }
     AdpcmStats(0L, "adpcm", n, sum / n, math.sqrt(sq / n), pk, first, last,

@@ -86,13 +86,22 @@ object Dedup extends QueryPack {
         round(lit(1.0) - col("n_distinct").cast("double") / col("n_docs"), 6)
           .as("dup_rate"))
 
-  /** documents ∪ exact copies of every 10th doc (new ids ≥ 100000). */
-  private def withExactDupes(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
+  /** `docs` ∪ exact copies of every 10th doc (new ids ≥ 100000) —
+    * the exact-dup plant of d1, d16, d18 and p1/p2/p3/p7. */
+  private[queries] def withExactDupes(docs: DataFrame): DataFrame =
     docs.unionAll(
       docs.filter(col("doc_id") % 10 === 0)
         .withColumn("doc_id", col("doc_id") + 100000L))
-  }
+
+  /** The exact-dedup survivors of a (doc_id, text) frame: the min
+    * doc_id per normalized-text digest, as one `doc_id` column. Only
+    * 16-byte digests shuffle. Each caller picks its own semi, anti or
+    * left join against it (p1, p2, p3, p7, the `dedupExact` facade);
+    * d1 keeps its own aggregate because it also reports n_copies. */
+  private[graft] def exactKeepers(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), Portable.md5bin(Portable.normText(col("text"))).as("h"))
+      .groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
+      .select(col("doc_id"))
 
   /** d13's synthesized daily delivery over `docs` (doc_id, text):
     * re-uploads of every 7th corpus doc, fresh revisions of every
@@ -226,20 +235,17 @@ object Dedup extends QueryPack {
       explode(array(BandLayouts.flatMap { case (b, r) =>
         (0 until b).map { bi =>
           struct(lit(s"${b}x$r").as("layout"), lit(bi).as("band_id"),
-            md5(concat_ws("|",
-              (0 until r).map(j => col(s"s${bi * r + j}")): _*).cast("binary"))
-              .as("band_hash"))
+            bandHash(bi, r).as("band_hash"))
         }
       }: _*)).as("e"))
       .select(col("doc_id"), col("e.layout").as("layout"),
         col("e.band_id").as("band_id"), col("e.band_hash").as("band_hash"))
     val bands = if (checkpoint) bands0.localCheckpoint() else bands0
-    // NO pair enumeration anywhere (round 16 — the second scale
-    // decade named this operator's old clique self-join: 16x1's
-    // single-minhash buckets grow LINEARLY with the corpus — any
-    // two docs whose min shingle ties, e.g. on a corpus-common
-    // stopword shingle, share a bucket — so distinct-pair
-    // materialization was quadratic; sf1→sf10 exponent 1.15,
+    // NO pair enumeration anywhere: 16x1's single-minhash buckets
+    // grow LINEARLY with the corpus — any two docs whose min
+    // shingle ties, e.g. on a corpus-common stopword shingle, share
+    // a bucket — so a clique self-join's distinct-pair
+    // materialization is quadratic (sf1→sf10 exponent 1.15,
     // measured). The three consumers each have a linear form:
     // the verify BILL per layout is Σ C(n,2) over bucket sizes —
     // a groupBy count, no pairs generated — and recall only needs
@@ -262,9 +268,9 @@ object Dedup extends QueryPack {
         .select(col("doc_a"), (col("doc_a") + offset).as("doc_b"))
     val truthHigh = truthAt(0L, 100000L)
     val truthMid = truthAt(10L, 300000L)
-    // one tagged aggregate for both truth totals (round 19 — the
-    // per-class form paid an aggregate exchange + crossJoin broadcast
-    // per class); coalesce keeps count semantics on an empty class
+    // one tagged aggregate for both truth totals (a per-class form
+    // pays an aggregate exchange + crossJoin broadcast per class);
+    // coalesce keeps count semantics on an empty class
     val stats = truthHigh.select(lit("h").as("cls"))
       .unionAll(truthMid.select(lit("m").as("cls")))
       .agg(coalesce(sum(when(col("cls") === "h", 1L)), lit(0L)).as("n_high"),
@@ -408,7 +414,7 @@ object Dedup extends QueryPack {
     // Exact dedup: group by md5 of normalized text; shuffle 16-byte
     // digests only. Survivor = min doc_id per group.
     "d1_exact_dedup" -> { (s, d) =>
-      withExactDupes(s, d)
+      withExactDupes(Tables.documents(s, d))
         .select(col("doc_id"), Portable.md5bin(Portable.normText(col("text"))).as("h"))
         .groupBy(col("h"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
@@ -468,29 +474,9 @@ object Dedup extends QueryPack {
       // for candidate doc_ids (broadcast semi-filter) — the corpus's
       // shingle arrays are never shuffled, only 16-long signatures
       // and the candidates' sets.
-      val sigs = kmSignatures(withNearDupes(s, d), materialize = true)
-      val bands = sigs.select(col("doc_id"),
-        posexplode(array((0 until Bands).map { b =>
-          md5(concat_ws("|", (0 until 4).map(r => col(s"s${b * 4 + r}")): _*).cast("binary"))
-        }: _*)).as(Seq("band_id", "band_hash")))
-      val l = bands.as("l"); val r = bands.as("r")
-      val cand = l.join(r, col("l.band_id") === col("r.band_id") &&
-          col("l.band_hash") === col("r.band_hash") &&
-          col("l.doc_id") < col("r.doc_id"))
-        .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
-        .distinct()
-      val candIds = cand.select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-        .distinct()
-      val docsSh = withNearDupes(s, d)
-        .join(broadcast(candIds), Seq("doc_id"), "left_semi")
-        .select(col("doc_id"),
-          graft.functions.TextHash.distinctShingles(col("text"), ShingleN).as("sh"))
-      cand
-        .join(broadcast(docsSh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))), Seq("doc_a"))
-        .join(broadcast(docsSh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))), Seq("doc_b"))
+      candidateSides(lshPairs(s, d), withNearDupes(s, d) -> Seq(shingleSet))
         .select(col("doc_a"), col("doc_b"),
-          (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-            size(array_union(col("sh_a"), col("sh_b")))).as("jaccard"))
+          jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
         .filter(col("jaccard") >= 0.5)
         .orderBy(col("doc_a"), col("doc_b"))
     },
@@ -627,7 +613,7 @@ object Dedup extends QueryPack {
     // pairs into a sources-sized rollup — one scan at any corpus
     // size.
     "d16_source_dup_rate" -> { (s, d) =>
-      sourceDupStats(withExactDupes(s, d)).orderBy(col("source"))
+      sourceDupStats(withExactDupes(Tables.documents(s, d))).orderBy(col("source"))
     },
 
     // MinHash calibration audit — the parameter QA for the whole d2/
@@ -642,34 +628,16 @@ object Dedup extends QueryPack {
       // ONE signature pass feeds BOTH the band join (candidate
       // mining) and the per-slot agreement columns: the materialized
       // table sits behind a single exchange every consumer reuses
-      // (the previous form called lshPairs, which re-derived
-      // signatures — two full km_minhash corpus passes).
+      // (lshPairs would re-derive the signatures — a second full
+      // km_minhash corpus pass).
       val sigs = kmSignatures(withNearDupes(s, d), materialize = true)
-      val cand = lshPairsFrom(sigs)
       val agree = (0 until K).map(i =>
-        when(col(s"a_s$i") === col(s"b_s$i"), 1).otherwise(0)).reduce(_ + _)
-      val candIds = cand.select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-        .distinct()
-      // signatures ship candidates-only, like the shingle sets below:
-      // semi-join BEFORE broadcast, so the corpus-sized signature
-      // table is never the broadcast build side.
-      val candSigs = sigs.join(broadcast(candIds), Seq("doc_id"), "left_semi")
-      val sa = candSigs.select(col("doc_id").as("doc_a") +:
-        (0 until K).map(i => col(s"s$i").as(s"a_s$i")): _*)
-      val sb = candSigs.select(col("doc_id").as("doc_b") +:
-        (0 until K).map(i => col(s"s$i").as(s"b_s$i")): _*)
-      val docsSh = withNearDupes(s, d)
-        .join(broadcast(candIds), Seq("doc_id"), "left_semi")
-        .select(col("doc_id"),
-          graft.functions.TextHash.distinctShingles(col("text"), ShingleN).as("sh"))
-      cand
-        .join(broadcast(sa), Seq("doc_a"))
-        .join(broadcast(sb), Seq("doc_b"))
-        .join(broadcast(docsSh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))), Seq("doc_a"))
-        .join(broadcast(docsSh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))), Seq("doc_b"))
+        when(col(s"s${i}_a") === col(s"s${i}_b"), 1).otherwise(0)).reduce(_ + _)
+      candidateSides(lshPairsFrom(sigs),
+          sigs -> (0 until K).map(i => col(s"s$i")),
+          withNearDupes(s, d) -> Seq(shingleSet))
         .withColumn("est", agree.cast("double") / lit(K))
-        .withColumn("ex", size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))))
+        .withColumn("ex", jaccard(col("sh_a"), col("sh_b")))
         .select(col("doc_a"), col("doc_b"),
           round(col("est"), 6).as("est_jaccard"),
           round(col("ex"), 6).as("jaccard"),
@@ -699,10 +667,7 @@ object Dedup extends QueryPack {
                 pmod(col("doc_id") + lit(720000L) + i.cast("long") * lit(37L),
                   lit(99991L)).cast("string")))).as("text")))
       def bandsOf(df: DataFrame): DataFrame =
-        kmSignatures(df, materialize = true).select(col("doc_id"),
-          posexplode(array((0 until Bands).map { b =>
-            md5(concat_ws("|", (0 until 4).map(r => col(s"s${b * 4 + r}")): _*).cast("binary"))
-          }: _*)).as(Seq("band_id", "band_hash")))
+        lshBands(kmSignatures(df, materialize = true))
       val corpusBands = bandsOf(docs)
         .select(col("band_id"), col("band_hash"), col("doc_id").as("corpus_id"))
       val matches = bandsOf(batch)
@@ -729,7 +694,7 @@ object Dedup extends QueryPack {
     // each level is a digest-keyed aggregate — the d1 shape, four
     // conditional counts wide, no extra scans.
     "d18_dup_curve" -> { (s, d) =>
-      val docs = withExactDupes(s, d)
+      val docs = withExactDupes(Tables.documents(s, d))
         .select(col("doc_id"),
           Portable.md5bin(Portable.normText(col("text"))).as("h"),
           pmod(Portable.hash60(concat(lit("lvl|"), col("doc_id").cast("string"))),
@@ -800,17 +765,7 @@ object Dedup extends QueryPack {
         .filter(col("adf") <= MaxAnchorDf)
         .select(col("anchor"))
       val anchors = rawAnchors.join(coldAnchors, Seq("anchor"), "left_semi")
-      val l = anchors.as("l"); val r = anchors.as("r")
-      val cand = l.join(r, col("l.anchor") === col("r.anchor") &&
-          col("l.doc_id") < col("r.doc_id"))
-        .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
-        .distinct()
-      val candIds = cand.select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-        .distinct()
-      val candSh = sh.join(broadcast(candIds), Seq("doc_id"), "left_semi")
-      cand
-        .join(broadcast(candSh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))), Seq("doc_a"))
-        .join(broadcast(candSh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))), Seq("doc_b"))
+      candidateSides(bucketPairs(anchors, "anchor"), sh -> Seq(col("sh")))
         .withColumn("n_common", size(array_intersect(col("sh_a"), col("sh_b"))))
         .withColumn("containment_a",
           round(col("n_common").cast("double") / size(col("sh_a")), 6))
@@ -970,28 +925,16 @@ object Dedup extends QueryPack {
     * Shared by the pack query (which adds its planted corpus) and
     * the DSL facade. */
   def spanDedupOf(corpus: DataFrame): DataFrame = {
-    val w = SpanW
     val wins = spanWindows(corpus)
-    // cross-doc dup mark as a WINDOW over the digest partition
-    // (round 19): the former groupBy(h)+filter+join-back form scanned
-    // `wins` twice — at the bench SFs the corpus parquet is one row
-    // group, so each scan paid the whole window-digest kernel on one
-    // core; at 100 TB it is two corpus passes. size(collect_set) over
-    // the h-partition is countDistinct(doc_id) per digest computed in
-    // the SAME exchange the join-back form shuffled anyway, so the
-    // kernel now runs once and one shuffle replaces shuffle+join.
-    val wOrd = Window.partitionBy(col("doc_id")).orderBy(col("i"))
-    val spans = wins
+    // cross-doc dup mark as a WINDOW over the digest partition:
+    // size(collect_set) over the h-partition is countDistinct(doc_id)
+    // per digest, computed in the one exchange on h. A groupBy(h) +
+    // join-back would scan `wins` twice — two passes of the
+    // window-digest kernel over the corpus — and add a shuffle.
+    val spans = spanRuns(wins
       .withColumn("nd",
         size(collect_set(col("doc_id")).over(Window.partitionBy(col("h")))))
-      .filter(col("nd") >= 2)
-      .withColumn("newspan",
-        when(col("i") - lag(col("i"), 1).over(wOrd) > w, 1L).otherwise(0L))
-      .withColumn("grp", sum(col("newspan")).over(wOrd))
-      .groupBy(col("doc_id"), col("n_words"), col("grp"))
-      .agg(min(col("i")).as("s"),
-        (max(col("i")) + (w - 1)).as("e"),
-        count(lit(1)).as("nw"))
+      .filter(col("nd") >= 2), "doc_id", "n_words")
     spans.groupBy(col("doc_id"), col("n_words"))
       .agg(count(lit(1)).as("n_spans"),
         sum(col("nw")).as("n_dup_windows"),
@@ -1007,6 +950,24 @@ object Dedup extends QueryPack {
 
   /** d20: duplicated-span window width (words, stride 1). */
   private[graft] val SpanW = 10
+
+  /** The span-run merge of d20, t26 and the streaming span dedup
+    * step: `hits` are a doc's matched stride-1 windows (doc_id, word
+    * offset `i`, …); a new span starts where the next hit clears the
+    * previous window's reach (lag + running sum over doc_id's
+    * windows). Per (`keys`, span): first word `s`, last word `e` and
+    * hit-window count `nw`. `keys` start with doc_id. */
+  private[graft] def spanRuns(hits: DataFrame, keys: String*): DataFrame = {
+    val wOrd = Window.partitionBy(col("doc_id")).orderBy(col("i"))
+    hits
+      .withColumn("newspan",
+        when(col("i") - lag(col("i"), 1).over(wOrd) > SpanW, 1L).otherwise(0L))
+      .withColumn("grp", sum(col("newspan")).over(wOrd))
+      .groupBy((keys :+ "grp").map(col): _*)
+      .agg(min(col("i")).as("s"),
+        (max(col("i")) + (SpanW - 1)).as("e"),
+        count(lit(1)).as("nw"))
+  }
 
   /** d20's stride-1 window digests over any (doc_id, w: array<string>)
     * frame: one row per window, (doc_id, n_words, i, h) — shared by
@@ -1174,10 +1135,13 @@ object Dedup extends QueryPack {
   private[graft] def lshBands(sigs: DataFrame, b: Int = Bands, r: Int = 4): DataFrame = {
     require(b * r <= K, s"band layout ${b}x$r exceeds the $K-slot signature")
     sigs.select(col("doc_id"),
-      posexplode(array((0 until b).map { bi =>
-        md5(concat_ws("|", (0 until r).map(j => col(s"s${bi * r + j}")): _*).cast("binary"))
-      }: _*)).as(Seq("band_id", "band_hash")))
+      posexplode(array((0 until b).map(bandHash(_, r)): _*)).as(Seq("band_id", "band_hash")))
   }
+
+  /** Band `bi`'s hash under an r-rows-per-band layout: md5 of its r
+    * signature slots, '|'-joined. */
+  private def bandHash(bi: Int, r: Int): Column =
+    md5(concat_ws("|", (0 until r).map(j => col(s"s${bi * r + j}")): _*).cast("binary"))
 
   /** Band join over an ALREADY-materialized signature table — lets a
     * caller that also needs the raw signatures (d15) pay for exactly
@@ -1187,20 +1151,53 @@ object Dedup extends QueryPack {
     * bucket of size n it emits C(n,2) rows — the contract d3 (the
     * pair audit) and d15 (per-pair slot-agreement calibration)
     * need, and QUADRATIC in the bucket when a mega-clique appears
-    * (boilerplate duplicated across millions of pages — the round-16
-    * sf10 measurement hit exactly this: 100-way replica cliques fed
+    * (boilerplate duplicated across millions of pages — an sf10
+    * measurement hit exactly this: 100-way replica cliques fed
     * C(100,2)×band rows into the distinct and one run spilled
     * >70 GB). A consumer that only needs CONNECTIVITY must use
     * [[lshStarEdges]] instead. */
-  private[graft] def lshPairsFrom(sigs: DataFrame, b: Int = Bands, r: Int = 4): DataFrame = {
-    val bands = lshBands(sigs, b, r)
-    val lS = bands.as("l"); val rS = bands.as("r")
-    lS.join(rS, col("l.band_id") === col("r.band_id") &&
-        col("l.band_hash") === col("r.band_hash") &&
+  private[graft] def lshPairsFrom(sigs: DataFrame, b: Int = Bands, r: Int = 4): DataFrame =
+    bucketPairs(lshBands(sigs, b, r), "band_id", "band_hash")
+
+  /** Every (doc_a < doc_b) pair sharing a bucket of `rows`
+    * (doc_id, `keys`…): the bucket self-join behind d3/d4/d15's band
+    * candidates and d17's anchor candidates. C(n, 2) rows per bucket
+    * of size n — see [[lshPairsFrom]] for when that is too many. */
+  private def bucketPairs(rows: DataFrame, keys: String*): DataFrame = {
+    val l = rows.as("l"); val r = rows.as("r")
+    l.join(r, keys.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _) &&
         col("l.doc_id") < col("r.doc_id"))
       .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
       .distinct()
   }
+
+  /** Candidate-side verification: attaches each side — a table with
+    * doc_id and the columns `cols` to compute from it — to the
+    * (doc_a, doc_b) pairs `cand` as `<col>_a` and `<col>_b`. A side
+    * ships candidates only: the table is semi-joined to the distinct
+    * candidate ids behind a broadcast BEFORE `cols` are computed and
+    * the result broadcast, so a corpus-sized table is never a build
+    * side and per-doc work (shingle sets) runs for candidates only. */
+  private def candidateSides(cand: DataFrame, sides: (DataFrame, Seq[Column])*): DataFrame = {
+    val candIds = cand.select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
+      .distinct()
+    sides.foldLeft(cand) { case (pairs, (table, cols)) =>
+      val onCand = table.join(broadcast(candIds), Seq("doc_id"), "left_semi")
+        .select(col("doc_id") +: cols: _*)
+      val vals = onCand.columns.toSeq.filterNot(_ == "doc_id")
+      def tagged(t: String) = broadcast(onCand.select(
+        col("doc_id").as(s"doc_$t") +: vals.map(c => col(c).as(s"${c}_$t")): _*))
+      pairs.join(tagged("a"), Seq("doc_a")).join(tagged("b"), Seq("doc_b"))
+    }
+  }
+
+  /** d4/d15's per-doc distinct word-shingle set, as `sh`. */
+  private def shingleSet: Column =
+    graft.functions.TextHash.distinctShingles(col("text"), ShingleN).as("sh")
+
+  /** Exact Jaccard of two distinct-shingle arrays (d4, d15). */
+  private def jaccard(a: Column, b: Column): Column =
+    size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
 
   /** The LINEAR candidate form for connectivity consumers (d9, p7's
     * near-dup stage): per (band, hash) bucket, every member pairs

@@ -39,14 +39,8 @@ object Pipeline extends QueryPack {
     // token counts. The dedup shuffle carries 16-byte digests; the
     // feature stage is map-side on survivors only.
     "p1_dataprep" -> { (s, d) =>
-      val docs = Tables.documents(s, d)
-      val corpus = docs.unionAll(
-        docs.filter(col("doc_id") % 10 === 0)
-          .withColumn("doc_id", col("doc_id") + 100000L))
-      val surv = corpus
-        .select(col("doc_id"), Portable.md5bin(Portable.normText(col("text"))).as("h"))
-        .groupBy(col("h")).agg(min(col("doc_id")).as("keep_id"))
-        .select(col("keep_id"))
+      val corpus = Dedup.withExactDupes(Tables.documents(s, d))
+      val surv = Dedup.exactKeepers(corpus).select(col("doc_id").as("keep_id"))
       withQuality(corpus.join(surv, corpus("doc_id") === surv("keep_id"), "left_semi"))
         .filter(col("quality") >= 0.5)
         .select(col("doc_id"), col("n_words"), col("quality"),
@@ -66,16 +60,12 @@ object Pipeline extends QueryPack {
     // stage visibly drops rows.
     "p2_funnel" -> { (s, d) =>
       val docs = Tables.documents(s, d)
-      val corpus = docs.unionAll(
-        docs.filter(col("doc_id") % 10 === 0)
-          .withColumn("doc_id", col("doc_id") + 100000L))
+      val corpus = Dedup.withExactDupes(docs)
         .unionAll(
           docs.filter(col("doc_id") % 25 === 0)
             .withColumn("doc_id", col("doc_id") + 200000L)
             .withColumn("text", concat(col("text"), lit(" "), col("text"))))
-      val keepers = corpus
-        .select(col("doc_id"), Portable.md5bin(Portable.normText(col("text"))).as("h"))
-        .groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
+      val keepers = Dedup.exactKeepers(corpus)
         .select(col("doc_id"), lit(true).as("is_keeper"))
       val flagged = withQuality(
           corpus.join(keepers, Seq("doc_id"), "left")
@@ -141,14 +131,8 @@ object Pipeline extends QueryPack {
     // Stage counts and index stats come from the same lineage, so
     // the summary can never disagree with the index it describes.
     "p3_index_build" -> { (s, d) =>
-      val docs = Tables.documents(s, d)
-      val corpus = docs.unionAll(
-        docs.filter(col("doc_id") % 10 === 0)
-          .withColumn("doc_id", col("doc_id") + 100000L))
-      val surv = corpus
-        .select(col("doc_id"), Portable.md5bin(Portable.normText(col("text"))).as("h"))
-        .groupBy(col("h")).agg(min(col("doc_id")).as("keep_id"))
-        .select(col("keep_id"))
+      val corpus = Dedup.withExactDupes(Tables.documents(s, d))
+      val surv = Dedup.exactKeepers(corpus).select(col("doc_id").as("keep_id"))
       val kept = withQuality(
           corpus.join(surv, corpus("doc_id") === surv("keep_id"), "left_semi"))
         .filter(col("quality") >= 0.5)
@@ -244,7 +228,7 @@ object Pipeline extends QueryPack {
       driftFromCells(qualityCells(docs.unionByName(plant)))
     },
 
-    // Staged dedup CASCADE (round 10) — the d-family composed the way
+    // Staged dedup CASCADE — the d-family composed the way
     // a production corpus-prep run actually executes it: cheap exact
     // dedup first, LSH near-dup on the exact survivors, segment-level
     // dedup on the near survivors — so each stage's input is the
@@ -274,19 +258,14 @@ object Pipeline extends QueryPack {
             transform(slice(Portable.words(col("text")), 21, 10),
               x => concat(x, lit("_u"), col("orig_id").cast("string")))), " ")
             .as("text"))
-      val corpus = docs
-        .unionAll(docs.filter(col("doc_id") % 10 === 0)
-          .withColumn("doc_id", col("doc_id") + 100000L))
+      val corpus = Dedup.withExactDupes(docs)
         .unionAll(docs.filter(col("doc_id") % 20 === 0)
           .withColumn("doc_id", col("doc_id") + 200000L)
           .withColumn("text", concat(col("text"), lit(" extra tail words"))))
         .unionAll(collage)
         .localCheckpoint()
       // stage 1: exact — keeper = min doc_id per normalized digest
-      val keep1 = corpus
-        .select(col("doc_id"), Portable.md5bin(Portable.normText(col("text"))).as("h"))
-        .groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"))
+      val keep1 = Dedup.exactKeepers(corpus)
       val drops1 = corpus.select(col("doc_id"))
         .join(keep1, Seq("doc_id"), "left_anti")
         .withColumn("disposition", lit("exact_dup")).withColumn("stage", lit(1L))
@@ -301,7 +280,7 @@ object Pipeline extends QueryPack {
       // no repartition between the band join and the components loop:
       // Components.connected symmetrizes + distincts on its own keys
       // immediately, so a pre-shuffle on doc_a would be a pure extra
-      // exchange (ADVICE r11)
+      // exchange
       // star edges, not the d3 clique join: the cascade only needs
       // connectivity, and the star form stays linear per band bucket
       // when a mega-clique (boilerplate duplicated across millions of
@@ -317,13 +296,8 @@ object Pipeline extends QueryPack {
       val surv2 = surv1.join(drops2.select(col("doc_id")), Seq("doc_id"), "left_anti")
         .localCheckpoint()
       // stage 3: segment-level — t21's rule over the remaining corpus
-      val segRows = TextOps.segmentRows(surv2)
-      val perSeg = segRows.groupBy(col("h"))
-        .agg(countDistinct(col("doc_id")).as("nd"))
-      val drops3 = segRows.join(perSeg, "h")
-        .groupBy(col("doc_id"))
-        .agg((sum(when(col("nd") >= 2, 1.0).otherwise(0.0)) / count(lit(1))).as("dup_ratio"))
-        .filter(col("dup_ratio") > 0.5)
+      val drops3 = TextOps.segmentDupCounts(TextOps.segmentRows(surv2))
+        .filter(col("n_dup_segs").cast("double") / col("n_segs") > 0.5)
         .select(col("doc_id"))
         .withColumn("disposition", lit("segment_dup")).withColumn("stage", lit(3L))
       val kept = surv2.select(col("doc_id"))
@@ -762,72 +736,49 @@ object Pipeline extends QueryPack {
         base.select(col("doc_id"), col("text")))
       val nContam = wins.join(broadcast(evalSet), "h")
         .agg(countDistinct(col("doc_id")).as("nc"))
-      val corpusRows = tot
-        .crossJoin(broadcast(p50)).crossJoin(broadcast(nContam))
-        .select(explode(array(
-          struct(lit("corpus").as("section"), lit("all").as("key"),
-            lit("n_docs").as("metric"), col("n").cast("double").as("value")),
-          struct(lit("corpus").as("section"), lit("all").as("key"),
-            lit("n_tokens").as("metric"), col("tok").cast("double").as("value")),
-          struct(lit("quality").as("section"), lit("all").as("key"),
-            lit("mean").as("metric"), col("mq").as("value")),
-          struct(lit("quality").as("section"), lit("all").as("key"),
-            lit("p50").as("metric"), col("p50").as("value")),
-          struct(lit("dedup").as("section"), lit("exact").as("key"),
-            lit("dup_rate").as("metric"),
-            (lit(1.0) - col("nh").cast("double") / col("n")).as("value")),
-          struct(lit("decontam").as("section"), lit("eval").as("key"),
-            lit("contam_doc_rate").as("metric"),
-            (col("nc").cast("double") / col("n")).as("value")))).as("e"))
-        .select(col("e.section").as("section"), col("e.key").as("key"),
-          col("e.metric").as("metric"), col("e.value").as("value"))
-      val langRows = base.groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"), sum(col("n_words")).as("tok"),
-          avg(col("quality")).as("mq"))
-        .select(explode(array(
-          struct(lit("lang").as("section"), col("lang").as("key"),
-            lit("n_docs").as("metric"), col("n").cast("double").as("value")),
-          struct(lit("lang").as("section"), col("lang").as("key"),
-            lit("n_tokens").as("metric"), col("tok").cast("double").as("value")),
-          struct(lit("lang").as("section"), col("lang").as("key"),
-            lit("mean_quality").as("metric"), col("mq").as("value")))).as("e"))
-        .select(col("e.section").as("section"), col("e.key").as("key"),
-          col("e.metric").as("metric"), col("e.value").as("value"))
-      // round-12 card legs, each the SOURCE OPERATOR's own kernel so
-      // the published card cannot disagree with the engine
-      // (spec-pinned in PipelineSpec): per-modality inventory = mm4's
+      // one (section, key, metric, value) card row per entry
+      def melt(df: DataFrame)(rows: (String, Column, String, Column)*): DataFrame =
+        df.select(explode(array(rows.map { case (section, key, metric, value) =>
+            struct(lit(section).as("section"), key.as("key"),
+              lit(metric).as("metric"), value.as("value"))
+          }: _*)).as("e"))
+          .select(col("e.section").as("section"), col("e.key").as("key"),
+            col("e.metric").as("metric"), col("e.value").as("value"))
+      val all = lit("all")
+      val corpusRows = melt(tot.crossJoin(broadcast(p50)).crossJoin(broadcast(nContam)))(
+        ("corpus", all, "n_docs", col("n").cast("double")),
+        ("corpus", all, "n_tokens", col("tok").cast("double")),
+        ("quality", all, "mean", col("mq")),
+        ("quality", all, "p50", col("p50")),
+        ("dedup", lit("exact"), "dup_rate",
+          lit(1.0) - col("nh").cast("double") / col("n")),
+        ("decontam", lit("eval"), "contam_doc_rate",
+          col("nc").cast("double") / col("n")))
+      val langRows = melt(base.groupBy(col("lang"))
+          .agg(count(lit(1)).as("n"), sum(col("n_words")).as("tok"),
+            avg(col("quality")).as("mq")))(
+        ("lang", col("lang"), "n_docs", col("n").cast("double")),
+        ("lang", col("lang"), "n_tokens", col("tok").cast("double")),
+        ("lang", col("lang"), "mean_quality", col("mq")))
+      // card legs, each the SOURCE OPERATOR's own kernel so the
+      // published card cannot disagree with the engine (spec-pinned
+      // in PipelineSpec): per-modality inventory = mm4's
       // modalityStats; per-source dup yield = d16's sourceDupStats
       // over the raw corpus; index rows = the SERVED (persisted,
       // manifest-verified) IVF-PQ artifact's version, cell count and
       // measured recall vs brute-force truth.
-      val modRows = Multimodal.modalityStats(
-          base.select(col("doc_id"), col("text")))
-        .select(explode(array(
-          struct(lit("modality").as("section"), col("modality").as("key"),
-            lit("n_objects").as("metric"), col("n_objects").cast("double").as("value")),
-          struct(lit("modality").as("section"), col("modality").as("key"),
-            lit("total_bytes").as("metric"), col("total_bytes").cast("double").as("value")))).as("e"))
-        .select(col("e.section").as("section"), col("e.key").as("key"),
-          col("e.metric").as("metric"), col("e.value").as("value"))
-      val srcRows = Dedup.sourceDupStats(base.select(col("source"), col("text")))
-        .select(explode(array(
-          struct(lit("source").as("section"), col("source").as("key"),
-            lit("n_docs").as("metric"), col("n_docs").cast("double").as("value")),
-          struct(lit("source").as("section"), col("source").as("key"),
-            lit("dup_rate").as("metric"), col("dup_rate").as("value")))).as("e"))
-        .select(col("e.section").as("section"), col("e.key").as("key"),
-          col("e.metric").as("metric"), col("e.value").as("value"))
-      val idxRows = Similarity.servedIndexStats(s, d)
-        .select(explode(array(
-          struct(lit("index").as("section"), lit("ivfpq").as("key"),
-            lit("format_version").as("metric"),
-            lit(Similarity.IvfPqFormatVersion.toDouble).as("value")),
-          struct(lit("index").as("section"), lit("ivfpq").as("key"),
-            lit("n_cells").as("metric"), col("n_cells").cast("double").as("value")),
-          struct(lit("index").as("section"), lit("ivfpq").as("key"),
-            lit("recall").as("metric"), col("recall").as("value")))).as("e"))
-        .select(col("e.section").as("section"), col("e.key").as("key"),
-          col("e.metric").as("metric"), col("e.value").as("value"))
+      val modRows = melt(Multimodal.modalityStats(
+          base.select(col("doc_id"), col("text"))))(
+        ("modality", col("modality"), "n_objects", col("n_objects").cast("double")),
+        ("modality", col("modality"), "total_bytes", col("total_bytes").cast("double")))
+      val srcRows = melt(Dedup.sourceDupStats(base.select(col("source"), col("text"))))(
+        ("source", col("source"), "n_docs", col("n_docs").cast("double")),
+        ("source", col("source"), "dup_rate", col("dup_rate")))
+      val ivfpq = lit("ivfpq")
+      val idxRows = melt(Similarity.servedIndexStats(s, d))(
+        ("index", ivfpq, "format_version", lit(Similarity.IvfPqFormatVersion.toDouble)),
+        ("index", ivfpq, "n_cells", col("n_cells").cast("double")),
+        ("index", ivfpq, "recall", col("recall")))
       corpusRows.unionByName(langRows).unionByName(modRows)
         .unionByName(srcRows).unionByName(idxRows)
         .select(col("section"), col("key"), col("metric"),

@@ -630,15 +630,15 @@ object TextOps extends QueryPack {
         .limit(20)
     },
 
-    // ITERATED BPE training (round 10 — t20 is iteration-0's pair
-    // stats; this TRAINS): k rounds of [count adjacent token pairs →
-    // take the most frequent (ties → lexicographic) → merge every
-    // occurrence → re-count], with per-round vocabulary and
-    // compression stats — a15's iterate pattern applied to tokenizer
-    // training. Round 13: trains on the WORD-FREQUENCY table, the
-    // canonical BPE-trainer shape — one corpus scan folds occurrences
-    // into (word type, count), and every per-round pass (pair count,
-    // merge, stats) runs over TYPES weighted by count, so the counts
+    // ITERATED BPE training (t20 is iteration-0's pair stats; this
+    // TRAINS): k rounds of [count adjacent token pairs → take the
+    // most frequent (ties → lexicographic) → merge every occurrence
+    // → re-count], with per-round vocabulary and compression stats —
+    // a15's iterate pattern applied to tokenizer training. It trains
+    // on the WORD-FREQUENCY table, the canonical BPE-trainer shape —
+    // one corpus scan folds occurrences into (word type, count), and
+    // every per-round pass (pair count, merge, stats) runs over
+    // TYPES weighted by count, so the counts
     // are bit-identical to per-occurrence training while per-round
     // cost scales with |vocabulary types| (Heaps' law: ~√corpus),
     // not corpus size. Token sequences ride as strings (tokens
@@ -672,19 +672,8 @@ object TextOps extends QueryPack {
       var cur = spaced
       var stats: DataFrame = null
       for (r <- 1 to Rounds) {
-        val pairs = cur
-          .select(split(trim(col("s")), "  ").as("t"), col("wn"))
-          .select(explode(when(size(col("t")) > 1, expr(
-            "transform(sequence(1, size(t) - 1), i -> concat(element_at(t, i), ' ', element_at(t, i + 1)))"))
-            .otherwise(array().cast("array<string>"))).as("pair"), col("wn"))
-          .groupBy(col("pair")).agg(sum(col("wn")).as("n"))
-        val top1 = pairs.orderBy(col("n").desc, col("pair")).limit(1)
-          .select(col("pair").as("merged_pair"), col("n").as("pair_n"))
-        cur = cur.crossJoin(broadcast(top1))
-          .select(expr(
-            "replace(s, ' ' || replace(merged_pair, ' ', '  ') || ' ', ' ' || replace(merged_pair, ' ', '') || ' ')")
-            .as("s"), col("wn"))
-          .localCheckpoint()
+        val (merged, top1) = bpeRound(cur)
+        cur = merged
         val st = cur
           .select(explode(split(trim(col("s")), "  ")).as("tok"), col("wn"))
           .agg(sum(col("wn")).as("n_tokens"),
@@ -701,19 +690,6 @@ object TextOps extends QueryPack {
         .orderBy(col("round"))
     },
 
-    // Segment-level dedup (the CCNet/RefinedWeb line-dedup step at
-    // fixed-window granularity — this corpus has no newlines, so the
-    // unit is a 10-word window): boilerplate and wholesale copies
-    // show up as segments shared across documents, and a doc whose
-    // segment mass is mostly shared is dropped even when no WHOLE-doc
-    // near-dup fires. The corpus plants both failure modes — a
-    // 20-word boilerplate PREFIX on every 5th doc (prefix, so the
-    // 10-word alignment is preserved across docs) and exact re-uploads
-    // of every 10th. Each segment is hashed to a 16-byte digest
-    // map-side; the shuffle carries (doc_id, digest) pairs and the
-    // dup decision is one digest-keyed count + one digest-keyed join
-    // — segment TEXT never shuffles, so at 100 TB this is the d1
-    // digest-dedup shape fanned out ~5× (segments per doc).
     // Count-Min heavy hitters — the FREQUENCY sketch next to q30's
     // cardinality HLL (Cormode & Muthukrishnan): token occurrences
     // hash into a d×w grid of counters (d independent md5-salted
@@ -738,24 +714,21 @@ object TextOps extends QueryPack {
         .select(explode(Portable.words(col("text"))).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("wn"))
         .localCheckpoint()
-      val grid = types
-        .select(col("wn"), explode(array((0 until CmsDepth).map { r =>
-          struct(lit(r).as("r"),
-            pmod(Portable.hash60(concat(lit(s"cms$r|"), col("w"))),
-              lit(CmsWidth.toLong)).as("b"))
-        }: _*)).as("rb"))
-        .select(col("rb.r").as("r"), col("rb.b").as("b"), col("wn"))
+      // each token's CmsDepth (row r, salted bucket b) cells, with
+      // the `carry` columns alongside
+      def cells(df: DataFrame, carry: String*): DataFrame =
+        df.select(carry.map(col) :+ explode(array((0 until CmsDepth).map { r =>
+            struct(lit(r).as("r"),
+              pmod(Portable.hash60(concat(lit(s"cms$r|"), col("w"))),
+                lit(CmsWidth.toLong)).as("b"))
+          }: _*)).as("rb"): _*)
+          .select(carry.map(col) ++ Seq(col("rb.r").as("r"), col("rb.b").as("b")): _*)
+      val grid = cells(types, "wn")
         .groupBy(col("r"), col("b"))
         .agg(sum(col("wn")).as("bc"))
       val top = types.select(col("w"), col("wn").as("exact"))
         .orderBy(col("exact").desc, col("w")).limit(20)
-      top
-        .select(col("w"), col("exact"), explode(array((0 until CmsDepth).map { r =>
-          struct(lit(r).as("r"),
-            pmod(Portable.hash60(concat(lit(s"cms$r|"), col("w"))),
-              lit(CmsWidth.toLong)).as("b"))
-        }: _*)).as("rb"))
-        .select(col("w"), col("exact"), col("rb.r").as("r"), col("rb.b").as("b"))
+      cells(top, "w", "exact")
         .join(broadcast(grid), Seq("r", "b"))
         .groupBy(col("w"), col("exact"))
         .agg(min(col("bc")).as("est"))
@@ -852,6 +825,19 @@ object TextOps extends QueryPack {
         .orderBy(col("doc_id"), col("eval_id"))
     },
 
+    // Segment-level dedup (the CCNet/RefinedWeb line-dedup step at
+    // fixed-window granularity — this corpus has no newlines, so the
+    // unit is a 10-word window): boilerplate and wholesale copies
+    // show up as segments shared across documents, and a doc whose
+    // segment mass is mostly shared is dropped even when no WHOLE-doc
+    // near-dup fires. The corpus plants both failure modes — a
+    // 20-word boilerplate PREFIX on every 5th doc (prefix, so the
+    // 10-word alignment is preserved across docs) and exact re-uploads
+    // of every 10th. Each segment is hashed to a 16-byte digest
+    // map-side; the shuffle carries (doc_id, digest) pairs and the
+    // dup decision is one digest-keyed count + one digest-keyed join
+    // — segment TEXT never shuffles, so at 100 TB this is the d1
+    // digest-dedup shape fanned out ~5× (segments per doc).
     "t21_segment_dedup" -> { (s, d) =>
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val prefixed = docs.withColumn("text",
@@ -860,13 +846,7 @@ object TextOps extends QueryPack {
       val corpus = prefixed.unionAll(
         prefixed.filter(col("doc_id") % 10 === 0)
           .select((col("doc_id") + 330000L).as("doc_id"), col("text")))
-      val segRows = segmentRows(corpus)
-      val perSeg = segRows.groupBy(col("h"))
-        .agg(countDistinct(col("doc_id")).as("nd"))
-      segRows.join(perSeg, "h")
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_segs"),
-          sum(when(col("nd") >= 2, 1L).otherwise(0L)).as("n_dup_segs"))
+      segmentDupCounts(segmentRows(corpus))
         .withColumn("dup_ratio",
           round(col("n_dup_segs").cast("double") / col("n_segs"), 6))
         .withColumn("keep", col("dup_ratio") <= 0.5)
@@ -934,10 +914,10 @@ object TextOps extends QueryPack {
         .orderBy(col("doc_id"))
     },
 
-    // Tokenizer APPLY (round 13) — the pass t20/t24 train FOR and
-    // nothing ran yet: the learned merge rules segment the actual
-    // corpus, because a tokenizer nobody applies prices nothing. The
-    // merges are re-derived exactly as t24 (same corpus, same
+    // Tokenizer APPLY — the pass t20/t24 train FOR: the learned
+    // merge rules segment the actual corpus, because a tokenizer
+    // nobody applies prices nothing. The merges are re-derived by
+    // t24's own round kernel (same corpus, same
     // count-then-lexicographic tie-break, 3 rounds), then applied per
     // word TYPE — the dictionary trick that makes BPE apply scale:
     // merges touch each distinct word once (vocabulary-sized work),
@@ -961,21 +941,7 @@ object TextOps extends QueryPack {
         .select(col("w"), col("wn"),
           regexp_replace(col("w"), "(.)", " $1 ").as("s"))
         .localCheckpoint()
-      for (_ <- 1 to Rounds) {
-        val pairs = cur
-          .select(split(trim(col("s")), "  ").as("t"), col("wn"))
-          .select(explode(when(size(col("t")) > 1, expr(
-            "transform(sequence(1, size(t) - 1), i -> concat(element_at(t, i), ' ', element_at(t, i + 1)))"))
-            .otherwise(array().cast("array<string>"))).as("pair"), col("wn"))
-          .groupBy(col("pair")).agg(sum(col("wn")).as("n"))
-        val top1 = pairs.orderBy(col("n").desc, col("pair")).limit(1)
-          .select(col("pair").as("merged_pair"))
-        cur = cur.crossJoin(broadcast(top1))
-          .select(col("w"), col("wn"), expr(
-            "replace(s, ' ' || replace(merged_pair, ' ', '  ') || ' ', ' ' || replace(merged_pair, ' ', '') || ' ')")
-            .as("s"))
-          .localCheckpoint()
-      }
+      for (_ <- 1 to Rounds) cur = bpeRound(cur)._1
       val tokPerType = cur.select(col("w"),
         size(split(trim(col("s")), "  ")).cast("long").as("toks"))
       val perDoc = docs
@@ -1079,17 +1045,9 @@ object TextOps extends QueryPack {
     * STATELESS given the (static) eval set, so the streamed union of
     * per-batch results equals the batch table exactly — spec-proved. */
   private[graft] def contamSpans(docSlice: DataFrame, evalWins: DataFrame): DataFrame = {
-    val w = ContamW
     val wins = Dedup.spanWindows(
       docSlice.select(col("doc_id"), Portable.words(col("text")).as("w")))
-    val wOrd = Window.partitionBy(col("doc_id")).orderBy(col("i"))
-    val spans = wins.join(broadcast(evalWins), "h")
-      .withColumn("newspan",
-        when(col("i") - lag(col("i"), 1).over(wOrd) > w, 1L).otherwise(0L))
-      .withColumn("grp", sum(col("newspan")).over(wOrd))
-      .groupBy(col("doc_id"), col("n_words"), col("grp"))
-      .agg(min(col("i")).as("s"), (max(col("i")) + (w - 1)).as("e"),
-        count(lit(1)).as("nw"))
+    val spans = Dedup.spanRuns(wins.join(broadcast(evalWins), "h"), "doc_id", "n_words")
     spans.groupBy(col("doc_id"), col("n_words"))
       .agg(sum(col("nw")).as("n_contam_windows"),
         count(lit(1)).as("n_spans"),
@@ -1218,6 +1176,44 @@ object TextOps extends QueryPack {
         s"transform(sequence(0, cast(ceil(size(w) / $SegLen.0) as int) - 1), " +
           s"i -> concat_ws(' ', slice(w, i * $SegLen + 1, $SegLen)))")).as("seg"))
       .select(col("doc_id"), Portable.md5bin(col("seg")).as("h"))
+
+  /** t21's per-doc segment counts over [[segmentRows]] output:
+    * n_segs and n_dup_segs, a segment being dup when ≥ 2 docs carry
+    * its digest. Shared by t21 and p7's segment stage; each applies
+    * its own threshold. */
+  private[queries] def segmentDupCounts(segRows: DataFrame): DataFrame = {
+    val perSeg = segRows.groupBy(col("h"))
+      .agg(countDistinct(col("doc_id")).as("nd"))
+    segRows.join(perSeg, "h")
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_segs"),
+        sum(when(col("nd") >= 2, 1L).otherwise(0L)).as("n_dup_segs"))
+  }
+
+  /** One BPE merge round over a word-type table (`s`: the type's
+    * tokens, double-space-joined with a space at each edge; `wn`: its
+    * occurrence count; any other columns ride along unchanged):
+    * count adjacent token pairs weighted by `wn`, take the top pair
+    * (count, then lexicographic), apply it with one broadcast
+    * `replace`, and localCheckpoint so round k's plan does not re-run
+    * rounds 1..k-1. Returns the merged table and the 1-row top pair
+    * (merged_pair, pair_n). Shared by t24 and t30. */
+  private def bpeRound(cur: DataFrame): (DataFrame, DataFrame) = {
+    val pairs = cur
+      .select(split(trim(col("s")), "  ").as("t"), col("wn"))
+      .select(explode(when(size(col("t")) > 1, expr(
+        "transform(sequence(1, size(t) - 1), i -> concat(element_at(t, i), ' ', element_at(t, i + 1)))"))
+        .otherwise(array().cast("array<string>"))).as("pair"), col("wn"))
+      .groupBy(col("pair")).agg(sum(col("wn")).as("n"))
+    val top1 = pairs.orderBy(col("n").desc, col("pair")).limit(1)
+      .select(col("pair").as("merged_pair"), col("n").as("pair_n"))
+    val merge = expr(
+      "replace(s, ' ' || replace(merged_pair, ' ', '  ') || ' ', ' ' || replace(merged_pair, ' ', '') || ' ')")
+    val merged = cur.crossJoin(broadcast(top1))
+      .select(cur.columns.toSeq.map(c => if (c == "s") merge.as("s") else col(c)): _*)
+      .localCheckpoint()
+    (merged, top1)
+  }
 
   /** t29/t32's planted corpus: a 10-word (= exactly one [[SegLen]]
     * segment, so segment alignment is identical across carriers)

@@ -440,21 +440,32 @@ object DataPrep {
   def segmentDedupStep(store: DataFrame, batch: DataFrame,
                        maxDupRatio: Double = 0.5): (DataFrame, DataFrame) = {
     val segs = graft.queries.TextOps.segmentRows(batch)
-    val firstDoc = segs.groupBy(col("h")).agg(min(col("doc_id")).as("first_doc"))
-    val report = segs
-      .join(store.select(col("h"), lit(true).as("in_store")), Seq("h"), "left")
-      .join(firstDoc, Seq("h"))
-      .withColumn("is_dup",
-        coalesce(col("in_store"), lit(false)) || col("first_doc") < col("doc_id"))
+    val (marked, added) = firstArrival(segs, store)
+    val report = marked
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_segs"),
         sum(when(col("is_dup"), 1L).otherwise(0L)).as("n_dup_segs"))
       .withColumn("dup_ratio",
         round(col("n_dup_segs").cast("double") / col("n_segs"), 6))
       .withColumn("keep", col("dup_ratio") <= maxDupRatio)
-    val added = segs.select(col("h")).distinct()
-      .join(store, Seq("h"), "left_anti")
     (report, added)
+  }
+
+  /** The first-arrival rule of [[segmentDedupStep]] and
+    * [[spanDedupStep]] over one batch's digest rows (doc_id, h, …):
+    * a row is dup (`is_dup`) when the store already holds its digest
+    * or a smaller doc_id in the same batch carries it. Returns the
+    * marked rows and the digests the batch adds to the store. */
+  private def firstArrival(units: DataFrame, store: DataFrame): (DataFrame, DataFrame) = {
+    val firstDoc = units.groupBy(col("h")).agg(min(col("doc_id")).as("first_doc"))
+    val marked = units
+      .join(store.select(col("h"), lit(true).as("in_store")), Seq("h"), "left")
+      .join(firstDoc, Seq("h"))
+      .withColumn("is_dup",
+        coalesce(col("in_store"), lit(false)) || col("first_doc") < col("doc_id"))
+    val added = units.select(col("h")).distinct()
+      .join(store, Seq("h"), "left_anti")
+    (marked, added)
   }
 
   /** One live curate-chain ROUTING step (round 12 — the r10 verdict's
@@ -502,21 +513,8 @@ object DataPrep {
     import graft.queries.Dedup
     val wins = Dedup.spanWindows(
       batch.select(col("doc_id"), Portable.words(col("text")).as("w")))
-    val firstDoc = wins.groupBy(col("h")).agg(min(col("doc_id")).as("first_doc"))
-    val marked = wins
-      .join(store.select(col("h"), lit(true).as("in_store")), Seq("h"), "left")
-      .join(firstDoc, Seq("h"))
-      .withColumn("is_dup",
-        coalesce(col("in_store"), lit(false)) || col("first_doc") < col("doc_id"))
-    val wOrd = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("i"))
-    val spans = marked.filter(col("is_dup"))
-      .withColumn("newspan",
-        when(col("i") - lag(col("i"), 1).over(wOrd) > Dedup.SpanW, 1L).otherwise(0L))
-      .withColumn("grp", sum(col("newspan")).over(wOrd))
-      .groupBy(col("doc_id"), col("grp"))
-      .agg(min(col("i")).as("s"), (max(col("i")) + (Dedup.SpanW - 1)).as("e"),
-        count(lit(1)).as("nw"))
+    val (marked, added) = firstArrival(wins, store)
+    val spans = Dedup.spanRuns(marked.filter(col("is_dup")), "doc_id")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_spans"), sum(col("nw")).as("n_dup_windows"),
         sum(col("e") - col("s") + 1).as("covered_words"))
@@ -526,8 +524,6 @@ object DataPrep {
       .withColumn("dup_frac",
         round(col("covered_words").cast("double") / col("n_words"), 6))
       .withColumn("keep", col("dup_frac") <= maxDupFrac)
-    val added = wins.select(col("h")).distinct()
-      .join(store, Seq("h"), "left_anti")
     (report, added)
   }
 }

@@ -45,6 +45,13 @@ class DslSpec extends SparkSuite {
     assert(kept.count() === distinctDigests)
     // schema passes through untouched
     assert(kept.columns.toSeq === Seq("doc_id", "text"))
+    // custom column names keep the same ids under the caller's schema
+    val keptRenamed = corpus.select(col("doc_id").as("id"), col("text").as("body"))
+      .dedupExact("id", "body")
+    assert(keptRenamed.columns.toSeq === Seq("id", "body"))
+    def ids(df: org.apache.spark.sql.DataFrame, c: String) =
+      df.select(col(c)).collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids(keptRenamed, "id") === ids(kept, "doc_id"))
   }
 
   test("nearDupPairs surfaces every planted near-identical copy") {

@@ -1062,6 +1062,41 @@ class StreamingSpec extends SparkSuite {
     assert(reports(1)(3L) === ((0L, 0L, 0.0, true)))
   }
 
+  test("both dedup steps keep the first arrival of a same-batch duplicate") {
+    import spark.implicits._
+    import graft.streaming.DataPrep
+    // two docs with identical 24-word text in ONE batch, empty store:
+    // the lower id is the first arrival and stays clean, the other
+    // flags in full
+    val text = (1 to 24).map(i => s"same$i").mkString(" ")
+    val batch = Seq((10L, text), (11L, text)).toDF("doc_id", "text")
+    val empty = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("h",
+          org.apache.spark.sql.types.BinaryType))))
+    def verdicts(report: org.apache.spark.sql.DataFrame, frac: String) =
+      report.collect().map(r =>
+        r.getAs[Long]("doc_id") -> ((r.getAs[Double](frac), r.getAs[Boolean]("keep")))).toMap
+    def digests(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.getAs[Array[Byte]]("h").toSeq).toSeq
+
+    val (segReport, segAdded) = DataPrep.segmentDedupStep(empty, batch)
+    assert(verdicts(segReport, "dup_ratio") === Map(10L -> ((0.0, true)), 11L -> ((1.0, false))))
+    val segDigests = digests(segAdded)
+    assert(segDigests.distinct.length === segDigests.length)
+    assert(segDigests.toSet === digests(
+      graft.queries.TextOps.segmentRows(batch.filter(col("doc_id") === 10L))).toSet)
+
+    val (spanReport, spanAdded) = DataPrep.spanDedupStep(empty, batch)
+    assert(verdicts(spanReport, "dup_frac") === Map(10L -> ((0.0, true)), 11L -> ((1.0, false))))
+    val spanDigests = digests(spanAdded)
+    assert(spanDigests.distinct.length === spanDigests.length)
+    assert(spanDigests.toSet === digests(graft.queries.Dedup.spanWindows(
+      batch.filter(col("doc_id") === 10L)
+        .select(col("doc_id"), graft.functions.Portable.words(col("text")).as("w")))).toSet)
+  }
+
   test("the drift monitor riding the curate ingest path equals batch p6") {
     import graft.streaming.DataPrep
     val topic = tempDir("topic_cm")

@@ -45,9 +45,13 @@ python3 tools/plan_discipline.py /tmp/gate_plans.md
 # Plan drift: the `## <query>` sections whose operator tree (ids
 # stripped) differs from the committed PLANS.md. A change that means
 # to leave execution alone must list none; one that moves a plan on
-# purpose regenerates PLANS.md and says why in CHANGES.md.
-python3 tools/plan_tree_diff.py PLANS.md /tmp/gate_plans.md \
-  || echo "plan trees differ from PLANS.md (listed above)"
+# purpose regenerates PLANS.md and says why in CHANGES.md. Any drift
+# fails the gate.
+if ! python3 tools/plan_tree_diff.py PLANS.md /tmp/gate_plans.md; then
+  echo "plan trees differ from PLANS.md (listed above): regenerate" \
+    "PLANS.md with graft.Explain and explain the move in CHANGES.md" >&2
+  exit 1
+fi
 
 # Size watch (advisory, fails nothing): src/main total and code
 # lines, the figure ROADMAP aim 2 tracks.
