@@ -102,11 +102,15 @@ object MediaDecode {
     throw new IllegalArgumentException("no JDK WAVE writer")
   }
 
-  private val jpegWriter =
-    new ThreadLocal[javax.imageio.ImageWriter] {
-      override def initialValue(): javax.imageio.ImageWriter =
-        javax.imageio.ImageIO.getImageWritersByFormatName("jpeg").next()
-    }
+  private val jpegWriter = ThreadLocal.withInitial[javax.imageio.ImageWriter](
+    () => javax.imageio.ImageIO.getImageWritersByFormatName("jpeg").next())
+
+  // per-thread GIF codec pair, `reset()` between members, so no
+  // member pays an ImageIO registry scan
+  private val gifReader = ThreadLocal.withInitial[javax.imageio.ImageReader](
+    () => javax.imageio.ImageIO.getImageReadersByFormatName("gif").next())
+  private val gifWriter = ThreadLocal.withInitial[javax.imageio.ImageWriter](
+    () => javax.imageio.ImageIO.getImageWritersByFormatName("gif").next())
 
   case class Media(docId: Long, payload: Array[Byte])
 
@@ -848,7 +852,7 @@ object MediaDecode {
   def plantedGifBytes(docId: Long): Array[Byte] = {
     val (w, h) = (PlantW, PlantH)
     val bos = new java.io.ByteArrayOutputStream()
-    val wr = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
+    val wr = gifWriter.get()
     // interlace OFF: the JDK pair mis-round-trips INTERLACED frames
     // shorter than 5 rows (probed: 8×2/8×3/8×4 keep only row 0 while
     // 8×5+ survive; MODE_DISABLED round-trips 16/16) — and a frame
@@ -857,29 +861,31 @@ object MediaDecode {
     val p = wr.getDefaultWriteParam
     p.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DISABLED)
     val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-    wr.setOutput(ios)
-    wr.prepareWriteSequence(null)
-    var f = 0
-    while (f < PlantFrames) {
-      val colors = (0 until w * h).map { j =>
-        val r = java.lang.Math.floorMod(docId * 5 + f * 29 + j * 37, 256L).toInt
-        val g = java.lang.Math.floorMod(docId * 13 + f * 31 + j * 41, 256L).toInt
-        val b = java.lang.Math.floorMod(docId * 9 + f * 43 + j * 11, 256L).toInt
-        (r << 16) | (g << 8) | b
+    try {
+      wr.setOutput(ios)
+      wr.prepareWriteSequence(null)
+      var f = 0
+      while (f < PlantFrames) {
+        val colors = (0 until w * h).map { j =>
+          val r = java.lang.Math.floorMod(docId * 5 + f * 29 + j * 37, 256L).toInt
+          val g = java.lang.Math.floorMod(docId * 13 + f * 31 + j * 41, 256L).toInt
+          val b = java.lang.Math.floorMod(docId * 9 + f * 43 + j * 11, 256L).toInt
+          (r << 16) | (g << 8) | b
+        }
+        val palette = colors.distinct
+        val cm = new java.awt.image.IndexColorModel(8, palette.size,
+          palette.map(c => ((c >> 16) & 0xff).toByte).toArray,
+          palette.map(c => ((c >> 8) & 0xff).toByte).toArray,
+          palette.map(c => (c & 0xff).toByte).toArray)
+        val img = new java.awt.image.BufferedImage(w, h,
+          java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, cm)
+        var j = 0
+        while (j < w * h) { img.setRGB(j % w, j / w, colors(j)); j += 1 }
+        wr.writeToSequence(new javax.imageio.IIOImage(img, null, null), p)
+        f += 1
       }
-      val palette = colors.distinct
-      val cm = new java.awt.image.IndexColorModel(8, palette.size,
-        palette.map(c => ((c >> 16) & 0xff).toByte).toArray,
-        palette.map(c => ((c >> 8) & 0xff).toByte).toArray,
-        palette.map(c => (c & 0xff).toByte).toArray)
-      val img = new java.awt.image.BufferedImage(w, h,
-        java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, cm)
-      var j = 0
-      while (j < w * h) { img.setRGB(j % w, j / w, colors(j)); j += 1 }
-      wr.writeToSequence(new javax.imageio.IIOImage(img, null, null), p)
-      f += 1
-    }
-    wr.endWriteSequence(); ios.close(); wr.dispose()
+      wr.endWriteSequence()
+    } finally { ios.close(); wr.reset() }
     bos.toByteArray
   }
 
@@ -891,7 +897,7 @@ object MediaDecode {
   def parseGif(payload: Array[Byte]): MediaStats = {
     if (payload == null || payload.length < 6 || !tag(payload, 0, "GIF8")) failed("unknown")
     else try {
-      val rd = javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
+      val rd = gifReader.get()
       val iis = javax.imageio.ImageIO.createImageInputStream(
         new java.io.ByteArrayInputStream(payload))
       try {
@@ -908,7 +914,7 @@ object MediaDecode {
           }
           if (fold.nPix == 0) failed("gif") else fold.stats("gif", n.toLong)
         }
-      } finally { rd.dispose(); iis.close() }
+      } finally { rd.reset(); iis.close() }
     } catch { case _: Exception => failed("gif") }
   }
 

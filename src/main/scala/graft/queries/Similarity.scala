@@ -1658,8 +1658,8 @@ object Similarity extends QueryPack with IvfPq {
     * batch. `broadcastIndex = true` (the live serve): the INDEX is the
     * broadcast side, so an unbounded probe stream flows map-side with
     * no shuffle and no state store — each micro-batch serves
-    * independently (the spec drives this through foreachBatch, where
-    * the per-probe rank window runs on batch data). */
+    * independently (the spec drives this through a micro-batch
+    * driver, where the per-probe rank window runs on batch data). */
   private[graft] def mipsServeProbes(index: DataFrame, probeVecs: DataFrame,
                                      geo: AnnGeometry = Geo, k: Int = K,
                                      broadcastIndex: Boolean = false): DataFrame = {

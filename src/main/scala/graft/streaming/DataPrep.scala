@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.functions.Portable
 
 /** Incremental training-data curation: the batch prep pipeline (p1 —
@@ -20,39 +20,24 @@ import graft.functions.Portable
   */
 object DataPrep {
 
-  /** Does `dir` exist on ITS filesystem? Resolved through the Hadoop
-    * FS API so durable-store paths work identically on local disk
-    * (tests, local mode) and HDFS/S3 (a cluster) — a java.io.File
-    * check would report a remote store absent forever and silently
-    * empty the dedup history every micro-batch. */
-  private[graft] def pathExists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** Curate a message stream (shape of `Subscriber.subscribe`, with
     * the document text as the payload) into a parquet corpus dir. */
   def curate(msgs: DataFrame, outDir: String, checkpointDir: String,
              minQuality: Double = 0.5,
              watermarkDelay: String = "10 minutes"): StreamingQuery =
-    graft.queries.Pipeline.withQuality(
-      msgs.select(
-          col("uuid").cast("long").as("doc_id"),
-          col("payload").cast("string").as("text"),
-          col("ts"))
-        .withColumn("h", Portable.md5bin(Portable.normText(col("text"))))
-        .withWatermark("ts", watermarkDelay)
-        .dropDuplicatesWithinWatermark("h"))
-      .filter(col("quality") >= minQuality)
-      .select(col("doc_id"), col("h"), col("n_words"), col("quality"),
-        col("text"), col("ts"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MicroBatch.start(
+      graft.queries.Pipeline.withQuality(
+        msgs.select(
+            col("uuid").cast("long").as("doc_id"),
+            col("payload").cast("string").as("text"),
+            col("ts"))
+          .withColumn("h", Portable.md5bin(Portable.normText(col("text"))))
+          .withWatermark("ts", watermarkDelay)
+          .dropDuplicatesWithinWatermark("h"))
+        .filter(col("quality") >= minQuality)
+        .select(col("doc_id"), col("h"), col("n_words"), col("quality"),
+          col("text"), col("ts")),
+      checkpointDir)(_.format("parquet").option("path", outDir))
 
   /** [[curate]] with p6's drift monitor riding the SAME ingest stream
     * under ONE checkpoint: each micro-batch writes its (source,
@@ -74,182 +59,67 @@ object DataPrep {
     * dedup EXACT over all history (16 bytes/doc of plain parquet, vs
     * [[curate]]'s watermark-bounded engine state) at the cost of one
     * digest-store scan per micro-batch — digests only, never text.
-    * All three writes are idempotent per micro-batch
-    * (`<dir>/micro_batch_id=N` overwrite, the drainWithDlq pattern),
+    * All three writes are idempotent per micro-batch ([[MicroBatch]]),
     * so a crash between them replays cleanly, and the cells dir is
     * append-only partial aggregates folded on read by [[ingestDrift]]
-    * — (sources × days) rows per micro-batch, no read-modify-write. */
+    * — (sources × days) rows per micro-batch, no read-modify-write.
+    *
+    * With `evalWins` (the frozen eval window set) this is the complete
+    * live curate chain under the one checkpoint: every
+    * quality-passing arrival is also routed code vs prose and screened
+    * span-wise against the eval set by the same [[routeStep]] the
+    * batch tables use. Docs whose contamination coverage demands
+    * drop_doc never reach the corpus; redact_spans survivors carry
+    * their action so the downstream redaction job knows its work
+    * items; output is laid out by mix bucket, the layout the p5
+    * mixture builder reads. Without `evalWins` the write is the plain
+    * quality-gated shape. */
   def curateMonitored(msgs: DataFrame, outDir: String, cellsDir: String,
                       hStoreDir: String, checkpointDir: String,
                       minQuality: Double = 0.5,
                       sourceCol: Column = col("partition_key"),
                       evalWins: Option[DataFrame] = None): StreamingQuery =
-    graft.queries.Pipeline.withQuality(
-      msgs.select(
-          col("uuid").cast("long").as("doc_id"),
-          col("payload").cast("string").as("text"),
-          sourceCol.cast("string").as("source"),
-          col("ts"))
-        .withColumn("h", Portable.md5bin(Portable.normText(col("text")))))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.cache()
-        try {
-          graft.queries.Pipeline.qualityCells(
-              b.select(col("doc_id"), col("text"), col("source")))
-            .write.mode("overwrite").parquet(s"$cellsDir/micro_batch_id=$batchId")
-          // the h column changed md5hex (StringType) -> md5bin
-          // (BinaryType) in round 12: a store written by the old
-          // version must be MIGRATED, not coerced. The migration
-          // rewrites the legacy partitions ON DISK once (unhex, 16-byte
-          // binary) so every later batch — which will mix this run's
-          // binary partitions into the same read — keeps a mergeable
-          // store. A migration a crash interrupted resumes first (the
-          // marker outlives the crash; migration is idempotent per
-          // partition); an unmarked legacy store surfaces as the
-          // shared reader's non-BINARY rejection and is migrated then.
-          if (migrationMarker(spark, hStoreDir).exists(_._2))
-            migrateLegacyHStore(spark, hStoreDir)
-          val store =
-            try digestStore(spark, hStoreDir, "h", batchId)
-            catch {
-              case _: IllegalStateException
-                  if spark.read.parquet(hStoreDir).schema("h").dataType ==
-                    org.apache.spark.sql.types.StringType =>
-                migrateLegacyHStore(spark, hStoreDir)
-                digestStore(spark, hStoreDir, "h", batchId)
-            }
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("h")).orderBy(col("ts"), col("doc_id"))
-          val fresh = b
+    MicroBatch.each(
+      graft.queries.Pipeline.withQuality(
+        msgs.select(
+            col("uuid").cast("long").as("doc_id"),
+            col("payload").cast("string").as("text"),
+            sourceCol.cast("string").as("source"),
+            col("ts"))
+          .withColumn("h", Portable.md5bin(Portable.normText(col("text"))))),
+      checkpointDir) { (batch, batchId) =>
+      MicroBatch.cached(batch) { b =>
+        MicroBatch.write(graft.queries.Pipeline.qualityCells(
+          b.select(col("doc_id"), col("text"), col("source"))), cellsDir, batchId)
+        val store = MicroBatch.digestStore(b.sparkSession, hStoreDir, "h", batchId)
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("h")).orderBy(col("ts"), col("doc_id"))
+        MicroBatch.cached(b
             .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
-            .join(store, Seq("h"), "left_anti")
-            .cache()
-          try {
-            val qualified = fresh.filter(col("quality") >= minQuality)
-            // round 12 — the COMPLETE live curate chain under the one
-            // checkpoint: when the caller supplies the frozen eval
-            // window set, every quality-passing arrival is also
-            // (a) routed code vs prose (t25's classifier) and
-            // (b) screened span-wise against the eval set (t26's
-            // detector) by the SAME routeStep the batch tables use.
-            // Docs whose contamination coverage demands drop_doc never
-            // reach the corpus; redact_spans survivors carry their
-            // action so the downstream redaction job knows its work
-            // items; output is laid out by mix bucket — the layout
-            // the p5 mixture builder reads. Without evalWins the
-            // write is the original quality-gated shape, unchanged.
-            evalWins match {
-              case Some(ev) =>
-                val route = routeStep(
-                  qualified.select(col("doc_id"), col("text")), ev)
-                  .select(col("doc_id"), col("bucket"), col("action"))
-                qualified.join(route, Seq("doc_id"))
-                  .filter(col("action") =!= "drop_doc")
-                  .select(col("doc_id"), col("h"), col("n_words"),
-                    col("quality"), col("text"), col("ts"),
-                    col("bucket"), col("action"))
-                  .write.mode("overwrite").partitionBy("bucket")
-                  .parquet(s"$outDir/micro_batch_id=$batchId")
-              case None =>
-                qualified
-                  .select(col("doc_id"), col("h"), col("n_words"),
-                    col("quality"), col("text"), col("ts"))
-                  .write.mode("overwrite")
-                  .parquet(s"$outDir/micro_batch_id=$batchId")
-            }
-            // the store records every digest SEEN — quality-rejected
-            // docs included, so a re-upload of a rejected doc never
-            // reaches the filter twice
-            fresh.select(col("h"))
-              .write.mode("overwrite").parquet(s"$hStoreDir/micro_batch_id=$batchId")
-          } finally fresh.unpersist()
-        } finally b.unpersist()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** The digests a durable store holds for micro-batch `batchId`: the
-    * `keyCol` column of every partition EXCEPT this batch's own — on
-    * crash-replay the failed attempt's partial write is already on
-    * disk, and anti-joining against it would empty the batch, which
-    * the partition overwrite would then erase instead of replaying —
-    * or an empty BINARY frame when no store exists yet. The existence
-    * check (not just the catch) keeps Spark's FileStreamSink metadata
-    * probe from logging a WARN stack trace on the first micro-batch;
-    * it is Hadoop FS, not java.io.File, because the store is HDFS/S3
-    * on a cluster, where a local-file check would report absent
-    * forever and silently empty the store every batch. The catch
-    * covers an exists-but-empty dir, which throws at schema
-    * inference. A key column of any type but BINARY is a corruption,
-    * named loudly: a string-vs-binary mismatch would make every dedup
-    * join against the store silently miss, re-curating every
-    * previously-seen doc. Shared by [[curateMonitored]] and
-    * [[crawlCurateStream]]. */
-  private def digestStore(spark: SparkSession, dir: String, keyCol: String,
-                          batchId: Long): DataFrame = {
-    def empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(keyCol,
-          org.apache.spark.sql.types.BinaryType))))
-    if (!pathExists(spark, dir)) empty
-    else try {
-      val raw = spark.read.parquet(dir).filter(col("micro_batch_id") =!= batchId)
-      raw.schema(keyCol).dataType match {
-        case org.apache.spark.sql.types.BinaryType => raw.select(col(keyCol))
-        case other => throw new IllegalStateException(
-          s"[graft] digest store at $dir has $keyCol: $other; expected BINARY (md5bin)")
-      }
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException => empty
-    }
-  }
-
-  /** (marker path, exists) for an in-progress legacy-store migration;
-    * None when the store dir itself doesn't exist yet. */
-  private def migrationMarker(spark: SparkSession,
-                              hStoreDir: String): Option[(org.apache.hadoop.fs.Path, Boolean)] = {
-    val root = new org.apache.hadoop.fs.Path(hStoreDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) None
-    else {
-      val m = new org.apache.hadoop.fs.Path(root, "_graft_hstore_migrating")
-      Some((m, fs.exists(m)))
-    }
-  }
-
-  /** ONE-TIME on-disk migration of a legacy (pre-round-12 md5hex)
-    * digest store: every `micro_batch_id=` partition whose h column
-    * is StringType is rewritten as 16-byte binary (`unhex`) in place,
-    * under a marker file so a crash mid-migration resumes instead of
-    * leaving a half-string half-binary store (which would fail every
-    * later merged read). Idempotent per partition — already-binary
-    * partitions are untouched. Cost: one read+write of the legacy
-    * partitions, once per store lifetime. */
-  private def migrateLegacyHStore(spark: SparkSession, hStoreDir: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(hStoreDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(root, "_graft_hstore_migrating")
-    if (!fs.exists(marker)) fs.create(marker).close()
-    fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("micro_batch_id="))
-      .foreach { st =>
-        val part = spark.read.parquet(st.getPath.toString)
-        if (part.schema("h").dataType == org.apache.spark.sql.types.StringType) {
-          val tmp = new org.apache.hadoop.fs.Path(root, s".migrating_${st.getPath.getName}")
-          part.select(unhex(col("h")).as("h")).write.mode("overwrite").parquet(tmp.toString)
-          fs.delete(st.getPath, true)
-          if (!fs.rename(tmp, st.getPath))
-            throw new IllegalStateException(
-              s"[graft] digest-store migration could not rename $tmp to ${st.getPath}")
+            .join(store, Seq("h"), "left_anti")) { fresh =>
+          val qualified = fresh.filter(col("quality") >= minQuality)
+          evalWins match {
+            case Some(ev) =>
+              val route = routeStep(
+                qualified.select(col("doc_id"), col("text")), ev)
+                .select(col("doc_id"), col("bucket"), col("action"))
+              MicroBatch.write(qualified.join(route, Seq("doc_id"))
+                .filter(col("action") =!= "drop_doc")
+                .select(col("doc_id"), col("h"), col("n_words"),
+                  col("quality"), col("text"), col("ts"),
+                  col("bucket"), col("action")), outDir, batchId, "bucket")
+            case None =>
+              MicroBatch.write(qualified
+                .select(col("doc_id"), col("h"), col("n_words"),
+                  col("quality"), col("text"), col("ts")), outDir, batchId)
+          }
+          // the store records every digest SEEN — quality-rejected
+          // docs included, so a re-upload of a rejected doc never
+          // reaches the filter twice
+          MicroBatch.write(fresh.select(col("h")), hStoreDir, batchId)
         }
       }
-    fs.delete(marker, false)
-    System.err.println(s"[graft] curateMonitored migrated legacy md5hex digest store at $hStoreDir to md5bin (16-byte binary)")
-  }
+    }
 
   /** The drift table over a [[curateMonitored]] cells dir: fold the
     * per-micro-batch partial cells (associative sums) and apply p6's
@@ -263,15 +133,14 @@ object DataPrep {
         .agg(sum(col("n_docs")).as("n_docs"),
           sum(col("s1")).as("s1"), sum(col("s2")).as("s2")))
 
-  /** p11's media curate cascade over a LIVE subscription (round 13):
-    * each micro-batch of opaque binary arrivals is routed by magic
+  /** p11's media curate cascade over a LIVE subscription: each
+    * micro-batch of opaque binary arrivals is routed by magic
     * bytes alone, decoded by the matching real codec, and gated by
     * the same production media-QA rules as the batch query — the
     * identical [[graft.dsl.GraftDataFrameOps.mediaCurate]] code
     * path (p11's [[graft.queries.Pipeline.mediaDisposition]] kernel),
-    * so streamed ≡ batch by construction. Two idempotent
-    * writes per micro-batch (the drainWithDlq pattern — overwrite
-    * under `micro_batch_id=N`, crash-replay safe): the per-doc
+    * so streamed ≡ batch by construction. Two idempotent writes per
+    * micro-batch ([[MicroBatch]], crash-replay safe): the per-doc
     * disposition table to `outDir`, and the mergeable per
     * (modality, disposition) count cells to `cellsDir`, folded on
     * read by [[mediaYield]]. Payload bytes stay inside the
@@ -283,25 +152,16 @@ object DataPrep {
                         silentRms: Double = 8000.0,
                         clippedPeak: Double = 31000.0,
                         staticMotion: Double = 18.0): StreamingQuery =
-    msgs.select(col("uuid").cast("long").as("doc_id"), col("payload"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        import graft.dsl._
-        val disp = batch.toDF()
-          .mediaCurate("doc_id", "payload", darkBrightness, silentRms,
-            clippedPeak, staticMotion)
-          .cache()
-        try {
-          disp.write.mode("overwrite").parquet(s"$outDir/micro_batch_id=$batchId")
-          disp.groupBy(col("modality"), col("disposition"))
-            .agg(count(lit(1)).as("n_docs"))
-            .write.mode("overwrite").parquet(s"$cellsDir/micro_batch_id=$batchId")
-        } finally disp.unpersist()
+    MicroBatch.each(msgs.select(col("uuid").cast("long").as("doc_id"), col("payload")),
+        checkpointDir) { (batch, batchId) =>
+      import graft.dsl._
+      MicroBatch.cached(batch.mediaCurate("doc_id", "payload", darkBrightness,
+          silentRms, clippedPeak, staticMotion)) { disp =>
+        MicroBatch.write(disp, outDir, batchId)
+        MicroBatch.write(disp.groupBy(col("modality"), col("disposition"))
+          .agg(count(lit(1)).as("n_docs")), cellsDir, batchId)
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    }
 
   /** The LIVE form of the p13 crawl curate cascade: each micro-batch
     * of raw `.warc.gz` members (on the TLV binary envelope — real
@@ -321,19 +181,21 @@ object DataPrep {
     * identical, exactly one keeper per duplicate group, same keep
     * count — spec-proved under the sharded publisher's arbitrary
     * file order).
-    * Round 14: the decode now surfaces WARC-Target-URI, a published
-    * per-host template inventory strips site chrome before the gates
-    * (t32's kernel — mining stays a batch artifact, a micro-batch
-    * sample can't see corpus-wide df shares), and the url-dedup gate
-    * (d7's canonicalizer) runs ahead of the content gate with its own
+    *
+    * The decode surfaces WARC-Target-URI, a published per-host
+    * template inventory strips site chrome before the gates (t32's
+    * kernel — mining stays a batch artifact, a micro-batch sample
+    * can't see corpus-wide df shares), and the url-dedup gate (d7's
+    * canonicalizer) runs ahead of the content gate with its own
     * durable digest store. Both stores record every digest SEEN
     * (gate-failed docs included: batch dedup ranks over the whole
     * corpus, so the live form must too); writes are idempotent per
-    * micro-batch. Digests are 16 bytes; markup never leaves the
-    * decode map pass.
-    * Round 15: the cascade decontaminates — every micro-batch is
-    * screened span-wise against `evalDigests`, the SAME published
-    * eval-excerpt artifact the batch query derives
+    * micro-batch ([[MicroBatch]]). Digests are 16 bytes; markup never
+    * leaves the decode map pass.
+    *
+    * The cascade decontaminates: every micro-batch is screened
+    * span-wise against `evalDigests`, the SAME published eval-excerpt
+    * artifact the batch query derives
     * ([[graft.queries.Pipeline.crawlEvalDigests]]), through the SAME
     * detector ([[graft.queries.Pipeline.crawlContam]] — t26's
     * kernel). The stage is stateless given the frozen artifact, so
@@ -343,68 +205,58 @@ object DataPrep {
                         uStoreDir: String, inventory: DataFrame,
                         evalDigests: DataFrame,
                         checkpointDir: String): StreamingQuery =
-    msgs.select(col("uuid").cast("long").as("doc_id"), col("payload"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        // the template inventory is a PUBLISHED artifact (the last
-        // batch mining pass), not per-micro-batch state: a micro-batch
-        // sample cannot see corpus-wide df shares, the same
-        // built-once/served-many shape as the ANN index
-        val scored = graft.queries.Pipeline.crawlGates(
-            graft.queries.Pipeline.crawlStrip(
-              graft.queries.Pipeline.crawlDecode(
-                batch.select(col("doc_id"), col("payload"))
-                  .as[(Long, Array[Byte])]),
-              inventory))
-          .cache()
-        try {
-          val hW = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("h")).orderBy(col("doc_id"))
-          val uW = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("uh")).orderBy(col("doc_id"))
-          // dedup ranks over the DECONTAMINATED corpus, matching the
-          // batch windows: a decontam-dropped doc neither counts in
-          // the in-batch ranks nor lands in the digest stores, so it
-          // can't claim canonical status for a group whose clean
-          // re-crawl should land (every OTHER disposition's digests
-          // are still recorded — batch dedup ranks over the whole
-          // gate-failed corpus, so the live form must too)
-          val withContam = scored
+    MicroBatch.each(msgs.select(col("uuid").cast("long").as("doc_id"), col("payload")),
+        checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      // the template inventory is a PUBLISHED artifact (the last
+      // batch mining pass), not per-micro-batch state: a micro-batch
+      // sample cannot see corpus-wide df shares, the same
+      // built-once/served-many shape as the ANN index
+      MicroBatch.cached(graft.queries.Pipeline.crawlGates(
+          graft.queries.Pipeline.crawlStrip(
+            graft.queries.Pipeline.crawlDecode(
+              batch.select(col("doc_id"), col("payload"))
+                .as[(Long, Array[Byte])]),
+            inventory))) { scored =>
+        val hW = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("h")).orderBy(col("doc_id"))
+        val uW = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("uh")).orderBy(col("doc_id"))
+        // dedup ranks over the DECONTAMINATED corpus, matching the
+        // batch windows: a decontam-dropped doc neither counts in
+        // the in-batch ranks nor lands in the digest stores, so it
+        // can't claim canonical status for a group whose clean
+        // re-crawl should land (every OTHER disposition's digests
+        // are still recorded — batch dedup ranks over the whole
+        // gate-failed corpus, so the live form must too)
+        MicroBatch.cached(scored
             .join(graft.queries.Pipeline.crawlContam(
               scored.select(col("doc_id"), col("text")), evalDigests),
               Seq("doc_id"), "left")
             .withColumn("dropped",
-              coalesce(col("contam_action") === "drop_doc", lit(false)))
-            .cache()
-          try {
-            val survives = when(col("dropped"), 0L).otherwise(1L)
-            val cum = org.apache.spark.sql.expressions.Window
-            val marked = withContam
-              .withColumn("rn", sum(survives).over(
-                hW.rowsBetween(cum.unboundedPreceding, cum.currentRow)))
-              .withColumn("urn", sum(survives).over(
-                uW.rowsBetween(cum.unboundedPreceding, cum.currentRow)))
-              .join(digestStore(spark, hStoreDir, "h", batchId).withColumn("seen", lit(true))
-                .distinct(), Seq("h"), "left")
-              .join(digestStore(spark, uStoreDir, "uh", batchId).withColumn("useen", lit(true))
-                .distinct(), Seq("uh"), "left")
-            graft.queries.Pipeline.crawlCascade(marked,
-                col("urn") > 1 || col("useen").isNotNull,
-                col("rn") > 1 || col("seen").isNotNull)
-              .write.mode("overwrite").parquet(s"$outDir/micro_batch_id=$batchId")
-            withContam.filter(!col("dropped")).select(col("h")).distinct()
-              .write.mode("overwrite").parquet(s"$hStoreDir/micro_batch_id=$batchId")
-            withContam.filter(!col("dropped")).select(col("uh")).distinct()
-              .write.mode("overwrite").parquet(s"$uStoreDir/micro_batch_id=$batchId")
-          } finally withContam.unpersist()
-        } finally scored.unpersist()
+              coalesce(col("contam_action") === "drop_doc", lit(false)))) { withContam =>
+          val survives = when(col("dropped"), 0L).otherwise(1L)
+          val cum = org.apache.spark.sql.expressions.Window
+          val marked = withContam
+            .withColumn("rn", sum(survives).over(
+              hW.rowsBetween(cum.unboundedPreceding, cum.currentRow)))
+            .withColumn("urn", sum(survives).over(
+              uW.rowsBetween(cum.unboundedPreceding, cum.currentRow)))
+            .join(MicroBatch.digestStore(spark, hStoreDir, "h", batchId)
+              .withColumn("seen", lit(true)).distinct(), Seq("h"), "left")
+            .join(MicroBatch.digestStore(spark, uStoreDir, "uh", batchId)
+              .withColumn("useen", lit(true)).distinct(), Seq("uh"), "left")
+          MicroBatch.write(graft.queries.Pipeline.crawlCascade(marked,
+              col("urn") > 1 || col("useen").isNotNull,
+              col("rn") > 1 || col("seen").isNotNull), outDir, batchId)
+          MicroBatch.write(withContam.filter(!col("dropped")).select(col("h")).distinct(),
+            hStoreDir, batchId)
+          MicroBatch.write(withContam.filter(!col("dropped")).select(col("uh")).distinct(),
+            uStoreDir, batchId)
+        }
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    }
 
   /** The yield table over a [[mediaCurateStream]] cells dir: fold the
     * per-micro-batch partial count cells (associative sums) into the
@@ -434,8 +286,8 @@ object DataPrep {
     * every segment SEEN — rejected docs' segments included — so a
     * re-upload of even a rejected doc flags fully next time. Only
     * digests shuffle; segment text never leaves the map side, and the
-    * driver loop (foreachBatch in a stream, a scheduler in nightly
-    * ingest) persists the returned delta — the store is durable
+    * driver loop (a micro-batch driver in a stream, a scheduler in
+    * nightly ingest) persists the returned delta — the store is durable
     * storage, not stream-engine state. */
   def segmentDedupStep(store: DataFrame, batch: DataFrame,
                        maxDupRatio: Double = 0.5): (DataFrame, DataFrame) = {
@@ -468,10 +320,10 @@ object DataPrep {
     (marked, added)
   }
 
-  /** One live curate-chain ROUTING step (round 12 — the r10 verdict's
-    * composition item): per micro-batch, each arriving doc is
-    * (a) routed code vs prose by t25's classifier and (b) screened
-    * span-wise against the frozen eval digest set by t26's detector,
+  /** One live curate-chain ROUTING step: per micro-batch, each
+    * arriving doc is (a) routed code vs prose by t25's classifier and
+    * (b) screened span-wise against the frozen eval digest set by
+    * t26's detector,
     * yielding the disposition row the mix builder acts on:
     * `bucket` ∈ {code, prose} and `action` ∈ {drop_doc,
     * redact_spans, clean}. Both legs are the operators' own kernels

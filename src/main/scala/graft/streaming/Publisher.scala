@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.Envelope
 
 /** Spark-native Publisher (reference publisher.go).
@@ -43,13 +43,6 @@ object Publisher {
   def publish(msgs: DataFrame, topicDir: String, mode: String = "append",
               format: TopicFormat = ParquetTopic): Unit =
     format.write(layout(msgs, format), topicDir, mode)
-
-  /** JSON-lines topic variant — the envelope travels as the wire
-    * format itself (one JSON record per line, shard-partitioned
-    * directories), interoperable with non-Spark consumers that read
-    * the reference's `MessageData` envelope directly. */
-  def publishJson(msgs: DataFrame, topicDir: String, mode: String = "append"): Unit =
-    publish(msgs, topicDir, mode, JsonLinesTopic)
 
   /** Publish with a CALLER-provided `shard_id` routing — the
     * post-reshard path: after a split, `Envelope.reshardedId` sends a
@@ -92,12 +85,6 @@ object Publisher {
     format.write(marker, topicDir, "append")
   }
 
-  /** Streaming publisher: each micro-batch becomes one `publish` call
-    * (the reference's `Publish(topic, msgs...)` is per-call batching,
-    * so per-micro-batch sequences/batch ids mirror its semantics).
-    * Progress is durable at `checkpointDir` — a crashed publisher
-    * resumes without re-publishing finished micro-batches.
-    */
   /** Compact a topic in place: streaming publishes accumulate many
     * small files per shard; rewrite each shard partition as few files
     * while preserving every record and the shard layout. At lake
@@ -107,11 +94,15 @@ object Publisher {
     * The swap is two O(1) directory renames (old aside, new in) with
     * the bulk delete deferred until after the new tree is live — a
     * concurrent reader sees the complete old set or the complete new
-    * set, never a half-deleted one. (The pre-round-4 delete-then-
-    * rename left an O(files) window where the topic was partially or
-    * wholly absent.) A reader that lists in the instant between the
-    * two renames gets a clean does-not-exist and retries; it can
-    * never read a partial record set.
+    * set, never a half-deleted one, and never an O(files) window where
+    * the topic is partially or wholly absent. A reader that lists in
+    * the instant between the two renames gets a clean does-not-exist
+    * and retries; it can never read a partial record set. A rename
+    * that fails stops the swap: renaming the compacted tree onto a
+    * topic still in place would move it INSIDE the topic, and readers
+    * would see every record twice. The filesystem is the topic path's
+    * own, so a topic on HDFS/S3 is swapped there, not on the default
+    * FS.
     */
   def compact(spark: SparkSession, topicDir: String, filesPerShard: Int = 1): Unit = {
     val base = topicDir.stripSuffix("/")
@@ -121,20 +112,22 @@ object Publisher {
     spark.read.parquet(topicDir)
       .repartition(filesPerShard, col("shard_id"))
       .write.mode("overwrite").partitionBy("shard_id").parquet(tmp.toString)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def rename(from: org.apache.hadoop.fs.Path, to: org.apache.hadoop.fs.Path): Unit =
+      if (!fs.rename(from, to))
+        throw new IllegalStateException(s"[graft] topic compaction could not rename $from to $to")
     fs.delete(old, true)
-    fs.rename(dst, old)
-    fs.rename(tmp, dst)
+    rename(dst, old)
+    rename(tmp, dst)
     fs.delete(old, true)
   }
 
+  /** Streaming publisher: each micro-batch becomes one `publish` call
+    * (the reference's `Publish(topic, msgs...)` is per-call batching,
+    * so per-micro-batch sequences/batch ids mirror its semantics).
+    * Progress is durable at `checkpointDir` — a crashed publisher
+    * resumes without re-publishing finished micro-batches.
+    */
   def publishStream(msgs: DataFrame, topicDir: String, checkpointDir: String): StreamingQuery =
-    msgs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        publish(batch.toDF(), topicDir)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MicroBatch.each(msgs, checkpointDir)((batch, _) => publish(batch, topicDir))
 }

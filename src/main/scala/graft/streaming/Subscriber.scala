@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 /** Where a brand-new subscription (no checkpoint yet) begins reading —
@@ -77,11 +77,6 @@ object Subscriber {
     * (subscriber.go:96-124). */
   def subscribe(spark: SparkSession, source: SourceFormat, topic: String): DataFrame =
     unmarshalled(source.records(spark, topic), source.codec)
-
-  /** Subscribe to a JSON-lines topic (Publisher.publishJson) — same
-    * message stream, different wire encoding. */
-  def subscribeJson(spark: SparkSession, topicDir: String): DataFrame =
-    subscribe(spark, topicDir, JsonLinesTopic)
 
   /** eventType header of a shard's terminal marker (the SHARD_END
     * checkpoint of subscriber.go:78-88, published by
@@ -175,25 +170,13 @@ object Subscriber {
   /** Start draining a subscription into an in-memory table (tests /
     * local smoke) with durable progress at `checkpointDir`. */
   def drainToMemory(msgs: DataFrame, queryName: String, checkpointDir: String): StreamingQuery =
-    msgs.writeStream
-      .outputMode(OutputMode.Append)
-      .format("memory")
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MicroBatch.start(msgs, checkpointDir)(_.format("memory").queryName(queryName))
 
   /** Drain into a parquet "processed" dir. Unlike the memory sink this
     * supports restart-from-checkpoint, so it's the faithful analog of a
     * KCL worker resuming its lease after the last checkpointed batch. */
   def drainToParquet(msgs: DataFrame, outDir: String, checkpointDir: String): StreamingQuery =
-    msgs.writeStream
-      .outputMode(OutputMode.Append)
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MicroBatch.start(msgs, checkpointDir)(_.format("parquet").option("path", outDir))
 
   /** Exactly-once consumption over an at-least-once transport
     * (subscriber/subscriber.go:79-96 nack⇒redeliver): drop redelivered
@@ -209,30 +192,18 @@ object Subscriber {
   /** Drain with dead-letter routing: each micro-batch splits on
     * `isPoison` — healthy rows land in `outDir`, poison rows in
     * `dlqDir` — under ONE checkpoint. Writes are idempotent per
-    * micro-batch: batch N overwrites `<dir>/micro_batch_id=N`, so a crash
-    * between the two writes (or after them but before the checkpoint
-    * commit) replays the batch onto its own subdirectory instead of
-    * appending duplicates — both sinks converge to exactly the source
-    * offsets (the terminal state of the reference's nack loop once
-    * retries are exhausted). Read either dir as plain parquet; the
-    * micro_batch_id partition column is the provenance of each row.
+    * micro-batch ([[MicroBatch]]), so a crash between the two writes
+    * (or after them but before the checkpoint commit) replays the
+    * batch onto its own partition instead of appending duplicates —
+    * both sinks converge to exactly the source offsets (the terminal
+    * state of the reference's nack loop once retries are exhausted).
+    * Read either dir as plain parquet; the micro_batch_id partition
+    * column is the provenance of each row.
     */
   def drainWithDlq(msgs: DataFrame, outDir: String, dlqDir: String,
                    checkpointDir: String, isPoison: org.apache.spark.sql.Column): StreamingQuery =
-    msgs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val marked = batch.withColumn("__poison", isPoison).cache()
-        try {
-          marked.filter(!col("__poison")).drop("__poison")
-            .write.mode("overwrite").parquet(s"$outDir/micro_batch_id=$batchId")
-          marked.filter(col("__poison")).drop("__poison")
-            .write.mode("overwrite").parquet(s"$dlqDir/micro_batch_id=$batchId")
-        } finally marked.unpersist()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    drainSplit(msgs, outDir, dlqDir, checkpointDir, "__poison", isPoison,
+      col("__poison"), _.filter(!col("__poison")).drop("__poison"))
 
   /** Drain a subscription, preserving raw poison records: each
     * micro-batch splits on envelope parseability — parseable records
@@ -246,22 +217,24 @@ object Subscriber {
   def drainSkippingPoison(spark: SparkSession, topicDir: String, outDir: String,
                           dlqDir: String, checkpointDir: String,
                           format: TopicFormat = ParquetTopic): StreamingQuery =
-    format.readStream(spark, topicDir, 8)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val marked = batch
-          .withColumn("env", format.parseEnvelope(col("envelope"))).cache()
-        try {
-          messagesOf(marked)
-            .write.mode("overwrite").parquet(s"$outDir/micro_batch_id=$batchId")
-          marked.filter(col("env").isNull).drop("env")
-            .write.mode("overwrite").parquet(s"$dlqDir/micro_batch_id=$batchId")
-        } finally marked.unpersist()
+    drainSplit(format.readStream(spark, topicDir, 8), outDir, dlqDir, checkpointDir,
+      "env", format.parseEnvelope(col("envelope")), col("env").isNull, messagesOf)
+
+  /** The DLQ split of [[drainWithDlq]] and [[drainSkippingPoison]]:
+    * each micro-batch gets column `markCol` = `mark` (cached, so the
+    * mark is computed once for both sides); `healthy` of it lands in
+    * `outDir` and its `isPoison` rows, without `markCol`, in `dlqDir`. */
+  private def drainSplit(src: DataFrame, outDir: String, dlqDir: String,
+                         checkpointDir: String, markCol: String,
+                         mark: org.apache.spark.sql.Column,
+                         isPoison: org.apache.spark.sql.Column,
+                         healthy: DataFrame => DataFrame): StreamingQuery =
+    MicroBatch.each(src, checkpointDir) { (batch, batchId) =>
+      MicroBatch.cached(batch.withColumn(markCol, mark)) { marked =>
+        MicroBatch.write(healthy(marked), outDir, batchId)
+        MicroBatch.write(marked.filter(isPoison).drop(markCol), dlqDir, batchId)
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    }
 
   // -- ack/nack redelivery state --------------------------------------
 

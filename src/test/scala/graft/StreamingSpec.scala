@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.operators.Envelope
-import graft.streaming.{BinaryParquetTopic, Publisher, Subscriber}
+import graft.streaming.{BinaryParquetTopic, JsonLinesTopic, Publisher, Subscriber}
 
 /** The reference's live pub/sub behaviors (publisher batching,
   * checkpointed resume, ack/nack redelivery) — things the batch
@@ -426,9 +426,10 @@ class StreamingSpec extends SparkSuite {
   test("JSON-lines topic roundtrips the same message stream as parquet") {
     val topic = tempDir("jtopic")
     val ckpt = tempDir("ckpt")
-    Publisher.publishJson(Envelope.messages(spark, sf), topic)
+    Publisher.publish(Envelope.messages(spark, sf), topic, format = JsonLinesTopic)
 
-    val q = Subscriber.drainToMemory(Subscriber.subscribeJson(spark, topic), "json_rt", ckpt)
+    val q = Subscriber.drainToMemory(
+      Subscriber.subscribe(spark, topic, JsonLinesTopic), "json_rt", ckpt)
     q.awaitTermination()
 
     val got = spark.table("json_rt")
@@ -1187,7 +1188,7 @@ class StreamingSpec extends SparkSuite {
       s"replayed batch curated ${curated.count()} docs, expected $expected")
   }
 
-  test("curateMonitored migrates a legacy md5hex digest store instead of silently re-curating") {
+  test("curateMonitored rejects a legacy md5hex digest store by name") {
     import graft.streaming.DataPrep
     import graft.functions.Portable
     val topic = tempDir("topic_lg")
@@ -1195,9 +1196,9 @@ class StreamingSpec extends SparkSuite {
     val hStore = tempDir("hstore_lg")
     val docs = Tables.documents(spark, sf).limit(40)
       .select(col("doc_id"), col("text"), lit("s").as("source"))
-    // a store written ENTIRELY by the pre-round-12 version: hex STRING
-    // digests for the even docs (micro_batch_id=999 so the replay
-    // exclusion of the current batch id can't mask the format issue)
+    // a store in the legacy md5hex format: hex STRING digests for the
+    // even docs (micro_batch_id=999 so the replay exclusion of the
+    // current batch id can't mask the format issue)
     docs.filter(col("doc_id") % 2 === 0)
       .select(md5(Portable.normText(col("text")).cast("binary")).as("h"))
       .distinct().write.parquet(s"$hStore/micro_batch_id=999")
@@ -1211,28 +1212,22 @@ class StreamingSpec extends SparkSuite {
     val q = DataPrep.curateMonitored(
       Subscriber.subscribe(spark, topic, maxFilesPerTrigger = 64),
       outDir, tempDir("cells_lg"), hStore, tempDir("ck_lg"))
-    q.awaitTermination()
 
     // a silent hex-vs-binary mismatch would anti-join nothing and
-    // re-curate every legacy-seen doc — the dedup-loss seam
-    val curated = spark.read.parquet(outDir)
-    assert(curated.filter(col("doc_id") % 2 === 0).count() === 0,
-      "legacy-seen docs were re-curated — the digest-store migration failed")
-    val expected = graft.queries.Pipeline.withQuality(
-        docs.filter(col("doc_id") % 2 === 1)
-          .withColumn("h", Portable.md5bin(Portable.normText(col("text")))))
-      .filter(col("quality") >= 0.5).select("h").distinct().count()
-    assert(curated.count() === expected)
-    // the store itself is now fully binary — the NEXT batch's merged
-    // read (legacy partition + this run's binary partition) works
-    val merged = spark.read.parquet(hStore)
-    assert(merged.schema("h").dataType ===
-      org.apache.spark.sql.types.BinaryType)
-    assert(merged.select("h").distinct().count() === graft.queries.Pipeline
-      .withQuality(docs.withColumn("h", Portable.md5bin(Portable.normText(col("text")))))
-      .select("h").distinct().count())
-    // and the migration left no marker behind
-    assert(!new java.io.File(s"$hStore/_graft_hstore_migrating").exists())
+    // re-curate every legacy-seen doc — the dedup-loss seam — so the
+    // store is rejected by name before anything is curated
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      q.awaitTermination())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(m => m.contains("[graft] digest store") &&
+        m.contains("expected BINARY")),
+      s"no named digest-store error in: ${msgs.mkString(" | ")}")
+    assert(Option(new java.io.File(outDir).listFiles).forall(_.isEmpty),
+      "docs were curated against an unreadable digest store")
+    // the legacy store is left as it was, neither coerced nor rewritten
+    assert(spark.read.parquet(hStore).schema("h").dataType ===
+      org.apache.spark.sql.types.StringType)
   }
 
   test("the live ingest-drift monitor converges to exactly the batch p6 table") {
@@ -1920,6 +1915,61 @@ class StreamingSpec extends SparkSuite {
     assert(msgs.exists(m => m.contains("[graft] digest store") &&
         m.contains("expected BINARY")),
       s"no named digest-store error in: ${msgs.mkString(" | ")}")
+  }
+
+  test("the crawl stream replays a crashed micro-batch against its own digest partitions") {
+    import spark.implicits._
+    import graft.streaming.{BinaryParquetTopic, DataPrep, Publisher, Subscriber}
+    import graft.operators.Warc
+    import graft.queries.Pipeline
+    val topic = tempDir("topic_crawl_cr")
+    // ids 1..30 hold a content pair (1, 12) and a url pair (11, 13)
+    val arrivals = (1L to 30L).map(id => (id, Warc.plantedCrawlBytes(id)))
+    Publisher.publish(arrivals.toDF("doc_id", "payload").select(
+      col("doc_id").as("event_id"), col("doc_id").cast("string").as("uuid"),
+      pmod(col("doc_id"), lit(4L)).cast("string").as("partition_key"),
+      col("payload"),
+      lit("crawl").as("event_type"), lit(0.0).as("value"),
+      expr("timestamp '2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, doc_id)").as("ts"),
+      map(lit("eventType"), lit("crawl")).as("headers")), topic,
+      format = BinaryParquetTopic)
+    val decoded = Pipeline.crawlDecode(
+      arrivals.toDF("doc_id", "payload").as[(Long, Array[Byte])]).localCheckpoint()
+    val inventory = Pipeline.crawlInventory(decoded).localCheckpoint()
+    val evalDigests = Pipeline.crawlEvalDigests(
+      Pipeline.crawlStrip(decoded, inventory)).localCheckpoint()
+    // one micro-batch (batch 0) takes every arrival
+    def run(tag: String, hStore: String, uStore: String): Map[Long, String] = {
+      val outDir = tempDir(s"crawl_out_$tag")
+      DataPrep.crawlCurateStream(
+        Subscriber.subscribe(spark, topic, BinaryParquetTopic, maxFilesPerTrigger = 64),
+        outDir, hStore, uStore, inventory, evalDigests, tempDir(s"ck_crawl_$tag"))
+        .awaitTermination()
+      val out = spark.read.parquet(outDir)
+      assert(out.select("micro_batch_id").distinct().as[Int].collect().toSeq === Seq(0))
+      out.select(col("doc_id"), col("disposition")).as[(Long, String)].collect().toMap
+    }
+    val clean = run("empty", tempDir("crawl_h_empty") + "/h", tempDir("crawl_u_empty") + "/u")
+
+    // simulate the crash: a previous attempt of batch 0 wrote both of
+    // its digest partitions, then died before the checkpoint
+    // committed. Unless the replay skips its own partitions, every
+    // doc meets its own url digest (url_duplicate) or content digest
+    // (duplicate) and the batch keeps nothing
+    val hStore = tempDir("crawl_h_cr")
+    val uStore = tempDir("crawl_u_cr")
+    val digests = Pipeline.crawlGates(Pipeline.crawlStrip(decoded, inventory))
+    digests.select(col("h")).distinct().write.parquet(s"$hStore/micro_batch_id=0")
+    digests.select(col("uh")).distinct().write.parquet(s"$uStore/micro_batch_id=0")
+    val replayed = run("replay", hStore, uStore)
+
+    assert(clean.values.count(_ == "keep") > 0)
+    assert(clean.values.count(_ == "duplicate") > 0)
+    assert(clean.values.count(_ == "url_duplicate") > 0)
+    val diffs = (clean.keySet ++ replayed.keySet)
+      .filter(k => clean.get(k) != replayed.get(k)).toSeq.sorted
+    assert(diffs.isEmpty, s"${diffs.length} dispositions differ: " + diffs.take(10)
+      .map(k => s"$k clean=${clean.get(k)} replayed=${replayed.get(k)}").mkString("; "))
   }
 
   test("the full live curate chain: dedup + quality + code routing + span decontam under one checkpoint") {

@@ -26,6 +26,16 @@ for d in dict.fromkeys(['/root/testdata/sf0.01',
         print(f'  {os.path.basename(p)}: {cols}')
 EOF
 
+# The micro-batch sink policy (stream starter, per-batch partition
+# write) lives in graft.streaming.MicroBatch alone: a stream that
+# starts or writes its own batches outside it fails the gate.
+if grep -rn -e 'foreachBatch' -e 'Trigger.AvailableNow' -e 'micro_batch_id=' src/main \
+    | grep -v '^src/main/scala/graft/streaming/MicroBatch.scala:'; then
+  echo "micro-batch sink policy outside streaming/MicroBatch.scala" \
+    "(listed above): route the stream through MicroBatch" >&2
+  exit 1
+fi
+
 # one executor thread per core unless the caller pins SPARK_GRAFT_CPUS
 # (nproc honours OMP_NUM_THREADS, so unset it for the count)
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
