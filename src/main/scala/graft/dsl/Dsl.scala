@@ -379,15 +379,16 @@ package object dsl {
 
     /** Serve a probe batch (or one micro-batch of a live stream)
       * through the frozen index — route to nProbe cells, rank
-      * routed candidates by the asymmetric ADC distance. */
+      * routed candidates by the asymmetric ADC distance. Probes are
+      * sliced at the index's own PQ geometry, read from its codebook. */
     def serve(probes: DataFrame, idCol: String = "vec_id",
               embCol: String = "embedding", geo: AnnGeometry = AnnGeometry(),
-              m: Int = 8, subDim: Int = 8, k: Int = 3): DataFrame =
+              k: Int = 3): DataFrame =
       Similarity.ivfPqServeProbes(ix,
         normVecs(probes, idCol, embCol)
           .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"),
             col("nrm").as("p_nrm")),
-        geo, m, subDim, k)
+        geo, k)
 
     /** Absorb new vectors into the frozen index WITHOUT retraining —
       * nearest existing cell, nearest existing code words (the

@@ -51,7 +51,7 @@ object Portable {
     * [[org.apache.spark.sql.graftvec.HllRegisters]] for the parity
     * contract the q30 oracle mirrors. */
   def hllRegisters(h: Column, p: Int): Column =
-    org.apache.spark.sql.graftvec.HllColumns.hllRegisters(h, p)
+    org.apache.spark.sql.graftvec.GraftFunctions.column("hll_registers", Seq(h), p)
 
   /** Whitespace tokenization after trim; empty text → empty array.
     * DuckDB: `regexp_split_to_array(trim(x), '\s+')` (with the same

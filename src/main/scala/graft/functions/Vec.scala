@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftvec.DotProduct
+import org.apache.spark.sql.graftvec.GraftFunctions
 
 /** Vector math on `array<double>` columns, backed by the native
   * codegen'd [[org.apache.spark.sql.graftvec.DotProduct]] expression
@@ -12,7 +12,7 @@ import org.apache.spark.sql.graftvec.DotProduct
 object Vec {
   /** Codegen'd dot product; summation order matches DuckDB's
     * `list_dot_product` (element 0..n-1). */
-  def dot(a: Column, b: Column): Column = DotProduct.dotColumn(a, b)
+  def dot(a: Column, b: Column): Column = GraftFunctions.column("vec_dot", Seq(a, b))
 
   /** L2 norm — precompute per vector once before a pairwise join so
     * each candidate pair costs a single dot. */

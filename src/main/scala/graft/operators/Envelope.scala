@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftvec.GraftFunctions
 import graft.Tables
 import graft.functions.Portable
 
@@ -47,13 +48,12 @@ object Envelope {
     * payload travels base64'd, the FULL headers map as a nested
     * object in ascending key order. Field order is fixed, so output
     * is byte-stable — produced by the native codegen kernel
-    * (graftvec.EnvelopeMarshal); the `to_json(struct(...))` form it
+    * (graftvec `envelope_marshal`); the `to_json(struct(...))` form it
     * replaces evaluates through CodegenFallback (an interpreted
     * Jackson round-trip per row) and emits the same bytes.
     */
   def marshalled(msgs: DataFrame): Column =
-    org.apache.spark.sql.graftvec.EnvelopeJsonColumns.marshal(
-      col("uuid"), col("payload"), col("headers"))
+    GraftFunctions.column("envelope_marshal", Seq(col("uuid"), col("payload"), col("headers")))
 
   /** Parsed envelope struct<uuid, payload binary, headers map>
     * (reference marshaller.go:26-52 JSONUnmarshaller — every header
@@ -61,7 +61,7 @@ object Envelope {
     * streaming-Jackson kernel, null on malformed input like
     * from_json. */
   def parsed(envelope: Column): Column =
-    org.apache.spark.sql.graftvec.EnvelopeJsonColumns.parse(envelope)
+    GraftFunctions.column("envelope_parse", Seq(envelope))
 
   /** One header from a parsed envelope struct (the reference copies
     * each into message metadata, marshaller.go:35-38). */
@@ -72,13 +72,13 @@ object Envelope {
     * "TODO Protobuf", publisher.go:48-51 WithMarshaller): same
     * message model, non-JSON bytes, no base64 expansion. */
   def marshalledBin(msgs: DataFrame): Column =
-    org.apache.spark.sql.graftvec.EnvelopeBinaryColumns.marshal(
-      col("uuid"), col("payload"), col("headers"))
+    GraftFunctions.column("envelope_marshal_bin",
+      Seq(col("uuid"), col("payload"), col("headers")))
 
   /** Parse of the binary envelope; null on malformed input (the
     * subscriber's skip-and-continue contract, subscriber.go:57-62). */
   def parsedBin(blob: Column): Column =
-    org.apache.spark.sql.graftvec.EnvelopeBinaryColumns.parse(blob)
+    GraftFunctions.column("envelope_parse_bin", Seq(blob))
 
   /** Partition-key → shard routing (Kinesis hashes MD5(partitionKey)
     * into a shard's hash-key range; publisher.go:80). md5-derived so

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.graftvec.DoubleBucket
+import org.apache.spark.sql.graftvec.GraftFunctions
 
 /** Distributed exact percentiles (linear interpolation, the
   * percentile_cont contract).
@@ -15,7 +15,7 @@ import org.apache.spark.sql.graftvec.DoubleBucket
   *
   *   1. per-(group, order-preserving-bucket) count/min/max cells — the
   *      bucket is a pure per-row function of the value's IEEE bits
-  *      ([[DoubleBucket]]), so NO prior min/max pass and NO broadcast
+  *      (graftvec.DoubleBucket), so NO prior min/max pass and NO broadcast
   *      join are needed to bucket; group stats (n, min, max) roll up
   *      from the cells for free. Cumulative offsets over the cells
   *      locate, for every requested rank, the ONE bucket containing it;
@@ -43,6 +43,7 @@ object Percentiles {
             minMaxCols: Option[(String, String)] = None): DataFrame = {
     val k = col(keyCol)
     val v = col(valCol).cast("double")
+    val bucket = GraftFunctions.column("double_bucket", Seq(v))
 
     // pass 1: (group, bucket) cells. The single aggregation exchange
     // is the subtree BOTH consumers (stats rollup and cumulative
@@ -51,7 +52,7 @@ object Percentiles {
     // stats aggregate to get the same sharing. isNotNull mirrors the
     // old count(v) semantics: null values never counted.
     val cells = df.filter(v.isNotNull)
-      .groupBy(k.as("sk"), DoubleBucket.column(v).as("bucket"))
+      .groupBy(k.as("sk"), bucket.as("bucket"))
       .agg(count(lit(1)).as("bn"), min(v).as("bmin"), max(v).as("bmax"))
 
     val stats = cells.groupBy(col("sk"))
@@ -94,7 +95,7 @@ object Percentiles {
     val wr = Window.partitionBy(col("bk"), col("bucket"), col("rank"))
       .orderBy(col("pv"))
     val rankValues = df.filter(v.isNotNull)
-      .select(k.as("bk"), v.as("pv"), DoubleBucket.column(v).as("bucket"))
+      .select(k.as("bk"), v.as("pv"), bucket.as("bucket"))
       .join(broadcast(located),
         col("bk") === col("rk") && col("bucket") === col("lbucket"))
       .withColumn("lr", row_number().over(wr))

@@ -23,7 +23,7 @@ object Sketches {
     * cardinality estimate). */
   def mergeEstimate(sketches: DataFrame): Long = {
     val row = sketches.agg(
-      hll_sketch_estimate(hll_union_agg(col("sketch"))).as("estimate")).head
+      hll_sketch_estimate(hll_union_agg(col("sketch"))).as("estimate")).head()
     row.getLong(0)
   }
 

@@ -979,7 +979,7 @@ object Dedup extends QueryPack {
     // former transform-lambda form evaluated INTERPRETED — per window
     // a Catalyst slice + array_join + md5 tree — and dominated d20's
     // profile; the kernel streams token bytes through one MessageDigest
-    // per document (values byte-identical, see SpanHashes parity note)
+    // per document (values byte-identical, see TextHashImpl.spanHashes)
     docs.withColumn("n_words", size(col("w")).cast("long"))
       .filter(col("n_words") >= SpanW)
       .select(col("doc_id"), col("n_words"),
@@ -1419,7 +1419,7 @@ object Dedup extends QueryPack {
     // Exact O(n²) Hamming scan — the completeness bound the blocked
     // Spark plan must reproduce bit-for-bit. 32-bit simhash: the
     // 8-hex-char md5 prefix, voting on bits below 32 (mirrors
-    // graftvec.SimHashW).
+    // TextHashImpl.simHashW).
     "d10_hamming_pairs" ->
       s"""WITH src AS ($NearDupesSql),
          |toks AS (

@@ -67,7 +67,11 @@ private[queries] trait IvfPq { this: Similarity.type =>
   final case class IvfPqIndex(assigned: DataFrame, codes: DataFrame,
                                              cents: DataFrame, codebook: DataFrame,
                                              nextSegHint: Option[Int] = None,
-                                             layout: String = LayoutRaw)
+                                             layout: String = LayoutRaw) {
+    /** (m, subDim) of the frozen codebook ([[pqGeometryOf]]), read by
+      * serve and every maintenance path; one job per instance. */
+    lazy val pqGeometry: (Int, Int) = pqGeometryOf(codebook)
+  }
 
   private[graft] def ivfPqIndex(s: SparkSession, d: String, geo: AnnGeometry = Geo,
                                 m: Int = PqM, subDim: Int = PqSubDim): IvfPqIndex =
@@ -155,12 +159,15 @@ private[queries] trait IvfPq { this: Similarity.type =>
 
   /** The PQ geometry (m, subDim) an EXISTING codebook was built with —
     * m = number of distinct subspaces, subDim = the code vectors'
-    * length. Maintenance paths that code against a frozen codebook
-    * ([[ivfPqIndexDelta]], [[rebuildCells]]) derive the geometry from
-    * the artifact itself instead of trusting caller parameters (r18
-    * ADVICE #1: pqAssignSubs inner-joins on `sub`, so a caller-side
+    * length. Paths that code or score against a frozen codebook
+    * ([[ivfPqServeProbes]], [[ivfPqIndexDelta]], [[rebuildCells]],
+    * [[retrainIndex]]) read it through [[IvfPqIndex.pqGeometry]]
+    * instead of trusting caller parameters (r18 ADVICE #1:
+    * pqAssignSubs inner-joins on `sub`, so a caller-side
     * m mismatch — index built with m=16, maintained with the default
-    * 8 — would silently DROP code rows for every touched member; and
+    * 8 — would silently DROP code rows for every touched member, and
+    * a serve at the wrong geometry scores sub-vectors against code
+    * words of another length; and
     * because the codebook frame is part of the persisted artifact,
     * deriving from it cannot drift from what save/load round-trips,
     * which a separate manifest field could). One two-column aggregate
@@ -286,7 +293,7 @@ private[queries] trait IvfPq { this: Similarity.type =>
     // (r18 ADVICE #1 — see pqGeometryOf): a mismatched m would
     // silently drop sub rows for every arrival through the inner
     // join on `sub`
-    val (m, subDim) = pqGeometryOf(ix.codebook)
+    val (m, subDim) = ix.pqGeometry
     // `seg` tags this delta generation in the assigned frame. The
     // default AutoSeg assigns max(existing seg) + 1 — real
     // maintenance windows STACK generations between retrains (base +
@@ -542,7 +549,7 @@ private[queries] trait IvfPq { this: Similarity.type =>
         // mismatched m would silently drop code rows for every
         // flagged member — exactly the corruption class the
         // assignment-side conservation guard above exists to catch
-        val (m, subDim) = pqGeometryOf(ix.codebook)
+        val (m, subDim) = ix.pqGeometry
         val recoded = recodeFlagged(vectors, fm, cents, ix.codebook, m, subDim)
         // Code-side conservation (the re-code twin of the assignment
         // guard): every flagged member must come back with exactly m
@@ -637,7 +644,7 @@ private[queries] trait IvfPq { this: Similarity.type =>
         s"($nDistinct distinct vec_ids) for $nIndexed indexed members — " +
         "the corpus store is missing members or has duplicate vec_ids; " +
         "aborting before the retrain publishes a corrupted index")
-    val (m, subDim) = pqGeometryOf(ix.codebook)
+    val (m, subDim) = ix.pqGeometry
     val rt = retrainKernel(ix, v, iters, geo.nCentroids, m, subDim)
     rt.copy(assigned = rt.assigned.select(col("vec_id"), col("cell"), lit(0).as("seg")),
       codes = rt.codes.select(col("vec_id"), col("sub"), col("code_id")))
@@ -1173,8 +1180,8 @@ private[queries] trait IvfPq { this: Similarity.type =>
     * the same asymmetry whether the batch is an offline acceptance
     * gate or one micro-batch of a live stream. */
   def ivfPqServeProbes(ix: IvfPqIndex, probes: DataFrame,
-                                      geo: AnnGeometry = Geo, m: Int = PqM,
-                                      subDim: Int = PqSubDim, k: Int = K): DataFrame = {
+                       geo: AnnGeometry = Geo, k: Int = K): DataFrame = {
+    val (m, subDim) = ix.pqGeometry
     val wr = Window.partitionBy(col("probe_id")).orderBy(col("c_cos").desc, col("cell"))
     val routes = probes.crossJoin(broadcast(ix.cents))
       .withColumn("c_cos", cosPre(col("p_emb"), col("p_nrm"), col("c_emb"), col("c_nrm")))

@@ -524,8 +524,8 @@ object Multimodal extends QueryPack {
       // the per-element folds inside the kernel add in the same
       // 0..n-1 order as the aggregate() lambdas they replace.
       wired
-        .withColumn("st", org.apache.spark.sql.graftvec.MediaStatsColumns
-          .mediaStats(unhex(col("wire"))))
+        .withColumn("st", org.apache.spark.sql.graftvec.GraftFunctions
+          .column("media_stats", Seq(unhex(col("wire")))))
         .withColumn("container", col("st.container"))
         .withColumn("n_units", col("st.n_units"))
         .withColumn("mean_signal",

@@ -1351,7 +1351,7 @@ object Similarity extends QueryPack with IvfPq {
     // geometry still gets a fresh build
     val ix = if (geo == Geo && m == PqM && subDim == PqSubDim) servedIndex(s, d)
              else ivfPqIndex(s, d, geo, m, subDim)
-    ivfPqServeProbes(ix, probes, geo, m, subDim, k)
+    ivfPqServeProbes(ix, probes, geo, k)
   }
 
   /** p8's corpus-card index leg: ONE row (n_cells, recall) describing

@@ -57,7 +57,7 @@ object Subscriber {
   /** Unbounded stream of unmarshalled messages from a topic dir, with
     * the same injected metadata as the reference unmarshaller
     * (partitionKey, shardID, approximateArrivalTimestamp). Envelope
-    * decode is the native codegen kernel (graftvec.EnvelopeParse),
+    * decode is the native codegen kernel (graftvec `envelope_parse`),
     * same as the batch path — from_json is CodegenFallback. `format`
     * is the pluggable wire codec (the reference's WithUnmarshaller
     * seam, publisher.go:48-51); `maxFilesPerTrigger` bounds each
@@ -138,7 +138,7 @@ object Subscriber {
       case AtTimestamp(t) => base.filter(col("ts") >= lit(t))
       case Latest =>
         val cutoff = source.snapshot(spark, topic)
-          .flatMap(df => Option(df.agg(max(col("ts"))).head.getTimestamp(0)))
+          .flatMap(df => Option(df.agg(max(col("ts"))).head().getTimestamp(0)))
         cutoff.fold(base)(t => base.filter(col("ts") > lit(t)))
     }
   }

@@ -1,17 +1,15 @@
 package org.apache.spark.sql.graftvec
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType}
 
 /** Native Catalyst dot product over two double arrays.
   *
-  * Lives under org.apache.spark.sql because `AbstractDataType` and the
-  * Column↔Expression bridge (`classic.ExpressionUtils`) are
-  * private[sql]. The public face is graft.functions.Vec.
+  * Lives under org.apache.spark.sql because `AbstractDataType` is
+  * private[sql]. The public face is graft.functions.Vec, through
+  * [[GraftFunctions.column]].
   *
   * The composed alternative — `aggregate(zip_with(a, b, _*_), 0d, _+_)`
   * — runs through interpreted higher-order-function evaluation per
@@ -55,9 +53,4 @@ case class DotProduct(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
-}
-
-object DotProduct {
-  def dotColumn(a: Column, b: Column): Column =
-    ExpressionUtils.column(DotProduct(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
 }

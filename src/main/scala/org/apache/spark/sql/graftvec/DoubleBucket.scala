@@ -1,9 +1,7 @@
 package org.apache.spark.sql.graftvec
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, DataType, DoubleType, IntegerType}
 
 /** Order-preserving bucket of a double: the top 20 bits of the
@@ -52,9 +50,4 @@ case class DoubleBucket(child: Expression)
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
-}
-
-object DoubleBucket {
-  def column(v: Column): Column =
-    ExpressionUtils.column(DoubleBucket(ExpressionUtils.expression(v)))
 }

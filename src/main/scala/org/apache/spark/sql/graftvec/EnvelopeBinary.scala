@@ -3,11 +3,8 @@ package org.apache.spark.sql.graftvec
 import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, MapData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Binary envelope codec — the second wire format behind the
@@ -116,61 +113,4 @@ object EnvelopeBinaryImpl {
       case _: Exception => null
     }
   }
-}
-
-/** `envelope_marshal_bin(uuid, payload, headers_map)` → binary. */
-case class EnvelopeMarshalBin(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(StringType, BinaryType, MapType(StringType, StringType))
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "envelope_marshal_bin"
-
-  override def nullSafeEval(uuid: Any, payload: Any, headers: Any): Any =
-    EnvelopeBinaryImpl.marshal(uuid.asInstanceOf[UTF8String],
-      payload.asInstanceOf[Array[Byte]], headers.asInstanceOf[MapData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (u, p, h) =>
-      s"org.apache.spark.sql.graftvec.EnvelopeBinaryImpl.marshal($u, $p, $h)")
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
-}
-
-/** `envelope_parse_bin(binary)` → struct<uuid, payload, headers>. */
-case class EnvelopeParseBin(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = EnvelopeJsonImpl.DecodedType
-  override def nullable: Boolean = true
-  override def prettyName: String = "envelope_parse_bin"
-
-  override def nullSafeEval(bytes: Any): Any =
-    EnvelopeBinaryImpl.parse(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = org.apache.spark.sql.graftvec.EnvelopeBinaryImpl.parse($c);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Column bridges (ExpressionUtils is private[sql]). */
-object EnvelopeBinaryColumns {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.classic.ExpressionUtils
-  def marshal(uuid: Column, payload: Column, headers: Column): Column =
-    ExpressionUtils.column(EnvelopeMarshalBin(ExpressionUtils.expression(uuid),
-      ExpressionUtils.expression(payload), ExpressionUtils.expression(headers)))
-  def parse(bin: Column): Column =
-    ExpressionUtils.column(EnvelopeParseBin(ExpressionUtils.expression(bin)))
 }

@@ -3,8 +3,6 @@ package org.apache.spark.sql.graftvec
 import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, MapData}
 import org.apache.spark.sql.types._
@@ -146,61 +144,4 @@ object EnvelopeJsonImpl {
       case _: Exception => null
     }
   }
-}
-
-/** `envelope_marshal(uuid, payload, headers_map)` → JSON string. */
-case class EnvelopeMarshal(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(StringType, BinaryType, MapType(StringType, StringType))
-  override def dataType: DataType = StringType
-  override def prettyName: String = "envelope_marshal"
-
-  override def nullSafeEval(uuid: Any, payload: Any, headers: Any): Any =
-    EnvelopeJsonImpl.marshal(uuid.asInstanceOf[UTF8String],
-      payload.asInstanceOf[Array[Byte]], headers.asInstanceOf[MapData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (u, p, h) =>
-      s"org.apache.spark.sql.graftvec.EnvelopeJsonImpl.marshal($u, $p, $h)")
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
-}
-
-/** `envelope_parse(json)` → struct<uuid, payload binary, headers map>. */
-case class EnvelopeParse(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = EnvelopeJsonImpl.DecodedType
-  override def nullable: Boolean = true
-  override def prettyName: String = "envelope_parse"
-
-  override def nullSafeEval(json: Any): Any =
-    EnvelopeJsonImpl.parse(json.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = org.apache.spark.sql.graftvec.EnvelopeJsonImpl.parse($c);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Column bridges (ExpressionUtils is private[sql]). */
-object EnvelopeJsonColumns {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.classic.ExpressionUtils
-  def marshal(uuid: Column, payload: Column, headers: Column): Column =
-    ExpressionUtils.column(EnvelopeMarshal(ExpressionUtils.expression(uuid),
-      ExpressionUtils.expression(payload), ExpressionUtils.expression(headers)))
-  def parse(json: Column): Column =
-    ExpressionUtils.column(EnvelopeParse(ExpressionUtils.expression(json)))
 }

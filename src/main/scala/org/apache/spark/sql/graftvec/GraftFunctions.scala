@@ -1,12 +1,16 @@
 package org.apache.spark.sql.graftvec
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.classic.ExpressionUtils
 
 /** SQL registration for the native expressions, so `spark.sql` users
-  * get them too: `SELECT vec_dot(a, b)`. Lives in the sql package
-  * because FunctionRegistry access is private[sql].
+  * get them too: `SELECT vec_dot(a, b)`, and the one Column bridge
+  * the library's public faces build them through. Lives in the sql
+  * package because FunctionRegistry access and ExpressionUtils are
+  * private[sql].
   */
 object GraftFunctions {
   private[graftvec] def intArg(e: Expression): Int =
@@ -18,21 +22,27 @@ object GraftFunctions {
 
   /** Every native expression as (SQL name, expression class, builder):
     * the one table both [[register]] and [[GraftExtensions]] read. */
-  private[graftvec] val table: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
-    ("vec_dot", classOf[DotProduct], e => DotProduct(e(0), e(1))),
-    ("km_minhash", classOf[KmMinHash], e => KmMinHash(e(0), intArg(e(1)), intArg(e(2)))),
-    ("distinct_shingles", classOf[DistinctShingles], e => DistinctShingles(e(0), intArg(e(1)))),
-    ("all_shingles", classOf[AllShingles], e => AllShingles(e(0), intArg(e(1)))),
-    ("simhash16", classOf[SimHash16], e => SimHash16(e(0))),
-    ("simhash_w", classOf[SimHashW], e => SimHashW(e(0), intArg(e(1)))),
-    ("cdc_chunks", classOf[CdcChunks], e => CdcChunks(e(0), intArg(e(1)))),
-    ("hll_registers", classOf[HllRegisters], e => HllRegisters(e(0), intArg(e(1)))),
-    ("envelope_marshal", classOf[EnvelopeMarshal], e => EnvelopeMarshal(e(0), e(1), e(2))),
-    ("envelope_parse", classOf[EnvelopeParse], e => EnvelopeParse(e(0))),
-    ("envelope_marshal_bin", classOf[EnvelopeMarshalBin],
-      e => EnvelopeMarshalBin(e(0), e(1), e(2))),
-    ("envelope_parse_bin", classOf[EnvelopeParseBin], e => EnvelopeParseBin(e(0))),
-    ("media_stats", classOf[MediaStatsExpr], e => MediaStatsExpr(e(0))))
+  private[graftvec] val table: Seq[(String, Class[_], Seq[Expression] => Expression)] =
+    Seq(("vec_dot", classOf[DotProduct], (e: Seq[Expression]) => DotProduct(e(0), e(1))),
+      ("hll_registers", classOf[HllRegisters],
+        (e: Seq[Expression]) => HllRegisters(e(0), intArg(e(1))))) ++
+      NativeKernels.registered.map(k => (k.name, classOf[KernelCall], k.call _))
+
+  /** Builders the Column API reaches: the SQL table plus the kernels
+    * SQL does not register. */
+  private val builders: Map[String, Seq[Expression] => Expression] =
+    (table.map { case (name, _, build) => name -> build } ++ Seq(
+      "double_bucket" -> ((e: Seq[Expression]) => DoubleBucket(e(0))),
+      NativeKernels.spanHashes.name -> NativeKernels.spanHashes.call _)).toMap
+
+  /** The native expression `name` over the columns `args` and the
+    * int parameters `ints`, built as SQL builds it. */
+  def column(name: String, args: Seq[Column], ints: Int*): Column =
+    ExpressionUtils.column(
+      builders(name)(args.map(ExpressionUtils.expression) ++ ints.map(Literal(_))) match {
+        case agg: AggregateFunction => agg.toAggregateExpression()
+        case e => e
+      })
 
   /** Registers [[table]] on a session built without [[GraftExtensions]]. */
   def register(spark: SparkSession): Unit = {

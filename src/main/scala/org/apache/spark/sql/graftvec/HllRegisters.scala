@@ -94,11 +94,3 @@ case class HllRegisters(
   override protected def withNewChildInternal(newChild: Expression): HllRegisters =
     copy(child = newChild)
 }
-
-object HllColumns {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.classic.ExpressionUtils
-  def hllRegisters(h: Column, p: Int): Column =
-    ExpressionUtils.column(
-      HllRegisters(ExpressionUtils.expression(h), p).toAggregateExpression())
-}

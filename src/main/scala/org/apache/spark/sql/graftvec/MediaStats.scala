@@ -1,9 +1,7 @@
 package org.apache.spark.sql.graftvec
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass bytes→curation-stats kernel for real media payloads
@@ -32,43 +30,4 @@ object MediaStatsImpl {
       UTF8String.fromString(s.container), s.nUnits, s.meanSignal, s.rms,
       s.peak, s.meanR, s.meanG, s.meanB, s.ok))
   }
-}
-
-case class MediaStatsExpr(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("container", StringType),
-    StructField("n_units", LongType),
-    StructField("mean_signal", DoubleType),
-    StructField("rms", DoubleType),
-    StructField("peak", DoubleType),
-    StructField("mean_r", DoubleType),
-    StructField("mean_g", DoubleType),
-    StructField("mean_b", DoubleType),
-    StructField("ok", BooleanType)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "media_stats"
-
-  override def nullSafeEval(bytes: Any): Any =
-    MediaStatsImpl.stats(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = org.apache.spark.sql.graftvec.MediaStatsImpl.stats($c);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Column bridge (ExpressionUtils is private[sql]). */
-object MediaStatsColumns {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.classic.ExpressionUtils
-  def mediaStats(payload: Column): Column =
-    ExpressionUtils.column(MediaStatsExpr(ExpressionUtils.expression(payload)))
 }

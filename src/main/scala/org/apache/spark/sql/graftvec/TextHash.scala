@@ -3,10 +3,7 @@ package org.apache.spark.sql.graftvec
 import java.security.MessageDigest
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass text hashing kernels for the dedup family.
@@ -269,182 +266,4 @@ object TextHashImpl {
     }
     new GenericArrayData(out)
   }
-}
-
-/** Column bridges (ExpressionUtils is private[sql], so the public
-  * face graft.functions.TextHash delegates here). */
-object TextHashColumns {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.classic.ExpressionUtils
-  def kmMinHash(text: Column, n: Int, k: Int): Column =
-    ExpressionUtils.column(KmMinHash(ExpressionUtils.expression(text), n, k))
-  def distinctShingles(text: Column, n: Int): Column =
-    ExpressionUtils.column(DistinctShingles(ExpressionUtils.expression(text), n))
-  def allShingles(text: Column, n: Int): Column =
-    ExpressionUtils.column(AllShingles(ExpressionUtils.expression(text), n))
-  def simHash16(text: Column): Column =
-    ExpressionUtils.column(SimHash16(ExpressionUtils.expression(text)))
-  def simHashW(text: Column, width: Int): Column =
-    ExpressionUtils.column(SimHashW(ExpressionUtils.expression(text), width))
-  def cdcChunks(text: Column, div: Int): Column =
-    ExpressionUtils.column(CdcChunks(ExpressionUtils.expression(text), div))
-  def spanHashes(words: Column, w: Int): Column =
-    ExpressionUtils.column(SpanHashes(ExpressionUtils.expression(words), w))
-}
-
-/** `km_minhash(text, n, k)` → array<long> signature (null if < n tokens). */
-case class KmMinHash(child: Expression, n: Int, k: Int)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "km_minhash"
-
-  override def nullSafeEval(input: Any): Any =
-    TextHashImpl.kmMinHash(input.asInstanceOf[UTF8String], n, k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = org.apache.spark.sql.graftvec.TextHashImpl.kmMinHash($c, $n, $k);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `span_hashes(words, w)` → array<binary> stride-1 window md5s. */
-case class SpanHashes(child: Expression, w: Int)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-  override def prettyName: String = "span_hashes"
-
-  override def nullSafeEval(input: Any): Any =
-    TextHashImpl.spanHashes(input.asInstanceOf[ArrayData], w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graftvec.TextHashImpl.spanHashes($c, $w)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `distinct_shingles(text, n)` → array<string> distinct n-shingle set. */
-case class DistinctShingles(child: Expression, n: Int)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "distinct_shingles"
-
-  override def nullSafeEval(input: Any): Any =
-    TextHashImpl.distinctShingles(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graftvec.TextHashImpl.distinctShingles($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `all_shingles(text, n)` → array<string> of every n-shingle in order. */
-case class AllShingles(child: Expression, n: Int)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "all_shingles"
-
-  override def nullSafeEval(input: Any): Any =
-    TextHashImpl.allShingles(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graftvec.TextHashImpl.allShingles($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `simhash16(text)` → 16-bit simhash fingerprint as long (null if no tokens). */
-case class SimHash16(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "simhash16"
-
-  override def nullSafeEval(input: Any): Any = {
-    val r = TextHashImpl.simHash16(input.asInstanceOf[UTF8String])
-    if (r == null) null else r.longValue()
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val boxed = ctx.freshName("boxed")
-      s"""
-         |java.lang.Long $boxed = org.apache.spark.sql.graftvec.TextHashImpl.simHash16($c);
-         |if ($boxed == null) { ${ev.isNull} = true; } else { ${ev.value} = $boxed.longValue(); }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `simhash_w(text, width)` → width-bit simhash as long (null if no tokens). */
-case class SimHashW(child: Expression, width: Int)
-  extends UnaryExpression with ExpectsInputTypes {
-  require(width > 0 && width <= 32, "simhash width must be in 1..32")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "simhash_w"
-
-  override def nullSafeEval(input: Any): Any = {
-    val r = TextHashImpl.simHashW(input.asInstanceOf[UTF8String], width)
-    if (r == null) null else r.longValue()
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val boxed = ctx.freshName("boxed")
-      s"""
-         |java.lang.Long $boxed = org.apache.spark.sql.graftvec.TextHashImpl.simHashW($c, $width);
-         |if ($boxed == null) { ${ev.isNull} = true; } else { ${ev.value} = $boxed.longValue(); }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `cdc_chunks(text, div)` → array<long> of 60-bit chunk fingerprints
-  * from content-defined boundaries (expected chunk ≈ div words). */
-case class CdcChunks(child: Expression, div: Int)
-  extends UnaryExpression with ExpectsInputTypes {
-  require(div > 0, "chunk divisor must be positive")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "cdc_chunks"
-
-  override def nullSafeEval(input: Any): Any =
-    TextHashImpl.cdcChunks(input.asInstanceOf[UTF8String], div)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graftvec.TextHashImpl.cdcChunks($c, $div)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftvec.GraftExtensions
+import org.apache.spark.sql.types._
 
 class ExtensionsSpec extends SparkSuite {
   test("GraftExtensions wires vec_dot into a SparkSessionExtensions instance") {
@@ -25,5 +27,49 @@ class ExtensionsSpec extends SparkSuite {
       .map(_.name).toSet
     assert(injected == names)
     assert(fresh.sql("SELECT vec_dot(array(1d, 2d), array(3d, 4d))").head.getDouble(0) == 11.0)
+
+    // each function's resolved result type, nullability and
+    // auto-generated column name over non-null literal arguments:
+    // nullable here means the kernel itself can return null
+    val decoded = StructType.fromDDL("uuid string, payload binary, headers map<string, string>")
+    val pinned = Seq(
+      ("vec_dot(array(1d), array(2d))", DoubleType, false, "vec_dot(array(1.0), array(2.0))"),
+      ("km_minhash('a b c', 2, 4)", ArrayType(LongType, containsNull = false), true,
+        "km_minhash(a b c)"),
+      ("distinct_shingles('a b c', 2)", ArrayType(StringType, containsNull = false), false,
+        "distinct_shingles(a b c)"),
+      ("all_shingles('a b c', 2)", ArrayType(StringType, containsNull = false), false,
+        "all_shingles(a b c)"),
+      ("simhash16('a b c')", LongType, true, "simhash16(a b c)"),
+      ("simhash_w('a b c', 24)", LongType, true, "simhash_w(a b c)"),
+      ("cdc_chunks('a b c', 3)", ArrayType(LongType, containsNull = false), false,
+        "cdc_chunks(a b c)"),
+      ("hll_registers(5L, 4)", ArrayType(IntegerType, containsNull = false), false,
+        "hll_registers(5)"),
+      ("envelope_marshal('7', X'6869', map('k', 'v'))", StringType, false,
+        "envelope_marshal(7, X'6869', map(k, v))"),
+      ("envelope_parse('{}')", decoded, true, "envelope_parse({})"),
+      ("envelope_marshal_bin('7', X'6869', map('k', 'v'))", BinaryType, false,
+        "envelope_marshal_bin(7, X'6869', map(k, v))"),
+      ("envelope_parse_bin(X'57')", decoded, true, "envelope_parse_bin(X'57')"),
+      ("media_stats(X'424d')", StructType.fromDDL("container string, n_units bigint, " +
+        "mean_signal double, rms double, peak double, mean_r double, mean_g double, " +
+        "mean_b double, ok boolean"), true, "media_stats(X'424D')"))
+    assert(pinned.map(_._1.takeWhile(_ != '(')).toSet == names)
+    pinned.foreach { case (call, dataType, nullable, name) =>
+      val f = fresh.sql(s"SELECT $call").schema.head
+      assert((f.dataType, f.nullable, f.name) == ((dataType, nullable, name)), call)
+    }
+
+    // the two range checks fail while the call is built (SQL analysis
+    // or the Column call), before any job
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" / ")
+    Seq("simhash_w('a b', 40)" -> "simhash width must be in 1..32",
+      "cdc_chunks('a b', 0)" -> "chunk divisor must be positive").foreach { case (call, why) =>
+      assert(messages(intercept[Exception](fresh.sql(s"SELECT $call"))).contains(why), call)
+    }
+    intercept[IllegalArgumentException](graft.functions.TextHash.simHashW(col("t"), 40))
+    intercept[IllegalArgumentException](graft.functions.TextHash.cdcChunks(col("t"), 0))
   }
 }

@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftvec.GraftFunctions
 import graft.functions.{Portable, Vec}
+import graft.operators.Envelope
 
 class FunctionsSpec extends SparkSuite {
 
@@ -123,15 +125,12 @@ tab	end""", "view", "svc \"quoted\" 2"))
       base64(col("payload")).as("data"),
       struct(col("event_type").as("eventType"), col("source").as("source")).as("headers")))
       .as("env"))
-    val viaNative = msgs.select(
-      org.apache.spark.sql.graftvec.EnvelopeJsonColumns.marshal(
-        col("uuid"), col("payload"), col("headers")).as("env"))
+    val viaNative = msgs.select(Envelope.marshalled(msgs).as("env"))
     assert(viaNative.collect().map(_.getString(0)).toSeq
       === viaToJson.collect().map(_.getString(0)).toSeq)
 
     // every header key survives the wire (marshaller.go:35-38)
-    val back = viaNative.select(
-      org.apache.spark.sql.graftvec.EnvelopeJsonColumns.parse(col("env")).as("m"))
+    val back = viaNative.select(Envelope.parsed(col("env")).as("m"))
       .select(col("m.uuid"), col("m.payload").cast("string"),
         col("m.headers")("eventType"), col("m.headers")("source"))
       .as[(String, String, String, String)].collect().toSeq
@@ -139,7 +138,7 @@ tab	end""", "view", "svc \"quoted\" 2"))
       ("7", "quote \" backslash \\ newline\ntab\tend", "view", "svc \"quoted\" 2")))
     // malformed input → null, like from_json
     assert(Seq("not json").toDF("env")
-      .select(org.apache.spark.sql.graftvec.EnvelopeJsonColumns.parse(col("env")))
+      .select(Envelope.parsed(col("env")))
       .head.isNullAt(0))
   }
 
@@ -153,8 +152,7 @@ tab	end""", "view", "svc \"quoted\" 2"))
       """{"headers":{"b":"2","a":"1","c":"3"},"data":"aGk=","watermill_message_uuid":"7","x_extra":{"ignored":true}}""",
       """{"data":"","watermill_message_uuid":"8","headers":{}}""")
       .toDF("env")
-    val parsed = wire.select(
-      org.apache.spark.sql.graftvec.EnvelopeJsonColumns.parse(col("env")).as("m"))
+    val parsed = wire.select(Envelope.parsed(col("env")).as("m"))
       .select(col("m.uuid"), col("m.payload").cast("string"),
         col("m.headers"), size(col("m.headers")))
       .collect()
@@ -168,7 +166,6 @@ tab	end""", "view", "svc \"quoted\" 2"))
 
   test("binary envelope codec round-trips losslessly and rejects malformed blobs") {
     import spark.implicits._
-    import org.apache.spark.sql.graftvec.EnvelopeBinaryColumns
     val msgs = Seq(
       ("42", "payload bytes", "click", "svc-1"),
       ("7", "unicode ✓ payload — ümlaut", "view", "svc \"quoted\" 2"))
@@ -178,10 +175,8 @@ tab	end""", "view", "svc \"quoted\" 2"))
       .withColumn("headers", map(
         lit("source"), col("source"), lit("eventType"), col("event_type")))
     val blob = msgs.select(col("uuid"), col("payload"), col("headers"),
-      EnvelopeBinaryColumns.marshal(col("uuid"), col("payload"), col("headers")).as("blob"),
-      org.apache.spark.sql.graftvec.EnvelopeJsonColumns.marshal(
-        col("uuid"), col("payload"), col("headers")).as("json"))
-    val back = blob.select(EnvelopeBinaryColumns.parse(col("blob")).as("m"))
+      Envelope.marshalledBin(msgs).as("blob"), Envelope.marshalled(msgs).as("json"))
+    val back = blob.select(Envelope.parsedBin(col("blob")).as("m"))
       .select(col("m.uuid"), col("m.payload").cast("string"),
         col("m.headers")("eventType"), col("m.headers")("source"))
       .as[(String, String, String, String)].collect().toSeq
@@ -194,15 +189,14 @@ tab	end""", "view", "svc \"quoted\" 2"))
     val withNull = Seq(("9", "x")).toDF("uuid", "payload_str")
       .withColumn("payload", col("payload_str").cast("binary"))
       .withColumn("headers", map(lit("k"), lit(null).cast("string")))
-    val nb = withNull.select(EnvelopeBinaryColumns.parse(
-        EnvelopeBinaryColumns.marshal(col("uuid"), col("payload"), col("headers"))).as("m"))
+    val nb = withNull.select(Envelope.parsedBin(Envelope.marshalledBin(withNull)).as("m"))
       .select(size(col("m.headers")), col("m.headers")("k")).head
     assert(nb.getInt(0) === 1 && nb.isNullAt(1))
     // malformed inputs → null: wrong magic, empty, truncated tail
     val good = blob.select(col("blob")).head.getAs[Array[Byte]](0)
     val bad = Seq(Array[Byte](0x00, 0x01, 0x02), Array.emptyByteArray,
       good.dropRight(1), good :+ 0x00.toByte)
-    assert(bad.toDF("b").select(EnvelopeBinaryColumns.parse(col("b")))
+    assert(bad.toDF("b").select(Envelope.parsedBin(col("b")))
       .collect().forall(_.isNullAt(0)))
   }
 
@@ -273,7 +267,8 @@ tab	end""", "view", "svc \"quoted\" 2"))
 
   test("media_stats kernel equals the interpreted HOF decode and survives adversarial wires") {
     import spark.implicits._
-    import org.apache.spark.sql.graftvec.MediaStatsColumns
+    def mediaStats(payload: org.apache.spark.sql.Column) =
+      GraftFunctions.column("media_stats", Seq(payload))
     // the HOF reference: mm12's pre-round-12 interpreted decode over
     // the same planted hex wires (16x1 24bpp BMP / 16-sample s16 WAV)
     val idx = sequence(lit(0L), lit(15L))
@@ -324,7 +319,7 @@ tab	end""", "view", "svc \"quoted\" 2"))
       when(isBmpW, round(meanOf(px(2)), 6)).as("mean_g"),
       when(isBmpW, round(meanOf(px(0)), 6)).as("mean_b"))
     val kern = wired.select(col("doc_id"),
-        MediaStatsColumns.mediaStats(unhex(col("wire"))).as("st"))
+        mediaStats(unhex(col("wire"))).as("st"))
       .select(col("doc_id"), col("st.container").as("container"),
         when(col("st.container") === "bmp",
           round((col("st.mean_r") + col("st.mean_g") + col("st.mean_b")) / 3.0, 6))
@@ -341,9 +336,10 @@ tab	end""", "view", "svc \"quoted\" 2"))
     // lambdas (which is the whole point of replacing them), so assert
     // the span on a parquet-driven binary column like production
     val codegenDf = Tables.documents(spark, sf)
-      .select(MediaStatsColumns.mediaStats(col("text").cast("binary")).as("st"))
+      .select(mediaStats(col("text").cast("binary")).as("st"))
     val plan = codegenDf.queryExecution.executedPlan.toString
-    assert(plan.linesIterator.exists(l => l.contains("media_stats") && l.trim.startsWith("*")), plan)
+    assert(plan.linesIterator.exists(l =>
+      l.contains("MediaStatsImpl.stats") && l.trim.startsWith("*")), plan)
 
     // SQL registration
     org.apache.spark.sql.graftvec.GraftFunctions.register(spark)
@@ -359,10 +355,79 @@ tab	end""", "view", "svc \"quoted\" 2"))
       bmpHeader.replace("10000000" + "01000000",  // w=h=0x7FFFFFFF
         "ffffff7f" + "ffffff7f")
     ).toDF("w2")
-    val badOut = bad.select(MediaStatsColumns.mediaStats(unhex(col("w2"))).as("st"))
+    val badOut = bad.select(mediaStats(unhex(col("w2"))).as("st"))
       .select(col("st.ok")).collect()
     assert(badOut.forall(!_.getBoolean(0)))
     assert(Seq(Option.empty[Array[Byte]]).toDF("p")
-      .select(MediaStatsColumns.mediaStats(col("p"))).head.isNullAt(0))
+      .select(mediaStats(col("p"))).head.isNullAt(0))
+  }
+
+  test("every registered function returns the same rows generated and interpreted") {
+    import spark.implicits._
+    GraftFunctions.register(spark)
+    // a 16-sample s16 WAV wire; its 30-byte prefix is a truncated one
+    val wav = "52494646" + "44000000" + "57415645" + "666d7420" + "10000000" + "0100" +
+      "0100" + "803e0000" + "007d0000" + "0200" + "1000" + "64617461" + "20000000" +
+      "0100ff7f0080fefff0000f00" * 2 + "0102030405060708"
+    val dir = tempDir("graft_fx") + "/fx"
+    Seq(
+      (1L, Option("a b c d e f a b"), Option("u1"), Option("hi".getBytes("UTF-8")),
+        Option(Map("k" -> "v", "a" -> "b")), Option(Seq(1.0, 2.0)), Option(5L)),
+      (2L, Option(""), Option(""), Option(Array.emptyByteArray),
+        Option(Map.empty[String, String]), Option(Seq.empty[Double]), Option(0L)),
+      (3L, None, None, None, None, None, None),
+      (4L, Option("  tab\tsep\nnewline  words "), Option("u4"), Option(Array[Byte](0, -1, 7)),
+        Option(Map("z" -> (null: String))), Option(Seq(-0.5)), Option(1L << 59)))
+      .toDF("id", "t", "u", "b", "hdr", "a", "h")
+      .selectExpr("*",
+        """CASE id WHEN 1 THEN envelope_marshal(u, b, hdr) WHEN 2 THEN 'not json'
+          |  WHEN 4 THEN '{"data":"!!","watermill_message_uuid":7}' END AS env""".stripMargin,
+        """CASE id WHEN 1 THEN envelope_marshal_bin(u, b, hdr) WHEN 2 THEN X'5701000000'
+          |  WHEN 4 THEN substring(envelope_marshal_bin(u, b, hdr), 1, 9) END AS bin""".stripMargin,
+        s"""CASE id WHEN 1 THEN unhex('$wav') WHEN 2 THEN unhex('424d')
+          |  WHEN 4 THEN unhex('${wav.take(60)}') END AS media""".stripMargin)
+      .write.parquet(dir)
+    // read back from parquet: a local relation would fold every call
+    // on the driver, interpreted, whatever the codegen settings
+    spark.read.parquet(dir).createOrReplaceTempView("fx")
+    def perRow(call: String) = s"SELECT id, $call AS r FROM fx ORDER BY id"
+    val calls = Map(
+      "vec_dot" -> perRow("vec_dot(a, a)"),
+      "km_minhash" -> perRow("km_minhash(t, 2, 4)"),
+      "distinct_shingles" -> perRow("distinct_shingles(t, 2)"),
+      "all_shingles" -> perRow("all_shingles(t, 2)"),
+      "simhash16" -> perRow("simhash16(t)"),
+      "simhash_w" -> perRow("simhash_w(t, 24)"),
+      "cdc_chunks" -> perRow("cdc_chunks(t, 3)"),
+      "hll_registers" ->
+        "SELECT id % 2 AS g, hll_registers(h, 4) AS r FROM fx GROUP BY id % 2 ORDER BY g",
+      "envelope_marshal" -> perRow("envelope_marshal(u, b, hdr)"),
+      "envelope_parse" -> perRow("envelope_parse(env)"),
+      "envelope_marshal_bin" -> perRow("envelope_marshal_bin(u, b, hdr)"),
+      "envelope_parse_bin" -> perRow("envelope_parse_bin(bin)"),
+      "media_stats" -> perRow("media_stats(media)"))
+    // every function the extension registers has a call here
+    assert(calls.keySet == spark.newSession().catalog.listFunctions().collect()
+      .filter(f => Option(f.className).exists(_.startsWith("org.apache.spark.sql.graftvec.")))
+      .map(_.name).toSet)
+    def runAll(factoryMode: String, wholeStage: Boolean): Map[String, Seq[Row]] = {
+      spark.conf.set("spark.sql.codegen.factoryMode", factoryMode)
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage.toString)
+      calls.map { case (name, q) => name -> spark.sql(q).collect().toSeq }
+    }
+    val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    val (generated, interpreted) =
+      try (runAll("CODEGEN_ONLY", wholeStage = true), runAll("NO_CODEGEN", wholeStage = false))
+      finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    calls.keys.foreach { name =>
+      assert(generated(name) == interpreted(name), name)
+      assert(generated(name).size == (if (name == "hll_registers") 2 else 4), name)
+    }
+    // the fixture reaches the null and malformed branches
+    assert(generated("envelope_parse").map(_.isNullAt(1)) == Seq(false, true, true, true))
+    assert(generated("envelope_parse_bin").map(_.isNullAt(1)) == Seq(false, true, true, true))
+    assert(generated("media_stats").map(r => r.isNullAt(1) || !r.getStruct(1).getBoolean(8))
+      == Seq(false, true, true, true))
   }
 }

@@ -1478,6 +1478,42 @@ class PipelineSpec extends SparkSuite {
     assert(ixed === 50L)
   }
 
+  test("serve slices probes at the index's own PQ geometry") {
+    import graft.queries.{Similarity, AnnGeometry}
+    val geo = AnnGeometry()
+    val v = Tables.embeddings(spark, sf)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+      .withColumn("nrm", graft.functions.Vec.norm(col("emb")))
+    val ix = Similarity.ivfPqIndexOf(v, geo, m = 4, subDim = 16)
+    assert(ix.pqGeometry === ((4, 16)))
+    val probes = Similarity.hashTopK(v, "probe", 5)
+      .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"), col("nrm").as("p_nrm"))
+    // no geometry argument: serve reads (4, 16) from the codebook
+    val served = Similarity.ivfPqServeProbes(ix, probes, geo).collect()
+    assert(served.nonEmpty)
+    // each ADC distance is the sum of the 4 per-sub squared distances
+    // from the probe's 16-long slice to the candidate's code word
+    type Vec = collection.Seq[Double]
+    val words = ix.codebook.collect().map(r =>
+      (r.getAs[Int]("sub"), r.getAs[Long]("code_id")) -> r.getAs[Vec]("cv")).toMap
+    val codes = ix.codes.collect().groupBy(_.getAs[Long]("vec_id")).map { case (id, rs) =>
+      id -> rs.map(r => r.getAs[Int]("sub") -> r.getAs[Long]("code_id")).toMap
+    }
+    val probeEmb = probes.collect().map(r => r.getLong(0) -> r.getAs[Vec](1)).toMap
+    served.foreach { r =>
+      val (p, vecId, dist) = (r.getLong(0), r.getLong(2), r.getDouble(3))
+      val code = codes(vecId)
+      assert(code.keySet === (0 until 4).toSet, s"vec $vecId")
+      val want = (0 until 4).map { sub =>
+        val cv = words((sub, code(sub)))
+        assert(cv.length === 16)
+        probeEmb(p).slice(sub * 16, sub * 16 + 16).zip(cv)
+          .map { case (a, b) => (a - b) * (a - b) }.sum
+      }.sum
+      assert(math.abs(dist - want) < 1e-5, s"probe $p vec $vecId: $dist vs $want")
+    }
+  }
+
   test("a saved IVF-PQ index loads, serves, and absorbs deltas exactly like the build") {
     import graft.queries.{Similarity, AnnGeometry}
     val geo = AnnGeometry()

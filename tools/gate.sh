@@ -36,6 +36,24 @@ if grep -rn -e 'foreachBatch' -e 'Trigger.AvailableNow' -e 'micro_batch_id=' src
   exit 1
 fi
 
+# Native kernels are declared once (graftvec/NativeKernels.scala) and
+# reach Spark through StaticInvoke: hand-written eval/codegen pairs
+# stay in the two kernels that inline their own arithmetic, and every
+# Column is built by the one bridge, GraftFunctions.column.
+if grep -rn -e 'doGenCode' -e 'nullSafeEval' src/main \
+    | grep -v -e '^src/main/scala/org/apache/spark/sql/graftvec/DotProduct.scala:' \
+              -e '^src/main/scala/org/apache/spark/sql/graftvec/DoubleBucket.scala:'; then
+  echo "hand-written eval/codegen outside DotProduct/DoubleBucket (listed above):" \
+    "declare the kernel in NativeKernels instead" >&2
+  exit 1
+fi
+if grep -rn 'ExpressionUtils.column' src/main \
+    | grep -v '^src/main/scala/org/apache/spark/sql/graftvec/GraftFunctions.scala:'; then
+  echo "Column bridge outside GraftFunctions.scala (listed above):" \
+    "build the Column through GraftFunctions.column" >&2
+  exit 1
+fi
+
 # one executor thread per core unless the caller pins SPARK_GRAFT_CPUS
 # (nproc honours OMP_NUM_THREADS, so unset it for the count)
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
