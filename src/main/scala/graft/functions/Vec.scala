@@ -17,4 +17,11 @@ object Vec {
   /** L2 norm — precompute per vector once before a pairwise join so
     * each candidate pair costs a single dot. */
   def norm(a: Column): Column = sqrt(dot(a, a))
+
+  /** IVF-ADC distance of a packed posting: `codes` (array<int>, one
+    * code-word position per subspace) looked up in the probe's
+    * `lut` (array<double>, subspace by subspace) and summed in
+    * subspace order. */
+  def pqAdc(codes: Column, lut: Column): Column =
+    GraftFunctions.column("pq_adc", Seq(codes, lut))
 }

@@ -832,8 +832,8 @@ object Similarity extends QueryPack with IvfPq {
   }
 
   /** Per-subspace slices of an (id, emb) relation: one (id, sub, sv)
-    * row per subspace — shared by the codebook build and the probe
-    * side of a18's ADC table. */
+    * row per subspace — shared by the codebook build and every PQ
+    * coding pass. */
   private[queries] def subVecsOf(df: DataFrame, idCol: String,
                         m: Int, subDim: Int): DataFrame =
     df.select(col(idCol),
@@ -1335,11 +1335,12 @@ object Similarity extends QueryPack with IvfPq {
     * ASYMMETRIC distance — the probe's EXACT subvectors against each
     * candidate's stored code word, Σ_sub ‖p_sub − cv(code)‖²
     * (Jégou et al.'s ADC) — so candidates are ranked without ever
-    * touching their raw vectors. Scale shape: the routing table
-    * (probes × nProbe) and the ADC lookup table (probes × M × codes
-    * partial distances) are broadcast; the corpus contributes its
-    * (vec_id, cell) assignment and its M-row code table, and the only
-    * shuffle keys on vec_id to glue codes to routed candidates. The
+    * touching their raw vectors. Scale shape: routing and the ADC
+    * lookup tables are computed on the driver and broadcast as
+    * probes × nProbe rows of M × codes partial distances; the corpus
+    * contributes one scan of its packed postings (cell, vec_id, M
+    * codes), and the only shuffle is the top-k window's, after a
+    * per-partition group limit ([[ivfPqServeProbes]]). The
     * per-candidate cost is M table lookups + one M-term sum —
     * independent of dims — which is exactly why serving reads codes,
     * not vectors, at 100 TB. */

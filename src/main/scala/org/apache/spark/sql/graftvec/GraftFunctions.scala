@@ -20,19 +20,27 @@ object GraftFunctions {
       case other   => throw new IllegalArgumentException(s"expected integer literal, got $other")
     }
 
+  /** A hand-written builder that takes exactly `n` arguments and
+    * rejects any other count by name, as [[Kernel.call]] does. */
+  private def arity(name: String, n: Int)(build: Seq[Expression] => Expression)
+      : Seq[Expression] => Expression = e => {
+    require(e.size == n, s"$name takes $n arguments")
+    build(e)
+  }
+
   /** Every native expression as (SQL name, expression class, builder):
     * the one table both [[register]] and [[GraftExtensions]] read. */
   private[graftvec] val table: Seq[(String, Class[_], Seq[Expression] => Expression)] =
-    Seq(("vec_dot", classOf[DotProduct], (e: Seq[Expression]) => DotProduct(e(0), e(1))),
+    Seq(("vec_dot", classOf[DotProduct], arity("vec_dot", 2)(e => DotProduct(e(0), e(1)))),
       ("hll_registers", classOf[HllRegisters],
-        (e: Seq[Expression]) => HllRegisters(e(0), intArg(e(1))))) ++
+        arity("hll_registers", 2)(e => HllRegisters(e(0), intArg(e(1)))))) ++
       NativeKernels.registered.map(k => (k.name, classOf[KernelCall], k.call _))
 
   /** Builders the Column API reaches: the SQL table plus the kernels
     * SQL does not register. */
   private val builders: Map[String, Seq[Expression] => Expression] =
     (table.map { case (name, _, build) => name -> build } ++ Seq(
-      "double_bucket" -> ((e: Seq[Expression]) => DoubleBucket(e(0))),
+      "double_bucket" -> arity("double_bucket", 1)(e => DoubleBucket(e(0))),
       NativeKernels.spanHashes.name -> NativeKernels.spanHashes.call _)).toMap
 
   /** The native expression `name` over the columns `args` and the

@@ -23,8 +23,9 @@ private[graftvec] final case class Kernel(
   /** The call over builder arguments: column arguments first, then
     * the int parameters as integer literals ([[GraftFunctions.intArg]]). */
   def call(args: Seq[Expression]): Expression = {
+    require(args.size == inputTypes.size + intParams,
+      s"$name takes ${inputTypes.size + intParams} arguments")
     val (cols, ints) = args.splitAt(inputTypes.size)
-    require(ints.size == intParams, s"$name takes ${inputTypes.size + intParams} arguments")
     KernelCall(this, cols, ints.map(GraftFunctions.intArg))
   }
 }
@@ -91,7 +92,9 @@ private[graftvec] object NativeKernels {
     Kernel("envelope_parse_bin", EnvelopeBinaryImpl.getClass, "parse", Seq(BinaryType), 0,
       EnvelopeJsonImpl.DecodedType, returnNullable = true),
     Kernel("media_stats", MediaStatsImpl.getClass, "stats", Seq(BinaryType), 0, MediaStatsType,
-      returnNullable = true))
+      returnNullable = true),
+    Kernel("pq_adc", PqAdcImpl.getClass, "adc", Seq(ArrayType(IntegerType), ArrayType(DoubleType)),
+      0, DoubleType, returnNullable = false))
 
   /** Stride-1 window digests; reached through the Column API only. */
   val spanHashes: Kernel = Kernel("span_hashes", TextHash, "spanHashes",

@@ -16,7 +16,7 @@ class ExtensionsSpec extends SparkSuite {
   test("every native SQL function resolves through the extension in a GraftSession session") {
     val names = Set("vec_dot", "km_minhash", "distinct_shingles", "all_shingles",
       "simhash16", "simhash_w", "cdc_chunks", "hll_registers", "envelope_marshal",
-      "envelope_parse", "envelope_marshal_bin", "envelope_parse_bin", "media_stats")
+      "envelope_parse", "envelope_marshal_bin", "envelope_parse_bin", "media_stats", "pq_adc")
     // a new session starts from the builtin registry plus the injected
     // extension functions only: temp functions that GraftFunctions
     // .register put on another session do not carry over
@@ -54,7 +54,9 @@ class ExtensionsSpec extends SparkSuite {
       ("envelope_parse_bin(X'57')", decoded, true, "envelope_parse_bin(X'57')"),
       ("media_stats(X'424d')", StructType.fromDDL("container string, n_units bigint, " +
         "mean_signal double, rms double, peak double, mean_r double, mean_g double, " +
-        "mean_b double, ok boolean"), true, "media_stats(X'424D')"))
+        "mean_b double, ok boolean"), true, "media_stats(X'424D')"),
+      ("pq_adc(array(1, 0), array(0.5d, 2d, 4d, 8d))", DoubleType, false,
+        "pq_adc(array(1, 0), array(0.5, 2.0, 4.0, 8.0))"))
     assert(pinned.map(_._1.takeWhile(_ != '(')).toSet == names)
     pinned.foreach { case (call, dataType, nullable, name) =>
       val f = fresh.sql(s"SELECT $call").schema.head
@@ -67,6 +69,24 @@ class ExtensionsSpec extends SparkSuite {
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" / ")
     Seq("simhash_w('a b', 40)" -> "simhash width must be in 1..32",
       "cdc_chunks('a b', 0)" -> "chunk divisor must be positive").foreach { case (call, why) =>
+      assert(messages(intercept[Exception](fresh.sql(s"SELECT $call"))).contains(why), call)
+    }
+    // pq_adc sums lut[sub · 2 + code] in sub order: 2.0 + 4.0
+    assert(fresh.sql("SELECT pq_adc(array(1, 0), array(0.5d, 2d, 4d, 8d))").head()
+      .getDouble(0) == 6.0)
+    // a code outside its sub's table, or a table that does not split
+    // into one part per sub, fails the query by name
+    Seq("pq_adc(array(2), array(1d, 2d))" -> "outside its 2-word table",
+      "pq_adc(array(0, 0), array(1d, 2d, 3d))" -> "does not split into 2 subspaces")
+      .foreach { case (call, why) =>
+        assert(messages(intercept[Exception](fresh.sql(s"SELECT $call").collect())).contains(why), call)
+      }
+    // a wrong argument count fails by name, for the hand-written
+    // builders as for the declared kernels
+    Seq("vec_dot(array(1d), array(2d), array(3d))" -> "vec_dot takes 2 arguments",
+      "hll_registers(5L, 4, 9)" -> "hll_registers takes 2 arguments",
+      "vec_dot(array(1d))" -> "vec_dot takes 2 arguments",
+      "pq_adc(array(0))" -> "pq_adc takes 2 arguments").foreach { case (call, why) =>
       assert(messages(intercept[Exception](fresh.sql(s"SELECT $call"))).contains(why), call)
     }
     intercept[IllegalArgumentException](graft.functions.TextHash.simHashW(col("t"), 40))

@@ -372,13 +372,16 @@ tab	end""", "view", "svc \"quoted\" 2"))
     val dir = tempDir("graft_fx") + "/fx"
     Seq(
       (1L, Option("a b c d e f a b"), Option("u1"), Option("hi".getBytes("UTF-8")),
-        Option(Map("k" -> "v", "a" -> "b")), Option(Seq(1.0, 2.0)), Option(5L)),
+        Option(Map("k" -> "v", "a" -> "b")), Option(Seq(1.0, 2.0)), Option(5L),
+        Option(Seq(1, 0))),
       (2L, Option(""), Option(""), Option(Array.emptyByteArray),
-        Option(Map.empty[String, String]), Option(Seq.empty[Double]), Option(0L)),
-      (3L, None, None, None, None, None, None),
+        Option(Map.empty[String, String]), Option(Seq.empty[Double]), Option(0L),
+        Option(Seq.empty[Int])),
+      (3L, None, None, None, None, None, None, None),
       (4L, Option("  tab\tsep\nnewline  words "), Option("u4"), Option(Array[Byte](0, -1, 7)),
-        Option(Map("z" -> (null: String))), Option(Seq(-0.5)), Option(1L << 59)))
-      .toDF("id", "t", "u", "b", "hdr", "a", "h")
+        Option(Map("z" -> (null: String))), Option(Seq(-0.5)), Option(1L << 59),
+        Option(Seq(0))))
+      .toDF("id", "t", "u", "b", "hdr", "a", "h", "c")
       .selectExpr("*",
         """CASE id WHEN 1 THEN envelope_marshal(u, b, hdr) WHEN 2 THEN 'not json'
           |  WHEN 4 THEN '{"data":"!!","watermill_message_uuid":7}' END AS env""".stripMargin,
@@ -405,7 +408,9 @@ tab	end""", "view", "svc \"quoted\" 2"))
       "envelope_parse" -> perRow("envelope_parse(env)"),
       "envelope_marshal_bin" -> perRow("envelope_marshal_bin(u, b, hdr)"),
       "envelope_parse_bin" -> perRow("envelope_parse_bin(bin)"),
-      "media_stats" -> perRow("media_stats(media)"))
+      "media_stats" -> perRow("media_stats(media)"),
+      // a two-word table per sub: lut (1, 2, 1, 2) on row 1
+      "pq_adc" -> perRow("pq_adc(c, concat(a, a))"))
     // every function the extension registers has a call here
     assert(calls.keySet == spark.newSession().catalog.listFunctions().collect()
       .filter(f => Option(f.className).exists(_.startsWith("org.apache.spark.sql.graftvec.")))
@@ -429,5 +434,7 @@ tab	end""", "view", "svc \"quoted\" 2"))
     assert(generated("envelope_parse_bin").map(_.isNullAt(1)) == Seq(false, true, true, true))
     assert(generated("media_stats").map(r => r.isNullAt(1) || !r.getStruct(1).getBoolean(8))
       == Seq(false, true, true, true))
+    assert(generated("pq_adc").map(r => if (r.isNullAt(1)) None else Some(r.getDouble(1)))
+      == Seq(Some(3.0), Some(0.0), None, Some(-0.5)))
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.dsl._
 import graft.operators.MediaDecode
@@ -1478,40 +1479,92 @@ class PipelineSpec extends SparkSuite {
     assert(ixed === 50L)
   }
 
-  test("serve slices probes at the index's own PQ geometry") {
+  /** Serves `ix` (built at m = 4, subDim = 16) and checks every ADC
+    * distance against the driver-side sum of the 4 per-sub squared
+    * distances from the probe's 16-long slice — taken of p − c, c the
+    * candidate's cell centroid, on the residual layout — to the
+    * candidate's code word. */
+  private def assertServedAdc(ix: graft.queries.Similarity.IvfPqIndex, v: DataFrame,
+                              residual: Boolean): Unit = {
     import graft.queries.{Similarity, AnnGeometry}
     val geo = AnnGeometry()
-    val v = Tables.embeddings(spark, sf)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-      .withColumn("nrm", graft.functions.Vec.norm(col("emb")))
-    val ix = Similarity.ivfPqIndexOf(v, geo, m = 4, subDim = 16)
     assert(ix.pqGeometry === ((4, 16)))
     val probes = Similarity.hashTopK(v, "probe", 5)
       .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"), col("nrm").as("p_nrm"))
     // no geometry argument: serve reads (4, 16) from the codebook
     val served = Similarity.ivfPqServeProbes(ix, probes, geo).collect()
     assert(served.nonEmpty)
-    // each ADC distance is the sum of the 4 per-sub squared distances
-    // from the probe's 16-long slice to the candidate's code word
     type Vec = collection.Seq[Double]
     val words = ix.codebook.collect().map(r =>
       (r.getAs[Int]("sub"), r.getAs[Long]("code_id")) -> r.getAs[Vec]("cv")).toMap
     val codes = ix.codes.collect().groupBy(_.getAs[Long]("vec_id")).map { case (id, rs) =>
       id -> rs.map(r => r.getAs[Int]("sub") -> r.getAs[Long]("code_id")).toMap
     }
+    val cellOf = ix.assigned.collect().map(r =>
+      r.getAs[Long]("vec_id") -> r.getAs[Long]("cell")).toMap
+    val centroid = ix.cents.collect().map(r =>
+      r.getAs[Long]("cell") -> r.getAs[Vec]("c_emb")).toMap
     val probeEmb = probes.collect().map(r => r.getLong(0) -> r.getAs[Vec](1)).toMap
     served.foreach { r =>
       val (p, vecId, dist) = (r.getLong(0), r.getLong(2), r.getDouble(3))
       val code = codes(vecId)
       assert(code.keySet === (0 until 4).toSet, s"vec $vecId")
+      val q = if (residual) probeEmb(p).zip(centroid(cellOf(vecId))).map { case (a, c) => a - c }
+              else probeEmb(p)
       val want = (0 until 4).map { sub =>
         val cv = words((sub, code(sub)))
         assert(cv.length === 16)
-        probeEmb(p).slice(sub * 16, sub * 16 + 16).zip(cv)
+        q.slice(sub * 16, sub * 16 + 16).zip(cv)
           .map { case (a, b) => (a - b) * (a - b) }.sum
       }.sum
       assert(math.abs(dist - want) < 1e-5, s"probe $p vec $vecId: $dist vs $want")
     }
+  }
+
+  private def vecsOf(d: String): DataFrame =
+    Tables.embeddings(spark, d)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+      .withColumn("nrm", graft.functions.Vec.norm(col("emb")))
+
+  test("serve slices probes at the index's own PQ geometry") {
+    import graft.queries.{Similarity, AnnGeometry}
+    val v = vecsOf(sf)
+    assertServedAdc(Similarity.ivfPqIndexOf(v, AnnGeometry(), m = 4, subDim = 16), v,
+      residual = false)
+  }
+
+  test("residual serve slices probes at the index's own PQ geometry, per routed cell") {
+    import graft.queries.{Similarity, AnnGeometry}
+    val v = vecsOf(sf)
+    val ix = Similarity.ivfPqResidualIndexOf(v, AnnGeometry(), m = 4, subDim = 16)
+    assert(ix.layout === Similarity.LayoutResidual)
+    assertServedAdc(ix, v, residual = true)
+  }
+
+  test("a v4 artifact: a v3 manifest and a missing postings part file are refused by name") {
+    import graft.queries.{Similarity, AnnGeometry}
+    val v = vecsOf(sf)
+    val dir = tempDir("ivfpq_v4")
+    Similarity.saveIvfPqIndex(Similarity.ivfPqIndexOf(v, AnnGeometry()), dir)
+    val mPath = java.nio.file.Paths.get(s"$dir/manifest.json")
+    val good = java.nio.file.Files.readString(mPath)
+    assert(good.contains("\"format_version\":4"))
+    // every row count is the frame's: one posting per assigned vector
+    assert(good.contains("\"postings\":" + v.count()))
+    assert(good.contains("\"codes\":" + v.count() * 8))
+    java.nio.file.Files.writeString(mPath,
+      good.replaceFirst("\"format_version\":\\d+", "\"format_version\":3"))
+    val eVer = intercept[IllegalArgumentException](Similarity.loadIvfPqIndex(spark, dir))
+    assert(eVer.getMessage.contains("format_version 3"))
+    java.nio.file.Files.writeString(mPath, good)
+    Similarity.loadIvfPqIndex(spark, dir)
+    val part = new java.io.File(s"$dir/postings").listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .minBy(_.getName)
+    assert(part.delete())
+    val eTrunc = intercept[IllegalArgumentException](Similarity.loadIvfPqIndex(spark, dir))
+    assert(eTrunc.getMessage.contains("'postings'"))
+    assert(eTrunc.getMessage.contains("truncated"))
   }
 
   test("a saved IVF-PQ index loads, serves, and absorbs deltas exactly like the build") {

@@ -85,6 +85,12 @@ fi
 # lines, the figure ROADMAP aim 2 tracks.
 python3 tools/loc.py src/main || echo "loc count failed (advisory)"
 
+# Span-counter determinism watch (advisory, fails nothing): two traced
+# graftbench `index` runs of one seed must agree on every span's jobs,
+# stages, tasks, codegen compiles and shuffle bytes.
+python3 graftbench/run.py --self-check --workload index --seed 7 \
+  || echo "graftbench index self-check failed (advisory)"
+
 # Regression watch: diff this run's bench line against the most recent
 # LIVE reading per query across ALL driver-recorded rounds (>=2x
 # per-query slowdowns exit nonzero). Passing every artifact closes the
